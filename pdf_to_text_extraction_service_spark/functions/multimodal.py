@@ -367,14 +367,15 @@ def dedup_image_dhash(df: DataFrame, max_hamming: int = 3,
                       id_col: str = "media_id",
                       payload_col: str = "payload",
                       max_bucket: int = 1024) -> DataFrame:
-    """Image near-dup pairs by dHash hamming distance, simhash-style
-    4×16-bit band blocking with EXACT recall at the default
-    max_hamming=3: ≤3 differing bits can touch at most 3 of the 4
-    bands, so every qualifying pair shares a clean band (pigeonhole —
-    the same bound operators/neardup.simhash_pairs uses). Raising
-    max_hamming past bands-1 trades recall for speed. Never
-    all-pairs: candidate generation is an equi-join on (band_index,
-    band_value), then exact popcount verify.
+    """Image near-dup pairs ``(a, b, hamming)`` by dHash hamming
+    distance, simhash-style 4×16-bit band blocking with EXACT recall
+    at the default max_hamming=3: ≤3 differing bits can touch at most
+    3 of the 4 bands, so every qualifying pair shares a clean band
+    (pigeonhole — the same bound operators/neardup.simhash_pairs
+    uses). Raising max_hamming past bands-1 trades recall for speed.
+    Never all-pairs: each (band, value) bucket is verified by exact
+    popcount in the pair engine (operators/floodcap.hamming_pairs),
+    which emits every pair once.
 
     ``max_bucket`` caps each band bucket — at crawl scale,
     solid-color images (spacers, tracking pixels) ALL hash to 0 and
@@ -383,53 +384,21 @@ def dedup_image_dhash(df: DataFrame, max_hamming: int = 3,
     under the cap are EXACT (the pigeonhole recall guarantee above
     holds untouched); a flooded bucket keeps a deterministic
     hash-prefix sample with expected size max_bucket, bounding the
-    self-join to ~max_bucket² candidate rows without ever funneling
-    the flood through a rank window's single reducer. NOTE the cap
-    qualifies the recall guarantee: a pair whose every shared band
-    bucket is flooded survives only if both ends land in the sample
-    (the exact popcount verify means sampling never fabricates
-    pairs)."""
+    verify to ~max_bucket² pairs without ever funneling the flood
+    through a rank window's single reducer. NOTE the cap qualifies
+    the recall guarantee: a pair whose every shared band bucket is
+    flooded survives only if both ends land in the sample (the exact
+    popcount verify means sampling never fabricates pairs)."""
     from pyspark.sql import functions as F
 
-    from ..operators.floodcap import cap_flooded_buckets
+    from ..operators.floodcap import hamming_pairs
 
-    # persist: both self-join sides would otherwise re-decode every
-    # image through the pure-Python codecs (the most expensive stage)
-    hashes = image_dhash(df, id_col, payload_col) \
-        .filter(F.col("error").isNull()).select(id_col, "dhash") \
-        .persist()
-    bands = hashes.select(
-        id_col, "dhash",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.expr(f"(dhash >> {16 * b}) & 65535").alias("val"),
-            ) for b in range(4)
-        ])).alias("bv"),
-    ).select(id_col, "dhash", "bv.band", "bv.val")
-    bands = cap_flooded_buckets(bands, ["band", "val"], id_col,
-                                max_bucket)
-    left = bands
-    right = bands.select(
-        F.col(id_col).alias("rid"), F.col("dhash").alias("rhash"),
-        "band", "val")
-    pairs = (
-        left.join(right, ["band", "val"])
-        .filter(F.col(id_col) < F.col("rid"))
-        .select(id_col, "rid", "dhash", "rhash").distinct()
-        .withColumn("hamming",
-                    F.expr("bit_count(dhash ^ rhash)").cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(F.col(id_col).alias("a"),
-                F.col("rid").alias("b"), "hamming")
-    )
-    # materialize the (small) pair set eagerly so the decoded-hash
-    # cache can be RELEASED before returning — without this the
-    # persisted partitions pin executor memory for the session
-    # lifetime across repeated calls
-    pairs = pairs.localCheckpoint(eager=True)
-    hashes.unpersist()
-    return pairs
+    sigs = image_dhash(df, id_col, payload_col) \
+        .filter(F.col("error").isNull()) \
+        .select(F.col(id_col).alias("_id"), F.col("dhash").alias("_sig"))
+    return hamming_pairs(sigs, max_hamming, max_bucket).select(
+        F.col("id_a").alias("a"), F.col("id_b").alias("b"),
+        F.col("score").alias("hamming"))
 
 
 VIDEO_SIG_SCHEMA = StructType([

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .decontam import gram_rows_fn
+from .floodcap import _checkpoint_release
 
 
 def window_occurrence_rows_fn(n: int, with_pos: bool):
@@ -176,8 +177,7 @@ def duplicated_span_stats(docs: DataFrame, n: int = 13,
 def remove_duplicated_spans(docs: DataFrame, n: int = 13,
                             min_count: int = 2,
                             id_col: str = "doc_id",
-                            text_col: str = "text",
-                            eager: bool = True) -> DataFrame:
+                            text_col: str = "text") -> DataFrame:
     """The REMOVAL half of ExactSubstr dedup: rewrite each document
     dropping every token covered by a duplicated window occurrence
     that is not the window's corpus-wide FIRST occurrence (canonical
@@ -207,7 +207,7 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 13,
     # pinned by tests/test_dupspans_opt.py).  Occurrence lists are
     # tiny (the corpus count of one 13-gram); grouping is semantic —
     # a physical repartition is NOT a grouping contract under AQE
-    # (see neardup._simhash_bucket_pairs_fn).
+    # (see floodcap.block_verify_pairs).
     removal_rows = (
         occurrences.groupBy("h1", "h2")
         .agg(F.collect_list(F.struct(
@@ -240,11 +240,9 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 13,
             "_id long, text_out string, n_tokens int, n_removed int")
         .withColumnRenamed("_id", id_col)
     )
-    if eager:
-        # occurrences now has a single consumer (the grouped pass),
-        # so no persist is needed; the checkpoint bounds the result
-        out = out.localCheckpoint(eager=True)
-    return out
+    # occurrences has a single consumer (the grouped pass), so no
+    # persist is needed; the checkpoint bounds the result
+    return _checkpoint_release(out)
 
 
 def _rewrite_rows_fn(n: int):

@@ -154,7 +154,7 @@ def train_kmeans(df: DataFrame, k: int = 16, iters: int = 5,
     # members in fold order).  A physical repartition by _blk is NOT
     # a co-location contract: AQE can rewrite the shuffle read to
     # local mode under MapInPandas (observed on the SimHash bucket
-    # pass — see neardup._simhash_bucket_pairs_fn), which would
+    # pass — see floodcap.block_verify_pairs), which would
     # split id-blocks across tasks and break the bit-deterministic
     # fold.  The aggregation makes each block row self-contained.
     prep = df.select(

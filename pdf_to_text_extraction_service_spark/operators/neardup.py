@@ -2,19 +2,21 @@
 
 Beyond the reference's url-keyed dedup, the operations a 100 TB
 training-data pipeline needs (prompt mandate): exact content dedup,
-MinHash+LSH near-dup, SimHash, and n-gram Jaccard. Everything here is
-built from JVM-side ``pyspark.sql.functions`` expressions — no Python
-UDFs in any hot path — so whole-stage codegen applies and the only
-shuffles are the grouping/join steps intrinsic to each algorithm.
+MinHash+LSH near-dup, SimHash, and n-gram Jaccard. Shingling,
+hashing and signatures run either as JVM expressions or as one
+rebatched Arrow pass per operator (numpy kernels, bit-identical to
+the JVM expression chains they replaced); the only shuffles are the
+grouping/join steps intrinsic to each algorithm.
 
 Scale notes per operator:
 - exact_dedup:      1 shuffle on content hash (partial agg).
-- minhash_lsh_pairs: shingle→minhash map-side; explode b bands →
-  1 shuffle on (band, signature-slice); candidate self-join inside
-  buckets only; exact-Jaccard verification filters false positives.
-  Bucket skew (e.g. boilerplate-identical docs) is bounded by
-  per-bucket pair caps.
-- simhash:          pure map-side signature; join on band keys.
+- minhash_lsh_pairs: shingle->minhash in one Arrow pass; explode b
+  bands -> 1 shuffle on (band, signature-slice); candidate self-join
+  inside buckets only; exact-Jaccard verification filters false
+  positives.  Bucket skew (e.g. boilerplate-identical docs) is
+  bounded by the flood cap (operators/floodcap.py).
+- simhash_pairs:    Arrow signature pass; 4 band keys through the
+  block -> verify -> emit-once pair engine (operators/floodcap.py).
 - ngram_jaccard_pairs: exact quadratic within a blocking key — for
   audits at small scale or within fine blocks, not the 100 TB path
   (that's what the LSH variant is for).
@@ -27,7 +29,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .floodcap import cap_flooded_buckets
+from .floodcap import (
+    _checkpoint_release,
+    cap_flooded_buckets,
+    hamming_pairs,
+)
 
 # ----------------------------------------------------------------- exact
 
@@ -347,8 +353,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", shingle_n: int = 3,
                       num_perm: int = 64, bands: int = 16,
                       threshold: float = 0.8,
-                      max_bucket: int = 64,
-                      eager: bool = True) -> DataFrame:
+                      max_bucket: int = 64) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact verification.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b and verified
@@ -364,13 +369,17 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     the exact-Jaccard verification below means sampling can only
     lose pairs, never fabricate them).
 
-    ``eager`` (default): the scalar pair output is materialized
-    (localCheckpoint) and the signature cache released before
-    returning — without this the persisted shingle signatures pin
-    executor memory for the session lifetime, and a second identical
-    call trips CacheManager's already-cached warning.  Pass
-    ``eager=False`` to keep the lazy composable plan (plan audits,
-    custom caching).
+    MinHash stays on a bucket self-join instead of the pair engine
+    (floodcap.block_verify_pairs) that SimHash, embedding cosine and
+    dHash use.  A true near-dup pair shares most of its bands, and
+    the engine carries the payload into every bucket: each pair's
+    whole shingle-id arrays would cross the bucket Exchange once per
+    shared band and be verified in each, where the self-join ships
+    scalar (id, band, key) rows and joins the arrays back once per
+    candidate pair.
+
+    The scalar pair output is materialized and the signature cache
+    released before returning.
     """
     rows_per_band = num_perm // bands
     # Shingle-hash ids AND signatures are computed ONCE into the
@@ -454,11 +463,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
         jac.filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        sh.unpersist()
-        banded.unpersist()
-    return out
+    return _checkpoint_release(out, sh, banded)
 
 
 # --------------------------------------------------------------- simhash
@@ -646,109 +651,21 @@ def simhash64_text_udf():
     return _sig
 
 
-_POP8 = np.array([bin(i).count("1") for i in range(256)],
-                 dtype=np.uint8)
-
-
-def _simhash_bucket_pairs_fn(max_hamming: int):
-    """mapInPandas body over (band, key, _id, _sig, _mask) rows
-    hash-partitioned by (band, key): every verified pair of each
-    bucket, emitted EXACTLY ONCE corpus-wide.
-
-    Replaces the bucket self-join -> 66M candidate rows -> hamming
-    filter -> 26M-row dropDuplicates Exchange (sf1.0 numbers) with
-    in-group numpy: hamming via xor + byte-popcount in cache-sized
-    row blocks, and the cross-band dedup via the MIN-SHARED-BAND
-    rule — a pair is emitted from bucket (band k, key) iff no lower
-    band j < k has both ids sharing their band-j key AND both
-    surviving band j's flood cap (``_mask`` bit j).  That predicate
-    is exactly "the pair is also a candidate in band j", so each
-    qualifying pair is emitted at its minimal candidate band and the
-    output SET equals the old join+dropDuplicates output (pinned by
-    tests/test_simhash_bucket_opt.py, including a flooded-bucket
-    construction where the caps differ per band).
-
-    The input is ONE ROW PER BUCKET (band, key, members array of
-    (id, sig, mask) structs, from a collect_list aggregation) — a
-    DECLARED grouping.  An earlier r8 draft hash-repartitioned the
-    member rows and grouped inside the partition; that physical
-    co-location is NOT a contract: AQE can rewrite the shuffle read
-    to LOCAL mode (observed: `AQEShuffleRead local` under a
-    runtime-broadcast join conversion, MapInPandas declares no
-    required distribution), splitting buckets across tasks and
-    silently dropping pairs.  Grouping must be semantic, never
-    physical."""
-    def fn(it):
-        for pdf in it:
-            oa, ob, oh = [], [], []
-            for k_band, members in zip(pdf["band"], pdf["_members"]):
-                m = len(members)
-                if m < 2:
-                    continue
-                k_band = int(k_band)
-                ids = np.array([r["_id"] for r in members],
-                               dtype=np.int64)
-                sig = np.array([r["_sig"] for r in members],
-                               dtype=np.int64)
-                mask = np.array([r["_mask"] for r in members],
-                                dtype=np.int64)
-                order = np.argsort(ids, kind="stable")
-                ids, sig, mask = ids[order], sig[order], mask[order]
-                lower = [((sig >> np.int64(16 * j)) & np.int64(0xFFFF),
-                          (mask >> np.int64(j)) & np.int64(1) > 0)
-                         for j in range(k_band)]
-                blk = 256
-                for i0 in range(0, m, blk):
-                    i1 = min(i0 + blk, m)
-                    x = sig[i0:i1, None] ^ sig[None, :]
-                    ham = _POP8[
-                        x.view(np.uint8).reshape(i1 - i0, m, 8)
-                    ].sum(axis=2, dtype=np.int32)
-                    q = ham <= max_hamming
-                    q &= (np.arange(m)[None, :]
-                          > np.arange(i0, i1)[:, None])
-                    for sl, sv in lower:
-                        q &= ~((sl[i0:i1, None] == sl[None, :])
-                               & sv[i0:i1, None] & sv[None, :])
-                    r, c = np.nonzero(q)
-                    if len(r):
-                        oa.append(ids[i0 + r])
-                        ob.append(ids[c])
-                        oh.append(ham[r, c])
-            if oa:
-                yield pd.DataFrame({
-                    "id_a": np.concatenate(oa),
-                    "id_b": np.concatenate(ob),
-                    "hamming": np.concatenate(oh).astype(np.int32),
-                })
-
-    return fn
-
-
 def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text",
                   max_hamming: int = 3,
-                  max_bucket: int = 4096,
-                  eager: bool = True) -> DataFrame:
+                  max_bucket: int = 4096) -> DataFrame:
     """Candidate near-dup pairs with SimHash Hamming distance <=
-    max_hamming. Blocking: 4 16-bit bands (any pair within Hamming 3
-    of a 64-bit signature shares at least one exact band).
+    max_hamming: ``(id_a, id_b, hamming)``, id_a < id_b, each pair
+    once. Blocking: 4 16-bit bands (any pair within Hamming 3 of a
+    64-bit signature shares at least one exact band), verified per
+    bucket by the pair engine (operators/floodcap.hamming_pairs).
 
     max_bucket bounds each band bucket with the partial-agg flood cap
     (operators/floodcap.py) — identical-signature floods (boilerplate
     at web scale) otherwise make the bucket pairing quadratic.
     Buckets at or under the cap are exact; flooded buckets keep a
-    deterministic hash-prefix sample.  ``eager`` materializes the
-    scalar pair output and releases the banded-signature cache
-    (minhash_lsh_pairs' contract); ``eager=False`` keeps the lazy
-    plan for audits/composition.
-
-    r8 shape: the bucket self-join (66M candidate rows at sf1.0) and
-    the cross-band pair dropDuplicates Exchange are replaced by ONE
-    grouped Arrow pass (_simhash_bucket_pairs_fn): each capped bucket
-    verifies its own pairs in numpy and the min-shared-band rule
-    emits every pair exactly once — output set identical (parity and
-    flood-divergence tests in tests/test_simhash_bucket_opt.py)."""
+    deterministic hash-prefix sample."""
     # same parallelism guard as minhash_lsh_pairs: hash-repartition
     # on the id so the signature UDF is not serialized on the scan's
     # few parquet splits
@@ -758,41 +675,8 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
            .repartition(par, F.col("_id"))
            .select("_id", simhash64_text_udf()(F.col("_t"))
                    .alias("_sig")))
-    # persist: the flood-count pass, the survival-mask aggregate and
-    # the bucket grouping all read this relation — without it each
-    # reader re-hashes every token (same fix as the MinHash persist)
-    banded = sig.select(
-        "_id", "_sig",
-        F.explode(F.expr(
-            "transform(sequence(0, 3), b -> "
-            "struct(b as band, (shiftright(_sig, b * 16) & 65535) as key))"
-        )).alias("_b"),
-    ).select("_id", "_sig", "_b.band", "_b.key").persist()
-    capped = cap_flooded_buckets(banded, ["band", "key"], "_id",
-                                 max_bucket)
-    # per-id band-survival bitmask: bit j set iff the id is in its
-    # band-j CAPPED bucket — the _simhash_bucket_pairs_fn min-shared-
-    # band rule needs it to reproduce the old join+dropDuplicates
-    # output exactly under flood sampling (a pair dropped from band
-    # j's bucket must still be emitted by a later shared band)
-    surv = capped.groupBy("_id").agg(
-        F.sum(F.expr("shiftleft(1, band)")).alias("_mask"))
-    # one row per bucket via a DECLARED aggregation (bounded by the
-    # flood cap) — physical repartition co-location is not a
-    # contract under AQE (see _simhash_bucket_pairs_fn docstring)
-    buckets = (
-        capped.join(surv, "_id")
-        .groupBy("band", "key")
-        .agg(F.collect_list(F.struct("_id", "_sig", "_mask"))
-             .alias("_members"))
-    )
-    out = buckets.mapInPandas(
-        _simhash_bucket_pairs_fn(max_hamming),
-        "id_a long, id_b long, hamming int")
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        banded.unpersist()
-    return out
+    return hamming_pairs(sig, max_hamming, max_bucket) \
+        .withColumnRenamed("score", "hamming")
 
 
 # --------------------------------------------------- exact n-gram jaccard

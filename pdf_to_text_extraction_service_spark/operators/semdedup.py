@@ -38,15 +38,11 @@ bit-identical results, pinned by tests/test_semdedup_opt.py parity):
 Returns the REMOVED rows: (id, kept_id, cosine) where kept_id is
 the lowest-id qualifying cluster-mate (deterministic witness).
 
-``eager=False`` note (ADVICE r7): the internal per-cluster relation
-stays persisted inside the returned lazy plan — unpersist
-responsibility transfers to the caller (materialize, then
-``spark.catalog.clearCache()`` or re-call with eager=True).  Rows
-whose cosine evaluates NaN (zero-norm embeddings) follow Spark/DuckDB
-NaN ordering (NaN >= threshold is TRUE) and are emitted with a NULL
-cosine (NaN crosses the Arrow boundary as pandas NA); the previous
-ANSI-mode SQL division simply errored on such rows, so this is
-strictly more tolerant.
+Rows whose cosine evaluates NaN (zero-norm embeddings) follow
+Spark/DuckDB NaN ordering (NaN >= threshold is TRUE) and are emitted
+with a NULL cosine (NaN crosses the Arrow boundary as pandas NA); the
+previous ANSI-mode SQL division simply errored on such rows, so this
+is strictly more tolerant.
 """
 
 from __future__ import annotations
@@ -56,8 +52,9 @@ from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, functions as F
 
-from .floodcap import cap_flooded_buckets
+from .floodcap import _checkpoint_release, cap_flooded_buckets
 from .ivf import assign_clusters_pd, train_kmeans
+from .similarity import cosine_verify
 
 
 def _spark_round6(x: float) -> float:
@@ -71,45 +68,23 @@ def _spark_round6(x: float) -> float:
                                            rounding=ROUND_HALF_UP))
 
 
-#: prefilter slack: float32 GEMM cosine error is bounded by
-#: ~gamma_dim(f32) = dim * 2^-24 relative (any summation order, with
-#: or without FMA, via |fl(dot) - dot| <= gamma * sum|a_i b_i| and
-#: Cauchy-Schwarz sum|a_i b_i| <= ||a|| ||b||), i.e. ~4e-6 at
-#: dim=64, ~6e-5 at dim=1024.  1e-3 is a >15x safety margin: every
-#: pair whose EXACT cosine reaches the threshold is guaranteed into
-#: the candidate set, and every candidate is re-decided by the exact
-#: fold — so the float32 pass (and BLAS summation-order freedom)
-#: cannot change the output.
-_PREFILTER_MARGIN = 1e-3
-
-#: exact-recheck chunk: bounds the (pairs x dim) float64 temporaries
-#: when a capped flood makes the candidate set quadratic.
-_RECHECK_CHUNK = 1 << 18
-
-
 def _cluster_prune_fn(threshold: float, id_col: str):
     """applyInPandas body: per-cluster pairwise cosine prune.
 
-    Two-phase, output bit-identical to the previous SQL self-join:
-
-    1. float32 GEMM cosine over the whole group (one sgemm — the
-       m^2 x dim work runs at BLAS speed instead of 64 strided
-       numpy passes) keeps every pair with approx cosine >=
-       threshold - _PREFILTER_MARGIN (plus non-finite entries);
-    2. candidates only are recomputed EXACTLY: float64 sequential
-       left-fold over dims (np.cumsum == the SQL aggregate(zip_with)
-       order), cosine = dot / (na * nb) as IEEE doubles; NaN
-       qualifies (Spark NaN ordering); witness = lowest qualifying
-       lower id; round replicates Spark HALF_UP."""
+    Output bit-identical to the previous SQL self-join: the pairs are
+    similarity.cosine_verify's (float32 GEMM prefilter, exact float64
+    fold; NaN qualifies); witness = lowest qualifying lower id; round
+    replicates Spark HALF_UP."""
     import numpy as np
     import pandas as pd
 
+    verify = cosine_verify(threshold)
+
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
         empty = pd.DataFrame({id_col: pd.array([], dtype="int64"),
                               "kept_id": pd.array([], dtype="int64"),
                               "cosine": pd.array([], dtype="float64")})
-        if m < 2:
+        if len(pdf) < 2:
             return empty
         ids_raw = pdf["_id"].to_numpy(np.int64)
         order = np.argsort(ids_raw, kind="stable")
@@ -117,40 +92,9 @@ def _cluster_prune_fn(threshold: float, id_col: str):
         mat = np.asarray(
             [np.asarray(v, dtype=np.float64)
              for v in pdf["_v"].to_numpy()[order]], dtype=np.float64)
-        # exact norms: sqrt of the sequential left-fold of squares
-        n64 = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
-
-        # ---- phase 1: float32 prefilter (see docstring for bound)
-        m32 = mat.astype(np.float32)
-        g = m32 @ m32.T
-        n32 = n64.astype(np.float32)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            g /= np.multiply.outer(n32, n32)
-        cand = (g >= np.float32(threshold - _PREFILTER_MARGIN)) \
-            | ~np.isfinite(g)
-        cand &= np.tri(m, m, -1, dtype=bool).T   # strictly upper: i<j
-        ii, jj = np.nonzero(cand)
+        ii, jj, cc = verify({"_v": mat})
         if len(ii) == 0:
             return empty
-
-        # ---- phase 2: exact recheck of candidates only
-        keep_i, keep_j, keep_c = [], [], []
-        for lo in range(0, len(ii), _RECHECK_CHUNK):
-            ci = ii[lo:lo + _RECHECK_CHUNK]
-            cj = jj[lo:lo + _RECHECK_CHUNK]
-            # sequential left-fold over dims == SQL aggregate(zip_with)
-            dots = np.cumsum(mat[ci] * mat[cj], axis=1)[:, -1]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dots / (n64[ci] * n64[cj])
-            ok = (cos >= threshold) | np.isnan(cos)
-            keep_i.append(ci[ok])
-            keep_j.append(cj[ok])
-            keep_c.append(cos[ok])
-        ii = np.concatenate(keep_i)
-        if len(ii) == 0:
-            return empty
-        jj = np.concatenate(keep_j)
-        cc = np.concatenate(keep_c)
         srt = np.lexsort((ii, jj))
         ii, jj, cc = ii[srt], jj[srt], cc[srt]
         ju, first = np.unique(jj, return_index=True)
@@ -169,14 +113,14 @@ def semantic_dedup(df: DataFrame, k: int = 8, iters: int = 3,
                    id_col: str = "vec_id",
                    vec_col: str = "embedding",
                    max_cluster: int = 4096,
-                   centroids: list[list[float]] | None = None,
-                   eager: bool = True) -> DataFrame:
+                   centroids: list[list[float]] | None = None
+                   ) -> DataFrame:
     """Cluster-then-prune semantic dedup; see module docstring.
 
     ``centroids`` lets callers reuse an already-trained IVF
-    codebook (index build + dedup in one pass over the corpus);
-    ``eager`` materializes the scalar output and releases the
-    internal caches (the LSH pair ops' production contract)."""
+    codebook (index build + dedup in one pass over the corpus).  The
+    scalar output is materialized and the internal caches released
+    before returning."""
     if centroids is None:
         centroids = train_kmeans(df, k=k, iters=iters,
                                  id_col=id_col, vec_col=vec_col)
@@ -193,7 +137,4 @@ def semantic_dedup(df: DataFrame, k: int = 8, iters: int = 3,
         _cluster_prune_fn(threshold, id_col),
         f"{id_col} long, kept_id long, cosine double",
     )
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        assigned.unpersist()
-    return out
+    return _checkpoint_release(out, assigned)

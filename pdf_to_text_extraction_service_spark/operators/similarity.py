@@ -20,10 +20,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .floodcap import cap_flooded_buckets
+from .floodcap import block_verify_pairs
 
 
 def _dot(a: str, b: str):
@@ -146,62 +146,37 @@ def hyperplane_buckets_pd(all_planes: list[list[list[float]]]):
     return _bkts
 
 
-def cosine_exact_pd(va_col: str, vb_col: str):
-    """Exact pairwise cosine as one vectorized Arrow pass —
-    bit-identical to ``_dot(a, b) / (_norm(a) * _norm(b))`` (same
-    sequential folds, same IEEE division).  Zero-norm pairs yield
-    NaN, which crosses the Arrow boundary as NULL and is dropped by
-    the threshold filter (the interpreted path raised an ANSI
-    DIVIDE_BY_ZERO error on such rows — strictly more tolerant)."""
-    from pyspark.sql.functions import pandas_udf
+#: prefilter slack: float32 GEMM cosine error is bounded by
+#: ~gamma_dim(f32) = dim * 2^-24 relative (any summation order, with
+#: or without FMA, via |fl(dot) - dot| <= gamma * sum|a_i b_i| and
+#: Cauchy-Schwarz sum|a_i b_i| <= ||a|| ||b||), i.e. ~4e-6 at
+#: dim=64, ~6e-5 at dim=1024.  1e-3 is a >15x safety margin: every
+#: pair whose EXACT cosine reaches the threshold is guaranteed into
+#: the candidate set, and every candidate is re-decided by the exact
+#: fold — so the float32 pass (and BLAS summation-order freedom)
+#: cannot change the output.
+_PREFILTER_MARGIN = 1e-3
 
-    @pandas_udf("double")
-    def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        a = np.asarray([np.asarray(v, dtype=np.float64) for v in va],
-                       dtype=np.float64)
-        b = np.asarray([np.asarray(v, dtype=np.float64) for v in vb],
-                       dtype=np.float64)
-        if a.size == 0:
-            return pd.Series(np.empty(0, dtype=np.float64))
-        dots = np.cumsum(a * b, axis=1)[:, -1]
-        na = np.sqrt(np.cumsum(a * a, axis=1)[:, -1])
-        nb = np.sqrt(np.cumsum(b * b, axis=1)[:, -1])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return pd.Series(dots / (na * nb))
-
-    return _cos(F.col(va_col), F.col(vb_col))
+#: exact-recheck chunk: bounds the (pairs x dim) float64 temporaries
+#: when a capped flood makes the candidate set quadratic.
+_RECHECK_CHUNK = 1 << 18
 
 
-def _bucket_pairs_fn(threshold: float):
-    """applyInPandas body for embedding_neardup_pairs: all verified
-    pairs within one (table, bucket) group.
+def cosine_verify(threshold: float):
+    """Pair verify over ``_v`` vectors (rows sorted by id): every pair
+    ``i < j`` with cosine >= threshold, bit-identical to the SQL
+    ``_dot(a, b) / (_norm(a) * _norm(b))``.
 
-    Same two-phase shape as semdedup._cluster_prune_fn: a float32
-    GEMM cosine prefilter with an error-bounded margin nominates
-    candidates, the exact float64 sequential fold (== the SQL
-    ``_dot/_norm`` expressions) decides — so every emitted cosine is
-    bit-identical to the interpreted per-pair path, while the
-    ~bucket^2/2 non-duplicate pairs never leave the group (the old
-    shape shipped 13M candidate rows through a dropDuplicates
-    Exchange and two vector-attach joins at sf1.0 for a 20k-pair
-    result).  NaN cosines (zero-norm vectors) qualify, matching
-    Spark/DuckDB NaN ordering (the interpreted path raised an ANSI
-    divide-by-zero on such rows)."""
-    from .semdedup import _PREFILTER_MARGIN
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        empty = pd.DataFrame({"id_a": pd.array([], dtype="int64"),
-                              "id_b": pd.array([], dtype="int64"),
-                              "cosine": pd.array([], dtype="float64")})
-        if m < 2:
-            return empty
-        ids_raw = pdf["_id"].to_numpy(np.int64)
-        order = np.argsort(ids_raw, kind="stable")
-        ids = ids_raw[order]
-        mat = np.asarray(
-            [np.asarray(v, dtype=np.float64)
-             for v in pdf["_v"].to_numpy()[order]], dtype=np.float64)
+    Two phases: a float32 GEMM cosine over the whole group keeps
+    every pair with approx cosine >= threshold - _PREFILTER_MARGIN
+    (plus non-finite entries); only those candidates are recomputed
+    EXACTLY as a float64 sequential left-fold over dims (np.cumsum ==
+    the SQL aggregate(zip_with) order) and IEEE division.  A zero-norm
+    vector gives a NaN cosine, and NaN qualifies (Spark/DuckDB order
+    NaN above every number)."""
+    def verify(p):
+        mat = np.asarray(p["_v"], dtype=np.float64)
+        m = len(mat)
         n64 = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
         m32 = mat.astype(np.float32)
         g = m32 @ m32.T
@@ -210,19 +185,19 @@ def _bucket_pairs_fn(threshold: float):
             g /= np.multiply.outer(n32, n32)
         cand = (g >= np.float32(threshold - _PREFILTER_MARGIN)) \
             | ~np.isfinite(g)
-        cand &= np.tri(m, m, -1, dtype=bool).T
+        cand &= np.tri(m, m, -1, dtype=bool).T   # strictly upper: i<j
         ii, jj = np.nonzero(cand)
-        if len(ii) == 0:
-            return empty
-        dots = np.cumsum(mat[ii] * mat[jj], axis=1)[:, -1]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = dots / (n64[ii] * n64[jj])
+        cos = np.empty(len(ii), dtype=np.float64)
+        for lo in range(0, len(ii), _RECHECK_CHUNK):
+            ci = ii[lo:lo + _RECHECK_CHUNK]
+            cj = jj[lo:lo + _RECHECK_CHUNK]
+            dots = np.cumsum(mat[ci] * mat[cj], axis=1)[:, -1]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos[lo:lo + _RECHECK_CHUNK] = dots / (n64[ci] * n64[cj])
         ok = (cos >= threshold) | np.isnan(cos)
-        ii, jj, cos = ii[ok], jj[ok], cos[ok]
-        return pd.DataFrame({"id_a": ids[ii], "id_b": ids[jj],
-                             "cosine": cos})
+        return ii[ok], jj[ok], cos[ok]
 
-    return fn
+    return verify
 
 
 def embedding_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
@@ -230,8 +205,7 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
                             threshold: float = 0.99,
                             tables: int = 4, bits: int = 8,
                             seed: int = 11,
-                            max_bucket: int = 256,
-                            eager: bool = True) -> DataFrame:
+                            max_bucket: int = 256) -> DataFrame:
     """Embedding-cosine NEAR-DUP pairs (the dedup counterpart of
     lsh_topk's search): multi-table random-hyperplane blocking, then
     exact cosine verification inside buckets only — never all-pairs.
@@ -243,57 +217,37 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
     (cosine >= 0.99 → θ <= 8.1°, p <= 0.045) that is < 2e-5 at
     (4 tables × 8 bits). False bucket-mates are removed by the exact
     cosine check, so the output equals the quadratic truth w.h.p.;
-    max_bucket caps the per-bucket self-join exactly like the MinHash
-    banding cap (boilerplate/zero-vector floods at web scale):
-    buckets at or under the cap are exact, flooded buckets keep a
-    deterministic hash-prefix sample (operators/floodcap.py) — the
-    exact verify means sampling only loses flood-internal pairs,
-    never fabricates them.
+    max_bucket caps each bucket exactly like the MinHash banding cap
+    (boilerplate/zero-vector floods at web scale): buckets at or
+    under the cap are exact, flooded buckets keep a deterministic
+    hash-prefix sample (operators/floodcap.py) — the exact verify
+    means sampling only loses flood-internal pairs, never fabricates
+    them.
 
-    ``eager`` (default) materializes the scalar pair output and
-    releases the vector/banded caches before returning
-    (minhash_lsh_pairs' contract); ``eager=False`` keeps the lazy
-    plan for audits/composition.
+    Zero-norm vectors: a zero vector's cosine with any bucket-mate is
+    NaN (0/0), and a NaN cosine counts as a duplicate (Spark/DuckDB
+    order NaN above every number), so it is emitted with cosine NaN.
+    A zero vector has dot 0 >= 0 against every plane, so all zero
+    vectors share one bucket in every table.
     """
     dim_row = df.select(F.size(vec_col).alias("d")).first()
     if dim_row is None:
         return df.sparkSession.createDataFrame(
-            [], f"id_a long, id_b long, cosine double")
+            [], "id_a long, id_b long, cosine double")
     dim = dim_row["d"]
     # hash-repartition on the id (deterministic — guide §2.5) so the
-    # bucket UDF and the verify joins are not serialized on the
-    # scan's few parquet splits
+    # bucket UDF is not serialized on the scan's few parquet splits
     par = df.sparkSession.sparkContext.defaultParallelism
     base = df.select(F.col(id_col).alias("_id"),
                      F.col(vec_col).alias("_v")) \
-        .repartition(par, F.col("_id")).persist()
-    # all LSH tables in ONE vectorized Arrow pass; the banded
-    # relation carries (id, table, bucket) SCALARS only — the old
-    # shape both evaluated tables x bits interpreted dot-folds per
-    # vector and carried the vector through banding, the candidate
-    # join and the pair dropDuplicates (r8: vectors now cross only
-    # the two verify joins, after the pair dedup)
+        .repartition(par, F.col("_id"))
+    # all LSH tables in ONE vectorized Arrow pass
     all_planes = [make_planes(dim, bits, seed + t)
                   for t in range(tables)]
-    banded = base.select(
-        "_id",
-        F.posexplode(hyperplane_buckets_pd(all_planes)(F.col("_v")))
-        .alias("_tbl", "_bkt"),
-    ).persist()
-    capped = cap_flooded_buckets(
-        banded.join(base, "_id"), ["_tbl", "_bkt"], "_id", max_bucket)
-    # per-bucket verified pairs (GEMM prefilter + exact fold inside
-    # the group — see _bucket_pairs_fn); only qualifying pairs reach
-    # the cross-table dropDuplicates, with their bit-exact cosine
-    pairs = capped.groupBy("_tbl", "_bkt").applyInPandas(
-        _bucket_pairs_fn(threshold),
-        "id_a long, id_b long, cosine double")
-    out = (
-        pairs.dropDuplicates(["id_a", "id_b"])
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-    )
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        banded.unpersist()
-        base.unpersist()
-    return out
+    keyed = base.select(
+        "_id", hyperplane_buckets_pd(all_planes)(F.col("_v"))
+        .alias("_keys"), "_v")
+    pairs = block_verify_pairs(keyed, cosine_verify(threshold), "double",
+                               max_bucket)
+    return pairs.select("id_a", "id_b",
+                        F.round("score", 6).alias("cosine"))

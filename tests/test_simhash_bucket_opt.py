@@ -1,7 +1,7 @@
-"""r8 optimization parity pin: the per-bucket min-shared-band SimHash
-pairing must produce the exact pair SET the old bucket self-join +
-hamming filter + dropDuplicates produced — including under flood
-capping where per-band survivor sets differ."""
+"""Parity pin: the pair engine's min-shared-band SimHash pairing
+(operators/floodcap.hamming_pairs) must produce the exact pair SET
+the old bucket self-join + hamming filter + dropDuplicates produced —
+including under flood capping where per-band survivor sets differ."""
 
 from __future__ import annotations
 
@@ -33,25 +33,11 @@ def _old_downstream(banded, max_hamming, max_bucket):
 
 def _new_downstream(banded, max_hamming, max_bucket):
     from pdf_to_text_extraction_service_spark.operators.floodcap import (
-        cap_flooded_buckets,
-    )
-    from pdf_to_text_extraction_service_spark.operators.neardup import (
-        _simhash_bucket_pairs_fn,
+        hamming_pairs,
     )
 
-    capped = cap_flooded_buckets(banded, ["band", "key"], "_id",
-                                 max_bucket)
-    surv = capped.groupBy("_id").agg(
-        F.sum(F.expr("shiftleft(1, band)")).alias("_mask"))
-    buckets = (
-        capped.join(surv, "_id")
-        .groupBy("band", "key")
-        .agg(F.collect_list(F.struct("_id", "_sig", "_mask"))
-             .alias("_members"))
-    )
-    return buckets.mapInPandas(
-        _simhash_bucket_pairs_fn(max_hamming),
-        "id_a long, id_b long, hamming int")
+    return hamming_pairs(banded.select("_id", "_sig").distinct(),
+                         max_hamming, max_bucket)
 
 
 def _banded_from_sigs(spark, rows):

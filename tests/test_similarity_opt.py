@@ -42,10 +42,14 @@ def test_hyperplane_buckets_pd_equals_jvm(spark):
 
 
 def test_cosine_exact_pd_equals_sql_fold(spark):
+    """The pair engine's cosine verify returns, bit for bit, the SQL
+    ``_dot / (_norm * _norm)`` fold on the same pairs."""
+    import numpy as np
+
     from pdf_to_text_extraction_service_spark.operators.similarity import (
         _dot,
         _norm,
-        cosine_exact_pd,
+        cosine_verify,
     )
 
     df = _vecs(spark)
@@ -57,7 +61,12 @@ def test_cosine_exact_pd_equals_sql_fold(spark):
         F.col("b.embedding").alias("_vb"))
     sql = pairs.withColumn(
         "c", _dot("_va", "_vb") / (_norm("_va") * _norm("_vb")))
-    arrow = pairs.withColumn("c", cosine_exact_pd("_va", "_vb"))
     want = {r["id"]: r["c"] for r in sql.collect()}
-    got = {r["id"]: r["c"] for r in arrow.collect()}
+    rows = sorted((r["vec_id"], r["embedding"]) for r in df.collect())
+    ids = [i for i, _ in rows]
+    # threshold below -1: every pair qualifies, so verify scores all
+    ii, jj, cos = cosine_verify(-2.0)(
+        {"_v": np.array([v for _, v in rows], dtype=np.float64)})
+    got = {ids[i]: c for i, j, c in zip(ii, jj, cos)
+           if ids[j] == ids[i] + 1}
     assert got == want and len(got) > 400

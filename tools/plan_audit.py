@@ -90,32 +90,6 @@ def main() -> None:
         "with no engine code.",
     ))
 
-    q = entry_mod.queries()["dedup_minhash_lsh"]
-    sections.append((
-        "MinHash LSH near-dup (vectorized signatures)",
-        _plan(q(spark, SF)),
-        "Shingle arrays are computed once (InMemoryTableScan of the "
-        "persisted `sh`), string-hashed JVM-side (xxhash64), then ONE "
-        "ArrowEvalPython stage computes all 96 permutations per batch "
-        "(numpy broadcast) — the only Python hop in the near-dup "
-        "path. The banding explode ships 3 small scalars per "
-        "(doc, band); the self-join runs inside (band, key) buckets "
-        "only (row_number cap bounds degenerate buckets); exact "
-        "verification joins back to the persisted shingles.",
-    ))
-
-    q = entry_mod.queries()["dedup_embedding_cosine"]
-    sections.append((
-        "Embedding-cosine near-dup (multi-table LSH blocking)",
-        _plan(q(spark, SF)),
-        "Four hyperplane bucket tables union'd map-side (no shuffle "
-        "until the bucket join); the self-join keys on (table, "
-        "bucket) so candidate generation is bucket-local, never "
-        "all-pairs; exact cosine (JVM aggregate/zip_with, no Python) "
-        "verifies candidates. At 100 TB the bucketed relation is "
-        "what you persist, partitioned by bucket.",
-    ))
-
     q = entry_mod.queries()["ann_ivf_topk"]
     sections.append((
         "IVF ANN over the persisted index (partition pruning)",
