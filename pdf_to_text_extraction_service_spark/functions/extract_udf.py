@@ -14,11 +14,18 @@ batch — but batching amortizes JVM↔Python Arrow transfer, which is the
 BASELINE.json: no Python ↔ JVM round trip per row, and all
 post-extraction operators (dedup, aggregation, joins) stay JVM-side on
 the extracted columns.
+
+extract() and preview() share ONE envelope, ``_envelope(doc_fn,
+keep_pages)``: the batch loop, pass-through columns, the
+``coding_error`` failure row and the Result → row flattening live
+there, and each mode passes only its per-document function
+(``router.extract_document`` / a bound ``preview_document``).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
@@ -64,117 +71,84 @@ EXTRACTED_SCHEMA = StructType([
 ])
 
 
-def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    # Imports inside the worker process.
-    import pandas as pd
-
-    from pdf_to_text_extraction_service_spark.kernel import router
-
-    for batch in batches:
-        urls = batch["url"].tolist()
-        payloads = batch["html"].tolist()
-        ts = batch["warc_ts"].tolist() if "warc_ts" in batch else [None] * len(urls)
-        langs = batch["lang"].tolist() if "lang" in batch else [None] * len(urls)
-        cerrs = batch["coding_error"].tolist() \
-            if "coding_error" in batch else [None] * len(urls)
-
-        out: dict[str, list] = {k: [] for k in (
-            "url", "warc_ts", "lang", "format", "success", "text",
-            "method", "file_type", "mime_type", "pages", "metadata",
-            "word_count", "char_count", "error",
-        )}
-        for i, url in enumerate(urls):
-            payload = payloads[i]
-            if payload is not None and not isinstance(payload, bytes):
-                payload = bytes(payload)
-            if cerrs[i]:
-                # undecodable HTTP content coding (WARC reader
-                # boundary, sources/warc.py): a br/zstd/compress
-                # body must not reach extension-first routing as
-                # raw compressed bytes — failure-coded envelope,
-                # mirroring the reference's success=false philosophy
-                res, fmt = router.Result(
-                    success=False, error=str(cerrs[i])), "unknown"
-            else:
-                res, fmt = router.extract_document(url, payload)
-            out["url"].append(url)
-            out["warc_ts"].append(ts[i])
-            out["lang"].append(langs[i])
-            out["format"].append(fmt)
-            out["success"].append(res.success)
-            out["text"].append(res.text)
-            out["method"].append(res.method)
-            out["file_type"].append(res.file_type)
-            out["mime_type"].append(res.mime_type)
-            out["pages"].append(
-                None if res.pages is None else [
-                    {"page_number": p.page_number, "text": p.text,
-                     "method": p.method, "word_count": p.word_count}
-                    for p in res.pages
-                ]
-            )
-            out["metadata"].append(res.metadata)
-            out["word_count"].append(res.word_count)
-            out["char_count"].append(res.char_count)
-            out["error"].append(res.error)
-        yield pd.DataFrame(out)
+# Result attributes copied as-is into the row of the same name.
+_RESULT_FIELDS = ("success", "text", "method", "file_type", "mime_type",
+                  "metadata", "word_count", "char_count", "error")
 
 
-def preview(pages_df: DataFrame,
-            max_chars: int = 20000,
-            max_pages: int = 8) -> DataFrame:
-    """Preview-mode pipeline: same batching as extract(), but the
-    cost-bounded early-exit kernel (kernel/preview.py — reference
-    /api/preview semantics: allowlist, PDF text-layer only, byte
-    truncation + '...')."""
+def _envelope(doc_fn, keep_pages: bool):
+    """The one extract/preview envelope around a per-document function
+    ``doc_fn(url, payload) -> (Result, format)``: carries ``url``,
+    ``warc_ts`` and ``lang`` through, turns a ``coding_error`` into a
+    failure-coded row without calling ``doc_fn``, and flattens the
+    Result into an ``EXTRACTED_SCHEMA`` row (``pages`` forced NULL
+    unless ``keep_pages``)."""
 
-    def _preview_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def _extract_batches(batches: Iterator["pd.DataFrame"]) \
+            -> Iterator["pd.DataFrame"]:
+        # Imports inside the worker process.
         import pandas as pd
 
-        from pdf_to_text_extraction_service_spark.kernel import (
-            preview as kpreview,
+        from pdf_to_text_extraction_service_spark.kernel.router import (
+            Result,
         )
 
         for batch in batches:
             urls = batch["url"].tolist()
             payloads = batch["html"].tolist()
-            ts = batch["warc_ts"].tolist() if "warc_ts" in batch \
-                else [None] * len(urls)
-            langs = batch["lang"].tolist() if "lang" in batch \
-                else [None] * len(urls)
-            out: dict[str, list] = {k: [] for k in (
-                "url", "warc_ts", "lang", "format", "success", "text",
-                "method", "file_type", "mime_type", "pages", "metadata",
-                "word_count", "char_count", "error",
-            )}
+            ts, langs, cerrs = (
+                batch[c].tolist() if c in batch else [None] * len(urls)
+                for c in ("warc_ts", "lang", "coding_error"))
+
+            out: dict[str, list] = {k: [] for k in EXTRACTED_SCHEMA.names}
             for i, url in enumerate(urls):
                 payload = payloads[i]
                 if payload is not None and not isinstance(payload, bytes):
                     payload = bytes(payload)
-                res, fmt = kpreview.preview_document(
-                    url, payload, max_chars=max_chars,
-                    max_pages=max_pages,
-                )
+                if cerrs[i]:
+                    # undecodable HTTP content coding (WARC reader
+                    # boundary, sources/warc.py): a br/zstd/compress
+                    # body must not reach extension-first routing as
+                    # raw compressed bytes — failure-coded envelope,
+                    # mirroring the reference's success=false philosophy
+                    res, fmt = Result(
+                        success=False, error=str(cerrs[i])), "unknown"
+                else:
+                    res, fmt = doc_fn(url, payload)
                 out["url"].append(url)
                 out["warc_ts"].append(ts[i])
                 out["lang"].append(langs[i])
                 out["format"].append(fmt)
-                out["success"].append(res.success)
-                out["text"].append(res.text)
-                out["method"].append(res.method)
-                out["file_type"].append(res.file_type)
-                out["mime_type"].append(res.mime_type)
-                out["pages"].append(None)
-                out["metadata"].append(res.metadata)
-                out["word_count"].append(res.word_count)
-                out["char_count"].append(res.char_count)
-                out["error"].append(res.error)
+                out["pages"].append(
+                    None if res.pages is None or not keep_pages else [
+                        {"page_number": p.page_number, "text": p.text,
+                         "method": p.method, "word_count": p.word_count}
+                        for p in res.pages
+                    ]
+                )
+                for k in _RESULT_FIELDS:
+                    out[k].append(getattr(res, k))
             yield pd.DataFrame(out)
 
+    return _extract_batches
+
+
+def preview(pages_df: DataFrame,
+            max_chars: int = 20000,
+            max_pages: int = 8) -> DataFrame:
+    """Preview-mode pipeline: same batching and envelope as extract()
+    (no ``coding_error`` column, ``pages`` NULL), but the cost-bounded
+    early-exit kernel (kernel/preview.py — reference /api/preview
+    semantics: allowlist, PDF text-layer only, byte truncation +
+    '...')."""
+    from ..kernel import preview as kpreview
+
+    doc_fn = partial(kpreview.preview_document, max_chars=max_chars,
+                     max_pages=max_pages)
     cols = [c for c in ("url", "warc_ts", "html", "lang")
             if c in pages_df.columns]
     return pages_df.select(*cols).mapInPandas(
-        _preview_batches, schema=EXTRACTED_SCHEMA
+        _envelope(doc_fn, keep_pages=False), schema=EXTRACTED_SCHEMA
     )
 
 
@@ -187,9 +161,12 @@ def extract(pages_df: DataFrame) -> DataFrame:
     bytes out of every subsequent shuffle (SURVEY.md §4: the single
     biggest lever for scaling efficiency).
     """
+    from ..kernel import router
+
     cols = [c for c in ("url", "warc_ts", "html", "lang",
                         "coding_error")
             if c in pages_df.columns]
     return pages_df.select(*cols).mapInPandas(
-        _extract_batches, schema=EXTRACTED_SCHEMA
+        _envelope(router.extract_document, keep_pages=True),
+        schema=EXTRACTED_SCHEMA
     )

@@ -10,12 +10,19 @@ the deterministic FAKE container (``FAKEIMG``/``FAKEVID``, see
 make_fake_image) remains as the closed-form oracle-able payload kind.
 Unsupported/malformed formats surface as ``error`` rows — never a
 task crash — exactly like the extraction router's failure envelopes.
+
+Every one-row-per-payload operator here (and
+operators/pagestats.pdf_image_ocr_stats) is a per-format kernel call
+behind ONE Python-boundary pass, :func:`map_payloads`: it owns the
+batch loop, NULL → ``b""``, the output columns and the error row, so
+the boundary format is decided in one place.  Only the one-to-many
+:func:`sample_frames` keeps its own ``mapInPandas``.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
@@ -36,6 +43,39 @@ if TYPE_CHECKING:
 
 FAKE_IMG_MAGIC = b"FAKEIMG1"
 FAKE_VID_MAGIC = b"FAKEVID1"
+
+
+def map_payloads(df: DataFrame, key_col: str, payload_col: str,
+                 schema: StructType,
+                 row_fn: Callable[[bytes], dict]) -> DataFrame:
+    """The per-payload row pass: ``select(key, payload)`` then one
+    Arrow-batched ``mapInPandas`` hop, one output row per input row.
+
+    ``row_fn(payload)`` gets the payload as bytes (``b""`` for NULL)
+    and returns a dict; the output row is the key (under ``schema``'s
+    first field) plus ``row.get(f)`` for every other field.  If
+    ``row_fn`` raises, the row is the key plus ``error = str(exc)``:
+    an error row, never a task crash.  An operator that keeps fields
+    on failure catches its own exception inside ``row_fn``."""
+    key, fields = schema.names[0], schema.names[1:]
+
+    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        for batch in batches:
+            out: dict[str, list] = {f: [] for f in schema.names}
+            for k, p in zip(batch[key_col].tolist(),
+                            batch[payload_col].tolist()):
+                try:
+                    row = row_fn(bytes(p) if p is not None else b"")
+                except Exception as exc:
+                    row = {"error": str(exc)}
+                out[key].append(k)
+                for f in fields:
+                    out[f].append(row.get(f))
+            yield pd.DataFrame(out)
+
+    return df.select(key_col, payload_col).mapInPandas(_run, schema=schema)
 
 
 def sniff_media(p: bytes) -> str | None:
@@ -205,34 +245,19 @@ def _decode_image(payload: bytes) -> tuple[int, int, list[float]]:
 
 def image_features(df: DataFrame, id_col: str = "media_id",
                    payload_col: str = "payload") -> DataFrame:
-    """Decode + feature-extract over Arrow batches."""
+    """Decode + feature-extract over Arrow batches; error rows keep
+    ``n_bytes``."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def _row(p: bytes) -> dict:
+        try:
+            w, h, feats = _decode_image(p)
+        except Exception as exc:
+            return {"n_bytes": len(p), "error": str(exc)}
+        return {"width": w, "height": h, "n_bytes": len(p),
+                "features": feats}
 
-        for batch in batches:
-            out = {k: [] for k in ("media_id", "width", "height",
-                                   "n_bytes", "features", "error")}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                out["n_bytes"].append(len(payload))
-                try:
-                    w, h, feats = _decode_image(payload)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["features"].append(feats)
-                    out["error"].append(None)
-                except Exception as exc:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["features"].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=IMAGE_FEATURES_SCHEMA
-    )
+    return map_payloads(df, id_col, payload_col, IMAGE_FEATURES_SCHEMA,
+                        _row)
 
 
 RESIZE_SCHEMA = StructType([
@@ -300,67 +325,29 @@ def resize_images(df: DataFrame, out_w: int = 8, out_h: int = 8,
                   payload_col: str = "payload") -> DataFrame:
     """Thumbnail operator: decode → deterministic area-average resize
     (imgcodec.resize_area, integer math) → grayscale pixel array.
-    The mapInPandas shape a real thumbnailing stage would have; errors
+    The row-pass shape a real thumbnailing stage would have; errors
     surface as rows, never task crashes."""
+    from ..kernel import imgcodec
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def _row(p: bytes) -> dict:
+        small = imgcodec.resize_area(_decode_gray(p)[2], out_w, out_h)
+        return {"width": out_w, "height": out_h,
+                "thumb": [int(v) for v in small.reshape(-1)]}
 
-        from ..kernel import imgcodec
-
-        for batch in batches:
-            out = {k: [] for k in ("media_id", "width", "height",
-                                   "thumb", "error")}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    _, _, gray = _decode_gray(payload)
-                    small = imgcodec.resize_area(gray, out_w, out_h)
-                    out["width"].append(out_w)
-                    out["height"].append(out_h)
-                    out["thumb"].append(
-                        [int(v) for v in small.reshape(-1)])
-                    out["error"].append(None)
-                except Exception as exc:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["thumb"].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=RESIZE_SCHEMA)
+    return map_payloads(df, id_col, payload_col, RESIZE_SCHEMA, _row)
 
 
 def image_dhash(df: DataFrame, id_col: str = "media_id",
                 payload_col: str = "payload") -> DataFrame:
     """Per-image 64-bit difference hash (imgcodec.dhash64)."""
+    from ..kernel import imgcodec
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def _row(p: bytes) -> dict:
+        h = imgcodec.dhash64(_decode_gray(p)[2])
+        # store as signed 64-bit (Spark LongType)
+        return {"dhash": h - (1 << 64) if h >= 1 << 63 else h}
 
-        from ..kernel import imgcodec
-
-        for batch in batches:
-            out = {"media_id": [], "dhash": [], "error": []}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    _, _, gray = _decode_gray(payload)
-                    h = imgcodec.dhash64(gray)
-                    # store as signed 64-bit (Spark LongType)
-                    out["dhash"].append(h - (1 << 64) if h >= 1 << 63
-                                        else h)
-                    out["error"].append(None)
-                except Exception as exc:
-                    out["dhash"].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=DHASH_SCHEMA)
+    return map_payloads(df, id_col, payload_col, DHASH_SCHEMA, _row)
 
 
 def dedup_image_dhash(df: DataFrame, max_hamming: int = 3,
@@ -421,56 +408,34 @@ def video_signatures(df: DataFrame, every_n: int = 1,
     exact-dup key a crawl video dedup groups on. FAKEVID container
     only (real containers need codecs this environment lacks); other
     payloads surface as error rows."""
+    import numpy as np
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    from ..kernel import imgcodec
 
-        from ..kernel import imgcodec
+    M = 1 << 61
 
-        M = 1 << 61
-        for batch in batches:
-            out = {k: [] for k in ("media_id", "n_frames", "width",
-                                   "height", "sig", "error")}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    if not payload.startswith(FAKE_VID_MAGIC):
-                        raise ValueError("unsupported video container")
-                    frames, w, h = struct.unpack(">III", payload[8:20])
-                    if w * h == 0 or frames == 0:
-                        raise ValueError("video: bad dimensions")
-                    sig = 0
-                    # each FAKEVID frame record = 8-byte WH prefix
-                    # (the fake-image header sans magic) + w*h pixels
-                    rec = 8 + w * h
-                    for fi in range(0, frames, every_n):
-                        off = 20 + fi * rec + 8
-                        body = np.frombuffer(
-                            payload[off:off + w * h], dtype=np.uint8)
-                        if body.size != w * h:
-                            raise ValueError("video: truncated frame")
-                        gray = body.reshape(h, w)
-                        dh = imgcodec.dhash64(gray)
-                        mean = int(body.sum()) // body.size
-                        sig = (sig * 1099511628211 + (dh % M)) % M
-                        sig = (sig * 1099511628211 + mean) % M
-                    out["n_frames"].append(frames)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["sig"].append(sig)
-                    out["error"].append(None)
-                except Exception as exc:
-                    out["n_frames"].append(None)
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["sig"].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
+    def _row(payload: bytes) -> dict:
+        if not payload.startswith(FAKE_VID_MAGIC):
+            raise ValueError("unsupported video container")
+        frames, w, h = struct.unpack(">III", payload[8:20])
+        if w * h == 0 or frames == 0:
+            raise ValueError("video: bad dimensions")
+        sig = 0
+        # each FAKEVID frame record = 8-byte WH prefix
+        # (the fake-image header sans magic) + w*h pixels
+        rec = 8 + w * h
+        for fi in range(0, frames, every_n):
+            off = 20 + fi * rec + 8
+            body = np.frombuffer(payload[off:off + w * h], dtype=np.uint8)
+            if body.size != w * h:
+                raise ValueError("video: truncated frame")
+            dh = imgcodec.dhash64(body.reshape(h, w))
+            mean = int(body.sum()) // body.size
+            sig = (sig * 1099511628211 + (dh % M)) % M
+            sig = (sig * 1099511628211 + mean) % M
+        return {"n_frames": frames, "width": w, "height": h, "sig": sig}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=VIDEO_SIG_SCHEMA)
+    return map_payloads(df, id_col, payload_col, VIDEO_SIG_SCHEMA, _row)
 
 
 def dedup_video_signature(df: DataFrame, every_n: int = 1,
@@ -509,37 +474,14 @@ def audio_features(df: DataFrame, id_col: str = "media_id",
     curation signals: duration, mean absolute amplitude, zero
     crossings. The audio analog of image_features; unsupported or
     malformed payloads surface as error rows."""
+    from ..kernel import audiocodec
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def _row(p: bytes) -> dict:
+        rate, ch, samples = audiocodec.decode_wav(p)
+        return audiocodec.audio_stats(samples, rate, ch)
 
-        from ..kernel import audiocodec
-
-        for batch in batches:
-            out = {k: [] for k in ("media_id", "sample_rate",
-                                   "channels", "duration_ms",
-                                   "mean_abs", "zero_cross", "error")}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    rate, ch, samples = audiocodec.decode_wav(payload)
-                    st = audiocodec.audio_stats(samples, rate, ch)
-                    out["sample_rate"].append(rate)
-                    out["channels"].append(ch)
-                    out["duration_ms"].append(st["duration_ms"])
-                    out["mean_abs"].append(st["mean_abs"])
-                    out["zero_cross"].append(st["zero_cross"])
-                    out["error"].append(None)
-                except Exception as exc:
-                    for k in ("sample_rate", "channels", "duration_ms",
-                              "mean_abs", "zero_cross"):
-                        out[k].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=AUDIO_FEATURES_SCHEMA)
+    return map_payloads(df, id_col, payload_col, AUDIO_FEATURES_SCHEMA,
+                        _row)
 
 
 FLAC_DECODE_SCHEMA = StructType([
@@ -565,38 +507,15 @@ def flac_decode_features(df: DataFrame, id_col: str = "media_id",
     sample-level decode is what gives the offline batch pipeline
     energy/silence gates for the biggest lossless container.
     Malformed or over-budget payloads surface as error rows."""
+    from ..kernel import audiocodec, flacdec
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def _row(p: bytes) -> dict:
+        info, samples = flacdec.decode_flac_full(p)
+        st = audiocodec.audio_stats(samples, info["sample_rate"],
+                                    info["channels"])
+        return {**st, "bits": info["bits_per_sample"]}
 
-        from ..kernel import audiocodec, flacdec
-
-        cols = ("media_id", "sample_rate", "channels", "bits",
-                "duration_ms", "mean_abs", "zero_cross", "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    info, samples = flacdec.decode_flac_full(payload)
-                    rate, ch = info["sample_rate"], info["channels"]
-                    st = audiocodec.audio_stats(samples, rate, ch)
-                    out["sample_rate"].append(rate)
-                    out["channels"].append(ch)
-                    out["bits"].append(info["bits_per_sample"])
-                    out["duration_ms"].append(st["duration_ms"])
-                    out["mean_abs"].append(st["mean_abs"])
-                    out["zero_cross"].append(st["zero_cross"])
-                    out["error"].append(None)
-                except Exception as exc:
-                    for k in cols[1:-1]:
-                        out[k].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=FLAC_DECODE_SCHEMA)
+    return map_payloads(df, id_col, payload_col, FLAC_DECODE_SCHEMA, _row)
 
 
 MP3_FEATURES_SCHEMA = StructType([
@@ -617,40 +536,10 @@ def mp3_features(df: DataFrame, id_col: str = "media_id",
     -> duration / bitrate / CBR-VBR curation signals.  Headers only —
     no audio decode — so the walk is O(frames) byte jumps per payload;
     malformed streams surface as error rows, never exceptions."""
+    from ..kernel import audiocodec
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from ..kernel import audiocodec
-
-        for batch in batches:
-            out = {k: [] for k in ("media_id", "sample_rate",
-                                   "channels", "n_frames",
-                                   "duration_ms", "mean_bitrate_kbps",
-                                   "vbr", "error")}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    st = audiocodec.parse_mp3(payload)
-                    out["sample_rate"].append(st["sample_rate"])
-                    out["channels"].append(st["channels"])
-                    out["n_frames"].append(st["n_frames"])
-                    out["duration_ms"].append(st["duration_ms"])
-                    out["mean_bitrate_kbps"].append(
-                        st["mean_bitrate_kbps"])
-                    out["vbr"].append(st["vbr"])
-                    out["error"].append(None)
-                except Exception as exc:
-                    for k in ("sample_rate", "channels", "n_frames",
-                              "duration_ms", "mean_bitrate_kbps",
-                              "vbr"):
-                        out[k].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=MP3_FEATURES_SCHEMA)
+    return map_payloads(df, id_col, payload_col, MP3_FEATURES_SCHEMA,
+                        audiocodec.parse_mp3)
 
 
 AUDIO_TAGS_SCHEMA = StructType([
@@ -681,34 +570,10 @@ def audio_tag_metadata(df: DataFrame, id_col: str = "media_id",
     O(tag bytes) header reads, no audio decode; payloads with no
     recognized tag structure surface as error rows, never
     exceptions."""
+    from ..kernel import audiotags
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from ..kernel import audiotags
-
-        cols = ("media_id", "container", *audiotags.TAG_FIELDS,
-                "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    st = audiotags.parse_tags(payload)
-                    out["container"].append(st["container"])
-                    for f in audiotags.TAG_FIELDS:
-                        out[f].append(st[f])
-                    out["error"].append(None)
-                except Exception as exc:
-                    out["container"].append(None)
-                    for f in audiotags.TAG_FIELDS:
-                        out[f].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=AUDIO_TAGS_SCHEMA)
+    return map_payloads(df, id_col, payload_col, AUDIO_TAGS_SCHEMA,
+                        audiotags.parse_tags)
 
 
 PNG_TEXT_SCHEMA = StructType([
@@ -736,34 +601,10 @@ def png_text_metadata(df: DataFrame, id_col: str = "media_id",
     engine-added breadth.  Chunk walks are O(chunk bytes) header
     reads, no pixel decode; non-PNG payloads surface as error rows,
     never exceptions."""
+    from ..kernel import pngmeta
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from ..kernel import pngmeta
-
-        cols = ("media_id", *pngmeta.PNG_TEXT_FIELDS,
-                "n_text_chunks", "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    st = pngmeta.parse_png_text(payload)
-                    for f in pngmeta.PNG_TEXT_FIELDS:
-                        out[f].append(st[f])
-                    out["n_text_chunks"].append(st["n_text_chunks"])
-                    out["error"].append(None)
-                except Exception as exc:
-                    for f in pngmeta.PNG_TEXT_FIELDS:
-                        out[f].append(None)
-                    out["n_text_chunks"].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=PNG_TEXT_SCHEMA)
+    return map_payloads(df, id_col, payload_col, PNG_TEXT_SCHEMA,
+                        pngmeta.parse_png_text)
 
 
 MP4_FEATURES_SCHEMA = StructType([
@@ -786,39 +627,14 @@ def mp4_features(df: DataFrame, id_col: str = "media_id",
     container curation signals: duration, track inventory, video
     dimensions, codec fourccs.  Headers only, no codec decode;
     malformed containers surface as error rows, never exceptions."""
+    from ..kernel import mp4box
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def _row(p: bytes) -> dict:
+        st = mp4box.parse_mp4(p)
+        return {**st, "has_video": int(st["has_video"]),
+                "has_audio": int(st["has_audio"])}
 
-        from ..kernel import mp4box
-
-        cols = ("media_id", "brand", "duration_ms", "n_tracks",
-                "has_video", "has_audio", "width", "height",
-                "codecs", "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    st = mp4box.parse_mp4(payload)
-                    out["brand"].append(st["brand"])
-                    out["duration_ms"].append(st["duration_ms"])
-                    out["n_tracks"].append(st["n_tracks"])
-                    out["has_video"].append(int(st["has_video"]))
-                    out["has_audio"].append(int(st["has_audio"]))
-                    out["width"].append(st["width"])
-                    out["height"].append(st["height"])
-                    out["codecs"].append(st["codecs"])
-                    out["error"].append(None)
-                except Exception as exc:
-                    for k in cols[1:-1]:
-                        out[k].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=MP4_FEATURES_SCHEMA)
+    return map_payloads(df, id_col, payload_col, MP4_FEATURES_SCHEMA, _row)
 
 
 CONTAINER_AUDIO_SCHEMA = StructType([
@@ -839,45 +655,20 @@ def container_audio_features(df: DataFrame, id_col: str = "media_id",
     the WAV decoder and MP3 frame walk this covers the reference's
     audio extension list header-first; malformed payloads surface as
     error rows."""
+    from ..kernel import audiocodec
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def _row(p: bytes) -> dict:
+        fam = sniff_media(p)
+        if fam == "flac":
+            return {"codec": "flac", **audiocodec.parse_flac(p)}
+        if fam == "ogg":
+            return audiocodec.parse_ogg(p)
+        if fam == "adts":
+            return {"codec": "aac", **audiocodec.parse_adts(p)}
+        raise ValueError("unsupported audio container")
 
-        from ..kernel import audiocodec
-
-        cols = ("media_id", "codec", "sample_rate", "channels",
-                "duration_ms", "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    fam = sniff_media(payload)
-                    if fam == "flac":
-                        st = audiocodec.parse_flac(payload)
-                        st = {"codec": "flac", **st}
-                    elif fam == "ogg":
-                        st = audiocodec.parse_ogg(payload)
-                    elif fam == "adts":
-                        st = audiocodec.parse_adts(payload)
-                        st = {"codec": "aac", **st}
-                    else:
-                        raise ValueError(
-                            "unsupported audio container")
-                    out["codec"].append(st["codec"])
-                    out["sample_rate"].append(st["sample_rate"])
-                    out["channels"].append(st["channels"])
-                    out["duration_ms"].append(st["duration_ms"])
-                    out["error"].append(None)
-                except Exception as exc:
-                    for k in cols[1:-1]:
-                        out[k].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=CONTAINER_AUDIO_SCHEMA)
+    return map_payloads(df, id_col, payload_col, CONTAINER_AUDIO_SCHEMA,
+                        _row)
 
 
 IMAGE_BREADTH_SCHEMA = StructType([
@@ -899,6 +690,8 @@ def image_breadth_features(df: DataFrame, id_col: str = "media_id",
     codecs are out of scope.  ``mean_sample`` is the integer mean
     over every decoded sample byte (NULL for dims-only formats)."""
 
+    from ..kernel import imgcodec, mp4box
+
     def _vp8_chunk(data: bytes) -> bytes:
         """Simple-format WebP: the VP8 chunk payload at offset 20."""
         size = int.from_bytes(data[16:20], "little")
@@ -906,100 +699,73 @@ def image_breadth_features(df: DataFrame, id_col: str = "media_id",
             raise ValueError("webp: bad VP8 chunk")
         return data[20:20 + size]
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def _row(payload: bytes) -> dict:
+        mean = None
+        fam = sniff_media(payload)
+        if fam == "bmp":
+            arr = imgcodec.decode_bmp(payload)
+            codec = "bmp"
+            w, h = arr.shape[1], arr.shape[0]
+            mean = int(arr.astype("int64").sum()) // arr.size
+        elif fam == "gif":
+            arr = imgcodec.decode_gif(payload)
+            codec = "gif"
+            w, h = arr.shape[1], arr.shape[0]
+            mean = int(arr.astype("int64").sum()) // arr.size
+        elif fam == "tiff":
+            arr = imgcodec.decode_tiff(payload)
+            codec = "tiff"
+            w, h = arr.shape[1], arr.shape[0]
+            mean = int(arr.astype("int64").sum()) // arr.size
+        elif fam == "webp":
+            variant, w, h = imgcodec.webp_dims(payload)
+            codec = "webp-" + variant
+            if variant == "vp8l":
+                # r6: real lossless decode (kernel/vp8l)
+                from ..kernel import vp8l as vp8l_codec
 
-        from ..kernel import imgcodec, mp4box
+                arr = vp8l_codec.decode_webp_lossless(payload)
+                h, w = arr.shape[0], arr.shape[1]
+                mean = int(arr.astype("int64").sum()) // arr.size
+            elif variant == "vp8":
+                # r7: real lossy key-frame decode within
+                # kernel/vp8.py's verified subset; real-world streams
+                # outside it (default coef probs / qi>3 / B_PRED /
+                # loop filter) stay dims-only
+                from ..kernel import vp8 as vp8_codec
 
-        cols = ("media_id", "codec", "width", "height",
-                "mean_sample", "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
                 try:
-                    mean = None
-                    fam = sniff_media(payload)
-                    if fam == "bmp":
-                        arr = imgcodec.decode_bmp(payload)
-                        codec = "bmp"
-                        w, h = arr.shape[1], arr.shape[0]
-                        mean = int(arr.astype("int64").sum()) // arr.size
-                    elif fam == "gif":
-                        arr = imgcodec.decode_gif(payload)
-                        codec = "gif"
-                        w, h = arr.shape[1], arr.shape[0]
-                        mean = int(arr.astype("int64").sum()) // arr.size
-                    elif fam == "tiff":
-                        arr = imgcodec.decode_tiff(payload)
-                        codec = "tiff"
-                        w, h = arr.shape[1], arr.shape[0]
-                        mean = int(arr.astype("int64").sum()) // arr.size
-                    elif fam == "webp":
-                        variant, w, h = imgcodec.webp_dims(payload)
-                        codec = "webp-" + variant
-                        if variant == "vp8l":
-                            # r6: real lossless decode (kernel/vp8l)
-                            from ..kernel import vp8l as vp8l_codec
+                    yp, up, vpn = vp8_codec.decode_vp8(_vp8_chunk(payload))
+                    h, w = yp.shape
+                    # luma-only mean: no YUV->RGB rounding ambiguity
+                    # in the oracle
+                    mean = int(yp.astype("int64").sum()) // yp.size
+                except ValueError:
+                    pass    # outside subset: dims-only
+        elif fam == "avif":
+            brand, w, h = mp4box.parse_avif_dims(payload)
+            codec = "avif"
+        elif fam == "jp2":
+            codec, w, h, _nc, _d = mp4box.parse_jp2_dims(payload)
+            try:
+                # r6: real lossless decode (kernel/jp2k)
+                from ..kernel import jp2k as jp2k_codec
 
-                            arr = vp8l_codec.decode_webp_lossless(
-                                payload)
-                            h, w = arr.shape[0], arr.shape[1]
-                            mean = int(arr.astype("int64").sum()) \
-                                // arr.size
-                        elif variant == "vp8":
-                            # r7: real lossy key-frame decode within
-                            # kernel/vp8.py's verified subset; real-
-                            # world streams outside it (default coef
-                            # probs / qi>3 / B_PRED / loop filter)
-                            # stay dims-only
-                            from ..kernel import vp8 as vp8_codec
+                arr = jp2k_codec.decode_jp2k(payload)
+                h, w = arr.shape[0], arr.shape[1]
+                mean = int(arr.astype("int64").sum()) // arr.size
+            except ValueError:
+                pass    # outside subset: dims-only row
+        elif fam == "svg":
+            w, h = imgcodec.svg_dims(payload)
+            codec = "svg"
+        else:
+            raise ValueError("unsupported image container")
+        return {"codec": codec, "width": int(w), "height": int(h),
+                "mean_sample": mean}
 
-                            try:
-                                yp, up, vpn = vp8_codec.decode_vp8(
-                                    _vp8_chunk(payload))
-                                h, w = yp.shape
-                                # luma-only mean: no YUV->RGB
-                                # rounding ambiguity in the oracle
-                                mean = int(yp.astype("int64").sum()
-                                           ) // yp.size
-                            except ValueError:
-                                pass    # outside subset: dims-only
-                    elif fam == "avif":
-                        brand, w, h = mp4box.parse_avif_dims(payload)
-                        codec = "avif"
-                    elif fam == "jp2":
-                        codec, w, h, _nc, _d = \
-                            mp4box.parse_jp2_dims(payload)
-                        try:
-                            # r6: real lossless decode (kernel/jp2k)
-                            from ..kernel import jp2k as jp2k_codec
-
-                            arr = jp2k_codec.decode_jp2k(payload)
-                            h, w = arr.shape[0], arr.shape[1]
-                            mean = int(arr.astype("int64").sum()) \
-                                // arr.size
-                        except ValueError:
-                            pass    # outside subset: dims-only row
-                    elif fam == "svg":
-                        w, h = imgcodec.svg_dims(payload)
-                        codec = "svg"
-                    else:
-                        raise ValueError("unsupported image container")
-                    out["codec"].append(codec)
-                    out["width"].append(int(w))
-                    out["height"].append(int(h))
-                    out["mean_sample"].append(mean)
-                    out["error"].append(None)
-                except Exception as exc:
-                    for k in cols[1:-1]:
-                        out[k].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=IMAGE_BREADTH_SCHEMA)
+    return map_payloads(df, id_col, payload_col, IMAGE_BREADTH_SCHEMA,
+                        _row)
 
 
 VIDEO_CONTAINER_SCHEMA = StructType([
@@ -1025,72 +791,43 @@ def video_container_features(df: DataFrame, id_col: str = "media_id",
     dispatchers share the one magic table (:func:`sniff_media`) —
     add a format there and every dispatcher sees it."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    from ..kernel import mp4box, videobox
 
-        from ..kernel import mp4box, videobox
+    def _row(payload: bytes) -> dict:
+        fam = sniff_media(payload)
+        if fam == "matroska":
+            st = videobox.parse_matroska(payload)
+            return dict(container=st["doctype"],
+                        duration_ms=st["duration_ms"],
+                        n_tracks=st["n_tracks"],
+                        has_video=int(st["has_video"]),
+                        width=st["width"], height=st["height"])
+        if fam == "avi":
+            st = videobox.parse_avi(payload)
+            return dict(container="avi", duration_ms=st["duration_ms"],
+                        n_tracks=st["n_streams"],
+                        width=st["width"], height=st["height"])
+        if fam == "asf":
+            st = videobox.parse_asf(payload)
+            return dict(container="asf", duration_ms=st["duration_ms"])
+        if fam == "mp4":
+            # NOTE: an AVIF/AVIS brand sniffs as an IMAGE family and
+            # errors here (it previously fell into parse_mp4 — a
+            # misclassification)
+            st = mp4box.parse_mp4(payload)
+            return dict(container="mp4", duration_ms=st["duration_ms"],
+                        n_tracks=st["n_tracks"],
+                        has_video=int(st["has_video"]),
+                        width=st["width"], height=st["height"])
+        if fam == "flv":
+            st = videobox.parse_flv(payload)
+            return dict(container="flv", duration_ms=st["duration_ms"],
+                        has_video=int(st["has_video"]),
+                        width=st["width"], height=st["height"])
+        raise ValueError("unsupported video container")
 
-        cols = ("media_id", "container", "duration_ms", "n_tracks",
-                "has_video", "width", "height", "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    row = dict.fromkeys(cols[1:-1])
-                    fam = sniff_media(payload)
-                    if fam == "matroska":
-                        st = videobox.parse_matroska(payload)
-                        row.update(container=st["doctype"],
-                                   duration_ms=st["duration_ms"],
-                                   n_tracks=st["n_tracks"],
-                                   has_video=int(st["has_video"]),
-                                   width=st["width"],
-                                   height=st["height"])
-                    elif fam == "avi":
-                        st = videobox.parse_avi(payload)
-                        row.update(container="avi",
-                                   duration_ms=st["duration_ms"],
-                                   n_tracks=st["n_streams"],
-                                   width=st["width"],
-                                   height=st["height"])
-                    elif fam == "asf":
-                        st = videobox.parse_asf(payload)
-                        row.update(container="asf",
-                                   duration_ms=st["duration_ms"])
-                    elif fam == "mp4":
-                        # NOTE: an AVIF/AVIS brand sniffs as an IMAGE
-                        # family and errors here (it previously fell
-                        # into parse_mp4 — a misclassification)
-                        st = mp4box.parse_mp4(payload)
-                        row.update(container="mp4",
-                                   duration_ms=st["duration_ms"],
-                                   n_tracks=st["n_tracks"],
-                                   has_video=int(st["has_video"]),
-                                   width=st["width"],
-                                   height=st["height"])
-                    elif fam == "flv":
-                        st = videobox.parse_flv(payload)
-                        row.update(container="flv",
-                                   duration_ms=st["duration_ms"],
-                                   has_video=int(st["has_video"]),
-                                   width=st["width"],
-                                   height=st["height"])
-                    else:
-                        raise ValueError(
-                            "unsupported video container")
-                    for k, v in row.items():
-                        out[k].append(v)
-                    out["error"].append(None)
-                except Exception as exc:
-                    for k in cols[1:-1]:
-                        out[k].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=VIDEO_CONTAINER_SCHEMA)
+    return map_payloads(df, id_col, payload_col, VIDEO_CONTAINER_SCHEMA,
+                        _row)
 
 
 MEDIA_FEATURES_SCHEMA = StructType([
@@ -1118,126 +855,99 @@ def media_features(df: DataFrame, id_col: str = "media_id",
     entry point a curation pipeline points at a crawl's media column
     before fanning out to the per-format operators."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    from ..kernel import audiocodec, imgcodec, mp4box, pdfk, videobox
 
-        from ..kernel import audiocodec, imgcodec, mp4box, pdfk, videobox
+    def _row(p: bytes) -> dict:
+        fam = sniff_media(p)
+        if fam == "pdf":
+            doc = pdfk.PDFDoc(p)
+            return dict(kind="document", format="pdf",
+                        n_pages=doc.page_count)
+        elif fam in ("png", "jpeg", "bmp", "gif", "tiff", "fakeimg"):
+            fmt = "fake" if fam == "fakeimg" else fam
+            w, h, _gray = _decode_gray(p)
+            return dict(kind="image", format=fmt, width=w, height=h)
+        elif fam == "webp":
+            variant, w, h = imgcodec.webp_dims(p)
+            return dict(kind="image", format="webp-" + variant,
+                        width=w, height=h)
+        elif fam == "wav":
+            rate, ch, samples = audiocodec.decode_wav(p)
+            return dict(kind="audio", format="wav",
+                        sample_rate=rate, channels=ch,
+                        duration_ms=samples.shape[0] * 1000 // rate)
+        elif fam == "flac":
+            st = audiocodec.parse_flac(p)
+            return dict(kind="audio", format="flac",
+                        sample_rate=st["sample_rate"],
+                        channels=st["channels"],
+                        duration_ms=st["duration_ms"])
+        elif fam == "ogg":
+            st = audiocodec.parse_ogg(p)
+            return dict(kind="audio", format=st["codec"],
+                        sample_rate=st["sample_rate"],
+                        channels=st["channels"],
+                        duration_ms=st["duration_ms"])
+        elif fam == "adts":
+            st = audiocodec.parse_adts(p)
+            return dict(kind="audio", format="aac",
+                        sample_rate=st["sample_rate"],
+                        channels=st["channels"],
+                        duration_ms=st["duration_ms"])
+        elif fam == "mp3":
+            st = audiocodec.parse_mp3(p)
+            return dict(kind="audio", format="mp3",
+                        sample_rate=st["sample_rate"],
+                        channels=st["channels"],
+                        duration_ms=st["duration_ms"])
+        elif fam == "matroska":
+            st = videobox.parse_matroska(p)
+            return dict(kind="video", format=st["doctype"],
+                        width=st["width"] or None,
+                        height=st["height"] or None,
+                        duration_ms=st["duration_ms"])
+        elif fam == "avi":
+            st = videobox.parse_avi(p)
+            return dict(kind="video", format="avi",
+                        width=st["width"], height=st["height"],
+                        duration_ms=st["duration_ms"])
+        elif fam == "asf":
+            st = videobox.parse_asf(p)
+            return dict(kind="video", format="asf",
+                        duration_ms=st["duration_ms"])
+        elif fam == "flv":
+            st = videobox.parse_flv(p)
+            return dict(kind="video", format="flv",
+                        width=st["width"] or None,
+                        height=st["height"] or None,
+                        duration_ms=st["duration_ms"])
+        elif fam == "avif":
+            _b, w, h = mp4box.parse_avif_dims(p)
+            return dict(kind="image", format="avif",
+                        width=w, height=h)
+        elif fam == "jp2":
+            fmt, w, h, _nc, _d = mp4box.parse_jp2_dims(p)
+            return dict(kind="image", format=fmt,
+                        width=w, height=h)
+        elif fam == "mp4":
+            st = mp4box.parse_mp4(p)
+            return dict(kind="video" if st["has_video"] else "audio",
+                        format="mp4", width=st["width"] or None,
+                        height=st["height"] or None,
+                        duration_ms=st["duration_ms"])
+        elif fam == "fakevid":
+            frames, w, h = struct.unpack(">III", p[8:20])
+            return dict(kind="video", format="fakevid",
+                        width=w, height=h)
+        elif fam == "svg":
+            w, h = imgcodec.svg_dims(p)
+            return dict(kind="image", format="svg",
+                        width=w, height=h)
+        else:
+            raise ValueError("unsupported media payload")
 
-        cols = ("media_id", "kind", "format", "width", "height",
-                "duration_ms", "sample_rate", "channels", "n_pages",
-                "error")
-
-        def classify(p: bytes) -> dict:
-            row: dict = dict.fromkeys(cols[1:-1])
-            fam = sniff_media(p)
-            if fam == "pdf":
-                doc = pdfk.PDFDoc(p)
-                row.update(kind="document", format="pdf",
-                           n_pages=doc.page_count)
-            elif fam in ("png", "jpeg", "bmp", "gif", "tiff",
-                         "fakeimg"):
-                fmt = "fake" if fam == "fakeimg" else fam
-                w, h, _gray = _decode_gray(p)
-                row.update(kind="image", format=fmt, width=w, height=h)
-            elif fam == "webp":
-                variant, w, h = imgcodec.webp_dims(p)
-                row.update(kind="image", format="webp-" + variant,
-                           width=w, height=h)
-            elif fam == "wav":
-                rate, ch, samples = audiocodec.decode_wav(p)
-                row.update(kind="audio", format="wav",
-                           sample_rate=rate, channels=ch,
-                           duration_ms=samples.shape[0] * 1000 // rate)
-            elif fam == "flac":
-                st = audiocodec.parse_flac(p)
-                row.update(kind="audio", format="flac",
-                           sample_rate=st["sample_rate"],
-                           channels=st["channels"],
-                           duration_ms=st["duration_ms"])
-            elif fam == "ogg":
-                st = audiocodec.parse_ogg(p)
-                row.update(kind="audio", format=st["codec"],
-                           sample_rate=st["sample_rate"],
-                           channels=st["channels"],
-                           duration_ms=st["duration_ms"])
-            elif fam == "adts":
-                st = audiocodec.parse_adts(p)
-                row.update(kind="audio", format="aac",
-                           sample_rate=st["sample_rate"],
-                           channels=st["channels"],
-                           duration_ms=st["duration_ms"])
-            elif fam == "mp3":
-                st = audiocodec.parse_mp3(p)
-                row.update(kind="audio", format="mp3",
-                           sample_rate=st["sample_rate"],
-                           channels=st["channels"],
-                           duration_ms=st["duration_ms"])
-            elif fam == "matroska":
-                st = videobox.parse_matroska(p)
-                row.update(kind="video", format=st["doctype"],
-                           width=st["width"] or None,
-                           height=st["height"] or None,
-                           duration_ms=st["duration_ms"])
-            elif fam == "avi":
-                st = videobox.parse_avi(p)
-                row.update(kind="video", format="avi",
-                           width=st["width"], height=st["height"],
-                           duration_ms=st["duration_ms"])
-            elif fam == "asf":
-                st = videobox.parse_asf(p)
-                row.update(kind="video", format="asf",
-                           duration_ms=st["duration_ms"])
-            elif fam == "flv":
-                st = videobox.parse_flv(p)
-                row.update(kind="video", format="flv",
-                           width=st["width"] or None,
-                           height=st["height"] or None,
-                           duration_ms=st["duration_ms"])
-            elif fam == "avif":
-                _b, w, h = mp4box.parse_avif_dims(p)
-                row.update(kind="image", format="avif",
-                           width=w, height=h)
-            elif fam == "jp2":
-                fmt, w, h, _nc, _d = mp4box.parse_jp2_dims(p)
-                row.update(kind="image", format=fmt,
-                           width=w, height=h)
-            elif fam == "mp4":
-                st = mp4box.parse_mp4(p)
-                row.update(
-                    kind="video" if st["has_video"] else "audio",
-                    format="mp4", width=st["width"] or None,
-                    height=st["height"] or None,
-                    duration_ms=st["duration_ms"])
-            elif fam == "fakevid":
-                frames, w, h = struct.unpack(">III", p[8:20])
-                row.update(kind="video", format="fakevid",
-                           width=w, height=h)
-            elif fam == "svg":
-                w, h = imgcodec.svg_dims(p)
-                row.update(kind="image", format="svg",
-                           width=w, height=h)
-            else:
-                raise ValueError("unsupported media payload")
-            return row
-
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    row = classify(payload)
-                    for k, v in row.items():
-                        out[k].append(v)
-                    out["error"].append(None)
-                except Exception as exc:
-                    for k in cols[1:-1]:
-                        out[k].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=MEDIA_FEATURES_SCHEMA)
+    return map_payloads(df, id_col, payload_col, MEDIA_FEATURES_SCHEMA,
+                        _row)
 
 
 def sample_frames(df: DataFrame, every_n: int = 2,
@@ -1297,37 +1007,15 @@ def exif_features(df: DataFrame, id_col: str = "media_id",
     operator never raises (reference resilience posture,
     cmd/server/main.go:539-549)."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    from ..kernel import exif as exif_mod
 
-        from ..kernel import exif as exif_mod
+    def _row(p: bytes) -> dict:
+        try:
+            return exif_mod.parse_exif(p)
+        except Exception as exc:  # malformed: NULL row + error
+            return {"error": str(exc)[:200] or "exif: parse error"}
 
-        cols = ("media_id", "make", "model", "orientation",
-                "datetime_original", "exposure_time", "f_number",
-                "iso", "focal_length", "gps_present", "gps_lat",
-                "gps_lon", "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                vals = {f: None for f in exif_mod.EXIF_FIELDS}
-                err = None
-                try:
-                    vals = exif_mod.parse_exif(payload)
-                except Exception as exc:  # malformed: NULL row + error
-                    err = str(exc)[:200] or "exif: parse error"
-                out["media_id"].append(mid)
-                for f in ("make", "model", "orientation",
-                          "datetime_original", "exposure_time",
-                          "f_number", "iso", "focal_length",
-                          "gps_present", "gps_lat", "gps_lon"):
-                    out[f].append(vals.get(f))
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=EXIF_SCHEMA
-    )
+    return map_payloads(df, id_col, payload_col, EXIF_SCHEMA, _row)
 
 
 GIF_ANIM_SCHEMA = StructType([
@@ -1353,36 +1041,23 @@ def gif_animation_features(df: DataFrame, id_col: str = "media_id",
     dedup stage key on.  Non-GIF or malformed payloads yield a NULL
     row with the error string; never raises."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    from ..kernel import imgcodec
 
-        from ..kernel import imgcodec
+    def _row(payload: bytes) -> dict:
+        row: dict = {}
+        try:
+            frames, delays, loop = imgcodec.gif_animation(payload)
+            row["n_frames"] = len(frames)
+            row["duration_cs"] = sum(delays)
+            row["loop_count"] = loop
+            row["height"] = frames[0].shape[0]
+            row["width"] = frames[0].shape[1]
+            row["mean_first"] = int(
+                frames[0].astype("int64").sum()) // frames[0].size
+            row["mean_last"] = int(
+                frames[-1].astype("int64").sum()) // frames[-1].size
+        except Exception as exc:
+            row["error"] = str(exc)[:200] or "gif: decode error"
+        return row
 
-        cols = ("media_id", "n_frames", "duration_cs", "loop_count",
-                "width", "height", "mean_first", "mean_last", "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                row = dict.fromkeys(cols)
-                row["media_id"] = mid
-                try:
-                    frames, delays, loop = imgcodec.gif_animation(payload)
-                    row["n_frames"] = len(frames)
-                    row["duration_cs"] = sum(delays)
-                    row["loop_count"] = loop
-                    row["height"] = frames[0].shape[0]
-                    row["width"] = frames[0].shape[1]
-                    row["mean_first"] = int(
-                        frames[0].astype("int64").sum()) // frames[0].size
-                    row["mean_last"] = int(
-                        frames[-1].astype("int64").sum()) // frames[-1].size
-                except Exception as exc:
-                    row["error"] = str(exc)[:200] or "gif: decode error"
-                for k in cols:
-                    out[k].append(row[k])
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=GIF_ANIM_SCHEMA
-    )
+    return map_payloads(df, id_col, payload_col, GIF_ANIM_SCHEMA, _row)

@@ -33,7 +33,12 @@ from .similarity import brute_force_topk
 
 
 def _dist2_expr(vec_col: str, centroid: list[float]) -> str:
-    arr = "array(" + ",".join(f"cast({float(v)} as double)" for v in centroid) + ")"
+    # a NaN / inf centroid component renders as 'nan' / 'inf', which
+    # SQL reads only as a string cast
+    arr = "array(" + ",".join(f"cast('{float(v)}' as double)"
+                              if not np.isfinite(v)
+                              else f"cast({float(v)} as double)"
+                              for v in centroid) + ")"
     return (
         f"aggregate(zip_with({vec_col}, {arr}, "
         f"(x, y) -> (cast(x as double) - y) * (cast(x as double) - y)), "
@@ -64,12 +69,20 @@ def _argmin_dist2(mat, cents):
     the exact IEEE sum `aggregate(zip_with(...))` computes (np.cumsum
     is defined sequentially; np.sum is pairwise and would differ in
     the last bits).  First minimum == lowest cluster, matching
-    array_min over struct(d, c)."""
+    array_min over struct(d, c) — including Spark's NaN ordering: NaN
+    ranks after +inf (and ties with NaN), so a NaN distance never
+    beats a number and an all-NaN row goes to cluster 0."""
     d2 = np.empty((mat.shape[0], len(cents)), dtype=np.float64)
     for c in range(len(cents)):
         diff2 = (mat - cents[c][None, :]) ** 2
         d2[:, c] = np.cumsum(diff2, axis=1)[:, -1]
-    return np.argmin(d2, axis=1)
+    nan = np.isnan(d2)
+    best = np.argmin(np.where(nan, np.inf, d2), axis=1)
+    # where the minimum is +inf (or every distance is NaN), the first
+    # non-NaN cluster wins; argmax of an all-False row is cluster 0
+    lo = d2[np.arange(d2.shape[0]), best]
+    tail = np.isnan(lo) | np.isposinf(lo)
+    return np.where(tail, np.argmax(~nan, axis=1), best)
 
 
 def assign_clusters_pd(df: DataFrame, centroids: list[list[float]],

@@ -3,12 +3,13 @@
 The reference tallies page methods doc-side (countOCRPages /
 TextLayerPages / CostSavingsPercent, hybrid.go:136-138,377-392). Here
 they are JVM array expressions over the ``pages``
-array<struct> column — no Python, no explode, no shuffle.
+array<struct> column — no Python, no explode, no shuffle.  The one
+exception, ``pdf_image_ocr_stats``, must decode the raw payload, so it
+runs as the shared per-payload row pass
+(functions/multimodal.map_payloads) and has no envelope of its own.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -59,58 +60,44 @@ def pdf_image_ocr_stats(pages_df: DataFrame,
     tally which textless pages escalate to OCR vs prune as blank
     paper.
 
-    Scale shape: one Arrow-batched ``mapInPandas`` hop (the same
-    budget as extract()); only the two input columns reach the
-    Python worker and only eight scalar columns come back —
-    map-only, no shuffle."""
+    Scale shape: one per-payload row pass
+    (functions/multimodal.map_payloads, the same Arrow-batched
+    ``mapInPandas`` budget as extract()); only the two input columns
+    reach the Python worker and only eight scalar columns come back —
+    map-only, no shuffle.  A document that fails to parse is a zero
+    row, never an error."""
+    from pyspark.sql.types import DataType
 
-    def _batches(batches: Iterator["pd.DataFrame"]) \
-            -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    from ..functions.multimodal import map_payloads
+    from ..kernel import pdfk
 
-        from pdf_to_text_extraction_service_spark.kernel import pdfk
+    schema = DataType.fromDDL(PDF_IMAGE_STATS_SCHEMA)
 
-        for batch in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "url", "total_pages", "needs_ocr_pages",
-                "blank_pages", "n_images", "img_pixels",
-                "ink_samples", "sum_luma")}
-            for url, payload in zip(batch[url_col].tolist(),
-                                    batch[payload_col].tolist()):
-                payload = bytes(payload) if payload is not None else b""
-                total = needs = blank = n_img = 0
-                pixels = ink = luma = 0
-                try:
-                    doc = pdfk.PDFDoc(payload)
-                    res = pdfk.extract_pdf(payload, "application/pdf",
-                                           doc=doc)
-                    for p in (res.pages or []):
-                        total += 1
-                        if p.method == "needs-ocr":
-                            needs += 1
-                        elif p.method == "blank":
-                            blank += 1
-                        st = doc.page_image_stats(p.page_number)
-                        n_img += st["n_images"]
-                        pixels += st["pixels"]
-                        ink += st["ink_samples"]
-                        luma += st["sum_luma"]
-                except Exception:
-                    # error docs report zeros, never raise — reset
-                    # anything accumulated before the failure so a
-                    # doc that dies at page k is not mistaken for a
-                    # genuine (k-1)-page document
-                    total = needs = blank = n_img = 0
-                    pixels = ink = luma = 0
-                out["url"].append(url)
-                out["total_pages"].append(total)
-                out["needs_ocr_pages"].append(needs)
-                out["blank_pages"].append(blank)
-                out["n_images"].append(n_img)
-                out["img_pixels"].append(pixels)
-                out["ink_samples"].append(ink)
-                out["sum_luma"].append(luma)
-            yield pd.DataFrame(out)
+    def _row(payload: bytes) -> dict:
+        total = needs = blank = n_img = 0
+        pixels = ink = luma = 0
+        try:
+            doc = pdfk.PDFDoc(payload)
+            res = pdfk.extract_pdf(payload, "application/pdf", doc=doc)
+            for p in (res.pages or []):
+                total += 1
+                if p.method == "needs-ocr":
+                    needs += 1
+                elif p.method == "blank":
+                    blank += 1
+                st = doc.page_image_stats(p.page_number)
+                n_img += st["n_images"]
+                pixels += st["pixels"]
+                ink += st["ink_samples"]
+                luma += st["sum_luma"]
+        except Exception:
+            # error docs report zeros, never raise — drop anything
+            # accumulated before the failure so a doc that dies at
+            # page k is not mistaken for a genuine (k-1)-page document
+            return dict.fromkeys(schema.names[1:], 0)
+        return {"total_pages": total, "needs_ocr_pages": needs,
+                "blank_pages": blank, "n_images": n_img,
+                "img_pixels": pixels, "ink_samples": ink,
+                "sum_luma": luma}
 
-    return pages_df.select(url_col, payload_col).mapInPandas(
-        _batches, PDF_IMAGE_STATS_SCHEMA)
+    return map_payloads(pages_df, url_col, payload_col, schema, _row)

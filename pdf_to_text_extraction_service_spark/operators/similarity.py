@@ -111,9 +111,10 @@ def hyperplane_buckets_pd(all_planes: list[list[list[float]]]):
     array<int> column (one bucket per table).  Bit-identical to
     :func:`hyperplane_bucket` per table — the per-plane dot folds
     sequentially over dims (np.cumsum == the SQL aggregate order)
-    and the sign test is the same ``>= 0`` on the identical IEEE
-    double, so every bucket bit matches the interpreted JVM
-    expression (pinned by tests/test_similarity_opt.py)."""
+    and the sign test is Spark's ``>= 0`` on the identical IEEE
+    double (a NaN dot sets the bit), so every bucket bit matches the
+    interpreted JVM expression (pinned by
+    tests/test_similarity_opt.py)."""
     from pyspark.sql.functions import pandas_udf
 
     mats = [np.asarray(p, dtype=np.float64) for p in all_planes]
@@ -133,7 +134,9 @@ def hyperplane_buckets_pd(all_planes: list[list[list[float]]]):
                 # sequential left-fold over dims == SQL aggregate
                 dot = np.cumsum(mat * planes[i][None, :],
                                 axis=1)[:, -1]
-                bits_val |= np.where(dot >= 0.0,
+                # `~(dot < 0)`, not `dot >= 0`: Spark's NaN >= 0 is
+                # true (NaN sorts above every number), numpy's false
+                bits_val |= np.where(~(dot < 0.0),
                                      np.int32(1 << i), np.int32(0))
             per_table.append(bits_val)
         stacked = np.stack(per_table, axis=1)   # (rows, tables)

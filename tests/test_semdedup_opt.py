@@ -52,6 +52,15 @@ def test_assign_clusters_pd_equals_jvm(spark):
 
     df = _mutant_union(spark)
     cents = train_kmeans(df, k=5, iters=2)
+    # NaN-bearing vectors.  Spark ranks NaN after +inf, ties to the
+    # lowest cluster: the NaN centroid (NaN from every row) never
+    # beats a number, the +inf row (NaN, inf, inf, ...) goes to
+    # cluster 1 and the all-NaN row to cluster 0.
+    dim = len(cents[0])
+    cents = [[math.nan] * dim] + cents
+    df = df.unionByName(spark.createDataFrame(
+        [(900001, [math.nan] + [0.0] * (dim - 1)),
+         (900002, [math.inf] + [0.0] * (dim - 1))], df.schema))
     jvm = sorted(map(tuple,
                      assign_clusters(df, cents)
                      .select("vec_id", "cluster").collect()))
@@ -59,6 +68,7 @@ def test_assign_clusters_pd_equals_jvm(spark):
                        assign_clusters_pd(df, cents)
                        .select("vec_id", "cluster").collect()))
     assert jvm == arrow and len(jvm) > 0
+    assert dict(jvm)[900001] == 0 and dict(jvm)[900002] == 1
 
 
 def _old_pair_phase(capped, threshold):

@@ -24,8 +24,12 @@ def test_hyperplane_buckets_pd_equals_jvm(spark):
         make_planes,
     )
 
-    df = _vecs(spark)
     dim = 64
+    # a NaN component makes every dot NaN, and Spark's `NaN >= 0` is
+    # true (NaN sorts above every number), so all its bits are set
+    df = _vecs(spark)
+    df = df.unionByName(spark.createDataFrame(
+        [(10 ** 6, [float("nan")] + [0.5] * (dim - 1))], df.schema))
     all_planes = [make_planes(dim, 8, 11 + t) for t in range(4)]
     jvm = df.select(
         "vec_id",
@@ -38,7 +42,7 @@ def test_hyperplane_buckets_pd_equals_jvm(spark):
     want = {r["vec_id"]: [r[f"b{t}"] for t in range(4)]
             for r in jvm.collect()}
     got = {r["vec_id"]: list(r["bs"]) for r in arrow.collect()}
-    assert got == want and len(got) == 500
+    assert got == want and len(got) == 501
 
 
 def test_cosine_exact_pd_equals_sql_fold(spark):
