@@ -2661,7 +2661,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 # DuckDB mirror of the language-ID stopword scores (same formula as
-# operators/textstats.lang_scores; ties resolve to the
+# operators/textstats.lang_id and its JVM form lang_scores in
+# tests/reference/textstats.py; ties resolve to the
 # lexicographically first language, matching the Spark struct-argmax).
 from pdf_to_text_extraction_service_spark.operators.textstats import (
     STOPWORDS as _STOPWORDS,
@@ -2776,7 +2777,8 @@ _SHINGLE_CTE = """
 """
 
 
-# DuckDB mirror of operators/neardup.simhash64 + simhash_pairs.
+# DuckDB mirror of operators/neardup.simhash64_text_udf (JVM form:
+# simhash64 in tests/reference/neardup.py) + simhash_pairs.
 from pdf_to_text_extraction_service_spark.operators.neardup import (
     SIM_MIX as _SIM_MIX,
     SIM_PRIME as _SIM_PRIME,

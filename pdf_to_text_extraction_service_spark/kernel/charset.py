@@ -183,28 +183,6 @@ def _statistical_fallback(payload: bytes) -> str:
     return best_codec
 
 
-def detect(payload: bytes, scan_meta: bool = True) -> str:
-    """Detected codec name for ``payload`` (see module docstring for
-    precedence). 'utf-8-sig'/'utf-16' returns mean a BOM is present
-    and will be consumed by decode()."""
-    if payload.startswith(b"\xef\xbb\xbf"):
-        return "utf-8-sig"
-    if payload.startswith(b"\xff\xfe") or payload.startswith(b"\xfe\xff"):
-        # Python's utf-16 codec consumes the BOM and picks the order.
-        return "utf-16"
-    if scan_meta:
-        m = _META_CHARSET.search(payload[:1024])
-        if m:
-            codec = _from_label(m.group(1).decode("ascii", "replace"))
-            if codec:
-                return codec
-    try:
-        payload.decode("utf-8")
-        return "utf-8"
-    except UnicodeDecodeError:
-        return _statistical_fallback(payload)
-
-
 def decode(payload: bytes, scan_meta: bool = True) -> tuple[str, str]:
     """Decode ``payload`` with the detected charset; never raises.
     Returns (text, codec). Mis-declared pages still decode (replace)

@@ -104,15 +104,6 @@ def _scrambled_ratio(s: str) -> float:
     return single / len(words)
 
 
-def _count_garbage(s: str) -> int:
-    """quality.go:308-317 — U+FFFD or control chars except \\n, \\t."""
-    n = 0
-    for ch in s:
-        if ch == "�" or (runes.is_control(ch) and ch not in "\n\t"):
-            n += 1
-    return n
-
-
 _BULLET_FIRST = frozenset("•◦▪–-")
 
 

@@ -49,10 +49,6 @@ _WS_STR = "".join(sorted(WS_SET))
 _WS_TO_SPACE = {ord(c): " " for c in WS_SET}
 
 
-def is_space(ch: str) -> bool:
-    return ch in WS_SET
-
-
 def is_letter(ch: str) -> bool:
     o = ord(ch)
     if o < 128:

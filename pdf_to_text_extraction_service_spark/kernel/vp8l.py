@@ -95,7 +95,7 @@ class _Huffman:
     """Canonical prefix code (codes assigned DEFLATE-style in symbol
     order by increasing length; decoded MSB-of-code-first)."""
 
-    __slots__ = ("table", "max_len", "single", "lut_sym", "lut_len")
+    __slots__ = ("single", "lut_sym", "lut_len")
 
     def __init__(self, lengths: list[int]):
         self.single: int | None = None
@@ -105,8 +105,6 @@ class _Huffman:
         if len(nz) == 1:
             # single-symbol code: zero bits per symbol
             self.single = nz[0][1]
-            self.table = {}
-            self.max_len = 0
             return
         max_len = max(ln for ln, _ in nz)
         if max_len > 15:
@@ -124,21 +122,19 @@ class _Huffman:
                     for ln in range(1, max_len + 1))
         if total != (1 << max_len):
             raise ValueError("vp8l: invalid prefix code")
-        table: dict[tuple[int, int], int] = {}
         # flat peek-LUT (r8): the stream is LSB-first while canonical
         # codes compare MSB-first, so a code of length L matches every
         # max_len-bit peek whose LOW L bits are the code reversed;
         # the completeness check above guarantees the LUT has no
         # holes, making one peek + one table lookup per symbol
-        # (bit-identical to the original per-bit tree walk, which is
-        # kept as read_slow for the parity pin)
+        # (bit-identical to the per-bit tree walk in
+        # tests/reference/vp8l.py, which pins it)
         size = 1 << max_len
         lut_sym = [0] * size
         lut_len = [0] * size
         for sym, ln in enumerate(lengths):
             if ln > 0:
                 code = next_code[ln]
-                table[(ln, code)] = sym
                 next_code[ln] += 1
                 rev = 0
                 c = code
@@ -149,8 +145,6 @@ class _Huffman:
                 for idx in range(rev, size, step):
                     lut_sym[idx] = sym
                     lut_len[idx] = ln
-        self.table = table
-        self.max_len = max_len
         self.lut_sym = lut_sym
         self.lut_len = lut_len
 
@@ -166,18 +160,6 @@ class _Huffman:
             raise ValueError("vp8l: truncated stream")
         br.pos = p + ln
         return self.lut_sym[idx]
-
-    def read_slow(self, br: _BitReader) -> int:
-        """Original per-bit tree walk — parity reference for read()."""
-        if self.single is not None:
-            return self.single
-        code = 0
-        for ln in range(1, self.max_len + 1):
-            code = (code << 1) | br.read(1)
-            sym = self.table.get((ln, code))
-            if sym is not None:
-                return sym
-        raise ValueError("vp8l: bad prefix code word")
 
 
 def _read_code_lengths(br: _BitReader, alphabet: int,

@@ -28,27 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _grams(tokens_col: str, n: int) -> str:
-    """Distinct word n-grams of a pre-split token array column —
-    standard decontamination semantics: a text with fewer than ``n``
-    tokens has ZERO n-grams (no truncated pseudo-grams that would let
-    short benchmark lines flag short documents)."""
-    return (
-        f"case when size({tokens_col}) >= {n} then "
-        f"array_distinct(transform("
-        f"sequence(0, size({tokens_col}) - {n}), "
-        f"i -> array_join(slice({tokens_col}, i + 1, {n}), ' '))) "
-        f"else array() end"
-    )
-
-
-def _gram_struct(tokens_col: str, n: int) -> str:
-    """array<struct<h1,h2>> of the word n-gram hashes."""
-    return (
-        f"transform({_grams(tokens_col, n)}, s -> struct("
-        f"xxhash64(s) as h1, xxhash64(s, 's2') as h2))"
-    )
+from .salt import widen_for_python
 
 
 def gram_rows_fn(n: int):
@@ -57,7 +37,11 @@ def gram_rows_fn(n: int):
     distinct-gram count (repeated per row — 8 bytes buys the totals
     pass the old shape recomputed every gram string for).
 
-    Bit-identical to exploding ``_gram_struct`` (pinned by
+    A text with fewer than ``n`` tokens has ZERO n-grams (standard
+    decontamination semantics: no truncated pseudo-grams that would
+    let short benchmark lines flag short documents).  Bit-identical to
+    exploding the JVM ``gram_struct`` expression in
+    tests/reference/decontam.py (pinned by
     tests/test_decontam_opt.py): split on the literal space,
     n-token ``' '``-joined grams only when the text has >= n tokens
     (zero grams otherwise — no rows, exactly like exploding an
@@ -132,7 +116,6 @@ def benchmark_overlap(docs: DataFrame, bench: DataFrame, n: int = 13,
     left join (coalesce 0).  Unique ``id_col`` is assumed (both
     callers guarantee it; the pre-r8 shape needed it too for the
     totals join to be 1:1)."""
-    par = docs.sparkSession.sparkContext.defaultParallelism
     bench_grams = (
         bench.select(F.lit(0).cast("long").alias("_id"),
                      F.col(bench_text_col).alias("_t"))
@@ -142,9 +125,8 @@ def benchmark_overlap(docs: DataFrame, bench: DataFrame, n: int = 13,
         .distinct()
     )
     doc_rows = (
-        docs.select(F.col(id_col).alias("_id"),
-                    F.col(text_col).alias("_t"))
-        .repartition(par, F.col("_id"))
+        widen_for_python(docs.select(F.col(id_col).alias("_id"),
+                                     F.col(text_col).alias("_t")))
         .mapInPandas(gram_rows_fn(n),
                      "_id long, h1 long, h2 long, total long")
     )

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from .decontam import gram_rows_fn
 from .floodcap import _checkpoint_release
+from .salt import widen_for_python
 
 
 def window_occurrence_rows_fn(n: int, with_pos: bool):
@@ -94,16 +95,13 @@ def window_occurrence_rows_fn(n: int, with_pos: bool):
 def _window_occurrences(docs: DataFrame, n: int, id_col: str,
                         text_col: str, with_pos: bool) -> DataFrame:
     """(id, [pos,] h1, h2) for EVERY window occurrence — one
-    rebatched Arrow pass (window_occurrence_rows_fn), hash-
-    repartitioned on the id so a few-split parquet scan does not
-    serialize the window hashing (guide §2.5)."""
-    par = docs.sparkSession.sparkContext.defaultParallelism
+    rebatched Arrow pass (window_occurrence_rows_fn) behind the width
+    guard."""
     schema = (f"_id long, pos int, h1 long, h2 long" if with_pos
               else "_id long, h1 long, h2 long")
     return (
-        docs.select(F.col(id_col).alias("_id"),
-                    F.col(text_col).alias("_t"))
-        .repartition(par, F.col("_id"))
+        widen_for_python(docs.select(F.col(id_col).alias("_id"),
+                                     F.col(text_col).alias("_t")))
         .mapInPandas(window_occurrence_rows_fn(n, with_pos), schema)
         .withColumnRenamed("_id", id_col)
     )
@@ -135,11 +133,9 @@ def duplicated_span_stats(docs: DataFrame, n: int = 13,
     # distinct-per-doc windows via the decontam gram pass (same
     # vectorized hashing; the `total` column is distinct-gram count,
     # not the occurrence total this operator reports — ignored)
-    par = docs.sparkSession.sparkContext.defaultParallelism
     doc_distinct = (
-        docs.select(F.col(id_col).alias("_id"),
-                    F.col(text_col).alias("_t"))
-        .repartition(par, F.col("_id"))
+        widen_for_python(docs.select(F.col(id_col).alias("_id"),
+                                     F.col(text_col).alias("_t")))
         .mapInPandas(gram_rows_fn(n),
                      "_id long, h1 long, h2 long, total long")
         .select(F.col("_id").alias(id_col), "h1", "h2")

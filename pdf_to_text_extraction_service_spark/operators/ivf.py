@@ -26,42 +26,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .floodcap import _column_np
 from .similarity import brute_force_topk
-
-
-def _dist2_expr(vec_col: str, centroid: list[float]) -> str:
-    # a NaN / inf centroid component renders as 'nan' / 'inf', which
-    # SQL reads only as a string cast
-    arr = "array(" + ",".join(f"cast('{float(v)}' as double)"
-                              if not np.isfinite(v)
-                              else f"cast({float(v)} as double)"
-                              for v in centroid) + ")"
-    return (
-        f"aggregate(zip_with({vec_col}, {arr}, "
-        f"(x, y) -> (cast(x as double) - y) * (cast(x as double) - y)), "
-        f"cast(0.0 as double), (acc, v) -> acc + v)"
-    )
-
-
-def assign_clusters(df: DataFrame, centroids: list[list[float]],
-                    vec_col: str = "embedding") -> DataFrame:
-    """Nearest-centroid assignment as one JVM expression (argmin over
-    k squared distances via struct-least).
-
-    Reference implementation: interpreted higher-order functions cost
-    k x dim lambda evaluations per row; the vectorized Arrow path
-    (:func:`assign_clusters_pd`, bit-identical — pinned by
-    tests/test_ivf.py) is the hot-path variant."""
-    structs = ", ".join(
-        f"struct({_dist2_expr(vec_col, c)} as d, {i} as c)"
-        for i, c in enumerate(centroids)
-    )
-    return df.withColumn(
-        "cluster", F.expr(f"array_min(array({structs})).c")
-    )
 
 
 def _argmin_dist2(mat, cents):
@@ -87,11 +57,12 @@ def _argmin_dist2(mat, cents):
 
 def assign_clusters_pd(df: DataFrame, centroids: list[list[float]],
                        vec_col: str = "embedding") -> DataFrame:
-    """Vectorized nearest-centroid assignment (Arrow pandas_udf) —
-    bit-identical to :func:`assign_clusters` (same left-fold squared
-    distance per `_argmin_dist2`, ties to the lowest cluster), one
-    numpy pass per batch instead of k x dim interpreted lambdas per
-    row (guide §4.2)."""
+    """Vectorized nearest-centroid assignment (Arrow pandas_udf): one
+    numpy pass per batch, bit-identical to the JVM struct-argmin
+    ``assign_clusters`` in tests/reference/ivf.py (same left-fold
+    squared distance per `_argmin_dist2`, ties to the lowest
+    cluster, Spark's NaN ordering) on every non-NULL vector.  A NULL
+    vector gets cluster NULL (the JVM expression gives it 0)."""
     from pyspark.sql.functions import pandas_udf
 
     cents = np.asarray(centroids, dtype=np.float64)
@@ -115,6 +86,15 @@ def assign_clusters_pd(df: DataFrame, centroids: list[list[float]],
     return df.withColumn("cluster", _assign(F.col(vec_col)))
 
 
+def _list_array(rows: list) -> pa.ListArray:
+    """Equal-length float64 vectors -> one Arrow list<double> column
+    (NaN stays NaN: numpy input carries no null mask)."""
+    flat = np.concatenate(rows).astype(np.float64)
+    off = np.arange(len(rows) + 1, dtype=np.int32) * (len(flat)
+                                                      // len(rows))
+    return pa.ListArray.from_arrays(pa.array(off), pa.array(flat))
+
+
 #: id-block width of the deterministic reduction tree — values fold
 #: left-to-right inside a block, block sums fold in block order.
 FOLD_BLOCK = 4096
@@ -130,9 +110,9 @@ def train_kmeans(df: DataFrame, k: int = 16, iters: int = 5,
     across runs and across cluster sizes (mirrored by
     ``train_kmeans_mirror`` for the DuckDB oracle).
 
-    Physical shape (r8 — guide §2.4/§4.2; bit-identical to the
-    previous posexplode implementation, kept as
-    :func:`train_kmeans_reference` and pinned by tests):
+    Physical shape (r8; bit-identical to the posexplode SQL trainer
+    ``train_kmeans_reference`` in tests/reference/ivf.py, pinned by
+    tests/test_semdedup_opt.py):
 
     - the vector table is aggregated ONCE into one vid-sorted member
       list per FOLD_BLOCK id-block (a DECLARED groupBy — see the
@@ -140,18 +120,22 @@ def train_kmeans(df: DataFrame, k: int = 16, iters: int = 5,
       grouping contract under AQE) and cached: one Exchange of the
       vectors total, vs 2 shuffles of n x dim exploded rows per
       iteration before;
-    - each iteration is one Arrow mapInPandas pass (numpy assignment
+    - each iteration is one mapInArrow pass (numpy assignment
       + per-(cluster, block) ordered-fold block sums — np.cumsum is
       a sequential fold, matching the SQL aggregate exactly) plus a
       tiny shuffle of (cluster, blk, bsum) rows — ~n/FOLD_BLOCK x k
       scalar-array rows, independent of corpus width;
     - per-cluster block-sum folds (blk ascending) run in
-      applyInPandas, k rows come back to the driver per iteration.
+      applyInArrow, k rows come back to the driver per iteration.
+      Both passes are Arrow in and out, so a NaN component stays NaN
+      (a pandas boundary would turn it into NULL).
 
-    Ids are assumed unique (the callers' contract: vec_id keys /
-    xxhash64-deduped doc ids); duplicate ids would make the fold
-    order within a block underspecified in BOTH implementations.
+    NULL vectors take no part in training.  Ids are assumed unique
+    (the callers' contract: vec_id keys / xxhash64-deduped doc ids);
+    duplicate ids would make the fold order within a block
+    underspecified in BOTH implementations.
     """
+    df = df.filter(F.col(vec_col).isNotNull())
     init = (
         df.orderBy(id_col).limit(k)
         .select(vec_col).collect()
@@ -182,53 +166,56 @@ def train_kmeans(df: DataFrame, k: int = 16, iters: int = 5,
     def _block_sums(cents):
         carr = np.asarray(cents, dtype=np.float64)
 
-        def fn(it):
-            for pdf in it:
+        def fn(batches):
+            for batch in batches:
+                if batch.num_rows == 0:
+                    continue
+                rows = batch.column("_rows")
+                off = rows.offsets.to_numpy()
+                vecs = _column_np(rows.values.field("_v")) \
+                    .astype(np.float64)
                 out_c, out_b, out_n, out_s = [], [], [], []
-                for blk, members in zip(pdf["_blk"], pdf["_rows"]):
-                    mat = np.asarray(
-                        [np.asarray(r["_v"], dtype=np.float64)
-                         for r in members], dtype=np.float64)
+                for r, blk in enumerate(
+                        batch.column("_blk").to_numpy().tolist()):
+                    mat = vecs[off[r]:off[r + 1]]
                     assign = _argmin_dist2(mat, carr)
                     for c in np.unique(assign):
                         sel = assign == c       # keeps vid order
                         # ordered fold inside the id-block: cumsum is
                         # the sequential left-fold of the SQL aggregate
-                        out_s.append(
-                            np.cumsum(mat[sel], axis=0)[-1].tolist())
-                        out_c.append(int(c))
-                        out_b.append(int(blk))
-                        out_n.append(int(sel.sum()))
+                        out_s.append(np.cumsum(mat[sel], axis=0)[-1])
+                        out_c.append(c)
+                        out_b.append(blk)
+                        out_n.append(sel.sum())
                 if out_c:
-                    yield pd.DataFrame({
-                        "cluster": np.asarray(out_c, dtype=np.int32),
-                        "blk": np.asarray(out_b, dtype=np.int64),
-                        "bn": np.asarray(out_n, dtype=np.int64),
-                        "bsum": out_s,
-                    })
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(np.asarray(out_c, dtype=np.int32)),
+                         pa.array(np.asarray(out_b, dtype=np.int64)),
+                         pa.array(np.asarray(out_n, dtype=np.int64)),
+                         _list_array(out_s)],
+                        names=["cluster", "blk", "bn", "bsum"])
 
         return fn
 
-    def _fold_cluster(pdf):
-        pdf = pdf.sort_values("blk")
-        m = np.asarray([np.asarray(b, dtype=np.float64)
-                        for b in pdf["bsum"]], dtype=np.float64)
+    def _fold_cluster(table):
+        order = np.argsort(table.column("blk").to_numpy())
+        m = _column_np(table.column("bsum").combine_chunks())[order]
         tot = np.cumsum(m, axis=0)[-1]   # blk-ascending ordered fold
-        n = int(pdf["bn"].sum())
-        return pd.DataFrame({
-            "cluster": [int(pdf["cluster"].iloc[0])],
-            "centroid": [(tot / np.float64(n)).tolist()],
+        n = table.column("bn").to_numpy().sum()
+        return pa.table({
+            "cluster": table.column("cluster").slice(0, 1),
+            "centroid": _list_array([tot / np.float64(n)]),
         })
 
     try:
         for _ in range(iters):
             rows = (
-                prep.mapInPandas(
+                prep.mapInArrow(
                     _block_sums(centroids),
                     "cluster int, blk long, bn long, bsum array<double>")
                 .groupBy("cluster")
-                .applyInPandas(_fold_cluster,
-                               "cluster int, centroid array<double>")
+                .applyInArrow(_fold_cluster,
+                              "cluster int, centroid array<double>")
                 .collect()
             )
             new = {r["cluster"]: [float(v) for v in r["centroid"]]
@@ -236,62 +223,6 @@ def train_kmeans(df: DataFrame, k: int = 16, iters: int = 5,
             centroids = [new.get(i, centroids[i]) for i in range(k_eff)]
     finally:
         prep.unpersist()
-    return centroids
-
-
-def train_kmeans_reference(df: DataFrame, k: int = 16, iters: int = 5,
-                           id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           ) -> list[list[float]]:
-    """The original pure-SQL trainer (posexplode -> per-(cluster,
-    dim, blk) ordered collect_list folds).  Kept as the cross-check
-    for :func:`train_kmeans`'s vectorized path — 2 shuffles of
-    n x dim exploded rows per iteration make it the slow variant."""
-    init = (
-        df.orderBy(id_col).limit(k)
-        .select(vec_col).collect()
-    )
-    centroids = [[float(v) for v in r[vec_col]] for r in init]
-    for _ in range(iters):
-        assigned = assign_clusters(df, centroids, vec_col)
-        exploded = assigned.select(
-            "cluster",
-            (F.col(id_col) / F.lit(FOLD_BLOCK)).cast("long").alias("blk"),
-            F.col(id_col).alias("_vid"),
-            F.posexplode(vec_col).alias("dim", "val"),
-        )
-        block_sums = (
-            exploded.groupBy("cluster", "dim", "blk")
-            .agg(
-                F.expr(
-                    "aggregate(array_sort(collect_list("
-                    "struct(_vid, val))), cast(0.0 as double), "
-                    "(acc, s) -> acc + cast(s.val as double))"
-                ).alias("bsum"),
-                F.count("*").alias("bn"),
-            )
-        )
-        means = (
-            block_sums.groupBy("cluster", "dim")
-            .agg(
-                F.expr(
-                    "aggregate(array_sort(collect_list("
-                    "struct(blk, bsum))), cast(0.0 as double), "
-                    "(acc, s) -> acc + s.bsum)"
-                ).alias("tot"),
-                F.sum("bn").alias("n"),
-            )
-            .withColumn("m", F.col("tot") / F.col("n"))
-            .groupBy("cluster")
-            .agg(F.array_sort(
-                F.collect_list(F.struct("dim", "m"))).alias("dm"))
-            .select("cluster",
-                    F.expr("transform(dm, x -> x.m)").alias("centroid"))
-            .collect()
-        )
-        new = {r["cluster"]: [float(v) for v in r["centroid"]]
-               for r in means}
-        centroids = [new.get(i, centroids[i]) for i in range(k)]
     return centroids
 
 
@@ -348,9 +279,12 @@ def build_ivf_index(df: DataFrame, k: int = 16, iters: int = 5,
                     id_col: str = "vec_id",
                     vec_col: str = "embedding"):
     """Returns (indexed_df, centroids). Persist indexed_df partitioned
-    by ``cluster`` for pruned scans at scale."""
+    by ``cluster`` for pruned scans at scale.
+
+    Clusters come from :func:`assign_clusters_pd`.  NULL vectors take
+    no part in training and get cluster NULL."""
     centroids = train_kmeans(df, k, iters, id_col, vec_col)
-    return assign_clusters(df, centroids, vec_col), centroids
+    return assign_clusters_pd(df, centroids, vec_col), centroids
 
 
 def write_ivf_index(df: DataFrame, path: str, k: int = 16,

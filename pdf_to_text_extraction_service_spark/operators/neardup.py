@@ -3,10 +3,11 @@
 Beyond the reference's url-keyed dedup, the operations a 100 TB
 training-data pipeline needs (prompt mandate): exact content dedup,
 MinHash+LSH near-dup, SimHash, and n-gram Jaccard. Shingling,
-hashing and signatures run either as JVM expressions or as one
-rebatched Arrow pass per operator (numpy kernels, bit-identical to
-the JVM expression chains they replaced); the only shuffles are the
-grouping/join steps intrinsic to each algorithm.
+hashing and signatures run as one rebatched Arrow pass per operator
+(numpy kernels, bit-identical to the JVM expression chains in
+tests/reference/neardup.py that pin them); the only shuffles are the
+width guard (operators/salt.widen_for_python) and the grouping/join
+steps intrinsic to each algorithm.
 
 Scale notes per operator:
 - exact_dedup:      1 shuffle on content hash (partial agg).
@@ -34,6 +35,7 @@ from .floodcap import (
     cap_flooded_buckets,
     hamming_pairs,
 )
+from .salt import widen_for_python
 
 # ----------------------------------------------------------------- exact
 
@@ -75,15 +77,6 @@ def shingles_from_tokens(tokens_col: str, n: int = 3):
     )
 
 
-def word_shingles(text_col: str, n: int = 3):
-    """Word n-gram shingles as an array<string> expression (JVM-side:
-    transform over a sequence of start offsets)."""
-    return F.expr(
-        f"transform(sequence(0, greatest(size(split({text_col}, ' ')) - {n}, 0)), "
-        f"i -> array_join(slice(split({text_col}, ' '), i + 1, {n}), ' '))"
-    )
-
-
 # --------------------------------------------------------------- minhash
 
 # Mersenne prime 2^31-1: keeps a*x + b < 2^62, inside ANSI-mode long
@@ -91,18 +84,10 @@ def word_shingles(text_col: str, n: int = 3):
 _MERSENNE = (1 << 31) - 1
 
 
-def shingle_hashes(shingle_col: str):
-    """Shingle strings → 31-bit xxhash ids (ONE string-hash pass; the
-    k permutations then run integer arithmetic only)."""
-    return F.expr(
-        f"transform({shingle_col}, s -> xxhash64(s) & {_MERSENNE}L)"
-    )
-
-
 def _perm_coeffs(k: int, seed: int):
-    """Deterministic (a_i, b_i) permutation coefficients — shared by
-    the JVM and numpy signature paths so both produce identical
-    signatures."""
+    """Deterministic (a_i, b_i) permutation coefficients — shared with
+    the JVM reference (tests/reference/neardup.py) so both produce
+    identical signatures."""
     import random
 
     rng = random.Random(seed)
@@ -114,70 +99,25 @@ def _perm_coeffs(k: int, seed: int):
     return coeffs
 
 
-def minhash_signature(hash_col: str, k: int = 64, seed: int = 1):
-    """k-permutation MinHash over pre-hashed shingle ids
-    (shingle_hashes) — pure-JVM variant.
-
-    h_i(x) = (a_i * x + b_i) mod M31, one JVM expression per
-    permutation; array_min folds each. Seeds derive deterministically
-    from ``seed`` (no wall clock anywhere). Kept as the reference
-    implementation / cross-check for minhash_signature_udf; k
-    interpreted HOF passes make it the slower path for large k.
-    """
-    mins = [
-        F.array_min(
-            F.expr(
-                f"transform({hash_col}, x -> "
-                f"(({a}L * x + {b}L) % {_MERSENNE}L))"
-            )
-        )
-        for a, b in _perm_coeffs(k, seed)
-    ]
-    return F.array(*mins)
-
-
-def minhash_signature_udf(k: int = 64, seed: int = 1):
-    """Vectorized MinHash signatures: one Arrow-batched pandas_udf
-    computing all k permutations with a single numpy matmul-shaped
-    pass ((k x 1) * (1 x N) broadcast, then per-row segment min).
-
-    Bit-identical to minhash_signature (same coefficients, same
-    int64 arithmetic: a, x < 2^31 so a*x + b < 2^62 never overflows),
-    but ~one numpy kernel per batch instead of k interpreted HOF
-    passes per row. The signature is the ONLY Python hop in the LSH
-    pipeline; shingle string-hashing stays JVM-side (xxhash64).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    coeffs = _perm_coeffs(k, seed)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
-
-    @pandas_udf("array<bigint>")
-    def _sig(xs: pd.Series) -> pd.Series:
-        arrs = [np.asarray(v, dtype=np.int64) for v in xs]
-        lens = np.array([len(v) for v in arrs], dtype=np.int64)
-        if lens.sum() == 0:
-            return pd.Series([None] * len(arrs))
-        flat = np.concatenate([v for v in arrs if len(v)]) \
-            if len(arrs) else np.empty(0, np.int64)
-        m = (A * flat[None, :] + B) % _MERSENNE  # k x N, one pass
-        out, lo = [], 0
-        for n in lens:
-            if n == 0:
-                out.append(None)  # array_min([]) is null in the JVM path
-                continue
-            out.append(m[:, lo:lo + n].min(axis=1))
-            lo += n
-        return pd.Series(out)
-
-    return _sig
-
-
 def _shingle_ids_chunk(texts, n: int):
-    """Core of the vectorized shingling: list of texts -> list of
-    int64 arrays of DISTINCT 31-bit shingle-hash ids (see
-    shingle_hash_ids_udf for the exact JVM-chain semantics)."""
+    """Vectorized shingling: list of texts -> list of int64 arrays of
+    DISTINCT 31-bit shingle-hash ids, bit-identical to the JVM chain
+    ``array_distinct(shingle_hashes(array_distinct(
+    shingles_from_tokens(split(text, ' '), n))))`` (reference in
+    tests/reference/neardup.py, pinned by tests/test_minhash_opt.py):
+
+    - split/slice/array_join replicated with Python string ops
+      (identical semantics for the literal-space split, the
+      whole-array shingle when the text has fewer than n tokens,
+      and first-occurrence distinct);
+    - the per-shingle ``xxhash64(s) & M31`` runs through the
+      vectorized XXH64 (operators/xxh64np.py, seed 42 — Spark's) on
+      the whole chunk instead of interpreted ``array_join(slice(...))``
+      lambdas hashing row-at-a-time;
+    - NULL text -> [42]: the JVM chain builds a single NULL shingle
+      (slice of a NULL token array), and ``xxhash64(NULL)`` returns
+      the seed — replicated literally so null rows band identically.
+    """
     from .xxh64np import xxh64_bytes
 
     m31 = np.int64(_MERSENNE)
@@ -243,12 +183,15 @@ _SIG_BLOCK = 1 << 15
 
 
 def _minhash_sig_chunk(id_arrays, a, b):
-    """MinHash signatures for a list of shingle-id arrays — the
-    minhash_signature_udf kernel (same coefficients, same int64
-    arithmetic; the Mersenne ``%`` runs through the exact shift
-    identity and the per-row min through minimum.reduceat — both
-    value-identical, integer ops are order-free).  Work proceeds in
-    row blocks of <= _SIG_BLOCK total shingles (see above)."""
+    """MinHash signatures for a list of shingle-id arrays:
+    h_i(x) = (a_i * x + b_i) mod M31 per permutation, min per row —
+    the JVM ``minhash_signature`` reference's coefficients and int64
+    arithmetic (a, x < 2^31 so a*x + b < 2^62 never overflows); the
+    Mersenne ``%`` runs through the exact shift identity and the
+    per-row min through minimum.reduceat — both value-identical,
+    integer ops are order-free.  An empty array gets None (array_min
+    of [] is NULL).  Work proceeds in row blocks of <= _SIG_BLOCK
+    total shingles (see above)."""
     n = len(id_arrays)
     out: list = []
     i = 0
@@ -287,11 +230,13 @@ _PREP_CHUNK = 8192
 
 
 def minhash_prep_fn(n: int, num_perm: int, seed: int = 1):
-    """mapInPandas body: (id, text) batches -> (_id, _hsh, _sig) in
-    ONE Python hop — fuses shingle_hash_ids_udf + the signature
-    kernel so text crosses the Arrow boundary once and the two
-    chained ArrowEvalPython nodes (each paid per tiny batch)
-    collapse into a single rebatched pass (guide §4.1/§4.5)."""
+    """mapInPandas body: (_id, _t) batches -> (_id, _hsh, _sig) in
+    ONE Python hop — shingle ids (:func:`_shingle_ids_chunk`) and the
+    signature kernel (:func:`_minhash_sig_chunk`) fused, so text
+    crosses the Arrow boundary once in a single rebatched pass.
+    Pinned against the JVM chain ``shingle_hashes`` +
+    ``minhash_signature`` in tests/reference/neardup.py by
+    tests/test_minhash_opt.py."""
     coeffs = _perm_coeffs(num_perm, seed)
     a = np.array([x for x, _ in coeffs], dtype=np.int64)[:, None]
     b = np.array([y for _, y in coeffs], dtype=np.int64)[:, None]
@@ -318,35 +263,6 @@ def minhash_prep_fn(n: int, num_perm: int, seed: int = 1):
             yield flush()
 
     return fn
-
-
-def shingle_hash_ids_udf(n: int = 3):
-    """text -> DISTINCT 31-bit shingle-hash ids in one Arrow batch
-    pass — bit-identical to the JVM chain
-    ``array_distinct(shingle_hashes(array_distinct(
-    shingles_from_tokens(split(text, ' '), n))))`` (pinned by
-    tests/test_minhash_opt.py):
-
-    - split/slice/array_join replicated with Python string ops
-      (identical semantics for the literal-space split, the
-      whole-array shingle when the text has fewer than n tokens,
-      and first-occurrence distinct);
-    - the per-shingle ``xxhash64(s) & M31`` runs through the
-      vectorized XXH64 (operators/xxh64np.py, seed 42 — Spark's) on
-      the whole batch instead of building every shingle string with
-      interpreted ``array_join(slice(...))`` lambdas and hashing
-      row-at-a-time (the dominant cost of dedup_minhash_lsh);
-    - NULL text -> [42]: the JVM chain builds a single NULL shingle
-      (slice of a NULL token array), and ``xxhash64(NULL)`` returns
-      the seed — replicated literally so null rows band identically.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<bigint>")
-    def _ids(texts: pd.Series) -> pd.Series:
-        return pd.Series(_shingle_ids_chunk(texts.tolist(), n))
-
-    return _ids
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -394,21 +310,13 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     # ~2^-31 per differing-shingle pair — and the threshold filter is
     # the verified property anyway).  Shingling + hashing + the
     # MinHash signature run in ONE rebatched mapInPandas hop
-    # (minhash_prep_fn — bit-identical to the previous JVM expression
-    # chain + signature UDF, parity-pinned); the size(...) > 0 gate
-    # is unchanged (never drops — every text, even null, yields at
-    # least one shingle id, exactly as the JVM chain did).
-    # deterministic hash repartition on the id BEFORE the Python hop:
-    # a compact parquet corpus scans as a handful of 128 MB splits,
-    # which would serialize the shingling on 2-4 tasks (guide §2.5 —
-    # deterministic key, not round-robin, so retries are safe; one
-    # Exchange of (id, text) buys full-width parallelism for the
-    # dominant compute stage)
-    par = df.sparkSession.sparkContext.defaultParallelism
+    # (minhash_prep_fn, pinned to the JVM chain in
+    # tests/reference/neardup.py) behind the width guard; the
+    # size(...) > 0 gate never drops — every text, even null, yields
+    # at least one shingle id, exactly as the JVM chain did.
     sh = (
-        df.select(F.col(id_col).alias("_id"),
-                  F.col(text_col).alias("_t"))
-        .repartition(par, F.col("_id"))
+        widen_for_python(df.select(F.col(id_col).alias("_id"),
+                                   F.col(text_col).alias("_t")))
         .mapInPandas(minhash_prep_fn(shingle_n, num_perm),
                      "_id long, _hsh array<bigint>, _sig array<bigint>")
         .filter(F.size("_hsh") > 0)
@@ -478,7 +386,9 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
 # the high bits constantly zero across the corpus and collapsing the
 # effective hamming space; the affine permutation mod the prime
 # spreads every token across all 31 bits. Cross-engine means DuckDB
-# mirrors the whole signature, so dedup_simhash is oracle-checkable.
+# mirrors the whole signature, so dedup_simhash is oracle-checkable;
+# the JVM form of the same fold is the reference in
+# tests/reference/neardup.py.
 SIM_PRIME = 2147483647  # 2^31 - 1
 SIM_MIX = (
     (31, 1103515245, 12345),
@@ -487,85 +397,15 @@ SIM_MIX = (
 )
 
 
-def _sim_tokhash(base: int, mult: int, add: int) -> str:
-    # acc < 2^31, so acc*41 + c < 2^37; h*mult < 2^62 — safe in
-    # BIGINT both engines (no overflow under Spark ANSI mode).
-    return (f"(aggregate(filter(split(t, ''), c -> c <> ''), 0L, "
-            f"(acc, c) -> (acc * {base}L + ascii(c)) % {SIM_PRIME}L) "
-            f"* {mult}L + {add}L) % {SIM_PRIME}L")
-
-
-def simhash64(text_col: str):
-    """64-bit SimHash over whitespace tokens — single hashing pass.
-
-    The token-hash array is the ``aggregate`` INPUT, so each token is
-    hashed exactly once (previously: re-split + re-hashed per bit,
-    64x redundant). The merge lambda updates all 64 counters per
-    token (zip_with over the counter array); the finish lambda folds
-    counters into sign bits.
-    """
-    th = (f"transform(split({text_col}, ' '), t -> "
-          "array(" + ", ".join(_sim_tokhash(*m) for m in SIM_MIX) + "))")
-    return F.expr(
-        f"aggregate({th}, "
-        "array_repeat(0, 64), "
-        "(acc, h) -> zip_with(acc, sequence(0, 63), (a, bit) -> a + "
-        "(case when (shiftright(element_at(h, cast(bit div 31 as int) + 1), "
-        "bit % 31) & 1) = 1 then 1 else -1 end)), "
-        "acc -> aggregate(zip_with(acc, sequence(0, 63), (c, bit) -> "
-        "case when c >= 0 then shiftleft(1L, bit) else 0L end), "
-        "0L, (s, v) -> s + v))"
-    )
-
-
-def sim_token_hashes(text_col: str):
-    """The per-token 3-hash arrays (the simhash64 aggregate input) as
-    a standalone column expression — hashing stays JVM-side so the
-    DuckDB oracle can mirror it character-for-character."""
-    return F.expr(
-        f"transform(split({text_col}, ' '), t -> "
-        "array(" + ", ".join(_sim_tokhash(*m) for m in SIM_MIX) + "))"
-    )
-
-
-def simhash64_udf():
-    """Vectorized bit-fold: one Arrow batch in, signatures out. Takes
-    the sim_token_hashes column; per row computes the (tokens x 64)
-    sign matrix with numpy broadcasting instead of 64 interpreted
-    counter updates per token. Bit-identical to simhash64 (same
-    hashes, same count>=0 rule, empty token array → all bits set)."""
-    from pyspark.sql.functions import pandas_udf
-
-    bits = np.arange(64)
-    idx = bits // 31
-    sh = bits % 31
-    weights = (np.uint64(1) << bits.astype(np.uint64))
-
-    @pandas_udf("bigint")
-    def _sig(ths: pd.Series) -> pd.Series:
-        out = np.empty(len(ths), dtype=np.int64)
-        for r, row in enumerate(ths):
-            if row is None or len(row) == 0:
-                out[r] = -1  # all-zero counters → every bit set
-                continue
-            h = np.asarray(list(row), dtype=np.int64)      # (T, 3)
-            b = (h[:, idx] >> sh) & 1                      # (T, 64)
-            counts = (2 * b - 1).sum(axis=0)
-            sig = (weights[counts >= 0]).sum(dtype=np.uint64)
-            out[r] = np.int64(sig.astype(np.int64))
-        return pd.Series(out)
-
-    return _sig
-
-
 def simhash64_text_udf():
     """Whole-signature SimHash from the raw TEXT column in one Arrow
-    pandas_udf — bit-identical to
-    ``simhash64_udf()(sim_token_hashes(text))`` (pinned by
-    tests/test_training_ops.py parity) but with the per-character
-    rolling hashes vectorized in numpy instead of interpreted JVM
-    lambdas over every character (guide §4.2; the char fold was the
-    dominant cost of dedup_simhash signatures).
+    pandas_udf — bit-identical to the JVM ``simhash64`` expression in
+    tests/reference/neardup.py (pinned by
+    tests/test_training_ops.py::test_simhash_udf_matches_jvm_signatures)
+    except on NULL text, with the per-character rolling hashes
+    vectorized in numpy instead of interpreted JVM lambdas over every
+    character (the char fold was the dominant cost of dedup_simhash
+    signatures).
 
     Exact replication of the JVM semantics:
     - ``split(text, ' ')`` == segments between code point 32
@@ -577,8 +417,10 @@ def simhash64_text_udf():
     - bit b of the signature reads bit (b % 31) of hash (b // 31);
       token contributions sum (+1/-1); count >= 0 sets the bit
       (integer sums — summation order free);
-    - NULL text -> -1 (the old UDF's None branch), empty text ->
-      one empty token (hash = add % P), matching ``split('', ' ')``.
+    - empty text -> one empty token (hash = add % P), matching
+      ``split('', ' ')``;
+    - NULL text -> -1 (every bit set), where the JVM expression
+      gives NULL.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -640,7 +482,7 @@ def simhash64_text_udf():
         ri = 0
         for r, n in enumerate(row_ntok):
             if n < 0:
-                out[r] = -1           # null text (old UDF branch)
+                out[r] = -1           # null text: every bit set
                 continue
             c = counts[:, ri]
             ri += 1
@@ -665,14 +507,12 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
     (operators/floodcap.py) — identical-signature floods (boilerplate
     at web scale) otherwise make the bucket pairing quadratic.
     Buckets at or under the cap are exact; flooded buckets keep a
-    deterministic hash-prefix sample."""
-    # same parallelism guard as minhash_lsh_pairs: hash-repartition
-    # on the id so the signature UDF is not serialized on the scan's
-    # few parquet splits
-    par = df.sparkSession.sparkContext.defaultParallelism
-    sig = (df.select(F.col(id_col).alias("_id"),
-                     F.col(text_col).alias("_t"))
-           .repartition(par, F.col("_id"))
+    deterministic hash-prefix sample.
+
+    NULL-text documents get signature -1 (every bit set), so they
+    pair with each other at Hamming 0."""
+    sig = (widen_for_python(df.select(F.col(id_col).alias("_id"),
+                                      F.col(text_col).alias("_t")))
            .select("_id", simhash64_text_udf()(F.col("_t"))
                    .alias("_sig")))
     return hamming_pairs(sig, max_hamming, max_bucket) \

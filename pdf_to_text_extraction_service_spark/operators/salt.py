@@ -1,29 +1,23 @@
-"""Payload-size-aware salting — SURVEY.md §4 custom work #1.
+"""Repartitions that set the width of Python passes.
 
-Catalyst balances BYTES at scan time, but one 200 MiB PDF row in a
-partition of 4 KiB HTML rows starves a task (the reference bounds this
-with per-extractor byte caps + page-worker semaphores; in Spark the
-lever is partitioning). ``salt_repartition`` spreads rows uniformly by
-``xxhash64(url)`` salt; ``size_tiered_repartition`` additionally puts
-the oversized tail on a disjoint salt space so a handful of huge
-documents land in (mostly) dedicated partitions instead of straggling
-mixed tasks. One shuffle either way.
+Payload-size-aware salting — SURVEY.md §4 custom work #1. Catalyst
+balances BYTES at scan time, but one 200 MiB PDF row in a partition of
+4 KiB HTML rows starves a task (the reference bounds this with
+per-extractor byte caps + page-worker semaphores; in Spark the lever
+is partitioning). ``size_tiered_repartition`` spreads rows by an
+``xxhash64(url)`` salt and puts the oversized tail on a disjoint salt
+space, so a handful of huge documents land in (mostly) dedicated
+partitions instead of straggling mixed tasks. One shuffle.
+
+``widen_for_python`` is the width guard of the text operators: one
+hash Exchange on ``_id`` in front of their first Python pass, so a
+few-split parquet scan does not serialize that pass on 2-4 tasks.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salt_repartition(df: DataFrame, num_partitions: int,
-                     key: str = "url") -> DataFrame:
-    """Uniform repartition on a hash salt of the key (decorrelates
-    input file layout from task assignment)."""
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(key)), F.lit(num_partitions))
-    )
-    return salted.repartition(num_partitions, "_salt").drop("_salt")
 
 
 def size_tiered_repartition(df: DataFrame, num_partitions: int,
@@ -53,3 +47,16 @@ def size_tiered_repartition(df: DataFrame, num_partitions: int,
         salted.repartition(num_partitions + big_partitions, "_salt")
         .drop("_salt")
     )
+
+
+def widen_for_python(df: DataFrame) -> DataFrame:
+    """Hash-repartition ``df`` on its ``_id`` column into
+    ``defaultParallelism`` partitions, ahead of a Python pass.
+
+    A compact parquet corpus scans as a handful of 128 MB splits, which
+    would run the pass on as many tasks.  The key is deterministic,
+    not round-robin, so a retried task sees the same rows; the one
+    Exchange of the narrow input projection buys full-width
+    parallelism for the dominant compute stage."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(par, F.col("_id"))

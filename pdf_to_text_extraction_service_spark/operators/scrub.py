@@ -41,15 +41,6 @@ def scrub_pii(df: DataFrame, text_col: str = "text",
     return df.withColumn(out_col, col)
 
 
-def scrub_pii_sql(expr: str) -> str:
-    """The identical scrub as a DuckDB SQL expression (oracle mirror)."""
-    out = expr
-    for pat, repl in PII_PASSES:
-        p = pat.replace("'", "''")
-        out = f"regexp_replace({out}, '{p}', '{repl}', 'g')"
-    return out
-
-
 def stratified_sample(df: DataFrame, key_col: str, strata_col: str,
                       rates: dict[str, float], default_rate: float = 1.0,
                       salt: int = 0, denom: int = 1_000_000) -> DataFrame:

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .floodcap import block_verify_pairs
+from .salt import widen_for_python
 
 
 def _dot(a: str, b: str):
@@ -238,12 +239,8 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
         return df.sparkSession.createDataFrame(
             [], "id_a long, id_b long, cosine double")
     dim = dim_row["d"]
-    # hash-repartition on the id (deterministic — guide §2.5) so the
-    # bucket UDF is not serialized on the scan's few parquet splits
-    par = df.sparkSession.sparkContext.defaultParallelism
-    base = df.select(F.col(id_col).alias("_id"),
-                     F.col(vec_col).alias("_v")) \
-        .repartition(par, F.col("_id"))
+    base = widen_for_python(df.select(F.col(id_col).alias("_id"),
+                                      F.col(vec_col).alias("_v")))
     # all LSH tables in ONE vectorized Arrow pass
     all_planes = [make_planes(dim, bits, seed + t)
                   for t in range(tables)]

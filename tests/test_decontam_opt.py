@@ -1,6 +1,7 @@
 """r8 optimization parity pin: the fused gram_rows_fn decontamination
 path must produce row-identical output to the pre-r8 double-build SQL
-shape (explode _gram_struct + separate totals pass)."""
+shape (explode gram_struct + separate totals pass, in
+tests/reference/decontam.py)."""
 
 from __future__ import annotations
 
@@ -11,14 +12,11 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def _old_benchmark_overlap(docs, bench, n=13, id_col="doc_id",
                            text_col="text", bench_text_col="text"):
-    from pdf_to_text_extraction_service_spark.operators.decontam import (
-        _gram_struct,
-        _grams,
-    )
+    from tests.reference.decontam import gram_struct, grams
 
     bench_grams = (
         bench.select(F.explode(F.expr(
-            _gram_struct(f"split({bench_text_col}, ' ')", n)
+            gram_struct(f"split({bench_text_col}, ' ')", n)
         )).alias("_g"))
         .select("_g.h1", "_g.h2")
         .distinct()
@@ -27,7 +25,7 @@ def _old_benchmark_overlap(docs, bench, n=13, id_col="doc_id",
         docs.select(
             F.col(id_col),
             F.explode(F.expr(
-                _gram_struct(f"split({text_col}, ' ')", n)
+                gram_struct(f"split({text_col}, ' ')", n)
             )).alias("_g"),
         )
         .select(id_col, "_g.h1", "_g.h2")
@@ -40,7 +38,7 @@ def _old_benchmark_overlap(docs, bench, n=13, id_col="doc_id",
     doc_tokens = f"split({text_col}, ' ')"
     totals = docs.select(
         F.col(id_col),
-        F.expr(f"size({_grams(doc_tokens, n)})").alias("total_ngrams"),
+        F.expr(f"size({grams(doc_tokens, n)})").alias("total_ngrams"),
     )
     return (
         totals.join(hits, id_col, "left")

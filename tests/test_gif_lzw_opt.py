@@ -1,6 +1,6 @@
 """r8 optimization parity pin: the vectorized GIF LZW decoder must be
-byte-identical to the reference per-byte loop on valid streams AND
-raise the same errors on invalid/oversized ones."""
+byte-identical to the per-byte loop in tests/reference/imgcodec.py on
+valid streams AND raise the same errors on invalid/oversized ones."""
 
 from __future__ import annotations
 
@@ -11,8 +11,8 @@ import numpy as np
 from pdf_to_text_extraction_service_spark.kernel import imgcodec
 from pdf_to_text_extraction_service_spark.kernel.imgcodec import (
     _gif_lzw_decode,
-    _gif_lzw_decode_ref,
 )
+from tests.reference.imgcodec import gif_lzw_decode
 
 
 def _both(min_code, data, max_pixels):
@@ -21,7 +21,7 @@ def _both(min_code, data, max_pixels):
     except ValueError as e:
         a = ("err", str(e))
     try:
-        b = ("ok", _gif_lzw_decode_ref(min_code, data, max_pixels))
+        b = ("ok", gif_lzw_decode(min_code, data, max_pixels))
     except ValueError as e:
         b = ("err", str(e))
     return a, b
@@ -54,7 +54,7 @@ def test_full_gif_decode_parity_with_reference():
     for img in cases:
         payload = imgcodec.encode_gif(img)
         a = _decode_gif_with(_gif_lzw_decode, payload)
-        b = _decode_gif_with(_gif_lzw_decode_ref, payload)
+        b = _decode_gif_with(gif_lzw_decode, payload)
         assert np.array_equal(a, b), img.shape
 
 

@@ -55,6 +55,24 @@ def test_kmeans_numpy_mirror_bit_exact(spark, emb):
         assert got == want, (k, iters)
 
 
+def test_build_ivf_index_null_vector_gets_null_cluster(spark, emb):
+    """build_ivf_index assigns through assign_clusters_pd: a NULL
+    vector takes no part in training and gets cluster NULL (the JVM
+    reference gives 0); every other row matches the JVM reference
+    assignment over the same centroids."""
+    from tests.reference.ivf import assign_clusters
+
+    df = emb.unionByName(spark.createDataFrame(
+        [(900000, None, 0)], emb.schema))
+    indexed, centroids = build_ivf_index(df, k=4, iters=2)
+    assert centroids == train_kmeans(emb, k=4, iters=2)
+    got = dict(map(tuple, indexed.select("vec_id", "cluster").collect()))
+    want = dict(map(tuple, assign_clusters(df, centroids)
+                    .select("vec_id", "cluster").collect()))
+    assert got.pop(900000) is None and want.pop(900000) == 0
+    assert got == want and len(got) == emb.count()
+
+
 def test_ivf_persisted_index_partition_pruning(spark, emb, tmp_path):
     """write_ivf_index + load_ivf_index: the nprobe filter must reach
     the scan as parquet PARTITION pruning — only probed cluster=K

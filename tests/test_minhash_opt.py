@@ -1,6 +1,7 @@
 """r8 optimization parity pins for the MinHash shingle path: the
-vectorized XXH64 and the Arrow shingle-hash UDF must be bit-identical
-to Spark's native xxhash64 / the JVM expression chain they replaced."""
+vectorized XXH64 and the fused shingle + signature pass must be
+bit-identical to Spark's native xxhash64 / the JVM expression chain
+they replaced."""
 
 from __future__ import annotations
 
@@ -34,73 +35,85 @@ def test_xxh64_matches_spark_all_length_classes(spark):
     assert got == want
 
 
-def test_shingle_hash_ids_udf_matches_jvm_chain(spark):
-    """The Arrow shingling UDF == the pre-r8 JVM expression chain
-    (split -> shingles -> distinct -> xxhash64 & M31 -> distinct)."""
+EDGE_ROWS = [(1000, ""), (1001, " "), (1002, "one"), (1003, "one two"),
+             (1004, "one two three"), (1005, "a  b   c d"),
+             (1006, "dup dup dup dup dup"), (1007, None),
+             (1008, "café über 中文 😀 mixé")]
+
+
+def _jvm_shingle_ids(df, n):
+    """The JVM chain split -> shingles -> distinct -> xxhash64 & M31
+    -> distinct (tests/reference/neardup.py), as column ``_hsh``."""
     from pdf_to_text_extraction_service_spark.operators.neardup import (
-        shingle_hash_ids_udf,
-        shingle_hashes,
         shingles_from_tokens,
         tokens_col,
     )
+    from tests.reference.neardup import shingle_hashes
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
-        .select("doc_id", "text")
-    edge = spark.createDataFrame(
-        [(1000, ""), (1001, " "), (1002, "one"), (1003, "one two"),
-         (1004, "one two three"), (1005, "a  b   c d"),
-         (1006, "dup dup dup dup dup"), (1007, None),
-         (1008, "café über 中文 😀 mixé")],
-        "doc_id long, text string")
-    df = docs.unionByName(edge)
-
-    jvm = df.select(
+    return df.select(
         "doc_id", tokens_col("text").alias("_t")
     ).select(
         "doc_id",
-        F.array_distinct(shingles_from_tokens("_t", 3)).alias("_sh"),
+        F.array_distinct(shingles_from_tokens("_t", n)).alias("_sh"),
     ).select(
         "doc_id",
-        F.array_distinct(shingle_hashes("_sh")).alias("h"),
+        F.array_distinct(shingle_hashes("_sh")).alias("_hsh"),
     )
-    arrow = df.select(
-        "doc_id", shingle_hash_ids_udf(3)(F.col("text")).alias("h"))
-
-    want = {r["doc_id"]: r["h"] for r in jvm.collect()}
-    got = {r["doc_id"]: (None if r["h"] is None else list(r["h"]))
-           for r in arrow.collect()}
-    want = {k: (None if v is None else list(v)) for k, v in want.items()}
-    assert got == want and len(got) > 500
 
 
-def test_fused_prep_matches_chained_udfs(spark):
-    """minhash_prep_fn (one mapInPandas hop: shingles + signature,
-    fast Mersenne mod + reduceat mins) == the chained
-    shingle_hash_ids_udf + minhash_signature_udf outputs."""
-    from pyspark.sql import functions as F
-
+def test_shingle_hash_ids_udf_matches_jvm_chain(spark):
+    """The shingle-id kernel of minhash_prep_fn (_shingle_ids_chunk)
+    == the JVM chain at shingle sizes other than the pipeline's 3:
+    fewer tokens than n (whole-array shingle), n = 1, and NULL text
+    -> [42] (xxhash64(NULL) & M31)."""
     from pdf_to_text_extraction_service_spark.operators.neardup import (
-        minhash_prep_fn,
-        minhash_signature_udf,
-        shingle_hash_ids_udf,
+        _shingle_ids_chunk,
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
         .select("doc_id", "text")
+    df = docs.unionByName(
+        spark.createDataFrame(EDGE_ROWS, "doc_id long, text string"))
+    rows = df.orderBy("doc_id").collect()
+    ids = [r["doc_id"] for r in rows]
+    texts = [r["text"] for r in rows]
+    for n in (1, 2, 5):
+        want = {r["doc_id"]: list(r["_hsh"])
+                for r in _jvm_shingle_ids(df, n).collect()}
+        got = {i: v.tolist()
+               for i, v in zip(ids, _shingle_ids_chunk(texts, n))}
+        assert got == want and len(got) == 509, n
+        assert got[1007] == [42]
+
+
+def test_fused_prep_matches_chained_udfs(spark):
+    """minhash_prep_fn's one mapInPandas hop (shingle ids + signature)
+    == the JVM chain it replaced: split -> shingles -> distinct ->
+    xxhash64 & M31 -> distinct, then the k-permutation
+    minhash_signature (tests/reference/neardup.py).  The chained
+    Python UDFs this test once compared against are gone; the fused
+    pass is pinned straight to the JVM chain."""
+    from pdf_to_text_extraction_service_spark.operators.neardup import (
+        minhash_prep_fn,
+    )
+    from tests.reference.neardup import minhash_signature
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
+        .select("doc_id", "text")
+    df = docs.unionByName(
+        spark.createDataFrame(EDGE_ROWS, "doc_id long, text string"))
+
+    jvm = _jvm_shingle_ids(df, 3) \
+        .withColumn("_sig", minhash_signature("_hsh", 96))
     fused = (
-        docs.select(F.col("doc_id").alias("_id"),
-                    F.col("text").alias("_t"))
+        df.select(F.col("doc_id").alias("_id"),
+                  F.col("text").alias("_t"))
         .mapInPandas(minhash_prep_fn(3, 96),
                      "_id long, _hsh array<bigint>, _sig array<bigint>")
     )
-    chained = (
-        docs.select(F.col("doc_id").alias("_id"),
-                    shingle_hash_ids_udf(3)(F.col("text"))
-                    .alias("_hsh"))
-        .withColumn("_sig", minhash_signature_udf(96)("_hsh"))
-    )
-    want = {r["_id"]: (list(r["_hsh"]), list(r["_sig"]))
-            for r in chained.collect()}
+    want = {r["doc_id"]: (list(r["_hsh"]), list(r["_sig"]))
+            for r in jvm.collect()}
     got = {r["_id"]: (list(r["_hsh"]), list(r["_sig"]))
            for r in fused.collect()}
-    assert got == want and len(got) == 500
+    assert got == want and len(got) == 509
+    assert got[1007][0] == [42]          # NULL text: xxhash64(NULL) & M31

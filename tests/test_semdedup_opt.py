@@ -1,12 +1,14 @@
 """r8 optimization parity pins: the vectorized k-means / assignment /
 semantic-dedup prune paths must be bit-identical to the original SQL
-implementations they replaced (OPTIMIZATION_r08.md)."""
+implementations they replaced (tests/reference/ivf.py,
+OPTIMIZATION_r08.md)."""
 
 from __future__ import annotations
 
 import math
 import random
 
+import numpy as np
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -32,23 +34,36 @@ def _mutant_union(spark):
 
 def test_train_kmeans_fast_equals_reference(spark):
     """The one-Exchange Arrow trainer must reproduce the posexplode
-    reference trainer bit-for-bit (same fixed-shape reduction tree)."""
+    reference trainer (tests/reference/ivf.py) bit-for-bit (same
+    fixed-shape reduction tree) — also when a vector holds NaN, which
+    must stay NaN through both Arrow passes (NaN compared as NaN)."""
     from pdf_to_text_extraction_service_spark.operators.ivf import (
         train_kmeans,
-        train_kmeans_reference,
     )
+    from tests.reference.ivf import train_kmeans_reference
 
     df = _mutant_union(spark)
     assert train_kmeans(df, k=6, iters=3) == \
         train_kmeans_reference(df, k=6, iters=3)
 
+    rng = random.Random(5)
+    rows = [(0, [math.nan, 1.0])] + [
+        (i, [rng.uniform(-1, 1), rng.uniform(-1, 1)])
+        for i in range(1, 41)]
+    nan_df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>")
+    got = train_kmeans(nan_df, k=3, iters=2)
+    want = train_kmeans_reference(nan_df, k=3, iters=2)
+    assert np.array_equal(got, want, equal_nan=True)
+    assert math.isnan(got[0][0]) and got[0][1] == 1.0
+
 
 def test_assign_clusters_pd_equals_jvm(spark):
     from pdf_to_text_extraction_service_spark.operators.ivf import (
-        assign_clusters,
         assign_clusters_pd,
         train_kmeans,
     )
+    from tests.reference.ivf import assign_clusters
 
     df = _mutant_union(spark)
     cents = train_kmeans(df, k=5, iters=2)

@@ -11,7 +11,6 @@ from pdf_to_text_extraction_service_spark.functions.extract_udf import extract
 from pdf_to_text_extraction_service_spark.kernel import router
 from pdf_to_text_extraction_service_spark.operators.dedup import (
     dedup_latest,
-    dedup_latest_window,
     prune_duplicate_captures,
 )
 from pdf_to_text_extraction_service_spark.operators.manifest import (
@@ -88,13 +87,12 @@ def test_dedup_latest_wins(spark, corpus_df):
     total = extracted.count()
     distinct_urls = corpus_df.select("url").distinct().count()
     assert total > distinct_urls  # corpus contains duplicate captures
-    for dedup_fn in (dedup_latest, dedup_latest_window):
-        deduped = dedup_fn(extracted)
-        assert deduped.count() == distinct_urls
-        # every kept row carries the max warc_ts for its url
-        maxes = extracted.groupBy("url").agg(F.max("warc_ts").alias("mx"))
-        joined = deduped.join(maxes, "url")
-        assert joined.filter(F.col("warc_ts") != F.col("mx")).count() == 0
+    deduped = dedup_latest(extracted)
+    assert deduped.count() == distinct_urls
+    # every kept row carries the max warc_ts for its url
+    maxes = extracted.groupBy("url").agg(F.max("warc_ts").alias("mx"))
+    joined = deduped.join(maxes, "url")
+    assert joined.filter(F.col("warc_ts") != F.col("mx")).count() == 0
 
 
 def test_prune_duplicate_captures(spark, corpus_df, tmp_path):

@@ -51,33 +51,49 @@ def test_minhash_finds_planted_pair(spark, docs_df):
 
 
 def test_minhash_udf_matches_jvm_signatures(spark):
-    """The vectorized numpy signature path must be bit-identical to
-    the pure-JVM reference implementation (same coefficients, same
-    mod-2^31-1 arithmetic)."""
+    """The signature kernel of minhash_prep_fn (_minhash_sig_chunk)
+    must be bit-identical to the pure-JVM minhash_signature reference
+    (tests/reference/neardup.py) at permutation counts and seeds other
+    than the pipeline's, over more shingle ids than one _SIG_BLOCK
+    (so a row block boundary is crossed); an empty id array gives
+    None."""
+    import numpy as np
+
     from pdf_to_text_extraction_service_spark.operators.neardup import (
-        minhash_signature,
-        minhash_signature_udf,
-        shingle_hashes,
-        word_shingles,
+        _SIG_BLOCK,
+        _minhash_sig_chunk,
+        _perm_coeffs,
+        shingles_from_tokens,
+        tokens_col,
     )
     from pdf_to_text_extraction_service_spark.sources.corpus import (
         load_documents,
     )
+    from tests.reference.neardup import minhash_signature, shingle_hashes
 
     docs = load_documents(spark, "/root/testdata/sf0.001")
-    sh = docs.select(
+    xs = docs.select(
+        "doc_id", tokens_col("text").alias("_t")
+    ).select(
         "doc_id",
-        F.array_distinct(word_shingles("text", 3)).alias("_sh"),
-    ).filter(F.size("_sh") > 0)
-    both = (
-        sh.withColumn("_xs", shingle_hashes("_sh"))
-        .withColumn("jvm", minhash_signature("_xs", 96))
-        .withColumn("np", minhash_signature_udf(96)("_xs"))
-        .select(F.sum((F.col("jvm") == F.col("np")).cast("int")).alias("eq"),
-                F.count("*").alias("n"))
-        .first()
-    )
-    assert both["eq"] == both["n"] and both["n"] > 0
+        F.array_distinct(shingles_from_tokens("_t", 3)).alias("_sh"),
+    ).select(
+        "doc_id", F.array_distinct(shingle_hashes("_sh")).alias("_xs"),
+    ).filter(F.size("_xs") > 0)
+    for k, seed in ((16, 7), (128, 3)):
+        rows = xs.withColumn("jvm", minhash_signature("_xs", k, seed)) \
+            .collect()
+        # sf0.001 holds < _SIG_BLOCK ids; twice over crosses a block
+        rows = rows * 2
+        arrays = [np.asarray(r["_xs"], dtype=np.int64) for r in rows]
+        assert sum(len(v) for v in arrays) > _SIG_BLOCK
+        coeffs = _perm_coeffs(k, seed)
+        a = np.array([x for x, _ in coeffs], dtype=np.int64)[:, None]
+        b = np.array([y for _, y in coeffs], dtype=np.int64)[:, None]
+        got = _minhash_sig_chunk(arrays, a, b)
+        assert [list(g) for g in got] == [list(r["jvm"]) for r in rows]
+        assert _minhash_sig_chunk(
+            [np.array([], dtype=np.int64)], a, b) == [None]
 
 
 def test_ngram_jaccard_exact(spark, docs_df):
@@ -204,38 +220,32 @@ def test_embedding_neardup_pairs_planted(spark):
 
 
 def test_simhash_udf_matches_jvm_signatures(spark):
-    """The vectorized numpy bit-fold must be bit-identical to the
-    pure-JVM simhash64 expression (same token hashes, same
-    count>=0 rule)."""
+    """simhash64_text_udf must be bit-identical to the pure-JVM
+    simhash64 expression (tests/reference/neardup.py) on the corpus
+    and on empty, all-space, space-run and astral-plane text; on
+    NULL text the JVM gives NULL and the UDF gives -1."""
     from pdf_to_text_extraction_service_spark.operators.neardup import (
-        sim_token_hashes,
-        simhash64,
-        simhash64_udf,
+        simhash64_text_udf,
     )
     from pdf_to_text_extraction_service_spark.sources.corpus import (
         load_documents,
     )
+    from tests.reference.neardup import simhash64
 
     docs = load_documents(spark, "/root/testdata/sf0.001")
-    both = (
-        docs.select(
-            simhash64("text").alias("jvm"),
-            simhash64_udf()(sim_token_hashes("text")).alias("np"),
-        )
-        .select(F.sum((F.col("jvm") == F.col("np")).cast("int")).alias("eq"),
-                F.count("*").alias("n"))
-        .first()
-    )
-    assert both["eq"] == both["n"] and both["n"] > 0
-    # empty-token-array row (defensive branch; note split('', ' ')
-    # yields [''], so empty TEXT still hashes one empty token — this
-    # exercises a genuinely empty array): all counters zero → every
-    # bit set → -1, matching the JVM aggregate over an empty input
-    empty = spark.range(1).select(
-        simhash64_udf()(
-            F.expr("cast(array() as array<array<bigint>>)")
-        ).alias("s")).first()
-    assert empty["s"] == -1
+    edge = spark.createDataFrame(
+        [(9000, ""), (9001, " "), (9002, "a  b   c"),
+         (9003, "emoji 🙂 rocket 🚀 𝔘𝔫𝔦𝔠𝔬𝔡𝔢 end"), (9004, None)],
+        "doc_id long, text string")
+    rows = docs.select("doc_id", "text").unionByName(edge).select(
+        "doc_id",
+        simhash64("text").alias("jvm"),
+        simhash64_text_udf()(F.col("text")).alias("np"),
+    ).collect()
+    got = {r["doc_id"]: r["np"] for r in rows}
+    want = {r["doc_id"]: r["jvm"] for r in rows}
+    assert want.pop(9004) is None and got.pop(9004) == -1
+    assert got == want and len(got) == 504
 
 
 def test_remove_boilerplate_lines(spark):
@@ -367,8 +377,8 @@ def test_fingerprint_udf_bit_identical_to_jvm(spark):
     split('') is codepoint-aware, as is the UTF-32 numpy path)."""
     from pdf_to_text_extraction_service_spark.operators.textstats import (
         doc_fingerprint,
-        doc_fingerprint_jvm,
     )
+    from tests.reference.textstats import doc_fingerprint_jvm
 
     rows = [(0, ""), (1, "single"), (2, "a  b   c"),
             (3, " lead and trail "), (4, None),

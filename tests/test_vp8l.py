@@ -403,8 +403,8 @@ def test_breadth_dispatcher_decodes_vp8l(spark):
 
 
 def test_huffman_lut_read_matches_tree_walk():
-    """r8: the peek-LUT read() must be bit-identical to the original
-    per-bit tree walk (kept as read_slow) on random valid canonical
+    """r8: the peek-LUT read() must be bit-identical to the per-bit
+    tree walk (tests/reference/vp8l.py) on random valid canonical
     codes and random streams, including truncation errors."""
     import random
 
@@ -412,6 +412,7 @@ def test_huffman_lut_read_matches_tree_walk():
         _BitReader,
         _Huffman,
     )
+    from tests.reference.vp8l import huffman_read_slow
 
     rng = random.Random(13)
     for trial in range(200):
@@ -439,7 +440,7 @@ def test_huffman_lut_read_matches_tree_walk():
             except ValueError as e:
                 ra = ("err", str(e))
             try:
-                rb = ("ok", h.read_slow(b), b.pos)
+                rb = ("ok", huffman_read_slow(lens, b), b.pos)
             except ValueError as e:
                 rb = ("err", str(e))
             assert ra == rb, (trial, lens)
