@@ -180,67 +180,16 @@ def make_fake_video(frames: int, width: int, height: int,
     return FAKE_VID_MAGIC + struct.pack(">III", frames, width, height) + body
 
 
-def _hist16(body) -> list[float]:
-    """16-bin byte histogram, L1-normalized — the stand-in for a real
-    embedding; deterministic, so testable end-to-end."""
+def _hist16(gray) -> list[float]:
+    """16-bin histogram of a gray uint8 array, L1-normalized — the
+    stand-in for a real embedding; deterministic, so testable
+    end-to-end."""
     import numpy as np
 
-    arr = np.frombuffer(bytes(body), dtype=np.uint8) \
-        if isinstance(body, (bytes, bytearray)) else np.asarray(body)
-    hist = np.bincount(arr.reshape(-1) >> 4, minlength=16)[:16]
+    arr = np.asarray(gray).reshape(-1)
+    hist = np.bincount(arr >> 4, minlength=16)[:16]
     total = max(int(arr.size), 1)
     return [float(v) / total for v in hist]
-
-
-def _decode_image(payload: bytes) -> tuple[int, int, list[float]]:
-    """Decode real PNG / baseline JPEG (kernel/imgcodec.py, from-spec
-    pure-numpy codecs) or the deterministic FAKEIMG container; the
-    features are a 16-bin histogram over the grayscale pixel bytes.
-    Anything else raises, surfacing as an error row."""
-    if payload.startswith(FAKE_IMG_MAGIC):
-        w, h = struct.unpack(">II", payload[8:16])
-        body = payload[16:16 + w * h]
-        return w, h, _hist16(body)
-    from ..kernel import imgcodec
-
-    if payload.startswith(imgcodec.PNG_SIG):
-        img = imgcodec.decode_png(payload)
-        gray = imgcodec.to_gray(img)
-        return int(gray.shape[1]), int(gray.shape[0]), _hist16(gray)
-    if payload.startswith(b"\xff\xd8"):
-        img = imgcodec.decode_jpeg(payload)
-        gray = imgcodec.to_gray(img)
-        return int(gray.shape[1]), int(gray.shape[0]), _hist16(gray)
-    if payload.startswith(b"BM"):
-        img = imgcodec.decode_bmp(payload)
-        gray = imgcodec.to_gray(img)
-        return int(gray.shape[1]), int(gray.shape[0]), _hist16(gray)
-    if payload.startswith(b"GIF8"):
-        img = imgcodec.decode_gif(payload)
-        gray = imgcodec.to_gray(img)
-        return int(gray.shape[1]), int(gray.shape[0]), _hist16(gray)
-    if payload.startswith(b"II*\x00") or payload.startswith(b"MM\x00*"):
-        img = imgcodec.decode_tiff(payload)
-        gray = imgcodec.to_gray(img)
-        return int(gray.shape[1]), int(gray.shape[0]), _hist16(gray)
-    if payload.startswith(b"RIFF") and payload[8:16] == b"WEBPVP8 ":
-        from ..kernel import vp8 as vp8_codec
-
-        size = int.from_bytes(payload[16:20], "little")
-        if 20 + size > len(payload):
-            raise ValueError("webp: bad VP8 chunk")
-        y, _u, _v = vp8_codec.decode_vp8(payload[20:20 + size])
-        return int(y.shape[1]), int(y.shape[0]), _hist16(y)
-    if payload.startswith(b"RIFF") and payload[8:16] == b"WEBPVP8L":
-        from ..kernel import vp8l as vp8l_codec
-
-        img = vp8l_codec.decode_webp_lossless(payload)
-        gray = imgcodec.to_gray(img)
-        return int(gray.shape[1]), int(gray.shape[0]), _hist16(gray)
-    raise ValueError(
-        "unsupported image format (PNG, JPEG, BMP, GIF, TIFF, WEBP, "
-        "or FAKEIMG)"
-    )
 
 
 def image_features(df: DataFrame, id_col: str = "media_id",
@@ -250,11 +199,11 @@ def image_features(df: DataFrame, id_col: str = "media_id",
 
     def _row(p: bytes) -> dict:
         try:
-            w, h, feats = _decode_image(p)
+            w, h, gray = _decode_gray(p)
         except Exception as exc:
             return {"n_bytes": len(p), "error": str(exc)}
         return {"width": w, "height": h, "n_bytes": len(p),
-                "features": feats}
+                "features": _hist16(gray)}
 
     return map_payloads(df, id_col, payload_col, IMAGE_FEATURES_SCHEMA,
                         _row)
@@ -277,7 +226,10 @@ DHASH_SCHEMA = StructType([
 
 def _decode_gray(payload: bytes):
     """payload → (orig_w, orig_h, gray uint8 array) for any supported
-    image kind (PNG/JPEG/FAKEIMG)."""
+    image kind: PNG, baseline JPEG, BMP, GIF, TIFF and WebP through
+    the from-spec codecs (kernel/imgcodec.py, kernel/vp8*.py), or the
+    deterministic FAKEIMG container.  Anything else, or a FAKEIMG
+    body shorter than w*h, raises, surfacing as an error row."""
     import numpy as np
 
     from ..kernel import imgcodec

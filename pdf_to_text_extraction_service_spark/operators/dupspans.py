@@ -9,9 +9,11 @@ consists of windows that also occur elsewhere — the signal used to
 drop or rewrite dup-heavy documents.
 
 Spark-first shape for 10^12 docs (mirrors operators/decontam.py):
-- windows explode to ``(doc_id, h1, h2)`` dual-xxhash64 scalars
-  inside the document's partition — window STRINGS never leave the
-  hashing projection, document text never shuffles;
+- document text crosses only the width guard's ``_id`` repartition
+  (operators/salt.widen_for_python) ahead of each n-gram pass; the
+  pass emits ``(doc_id, [pos,] h1, h2)`` dual-xxhash64 scalars, so
+  window STRINGS never leave it and no other Exchange carries the
+  text (pinned by tests/test_training_ops.py's plan test);
 - corpus-wide window counts come from one groupBy on the 128-bit
   hash pair with map-side partial aggregation;
 - the per-doc rollup joins doc windows to the over-threshold count
@@ -28,84 +30,26 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .decontam import gram_rows_fn
+from ..functions.textrows import map_text_rows
+from .decontam import NGRAM_KEY_SCHEMA, NGRAM_SCHEMA, ngram_rows
 from .floodcap import _checkpoint_release
 from .salt import widen_for_python
 
 
-def window_occurrence_rows_fn(n: int, with_pos: bool):
-    """mapInPandas body: (id, text) batches -> one row per window
-    OCCURRENCE (id[, pos], h1, h2) — the vectorized replacement for
-    exploding the interpreted per-window expression, which built
-    every 13-gram string TWICE (once per hash) through
-    array_join(slice(...)) lambdas.  Bit-identical (pinned by
-    tests/test_dupspans_opt.py): split on the literal space, texts
-    with < n tokens (or NULL) contribute no rows, pos is the
-    0-based window start, h1/h2 are Spark's xxhash64(s) /
-    xxhash64(s, 's2') via operators/xxh64np.py."""
-    from .xxh64np import xxh64_pair
-
-    def fn(it):
-        ids: list = []
-        texts: list = []
-
-        def flush():
-            out_id: list = []
-            grams_all: list[bytes] = []
-            for i, t in zip(ids, texts):
-                if t is None:
-                    continue
-                toks = t.split(" ")
-                if len(toks) < n:
-                    continue
-                cnt = len(toks) - n + 1
-                out_id.append((i, cnt))
-                grams_all.extend(
-                    " ".join(toks[j:j + n]).encode("utf-8")
-                    for j in range(cnt))
-            h1, h2 = xxh64_pair(grams_all)
-            rid = np.repeat(
-                np.array([i for i, _ in out_id], dtype=np.int64),
-                [c for _, c in out_id]) if out_id else \
-                np.empty(0, np.int64)
-            cols = {"_id": rid}
-            if with_pos:
-                cols["pos"] = np.concatenate(
-                    [np.arange(c, dtype=np.int32)
-                     for _, c in out_id]) if out_id else \
-                    np.empty(0, np.int32)
-            cols["h1"] = h1
-            cols["h2"] = h2
-            return pd.DataFrame(cols)
-
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids.extend(pdf["_id"].tolist())
-            texts.extend(pdf["_t"].tolist())
-            if len(ids) >= 4096:
-                yield flush()
-                ids, texts = [], []
-        if ids:
-            yield flush()
-
-    return fn
-
-
-def _window_occurrences(docs: DataFrame, n: int, id_col: str,
-                        text_col: str, with_pos: bool) -> DataFrame:
-    """(id, [pos,] h1, h2) for EVERY window occurrence — one
-    rebatched Arrow pass (window_occurrence_rows_fn) behind the width
-    guard."""
-    schema = (f"_id long, pos int, h1 long, h2 long" if with_pos
-              else "_id long, h1 long, h2 long")
+def _windows(docs: DataFrame, n: int, id_col: str, text_col: str,
+             distinct: bool, with_pos: bool) -> DataFrame:
+    """``(id, [pos,] h1, h2)`` for every window occurrence, or for each
+    document's distinct windows when ``distinct`` — one rebatched
+    n-gram pass (decontam.ngram_rows through
+    functions/textrows.map_text_rows) behind the width guard."""
     return (
-        widen_for_python(docs.select(F.col(id_col).alias("_id"),
-                                     F.col(text_col).alias("_t")))
-        .mapInPandas(window_occurrence_rows_fn(n, with_pos), schema)
+        map_text_rows(
+            widen_for_python(docs.select(F.col(id_col).alias("_id"),
+                                         F.col(text_col).alias("_t"))),
+            ngram_rows(n, distinct),
+            NGRAM_SCHEMA if with_pos else NGRAM_KEY_SCHEMA)
         .withColumnRenamed("_id", id_col)
     )
-
 
 
 def duplicated_span_stats(docs: DataFrame, n: int = 13,
@@ -122,24 +66,16 @@ def duplicated_span_stats(docs: DataFrame, n: int = 13,
     with dup_frac >= 0.5 (the common drop threshold)."""
     # every occurrence (NOT distinct-per-doc) so within-doc repetition
     # counts toward min_count, like a suffix array would see it
-    occurrences = _window_occurrences(docs, n, id_col, text_col,
-                                      with_pos=False)
+    occurrences = _windows(docs, n, id_col, text_col, distinct=False,
+                           with_pos=False)
     dup_keys = (
         occurrences.groupBy("h1", "h2")
         .agg(F.count("*").alias("_c"))
         .filter(F.col("_c") >= min_count)
         .select("h1", "h2")
     )
-    # distinct-per-doc windows via the decontam gram pass (same
-    # vectorized hashing; the `total` column is distinct-gram count,
-    # not the occurrence total this operator reports — ignored)
-    doc_distinct = (
-        widen_for_python(docs.select(F.col(id_col).alias("_id"),
-                                     F.col(text_col).alias("_t")))
-        .mapInPandas(gram_rows_fn(n),
-                     "_id long, h1 long, h2 long, total long")
-        .select(F.col("_id").alias(id_col), "h1", "h2")
-    )
+    doc_distinct = _windows(docs, n, id_col, text_col, distinct=True,
+                            with_pos=False)
     dup_per_doc = (
         doc_distinct.join(dup_keys, ["h1", "h2"])
         .groupBy(id_col)
@@ -193,8 +129,8 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 13,
     sorted int array, and the text crosses exactly one Exchange at
     the rewrite join, where interval-merge + token filtering run
     in-row as JVM array expressions."""
-    occurrences = _window_occurrences(docs, n, id_col, text_col,
-                                      with_pos=True)
+    occurrences = _windows(docs, n, id_col, text_col, distinct=False,
+                           with_pos=True)
     # ONE declared aggregation per window key computes the corpus
     # count and the canonical occurrence (min (doc, pos)) together
     # and emits every NON-canonical occurrence of qualifying windows

@@ -29,7 +29,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
+from ..functions.textrows import map_text_rows
 from .floodcap import (
     _checkpoint_release,
     cap_flooded_buckets,
@@ -222,47 +224,32 @@ def _minhash_sig_chunk(id_arrays, a, b):
     return out
 
 
-#: fused-prep rebatch size: Arrow hands the UDF the session's small
-#: payload-safe batches (256 rows); scalar text rows are cheap, so
-#: the prep function re-accumulates them into chunks this size to
-#: amortize the per-chunk numpy fixed costs.
-_PREP_CHUNK = 8192
+#: the MinHash prep pass's output rows (see :func:`minhash_prep`)
+MINHASH_PREP_SCHEMA = StructType([
+    StructField("_id", LongType()),
+    StructField("_hsh", ArrayType(LongType())),
+    StructField("_sig", ArrayType(LongType())),
+])
 
 
-def minhash_prep_fn(n: int, num_perm: int, seed: int = 1):
-    """mapInPandas body: (_id, _t) batches -> (_id, _hsh, _sig) in
-    ONE Python hop — shingle ids (:func:`_shingle_ids_chunk`) and the
-    signature kernel (:func:`_minhash_sig_chunk`) fused, so text
-    crosses the Arrow boundary once in a single rebatched pass.
-    Pinned against the JVM chain ``shingle_hashes`` +
+def minhash_prep(n: int, num_perm: int, seed: int = 1):
+    """Chunk kernel for functions/textrows.map_text_rows: ``(ids,
+    texts)`` -> ``(_id, _hsh, _sig)``, one row per document — shingle
+    ids (:func:`_shingle_ids_chunk`) and the signature kernel
+    (:func:`_minhash_sig_chunk`) fused, so text crosses the Arrow
+    boundary once.  Pinned against the JVM chain ``shingle_hashes`` +
     ``minhash_signature`` in tests/reference/neardup.py by
     tests/test_minhash_opt.py."""
     coeffs = _perm_coeffs(num_perm, seed)
     a = np.array([x for x, _ in coeffs], dtype=np.int64)[:, None]
     b = np.array([y for _, y in coeffs], dtype=np.int64)[:, None]
 
-    def fn(it):
-        ids: list = []
-        texts: list = []
+    def chunk(ids: list, texts: list) -> dict:
+        hsh = _shingle_ids_chunk(texts, n)
+        return {"_id": np.asarray(ids, dtype=np.int64), "_hsh": hsh,
+                "_sig": _minhash_sig_chunk(hsh, a, b)}
 
-        def flush():
-            hsh = _shingle_ids_chunk(texts, n)
-            sig = _minhash_sig_chunk(hsh, a, b)
-            return pd.DataFrame({"_id": np.asarray(ids, dtype=np.int64),
-                                 "_hsh": hsh, "_sig": sig})
-
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids.extend(pdf["_id"].tolist())
-            texts.extend(pdf["_t"].tolist())
-            if len(ids) >= _PREP_CHUNK:
-                yield flush()
-                ids, texts = [], []
-        if ids:
-            yield flush()
-
-    return fn
+    return chunk
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -309,24 +296,20 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     # shingle text (set-identical Jaccard up to xxhash collisions at
     # ~2^-31 per differing-shingle pair — and the threshold filter is
     # the verified property anyway).  Shingling + hashing + the
-    # MinHash signature run in ONE rebatched mapInPandas hop
-    # (minhash_prep_fn, pinned to the JVM chain in
-    # tests/reference/neardup.py) behind the width guard; the
-    # size(...) > 0 gate never drops — every text, even null, yields
-    # at least one shingle id, exactly as the JVM chain did.
-    sh = (
+    # MinHash signature run in ONE rebatched text-row pass
+    # (minhash_prep, pinned to the JVM chain in
+    # tests/reference/neardup.py) behind the width guard; every text,
+    # even NULL, yields at least one shingle id, exactly as the JVM
+    # chain did.
+    sh = map_text_rows(
         widen_for_python(df.select(F.col(id_col).alias("_id"),
-                                   F.col(text_col).alias("_t")))
-        .mapInPandas(minhash_prep_fn(shingle_n, num_perm),
-                     "_id long, _hsh array<bigint>, _sig array<bigint>")
-        .filter(F.size("_hsh") > 0)
-        .persist()
-    )
-    sig = sh
+                                   F.col(text_col).alias("_t"))),
+        minhash_prep(shingle_n, num_perm), MINHASH_PREP_SCHEMA,
+    ).persist()
     # persist the banded scalars too: the flood-count pass and both
     # self-join sides otherwise re-run the 32-band explode + key
     # hash over every signature (4 recomputations at bench scale)
-    banded = sig.select(
+    banded = sh.select(
         "_id",
         F.explode(
             F.expr(

@@ -4,14 +4,13 @@ scoring, document fingerprinting (prompt mandate).
 Every formula is one the DuckDB oracle can evaluate identically;
 lang_id and the fingerprint run it as one Arrow pass each, pinned to
 the JVM expressions in tests/reference/textstats.py.  The quality
-scorer reuses the byte-parity kernel (kernel/quality.py) through a
-pandas UDF (it is pinned by its own parity fixtures, not a SQL
-oracle).
+scorer reuses the byte-parity kernel (kernel/quality.py) through the
+rebatched text-row pass (it is pinned by its own parity fixtures, not
+a SQL oracle).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
@@ -24,6 +23,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..functions.textrows import map_text_rows
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -206,29 +207,24 @@ def quality_scores(df: DataFrame, id_col: str = "doc_id",
                    min_words: int = 20) -> DataFrame:
     """Kernel quality scorer (quality.go parity) over a table — the
     graft's "text-density/quality classification over batched byte
-    streams" (pandas UDF: Arrow batches, kernel loop per doc)."""
+    streams": one rebatched text-row pass
+    (functions/textrows.map_text_rows), kernel loop per doc; NULL
+    text scores as ""."""
 
-    def _score(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def _chunk(ids: list, texts: list) -> dict:
         from pdf_to_text_extraction_service_spark.kernel import quality
 
-        for batch in batches:
-            out = {"doc_id": [], "quality": [], "needs_ocr": [],
-                   "maybe_ocr": [], "word_count": []}
-            for did, text in zip(batch[id_col], batch[text_col]):
-                d = quality.score(text if text is not None else "",
-                                  min_words)
-                out["doc_id"].append(did)
-                out["quality"].append(d.quality)
-                out["needs_ocr"].append(d.needs_ocr)
-                out["maybe_ocr"].append(d.maybe_ocr)
-                out["word_count"].append(d.word_count)
-            yield pd.DataFrame(out)
+        scores = [quality.score(t if t is not None else "", min_words)
+                  for t in texts]
+        return {"doc_id": ids,
+                "quality": [d.quality for d in scores],
+                "needs_ocr": [d.needs_ocr for d in scores],
+                "maybe_ocr": [d.maybe_ocr for d in scores],
+                "word_count": [d.word_count for d in scores]}
 
-    return df.select(id_col, text_col).mapInPandas(
-        _score, schema=QUALITY_SCHEMA
-    )
+    return map_text_rows(
+        df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t")),
+        _chunk, QUALITY_SCHEMA)
 
 
 # ------------------------------------------------- repetition signals

@@ -26,7 +26,6 @@ from ..operators.urlnorm import canonical_url
 
 
 def extract_pipeline(pages: DataFrame,
-                     num_partitions: int | None = None,
                      salt: bool = True,
                      dedup: bool = True,
                      keep_pages_col: bool = True,
@@ -37,9 +36,8 @@ def extract_pipeline(pages: DataFrame,
         # the same page share a url key (operators/urlnorm.py)
         df = df.withColumn("url", canonical_url("url"))
     if salt:
-        if num_partitions is None:
-            num_partitions = df.sparkSession.sparkContext.defaultParallelism
-        df = size_tiered_repartition(df, num_partitions)
+        df = size_tiered_repartition(
+            df, df.sparkSession.sparkContext.defaultParallelism)
     else:
         # Scale-adaptive parallelism guard (guide §2.5/§6): a compact
         # corpus scans as fewer 128 MB splits than the cluster has

@@ -1,4 +1,5 @@
-"""JVM-expression reference for ``operators/decontam.gram_rows_fn``."""
+"""JVM-expression reference for ``operators/decontam.ngram_rows`` in
+distinct mode."""
 
 from __future__ import annotations
 

@@ -1,5 +1,5 @@
 """JVM-expression references for the MinHash and SimHash signatures
-(``operators/neardup.minhash_prep_fn`` and
+(``operators/neardup.minhash_prep`` and
 ``operators/neardup.simhash64_text_udf``)."""
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
-"""r8 optimization parity pin: the fused gram_rows_fn decontamination
-path must produce row-identical output to the pre-r8 double-build SQL
-shape (explode gram_struct + separate totals pass, in
-tests/reference/decontam.py)."""
+"""r8 optimization parity pin: the decontamination path (one n-gram
+pass per side, decontam.ngram_rows in distinct mode) must produce
+row-identical output to the pre-r8 double-build SQL shape (explode
+gram_struct + separate totals pass, in tests/reference/decontam.py)."""
 
 from __future__ import annotations
 

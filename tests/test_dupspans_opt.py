@@ -32,7 +32,7 @@ def _old_window_occurrences(docs, n, id_col, text_col, with_pos):
 
 def test_window_occurrences_match_old_expression(spark):
     from pdf_to_text_extraction_service_spark.operators.dupspans import (
-        _window_occurrences,
+        _windows,
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
@@ -43,22 +43,108 @@ def test_window_occurrences_match_old_expression(spark):
          (3004, " ".join(f"w{i % 4}" for i in range(30)))],
         "doc_id long, text string")
     docs = docs.unionByName(edge)
+    occurrences = _windows(docs, 13, "doc_id", "text", distinct=False,
+                           with_pos=True)
     for with_pos in (False, True):
         want = sorted(map(tuple, _old_window_occurrences(
             docs, 13, "doc_id", "text", with_pos).collect()))
-        got = sorted(map(tuple, _window_occurrences(
-            docs, 13, "doc_id", "text", with_pos).collect()))
+        cols = ["doc_id", "pos", "h1", "h2"] if with_pos \
+            else ["doc_id", "h1", "h2"]
+        got = sorted(map(tuple, occurrences.select(cols).collect()))
         assert got == want and len(got) > 10000, with_pos
+
+
+def test_ngram_pass_crosses_chunk_boundaries(spark):
+    """More than two text-row chunks in ONE task (a single partition)
+    through map_text_rows with the n-gram kernel, in both modes, equal
+    the JVM expressions row for row and in multiplicity — a dropped
+    tail chunk or a chunk emitted twice changes the multiset.  Short
+    texts, with NULL, empty and fewer-than-n-token rows mixed in."""
+    from pdf_to_text_extraction_service_spark.functions.textrows import (
+        CHUNK_ROWS,
+        map_text_rows,
+    )
+    from pdf_to_text_extraction_service_spark.operators.decontam import (
+        NGRAM_SCHEMA,
+        ngram_rows,
+    )
+    from tests.reference.decontam import gram_struct
+
+    n = 3
+    rows = []
+    for i in range(2 * CHUNK_ROWS + 3001):
+        if i % 11 == 0:
+            rows.append((i, None))
+        elif i % 13 == 0:
+            rows.append((i, ""))
+        else:             # 1..6 tokens, repeats inside a doc included
+            rows.append((i, " ".join(f"w{(i + j) % 3}{i % 7}"
+                                     for j in range(1 + i % 6))))
+    docs = spark.createDataFrame(rows, "doc_id long, text string") \
+        .coalesce(1)
+    assert docs.rdd.getNumPartitions() == 1
+    frame = docs.select(F.col("doc_id").alias("_id"),
+                        F.col("text").alias("_t"))
+
+    occ = _old_window_occurrences(docs, n, "doc_id", "text", True)
+    want_occ = sorted(map(tuple, occ.collect()))
+    got_occ = sorted(map(tuple, map_text_rows(
+        frame, ngram_rows(n, distinct=False), NGRAM_SCHEMA).collect()))
+    assert got_occ == want_occ and len(got_occ) > 2 * CHUNK_ROWS
+
+    # distinct mode: the gram_struct set, each at its first position
+    first = occ.groupBy("doc_id", "h1", "h2").agg(F.min("pos")) \
+        .select("doc_id", "min(pos)", "h1", "h2")
+    want_dist = sorted(map(tuple, first.collect()))
+    assert sorted((d, a, b) for d, _, a, b in want_dist) == sorted(
+        map(tuple, docs.select("doc_id", F.explode(F.expr(gram_struct(
+            "split(text, ' ')", n))).alias("_g"))
+            .select("doc_id", "_g.h1", "_g.h2").collect()))
+    got_dist = sorted(map(tuple, map_text_rows(
+        frame, ngram_rows(n, distinct=True), NGRAM_SCHEMA).collect()))
+    assert got_dist == want_dist and len(got_dist) < len(got_occ)
+
+
+def test_text_chunks_close_at_row_and_char_bounds():
+    """The rebatch loop closes a chunk at the first batch that brings
+    it to CHUNK_ROWS rows (short texts) or CHUNK_CHARS characters
+    (long texts; NULL counts zero), keeps the tail, and hands on every
+    row exactly once, in order."""
+    import pandas as pd
+
+    from pdf_to_text_extraction_service_spark.functions.textrows import (
+        CHUNK_CHARS,
+        CHUNK_ROWS,
+        text_chunks,
+    )
+
+    def batches(texts, size):
+        for s in range(0, len(texts), size):
+            part = texts[s:s + size]
+            yield pd.DataFrame({"_id": range(s, s + len(part)),
+                                "_t": part})
+
+    big = "x" * (CHUNK_CHARS // 4 + 1)
+    for texts, size, sizes in [
+        # 9 batches of 1000 reach CHUNK_ROWS; 3000 rows are left over
+        (["a b", None, ""] * 7000, 1000, [9000, 9000, 3000]),
+        # 4 big texts pass CHUNK_CHARS, far below CHUNK_ROWS
+        ([big, None] * 10, 2, [8, 8, 4]),
+    ]:
+        got = list(text_chunks(batches(texts, size)))
+        assert [len(ids) for ids, _ in got] == sizes
+        assert [i for ids, _ in got for i in ids] == list(range(len(texts)))
+        assert [t for _, ts in got for t in ts] == texts
 
 
 def _old_remove_duplicated_spans(docs, n=13, min_count=2,
                                  id_col="doc_id", text_col="text"):
     from pdf_to_text_extraction_service_spark.operators.dupspans import (
-        _window_occurrences,
+        _windows,
     )
 
-    occurrences = _window_occurrences(docs, n, id_col, text_col,
-                                      with_pos=True)
+    occurrences = _windows(docs, n, id_col, text_col, distinct=False,
+                           with_pos=True)
     dup_canon = (
         occurrences.groupBy("h1", "h2")
         .agg(F.count("*").alias("_c"),

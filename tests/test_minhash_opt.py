@@ -62,7 +62,7 @@ def _jvm_shingle_ids(df, n):
 
 
 def test_shingle_hash_ids_udf_matches_jvm_chain(spark):
-    """The shingle-id kernel of minhash_prep_fn (_shingle_ids_chunk)
+    """The shingle-id kernel of minhash_prep (_shingle_ids_chunk)
     == the JVM chain at shingle sizes other than the pipeline's 3:
     fewer tokens than n (whole-array shingle), n = 1, and NULL text
     -> [42] (xxhash64(NULL) & M31)."""
@@ -87,14 +87,19 @@ def test_shingle_hash_ids_udf_matches_jvm_chain(spark):
 
 
 def test_fused_prep_matches_chained_udfs(spark):
-    """minhash_prep_fn's one mapInPandas hop (shingle ids + signature)
-    == the JVM chain it replaced: split -> shingles -> distinct ->
-    xxhash64 & M31 -> distinct, then the k-permutation
-    minhash_signature (tests/reference/neardup.py).  The chained
-    Python UDFs this test once compared against are gone; the fused
-    pass is pinned straight to the JVM chain."""
+    """The minhash_prep kernel (shingle ids + signature) driven through
+    the text-row pass (functions/textrows.map_text_rows) == the JVM
+    chain it replaced: split -> shingles -> distinct -> xxhash64 & M31
+    -> distinct, then the k-permutation minhash_signature
+    (tests/reference/neardup.py).  The chained Python UDFs this test
+    once compared against are gone; the fused pass is pinned straight
+    to the JVM chain."""
+    from pdf_to_text_extraction_service_spark.functions.textrows import (
+        map_text_rows,
+    )
     from pdf_to_text_extraction_service_spark.operators.neardup import (
-        minhash_prep_fn,
+        MINHASH_PREP_SCHEMA,
+        minhash_prep,
     )
     from tests.reference.neardup import minhash_signature
 
@@ -105,12 +110,10 @@ def test_fused_prep_matches_chained_udfs(spark):
 
     jvm = _jvm_shingle_ids(df, 3) \
         .withColumn("_sig", minhash_signature("_hsh", 96))
-    fused = (
+    fused = map_text_rows(
         df.select(F.col("doc_id").alias("_id"),
-                  F.col("text").alias("_t"))
-        .mapInPandas(minhash_prep_fn(3, 96),
-                     "_id long, _hsh array<bigint>, _sig array<bigint>")
-    )
+                  F.col("text").alias("_t")),
+        minhash_prep(3, 96), MINHASH_PREP_SCHEMA)
     want = {r["doc_id"]: (list(r["_hsh"]), list(r["_sig"]))
             for r in jvm.collect()}
     got = {r["_id"]: (list(r["_hsh"]), list(r["_sig"]))

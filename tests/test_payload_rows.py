@@ -203,3 +203,19 @@ def test_plan_has_one_map_over_key_and_payload(spark, name):
     child = nodes[0].children().apply(0).output()
     assert [child.apply(i).name() for i in range(child.size())] \
         == [key, payload]
+
+
+def test_truncated_fakeimg_is_error_row(spark):
+    """A FAKEIMG body shorter than its w*h header is one error for
+    every image operator (they share one decode dispatch);
+    image_features keeps ``n_bytes``."""
+    short = mm.make_fake_image(4, 4)[:-5]
+    df = spark.createDataFrame([(1, bytearray(short))],
+                               "media_id long, payload binary")
+    for op in (mm.image_features, mm.resize_images, mm.image_dhash):
+        row = op(df).first().asDict()
+        assert row["error"] == "fake image truncated", op.__name__
+        kept = {k: v for k, v in row.items()
+                if k not in ("media_id", "error") and v is not None}
+        assert kept == ({"n_bytes": len(short)}
+                        if op is mm.image_features else {}), op.__name__

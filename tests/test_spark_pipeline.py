@@ -220,6 +220,31 @@ def test_resume_skips_done_buckets(spark, corpus_df, tmp_path):
         F.sum("row_count").alias("rows"), F.sum("ok_count").alias("ok")
     ).first()
     assert (agg["rows"], agg["ok"]) == (mf_tot["rows"], mf_tot["ok"])
+    # per bucket, failure_codes counts the failed output rows per
+    # format, and is NULL for a bucket without failed rows
+    want: dict = {}
+    for r in resumed.filter(~F.col("success")) \
+            .groupBy("bucket", "format").count().collect():
+        want.setdefault(r["bucket"], {})[r["format"]] = r["count"]
+    assert want, "corpus must contain failure rows"
+    got = {r["bucket"]: r["failure_codes"] for r in mf2.collect()}
+    assert got == {b: want.get(b) for b in range(8)}
+
+
+def test_all_filtered_input_commits_zero_rows(spark, corpus_df, tmp_path):
+    """A run whose input has no rows (every page gated by a filter)
+    writes no output files but still commits one (0, 0, NULL) manifest
+    row per bucket; a rerun is a no-op."""
+    out_dir = str(tmp_path / "out")
+    mf_dir = str(tmp_path / "manifest")
+    empty = corpus_df.filter(F.lit(False))
+    for _ in range(2):
+        run_resumable_extract(spark, empty, out_dir, mf_dir,
+                              buckets=4, wave_count=2)
+        rows = sorted(
+            (r["bucket"], r["row_count"], r["ok_count"], r["failure_codes"])
+            for r in spark.read.parquet(mf_dir).collect())
+        assert rows == [(b, 0, 0, None) for b in range(4)]
 
 
 def test_page_table_io_parquet_fallback(spark, corpus_df, tmp_path):

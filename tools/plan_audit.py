@@ -116,12 +116,15 @@ def main() -> None:
 
     q = entry_mod.queries()["dup_span_stats"]
     sections.append((
-        "Duplicated-span audit (text never shuffles)",
+        "Duplicated-span audit (text crosses only the width guards)",
         _plan(q(spark, SF)),
-        "Window occurrences explode to dual-hash scalars inside the "
-        "document partition; corpus-wide counts and the per-doc "
-        "rollup shuffle only (hash, hash) / (doc_id, count) pairs — "
-        "no Exchange input carries the text column (asserted by "
+        "The document text crosses exactly two Exchanges: the width "
+        "guards (hashpartitioning on _id) ahead of the two n-gram "
+        "passes, which emit dual-hash (doc_id, h1, h2) scalars. "
+        "Corpus-wide counts and the per-doc rollup shuffle only "
+        "(hash, hash) / (doc_id, count) pairs; no other Exchange "
+        "carries the text or text derived from it, under any alias, "
+        "as tokens or through a cache (asserted by "
         "tests/test_training_ops.py plan audit).",
     ))
 
@@ -140,10 +143,12 @@ def main() -> None:
         "Benchmark decontamination (broadcast n-gram set)",
         _plan(q(spark, SF)),
         "The benchmark side (distinct dual-hashed n-grams) goes "
-        "through BroadcastExchange — the document corpus side never "
-        "shuffles for the contamination join; n-gram STRINGS exist "
-        "only inside the hashing projection (8+8 bytes per gram on "
-        "the wire). Hit counts partially aggregate map-side.",
+        "through BroadcastExchange, so the contamination join never "
+        "shuffles the document corpus; the document text crosses one "
+        "Exchange, the width guard (hashpartitioning on _id) ahead "
+        "of the n-gram pass. n-gram STRINGS exist only inside that "
+        "pass (8+8 bytes per gram on the wire). Hits and the "
+        "distinct-gram total partially aggregate map-side.",
     ))
 
     q = entry_mod.queries()["pack_sequences"]
