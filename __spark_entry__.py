@@ -639,8 +639,10 @@ def _q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS from pair edges (the post-dedup step that
     picks one canonical doc per cluster): MinHash pairs over docs ∪
     mutants, plus planted chain edges (i, i+1) for i % 50 == 0 so the
-    graph has diameter-3 components — CCF min-label propagation must
-    actually iterate, not just copy pair mins."""
+    graph has diameter-3 components — a label is the component
+    minimum, not a copy of each pair's min. This graph is far under
+    ``components.DRIVER_EDGES``, so it is labelled on the driver; the
+    determinism and parity tests force the CCF rounds path."""
     from pdf_to_text_extraction_service_spark.operators.components import (
         connected_components,
     )

@@ -59,18 +59,6 @@ def extract_pipeline(pages: DataFrame,
     return out
 
 
-def metrics_rollup(extracted: DataFrame) -> DataFrame:
-    """Per-format success/failure rollup — the Spark analog of the
-    reference's serverMetrics counters (cmd/server/main.go:59-80)."""
-    return extracted.groupBy("format").agg(
-        F.count("*").alias("docs"),
-        F.count_if(F.col("success")).alias("ok_docs"),
-        F.count_if(~F.col("success")).alias("failed_docs"),
-        F.sum("word_count").alias("sum_words"),
-        F.sum("char_count").alias("sum_chars"),
-    )
-
-
 def flagship_lang_agg(extracted: DataFrame) -> DataFrame:
     """Flagship query (SURVEY.md §7 M1): per-language doc counts and
     word/char volume over successfully extracted, deduped pages."""

@@ -183,14 +183,25 @@ def main() -> None:
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (10, 11)], "id_a long, id_b long")
     sections.append((
-        "Near-dup connected components (CCF round shape)",
+        "Near-dup connected components (driver finish, CCF rounds "
+        "above the bound)",
         _plan(connected_components(edges)),
-        "Two wide shuffles per CCF round (label groupBy + emission dedup) plus the convergence anti-join, over (node, neighbor) "
-        "scalars; per-node collect_set is bounded by the upstream "
-        "bucket caps. Between rounds the relation is localCheckpointed "
-        "— plan lineage stays constant-depth no matter how many "
-        "rounds run (persist alone lets Catalyst analysis grow "
-        "per-round and eventually fail).",
+        "One distinct edge checkpoint, whose row count is an observe() "
+        "metric of that same action. At or under DRIVER_EDGES (2^20) "
+        "rows the edges are collected as one Arrow table and a NumPy "
+        "hook-and-pointer-jump union-find labels every node, so the "
+        "call is three Spark jobs whatever the graph's diameter and "
+        "the returned plan is a LocalTableScan with no Exchange. Above "
+        "the bound, CCF-Iterate rounds shrink the relation first: each "
+        "is two wide shuffles (label groupBy + emission dedup) over "
+        "(node, neighbor) scalars and one localCheckpoint, with the "
+        "new-pair and residual counts read as observe() metrics of "
+        "that checkpoint, so no round runs a convergence job. "
+        "Per-node collect_set is bounded by the upstream bucket caps, "
+        "and checkpointing keeps plan lineage constant-depth however "
+        "many rounds run. The rounds stop when the residual fits under "
+        "the bound (it then takes the same driver step) or converges; "
+        "a vertex join then labels the nodes outside the residual.",
     ))
 
     out = ["""# Physical-plan audit
