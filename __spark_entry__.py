@@ -404,8 +404,9 @@ def _q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide paragraph dedup (CCNet/RefinedWeb): every doc gets
     a shared boilerplate header, its own (unique) text, and a
     group-keyed banner — dedup keeps the header once corpus-wide and
-    each banner once per group, first (doc_id, pos) wins. Document
-    text crosses exactly one Exchange (operators/paradedup.py)."""
+    each banner once per group, first (doc_id, pos) wins. The
+    operator's plan shape is its row in tests/test_plan_contracts.py;
+    the orderBy here adds one range Exchange."""
     from pdf_to_text_extraction_service_spark.operators.paradedup import (
         paragraph_dedup,
     )

@@ -385,20 +385,6 @@ def _predict(plane: np.ndarray, mbx: int, mby: int, size: int,
 
 
 # ------------------------------------------------------- decoder
-def parse_dimensions(data: bytes) -> tuple[int, int]:
-    """(width, height) from a VP8 key-frame chunk payload."""
-    if len(data) < 10:
-        raise ValueError("vp8: short payload")
-    tag = data[0] | (data[1] << 8) | (data[2] << 16)
-    if tag & 1:
-        raise ValueError("vp8: not a key frame")
-    if data[3:6] != b"\x9d\x01\x2a":
-        raise ValueError("vp8: bad start code")
-    w = struct.unpack("<H", data[6:8])[0] & 0x3FFF
-    h = struct.unpack("<H", data[8:10])[0] & 0x3FFF
-    return w, h
-
-
 def decode_vp8(data: bytes) -> tuple[np.ndarray, np.ndarray,
                                      np.ndarray]:
     """VP8 key-frame chunk payload → (Y, U, V) uint8 planes

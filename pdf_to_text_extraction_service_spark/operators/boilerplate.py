@@ -4,10 +4,11 @@ A web-scale training pipeline drops lines that repeat across many
 documents (nav text, cookie banners, "subscribe" calls) before
 training. Two passes, both JVM-side:
 
-1. Line frequency: explode lines → groupBy(line hash) with map-side
-   partial aggregation → lines present in >= min_docs DISTINCT
-   documents. At 100 TB the frequent-line set is tiny relative to the
-   corpus (it is the point of the operator), so it broadcasts.
+1. Line frequency: explode lines → groupBy(line) counting DISTINCT
+   documents (two partial aggregations, so the line strings cross
+   two Exchanges) → lines present in >= min_docs documents. At
+   100 TB the frequent-line set is tiny relative to the corpus (it
+   is the point of the operator), so it broadcasts.
 2. Filter + reassemble: anti-join each document's lines against the
    broadcast frequent set, re-join surviving lines in original order.
 

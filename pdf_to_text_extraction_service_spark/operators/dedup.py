@@ -50,12 +50,12 @@ def prune_duplicate_captures(pages: DataFrame, key: str = "url",
     1. winners: a (url, max warc_ts) aggregate that scans ONLY the two
        key columns (columnar projection — the multi-MiB html column is
        never read in this pass; see ReadSchema in .explain).
-    2. inner join pages × winners on (url, ts). On a url-bucketed
-       source (operators/bucketing.py / Iceberg bucket(url, N)) this
-       is storage-partitioned and shuffle-free on the pages side; on
-       raw parquet it is one payload shuffle — exactly the salt
-       shuffle the pipeline would have done anyway, so pruning is
-       never worse.
+    2. semi join pages × winners on (url, ts). While the winners
+       broadcast the pages side never shuffles; on a url-bucketed
+       source (Iceberg bucket(url, N)) a shuffle join is
+       storage-partitioned; otherwise it is one payload shuffle —
+       exactly the salt shuffle the pipeline would have done anyway,
+       so pruning is never worse.
 
     Ties on (url, max ts) keep all tied captures (extraction is
     idempotent per (url, ts); the post-extract dedup_latest remains

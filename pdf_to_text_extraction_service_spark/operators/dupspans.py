@@ -13,7 +13,7 @@ Spark-first shape for 10^12 docs (mirrors operators/decontam.py):
   (operators/salt.widen_for_python) ahead of each n-gram pass; the
   pass emits ``(doc_id, [pos,] h1, h2)`` dual-xxhash64 scalars, so
   window STRINGS never leave it and no other Exchange carries the
-  text (pinned by tests/test_training_ops.py's plan test);
+  text (the duplicated_span_stats row of tests/test_plan_contracts.py);
 - corpus-wide window counts come from one groupBy on the 128-bit
   hash pair with map-side partial aggregation;
 - the per-doc rollup joins doc windows to the over-threshold count
@@ -124,11 +124,13 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 13,
     them — the "keep the first copy, drop the rest" approximation at
     fixed window size.
 
-    Scale shape: same as duplicated_span_stats — only (doc_id, pos,
-    h1, h2) scalars shuffle; removal positions roll up per doc as a
-    sorted int array, and the text crosses exactly one Exchange at
-    the rewrite join, where interval-merge + token filtering run
-    in-row as JVM array expressions."""
+    Scale shape: as duplicated_span_stats, the text crosses the width
+    guard and only (doc_id, pos, h1, h2) scalars shuffle after it;
+    removal positions roll up per doc as a sorted int array and join
+    back to the documents for one Arrow rewrite pass.  While the
+    arrays broadcast, that pass reads the text where the scan left
+    it (the remove_duplicated_spans row of
+    tests/test_plan_contracts.py); a shuffle join moves it once."""
     occurrences = _windows(docs, n, id_col, text_col, distinct=False,
                            with_pos=True)
     # ONE declared aggregation per window key computes the corpus

@@ -1,8 +1,8 @@
 """IVF (inverted-file) approximate nearest neighbor — the trained
 scale path beyond hyperplane LSH (operators/similarity.py).
 
-Coarse quantizer = k-means trained with DataFrame-only Lloyd
-iterations (posexplode → per-(cluster, dim) means → re-broadcast), so
+Coarse quantizer = k-means trained with distributed Lloyd
+iterations (Arrow passes over cached id-blocks, see train_kmeans), so
 training is fully distributed; centroids are tiny and come back to
 the driver only between iterations (k × dim floats). The index is the
 vector table with a ``cluster`` column — at 100 TB you write it

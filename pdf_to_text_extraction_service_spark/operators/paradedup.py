@@ -17,14 +17,15 @@ Scale shape (the part that matters at 100 TB):
    reducer key.  (A ``row_number() over partitionBy(hash)`` window
    CANNOT partially aggregate: every occurrence of a hot hash lands
    on one task — the exact skew magnet this operator's motivating
-   workload produces.  Same argument as docs/PLANS.md makes for the
-   url dedup.)
+   workload produces.  Same argument as operators/dedup.py makes for
+   the url dedup.)
 3. Kept positions roll up per doc (``sort_array(collect_list)``) —
    second scalar shuffle — and join back to the ORIGINAL docs table,
    where reassembly happens in-row with JVM array expressions
    (split → keep-by-position → array_join). Document text crosses
-   exactly ONE Exchange (that join), the same budget as the salt
-   repartition in the extraction pipeline.
+   at most ONE Exchange (that join): none while the kept-position
+   lists broadcast (the paragraph_dedup row of
+   tests/test_plan_contracts.py), one once they shuffle.
 
 Dedup identity is xxhash64 of the paragraph (collision odds 2^-64 per
 pair, the decontam trade — operators/decontam.py); the DuckDB oracle

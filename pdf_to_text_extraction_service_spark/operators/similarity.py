@@ -3,8 +3,8 @@
 Two paths (prompt mandate):
 - brute_force_topk: exact cosine top-k — the correctness baseline.
   Dot products are one JVM ``aggregate(zip_with(...))`` expression per
-  row (whole-stage codegen; no Python). One shuffle for the global
-  top-k (rank window over a single ordered column set).
+  row (whole-stage codegen; no Python). No Exchange: the global
+  top-k is a TakeOrderedAndProject (local top-k per partition).
 - lsh_topk: the scale path — random-hyperplane LSH buckets; the query
   only scans its own bucket (and optionally multi-probe neighbors).
   At 100 TB the bucketed table is precomputed + partitioned by bucket,

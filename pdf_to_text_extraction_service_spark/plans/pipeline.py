@@ -7,8 +7,10 @@ dedup → sink. Ordering is deliberate:
 1. salt/repartition FIRST, while rows still carry html — this is the
    only shuffle that moves the binary payload, and it exists to
    decorrelate oversized documents from scan file layout;
-   set ``salt=False`` when the source layout is already uniform
-   (e.g. bucketed Iceberg) to make the whole extract map-only.
+   ``salt=False`` skips it when the source layout is already uniform
+   (e.g. bucketed Iceberg).  The extract is then map-only only if
+   the scan has a split per core: fewer splits get one round-robin
+   repartition instead (the width guard below).
 2. extract() drops html — everything downstream shuffles only the
    extracted text columns.
 3. dedup via partial-agg max_by (operators/dedup.py).

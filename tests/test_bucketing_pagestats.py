@@ -1,15 +1,8 @@
-"""Bucketed co-located joins (no Exchange in the plan) + pages-array
-stats."""
+"""Pages-array stats."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from pdf_to_text_extraction_service_spark.functions.extract_udf import extract
-from pdf_to_text_extraction_service_spark.operators.bucketing import (
-    colocated_join,
-    write_bucketed,
-)
 from pdf_to_text_extraction_service_spark.operators.pagestats import (
     pdf_page_stats,
 )
@@ -35,24 +28,3 @@ def test_pdf_page_stats(spark):
     # offline: no ocr pages ever; savings = text_layer/total
     assert b["cost_savings_percent"] == 100
     assert a["sum_page_words"] > 0
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    # warehouse.dir is static — tables land in ./spark-warehouse
-    # (gitignored); drop them at the end.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    df = spark.range(1000).select(
-        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
-        (F.col("id") * 2).alias("v"),
-    )
-    write_bucketed(df, "t_left", buckets=8)
-    write_bucketed(df.withColumnRenamed("v", "w"), "t_right", buckets=8)
-    joined = colocated_join(spark, "t_left", "t_right")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan
-    # co-located bucketed sides: no shuffle on either input
-    assert "Exchange" not in plan
-    assert joined.count() == 1000
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    spark.sql("DROP TABLE IF EXISTS t_left")
-    spark.sql("DROP TABLE IF EXISTS t_right")

@@ -44,13 +44,8 @@ def test_flooded_bucket_sampled_deterministically(spark):
     assert sorted(alt.collect()) != out1 or len(kept0) == 0
 
 
-def test_floodcap_plan_is_partial_agg_no_window(spark):
-    df = spark.range(10_000).select(
-        (F.col("id") % 3).alias("bucket"), F.col("id"))
-    out = cap_flooded_buckets(df, ["bucket"], "id", 16)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "partial_count" in plan
-    assert "Window" not in plan and "row_number" not in plan
+def test_floodcap_plan_is_partial_agg_no_window(plan_row):
+    plan_row("cap_flooded_buckets")
 
 
 def test_floodcap_rejects_bad_cap(spark):
@@ -61,69 +56,14 @@ def test_floodcap_rejects_bad_cap(spark):
 
 @pytest.mark.parametrize("op", ["minhash", "simhash", "embedding",
                                 "dhash"])
-def test_neardup_plans_have_no_bucket_window(spark, monkeypatch, op):
-    """Each LSH blocker's plan must show the partial-agg flood count
-    and no Window (the r5 skew-funnel fix).  The three pair-engine
-    ops must also show no inner join on the bucket keys (no bucket
-    self-join) and no aggregate keyed on the pair (no pair dedup).
-    The checkpoint helper is patched to identity so the lazy plan
-    stays inspectable."""
-    import re
-
-    from pdf_to_text_extraction_service_spark.operators import (
-        floodcap,
-        neardup,
-    )
-
-    for mod in (floodcap, neardup):
-        monkeypatch.setattr(mod, "_checkpoint_release",
-                            lambda out, *cached: out)
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon {i % 4}")
-         for i in range(40)],
-        "doc_id long, text string",
-    )
-    if op == "minhash":
-        out = neardup.minhash_lsh_pairs(docs, max_bucket=8)
-    elif op == "simhash":
-        out = neardup.simhash_pairs(docs, max_bucket=8)
-    elif op == "embedding":
-        from pdf_to_text_extraction_service_spark.operators.similarity import (
-            embedding_neardup_pairs,
-        )
-        vecs = spark.createDataFrame(
-            [(i, [float(i % 5), 1.0, 2.0]) for i in range(40)],
-            "vec_id long, embedding array<float>",
-        )
-        out = embedding_neardup_pairs(vecs, max_bucket=8)
-    else:
-        import __spark_entry__ as entry
-        from pdf_to_text_extraction_service_spark.functions.multimodal import (
-            dedup_image_dhash,
-        )
-        media = spark.createDataFrame(
-            [(i, entry._multimodal_payload(i)) for i in range(40)],
-            "media_id long, payload binary",
-        )
-        out = dedup_image_dhash(media, max_bucket=8)
-    try:
-        plan = out._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.catalog.clearCache()
-    assert "partial_count" in plan
-    assert "Window" not in plan and "row_number" not in plan
-    if op != "minhash":
-        def names(keys):
-            return tuple(re.sub(r"#\d+L?", "", k.strip())
-                         for k in keys.split(","))
-
-        # the only inner join is the per-id mask join: no bucket
-        # self-join; aggregates are per bucket or per id: no pair dedup
-        joins = re.findall(r"Join \[([^\]]*)\], \[[^\]]*\], Inner", plan)
-        aggs = re.findall(r"Aggregate\(keys=\[([^\]]*)\]", plan)
-        assert joins and {names(k) for k in joins} == {("_id",)}
-        assert {names(k) for k in aggs} == {("_band", "_key"), ("_id",)}
-        assert "MapInArrow" in plan
+def test_neardup_plans_have_no_bucket_window(plan_row, op):
+    """Each LSH blocker's plan shows the partial-agg flood count and no
+    Window (the r5 skew-funnel fix); the three pair-engine ops also
+    show no bucket self-join and no aggregate keyed on the pair.  The
+    operators' rows in tests/test_plan_contracts.py hold the plans."""
+    plan_row({"minhash": "minhash_lsh_pairs", "simhash": "simhash_pairs",
+              "embedding": "embedding_neardup_pairs",
+              "dhash": "dedup_image_dhash"}[op])
 
 
 def test_minhash_flood_bounded_and_exact_below_cap(spark):

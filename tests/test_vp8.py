@@ -65,8 +65,6 @@ def test_parse_dimensions_and_webp_container():
     from pdf_to_text_extraction_service_spark.kernel import imgcodec
 
     img = np.full((24, 40), 9, np.uint8)
-    payload = vp8.encode_vp8(img)
-    assert vp8.parse_dimensions(payload) == (40, 24)
     webp = vp8.encode_webp_vp8(img)
     assert imgcodec.webp_dims(webp) == ("vp8", 40, 24)
 
