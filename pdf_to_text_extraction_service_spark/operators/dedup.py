@@ -24,17 +24,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
 def dedup_latest(df: DataFrame, key: str = "url",
                  ts: str = "warc_ts",
                  tiebreak: str | None = None) -> DataFrame:
-    other = [c for c in df.columns if c != key]
-    order = F.struct(
-        *([F.col(ts)] + ([F.col(tiebreak)] if tiebreak else []))
+    # SQL strings, not one Column per field: on the 14-column extract
+    # output the Column API cost the driver ~0.4 s a call, SQL ~0.03 s
+    # (local[4]), and a resumable extract pays it once per wave
+    other = ", ".join(_quote(c) for c in df.columns if c != key)
+    order = ", ".join(_quote(c) for c in (ts, tiebreak) if c)
+    return (
+        df.groupBy(key)
+        .agg(F.expr(f"max_by(struct({other}), struct({order})) AS _r"))
+        .selectExpr(_quote(key), "_r.*")
     )
-    agged = df.groupBy(key).agg(
-        F.max_by(F.struct(*[F.col(c) for c in other]), order).alias("_r")
-    )
-    return agged.select(key, *[F.col(f"_r.{c}").alias(c) for c in other])
 
 
 def prune_duplicate_captures(pages: DataFrame, key: str = "url",

@@ -36,6 +36,13 @@ from .floodcap import _checkpoint_release
 from .salt import widen_for_python
 
 
+def _texts(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``(_id, _t)`` behind the width guard: the only relation whose
+    Exchange carries the text."""
+    return widen_for_python(docs.select(F.col(id_col).alias("_id"),
+                                        F.col(text_col).alias("_t")))
+
+
 def _windows(docs: DataFrame, n: int, id_col: str, text_col: str,
              distinct: bool, with_pos: bool) -> DataFrame:
     """``(id, [pos,] h1, h2)`` for every window occurrence, or for each
@@ -43,11 +50,9 @@ def _windows(docs: DataFrame, n: int, id_col: str, text_col: str,
     n-gram pass (decontam.ngram_rows through
     functions/textrows.map_text_rows) behind the width guard."""
     return (
-        map_text_rows(
-            widen_for_python(docs.select(F.col(id_col).alias("_id"),
-                                         F.col(text_col).alias("_t"))),
-            ngram_rows(n, distinct),
-            NGRAM_SCHEMA if with_pos else NGRAM_KEY_SCHEMA)
+        map_text_rows(_texts(docs, id_col, text_col),
+                      ngram_rows(n, distinct),
+                      NGRAM_SCHEMA if with_pos else NGRAM_KEY_SCHEMA)
         .withColumnRenamed("_id", id_col)
     )
 
@@ -127,10 +132,12 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 13,
     Scale shape: as duplicated_span_stats, the text crosses the width
     guard and only (doc_id, pos, h1, h2) scalars shuffle after it;
     removal positions roll up per doc as a sorted int array and join
-    back to the documents for one Arrow rewrite pass.  While the
-    arrays broadcast, that pass reads the text where the scan left
-    it (the remove_duplicated_spans row of
-    tests/test_plan_contracts.py); a shuffle join moves it once."""
+    back to the guarded ``(_id, _t)`` relation for one Arrow rewrite
+    pass, so that pass runs at full width too.  The removal arrays
+    broadcast to it, or (as a shuffle join) arrive already hashed on
+    the id, so the text crosses the guard Exchange once, reused by
+    both passes (the remove_duplicated_spans row of
+    tests/test_plan_contracts.py)."""
     occurrences = _windows(docs, n, id_col, text_col, distinct=False,
                            with_pos=True)
     # ONE declared aggregation per window key computes the corpus
@@ -155,7 +162,7 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 13,
     )
     removals = (
         removal_rows
-        .groupBy(id_col)
+        .groupBy(F.col(id_col).alias("_id"))
         .agg(F.sort_array(F.collect_set("pos")).alias("rm_pos"))
     )
     # the rewrite itself runs vectorized (one Arrow pass) instead of
@@ -166,9 +173,8 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 13,
     # exactly where p <= prev + n), token coverage via a diff array —
     # output row-identical (tests/test_dupspans_opt.py)
     out = (
-        docs.join(removals, id_col, "left")
-        .select(F.col(id_col).alias("_id"),
-                F.col(text_col).alias("_t"), "rm_pos")
+        _texts(docs, id_col, text_col).join(removals, "_id", "left")
+        .select("_id", "_t", "rm_pos")
         .mapInPandas(
             _rewrite_rows_fn(n),
             "_id long, text_out string, n_tokens int, n_removed int")

@@ -11,10 +11,17 @@ Because dedup is keyed on url and a url's every capture hashes to the
 same bucket, per-bucket dedup equals global dedup — so buckets are
 independently processable, committable and retryable.
 
-Buckets are processed in WAVES (one Spark job per wave). Each wave:
+Buckets are processed in WAVES, each one extraction write plus one
+manifest append:
   filter pages to its buckets → extract_pipeline → write
-  output/bucket=K dirs (idempotent overwrite) → append one manifest
-  row per bucket with row/ok counts + failure-code histogram.
+  output/bucket=K dirs (idempotent dynamic overwrite) → append one
+  manifest row per bucket of the wave, with row/ok counts + failure-
+  code histogram.
+The manifest rows are built on the driver from counts observed on
+the wave's own write (``DataFrame.observe``): nothing reads the
+output back, and a bucket the wave wrote no rows for gets its
+(0, 0, NULL) row from the same counts.  The rows reach the manifest
+as an Arrow table, which starts no Python worker.
 Resume = left-anti of bucket ids against manifest rows for the same
 source snapshot.
 
@@ -22,16 +29,20 @@ Scan-cost note for 100 TB: with plain parquet input each wave re-scans
 the source (the bucket predicate cannot prune row-groups), so waves
 trade scan passes for checkpoint granularity — pick wave_count ~4-8.
 With an Iceberg/bucketed source partitioned by ``bucket(url, B)`` the
-same predicate partition-prunes and waves are nearly free.
+same predicate partition-prunes and waves are nearly free.  Either
+way the extraction inside a wave runs on every core: the salt hashes
+on url independently of the bucket hash (operators/salt.py).
 """
 
 from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..kernel.registry import EXTRACTORS
 from ..plans.pipeline import extract_pipeline
 
 MANIFEST_SCHEMA = (
@@ -39,6 +50,10 @@ MANIFEST_SCHEMA = (
     "failure_codes map<string,long>, started_at timestamp, "
     "finished_at timestamp"
 )
+
+# Every value the extraction's ``format`` column takes: a kernel id,
+# or "unknown" when no extractor took the payload (kernel/router.py).
+FORMATS = tuple(sorted({e.kernel for e in EXTRACTORS} | {"unknown"}))
 
 
 def bucket_col(buckets: int, key: str = "url"):
@@ -99,78 +114,75 @@ def run_resumable_extract(
     for wave_idx, wave in enumerate(waves):
         started = datetime.datetime.now(datetime.timezone.utc)
         wave_pages = pages_b.filter(F.col("_bucket").isin(wave))
-        extracted = extract_pipeline(
-            wave_pages.drop("_bucket"), dedup=dedup, keep_pages_col=False
-        ).withColumn("bucket", bucket_col(buckets))
+        seen = Observation()
         (
-            extracted.write.mode("overwrite")
+            extract_pipeline(
+                wave_pages.drop("_bucket"), dedup=dedup,
+                keep_pages_col=False)
+            .withColumn("bucket", bucket_col(buckets))
+            .observe(seen, *_wave_metrics(wave))
+            .write.mode("overwrite")
             .partitionBy("bucket")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(output_path)
         )
-        # Exact per-bucket metrics from the committed output (columnar
-        # read of 3 small columns — no second extraction pass).  An
-        # all-filtered input (e.g. every page gated by --drop-noindex
-        # or --blocklist) writes NO parquet files, which makes the
-        # read-back unable to infer a schema — that is the legitimate
-        # "every bucket empty" case, not an error.
-        from pyspark.errors import AnalysisException
-
-        try:
-            out = spark.read.parquet(output_path)
-        except AnalysisException as exc:
-            # ONLY the empty-directory/no-files case is legitimate
-            # here (schema drift etc. must PROPAGATE — see
-            # completed_buckets); re-raise anything else
-            if "UNABLE_TO_INFER_SCHEMA" not in str(exc) \
-                    and "Path does not exist" not in str(exc):
-                raise
-            out = None
-        if out is not None:
-            out = out.filter(F.col("bucket").isin(wave))
-            stats = out.groupBy("bucket").agg(
-                F.count("*").alias("row_count"),
-                F.count_if(F.col("success")).alias("ok_count"),
-            )
-            failures = (
-                out.filter(~F.col("success"))
-                .groupBy("bucket", "format").count()
-                .groupBy("bucket")
-                .agg(F.map_from_entries(
-                    F.collect_list(F.struct("format", "count"))
-                ).alias("failure_codes"))
-            )
-            seen = {r["bucket"]
-                    for r in stats.select("bucket").collect()}
-        else:
-            stats = failures = None
-            seen = set()
-        finished = datetime.datetime.now(datetime.timezone.utc)
-        if stats is not None:
-            manifest_rows = (
-                stats.join(failures, "bucket", "left")
-                .select(
-                    F.lit(source_snapshot).alias("source_snapshot"),
-                    F.col("bucket"),
-                    "row_count", "ok_count", "failure_codes",
-                    F.lit(started).alias("started_at"),
-                    F.lit(finished).alias("finished_at"),
-                )
-            )
-        else:
-            manifest_rows = spark.createDataFrame([], MANIFEST_SCHEMA)
-        # Buckets with zero input rows still need a manifest row.
-        empty = [b for b in wave if b not in seen]
-        if empty:
-            empty_df = spark.createDataFrame(
-                [(source_snapshot, b, 0, 0, None, started, finished)
-                 for b in empty],
-                MANIFEST_SCHEMA,
-            )
-            manifest_rows = manifest_rows.unionByName(empty_df)
-        manifest_rows.write.mode("append").parquet(manifest_path)
+        spark.createDataFrame(
+            _manifest_table(seen.get, wave, source_snapshot, started),
+            MANIFEST_SCHEMA,
+        ).write.mode("append").parquet(manifest_path)
 
         if fail_after_waves is not None and wave_idx + 1 >= fail_after_waves:
             raise RuntimeError(
                 f"simulated failure after wave {wave_idx + 1}"
             )
+
+
+def _wave_metrics(wave: list[int]) -> list:
+    """The counts observed on a wave's write, per bucket ``b``:
+    ``rows_b``, ``ok_b``, ``failed_b`` and ``failed_b_<format>`` for
+    every format in FORMATS.  SQL strings, because the same aggregates
+    built through the Column API cost the driver ~0.45 s for an
+    8-bucket wave, against ~0.03 s."""
+    exprs = []
+    for b in wave:
+        fail = f"bucket = {b} AND NOT success"
+        exprs += [f"count_if(bucket = {b}) AS rows_{b}",
+                  f"count_if(bucket = {b} AND success) AS ok_{b}",
+                  f"count_if({fail}) AS failed_{b}"]
+        exprs += [f"count_if({fail} AND format = '{f}') AS failed_{b}_{f}"
+                  for f in FORMATS]
+    return [F.expr(e) for e in exprs]
+
+
+def _manifest_table(counts: dict, wave: list[int], source_snapshot: str,
+                    started: datetime.datetime) -> pa.Table:
+    """One MANIFEST_SCHEMA row per bucket of the wave, from the counts
+    observed on its write; ``failure_codes`` maps each format with a
+    failed row to its count, and is NULL when the bucket has none.
+    Raises if the per-format counts do not add up to the bucket's
+    failed rows (a format outside FORMATS), so no bucket commits a
+    short histogram."""
+    codes = []
+    for b in wave:
+        hist = [(f, counts[f"failed_{b}_{f}"]) for f in FORMATS
+                if counts[f"failed_{b}_{f}"]]
+        failed = counts[f"failed_{b}"]
+        if sum(n for _, n in hist) != failed:
+            raise RuntimeError(
+                f"bucket {b}: {failed} failed rows, but the formats in "
+                f"FORMATS account for {sum(n for _, n in hist)}")
+        codes.append(hist or None)
+    utc = datetime.timezone.utc
+    n = len(wave)
+    return pa.table({
+        "source_snapshot": pa.array([source_snapshot] * n, pa.string()),
+        "bucket": pa.array(wave, pa.int32()),
+        "row_count": pa.array([counts[f"rows_{b}"] for b in wave],
+                              pa.int64()),
+        "ok_count": pa.array([counts[f"ok_{b}"] for b in wave],
+                             pa.int64()),
+        "failure_codes": pa.array(codes, pa.map_(pa.string(), pa.int64())),
+        "started_at": pa.array([started] * n, pa.timestamp("us", utc)),
+        "finished_at": pa.array([datetime.datetime.now(utc)] * n,
+                                pa.timestamp("us", utc)),
+    })

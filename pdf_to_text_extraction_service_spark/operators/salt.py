@@ -1,13 +1,10 @@
 """Repartitions that set the width of Python passes.
 
-Payload-size-aware salting — SURVEY.md §4 custom work #1. Catalyst
-balances BYTES at scan time, but one 200 MiB PDF row in a partition of
-4 KiB HTML rows starves a task (the reference bounds this with
-per-extractor byte caps + page-worker semaphores; in Spark the lever
-is partitioning). ``size_tiered_repartition`` spreads rows by an
-``xxhash64(url)`` salt and puts the oversized tail on a disjoint salt
-space, so a handful of huge documents land in (mostly) dedicated
-partitions instead of straggling mixed tasks. One shuffle.
+``size_tiered_repartition`` is the payload shuffle in front of the
+extraction pass (SURVEY.md §4 custom work #1).  Catalyst balances
+BYTES at scan time, so a scan split full of large documents becomes
+one straggling task; hashing every row on its url spreads them,
+independently of where the scan put them.  One shuffle.
 
 ``widen_for_python`` is the width guard of the text operators: one
 hash Exchange on ``_id`` in front of their first Python pass, so a
@@ -20,33 +17,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def size_tiered_repartition(df: DataFrame, num_partitions: int,
-                            payload: str = "html",
-                            key: str = "url",
-                            big_bytes: int = 1 << 20,
-                            big_partitions: int | None = None) -> DataFrame:
-    """Repartition with the oversized tail spread one-per-salt.
+def size_tiered_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
+    """Hash-repartition ``df`` on ``url`` into ``num_partitions``.
 
-    Small rows salt into [0, num_partitions) (bounded salt domain →
-    bounded partitioning metadata); rows with length(payload) >=
-    big_bytes take their FULL 64-bit url hash as salt — a unique salt
-    per giant, so after the partitioner re-hashes the salt the giants
-    place i.i.d.-uniformly across partitions instead of clustering on
-    a narrow salt range. Spreading giants one-per-task is what lets
-    speculative execution / AQE see them as independent stragglers.
-    """
-    if big_partitions is None:
-        big_partitions = max(num_partitions // 4, 1)
-    big = F.length(F.col(payload)) >= F.lit(big_bytes)
-    salted = df.withColumn(
-        "_salt",
-        F.when(big, F.xxhash64(F.col(key)))
-        .otherwise(F.pmod(F.xxhash64(F.col(key)), F.lit(num_partitions))),
-    )
-    return (
-        salted.repartition(num_partitions + big_partitions, "_salt")
-        .drop("_salt")
-    )
+    The partitioner's murmur3 hash is independent of the ``xxhash64``
+    of ``manifest.bucket_col``, so the rows of one wave of url-hash
+    buckets fill every partition; a ``pmod(xxhash64(url),
+    num_partitions)`` salt would fill only ``num_partitions / buckets``
+    of them when the bucket count divides it.  Documents of any size
+    land i.i.d.-uniformly, and the key is deterministic, so a retried
+    task sees the same rows."""
+    return df.repartition(num_partitions, F.col("url"))
 
 
 def widen_for_python(df: DataFrame) -> DataFrame:

@@ -5,8 +5,11 @@ The Spark transliteration of the reference's request path (SURVEY.md
 dedup → sink. Ordering is deliberate:
 
 1. salt/repartition FIRST, while rows still carry html — this is the
-   only shuffle that moves the binary payload, and it exists to
-   decorrelate oversized documents from scan file layout;
+   only shuffle that moves the binary payload.  It hashes every row on
+   url into ``defaultParallelism`` partitions (operators/salt.py), so
+   the extraction runs on every core whatever the scan layout, and a
+   wave of url-hash buckets (operators/manifest.py) fills every
+   partition too: the salt's hash is independent of the bucket hash.
    ``salt=False`` skips it when the source layout is already uniform
    (e.g. bucketed Iceberg).  The extract is then map-only only if
    the scan has a split per core: fewer splits get one round-robin

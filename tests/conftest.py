@@ -19,6 +19,25 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)``: the Spark jobs launched while ``fn`` runs,
+    and its result."""
+    sc = spark.sparkContext
+    group = "counted-jobs"
+
+    def count(fn):
+        before = len(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setJobGroup(group, "job count")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)) - before, out
+
+    return count
+
+
 @functools.cache
 def _checkpoint_binders() -> tuple:
     """Every package module that binds ``_checkpoint_release``."""

@@ -108,32 +108,19 @@ def test_degenerate_inputs(spark, monkeypatch, path):
     assert out.collect() == []
 
 
-def _jobs(spark, fn):
-    """Spark jobs launched while ``fn`` runs, and its result."""
-    sc = spark.sparkContext
-    group = "components-jobs"
-    before = len(sc.statusTracker().getJobIdsForGroup(group))
-    sc.setJobGroup(group, "connected_components job count")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group)) - before, out
-
-
-def test_driver_finish_job_count(spark):
+def test_driver_finish_job_count(spark, spark_jobs):
     """Under the bound a call is the distinct checkpoint (its shuffle
     map stage and its result stage) plus the Arrow collect; the
     labels come back as a local relation that collects without a
     job. The reference takes over forty jobs on this graph."""
     edges = spark.createDataFrame(_graph("shapes"), "id_a long, id_b long")
-    n, rows = _jobs(spark, lambda: components.connected_components(
+    n, rows = spark_jobs(lambda: components.connected_components(
         edges).collect())
     assert len(rows) == 21
     assert n <= 3
 
 
-def test_rounds_run_no_convergence_job(spark, monkeypatch):
+def test_rounds_run_no_convergence_job(spark, monkeypatch, spark_jobs):
     """Each forced CCF round is one checkpoint action, at most three
     jobs under AQE (two shuffle map stages and the result), like the
     base checkpoint; the new-pair count rides on it through
@@ -150,6 +137,6 @@ def test_rounds_run_no_convergence_job(spark, monkeypatch):
     monkeypatch.setattr(components, "DRIVER_EDGES", -1)
     monkeypatch.setattr(components, "_ccf_round", counted)
     monkeypatch.setattr(type(edges), "count", None)  # any count() fails
-    n, _ = _jobs(spark, lambda: components.connected_components(edges))
+    n, _ = spark_jobs(lambda: components.connected_components(edges))
     assert len(rounds) > 2
     assert n <= 3 * (len(rounds) + 1)

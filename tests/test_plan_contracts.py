@@ -415,15 +415,17 @@ ROWS: dict[str, Row] = {
          "broadcast(doc_id) []": 1},
         {f"MapInPandas(_id, _t) <- {_GUARD}": 2},
         requires=("partial_count",)),
-    # the rewrite pass reads the text where the removal lists broadcast
-    # to it: from the scan, unwidened
+    # the n-gram pass and the rewrite pass both read the text behind
+    # the width guard: two identical guard Exchanges before the run,
+    # one and a ReusedExchange after it
+    # (test_span_removal_text_crosses_guard_once)
     "remove_duplicated_spans": Row(
         lambda s, t: dupspans.remove_duplicated_spans(_docs(s)),
-        {f"{_GUARD} [*_t]": 1, "hashpartitioning(h1, h2, 4) [buf]": 1,
+        {f"{_GUARD} [*_t]": 2, "hashpartitioning(h1, h2, 4) [buf]": 1,
          "hashpartitioning(doc_id, 4) [buf]": 1,
-         "broadcast(doc_id) [rm_pos]": 1},
+         "broadcast(_id) [rm_pos]": 1},
         {f"MapInPandas(_id, _t) <- {_GUARD}": 1,
-         "MapInPandas(_id, _t, rm_pos) <- UnknownPartitioning(0)": 1}),
+         f"MapInPandas(_id, _t, rm_pos) <- {_GUARD}": 1}),
     # the benchmark's n-grams broadcast; its own pass stays narrow
     "benchmark_overlap": Row(
         lambda s, t: decontam.benchmark_overlap(
@@ -506,8 +508,8 @@ ROWS: dict[str, Row] = {
         {f"{_EXTRACT}UnknownPartitioning(0)": 1}),
     "extract_pipeline": Row(
         lambda s, t: extract_pipeline(_pages(s, 3), keep_pages_col=False),
-        {"hashpartitioning(_salt, 5) [url, *html, lang]": 1, _MAX_BY: 1},
-        {f"{_EXTRACT}UnknownPartitioning(5)": 1},
+        {"hashpartitioning(url, 4) [url, *html, lang]": 1, _MAX_BY: 1},
+        {f"{_EXTRACT}hashpartitioning(url, 4)": 1},
         requires=("partial_max_by",), forbids=_NO_WINDOW),
     # a scan with fewer splits than cores is widened round-robin
     "extract_pipeline_salt_false": Row(
@@ -615,3 +617,16 @@ def test_walker_traces_text(spark):
     assert "ReusedExchange" in final.toString()
     assert plan_facts(final)["exchanges"] == \
         {"hashpartitioning(doc_id, 4) [*max]": 1}
+
+
+def test_span_removal_text_crosses_guard_once(spark, lazy_plans):
+    """Once span removal has run, its text crosses one width-guard
+    Exchange, read by both Python passes; the second guard Exchange of
+    the pre-run plan is a ReusedExchange."""
+    out = dupspans.remove_duplicated_spans(_docs(spark))
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan()
+    assert "ReusedExchange" in plan.toString()
+    carrying = {k: n for k, n in plan_facts(plan)["exchanges"].items()
+                if "*" in k}
+    assert carrying == {f"{_GUARD} [*_t]": 1}

@@ -13,7 +13,10 @@ from pdf_to_text_extraction_service_spark.operators.dedup import (
     dedup_latest,
     prune_duplicate_captures,
 )
+from pdf_to_text_extraction_service_spark.operators import manifest
 from pdf_to_text_extraction_service_spark.operators.manifest import (
+    bucket_col,
+    completed_buckets,
     run_resumable_extract,
 )
 from pdf_to_text_extraction_service_spark.operators.salt import (
@@ -127,7 +130,7 @@ def test_pipeline_canonicalize_urls(spark):
 
 
 def test_salt_preserves_rows(spark, corpus_df):
-    salted = size_tiered_repartition(corpus_df, 8, big_bytes=2000)
+    salted = size_tiered_repartition(corpus_df, 8)
     assert salted.count() == corpus_df.count()
     assert "_salt" not in salted.columns
 
@@ -141,8 +144,7 @@ def test_salt_balances_skewed_payloads(spark):
               for i in range(8)]
     df = spark.createDataFrame(giants + tiny,
                                "url string, html binary").coalesce(1)
-    salted = size_tiered_repartition(df, 8, big_bytes=100_000,
-                                     big_partitions=8)
+    salted = size_tiered_repartition(df, 8)
     per_part = salted.rdd.mapPartitions(
         lambda it: [sum(len(r["html"]) for r in it)]
     ).collect()
@@ -151,6 +153,26 @@ def test_salt_balances_skewed_payloads(spark):
     assert loads[0] <= 3 * 400_000 + 400 * 100
     # giants spread over at least 4 partitions
     assert sum(1 for x in loads if x >= 400_000) >= 4
+
+
+@pytest.mark.parametrize("buckets,wave_count,par,want", [
+    (2, 2, 4, 4), (64, 8, 32, 28),
+])
+def test_salt_fills_every_partition_of_a_wave(spark, buckets, wave_count,
+                                              par, want):
+    """The rows of one bucket wave (run_resumable_extract's waves) spread
+    over the salt's partitions: a salt that shares the bucket hash
+    fills only par / buckets of them (2 of 4; at most 4 of 32)."""
+    urls = spark.range(4096).select(
+        F.concat(F.lit("https://w.test/p"), F.col("id").cast("string"))
+        .alias("url")).withColumn("html", F.col("url").cast("binary"))
+    for i in range(wave_count):
+        wave = list(range(buckets))[i::wave_count]
+        salted = size_tiered_repartition(
+            urls.filter(bucket_col(buckets).isin(wave)), par)
+        filled = salted.select(F.spark_partition_id().alias("p")) \
+            .distinct().count()
+        assert filled >= want, (wave, filled)
 
 
 def test_null_payload_failure(spark):
@@ -237,6 +259,45 @@ def test_all_filtered_input_commits_zero_rows(spark, corpus_df, tmp_path):
             (r["bucket"], r["row_count"], r["ok_count"], r["failure_codes"])
             for r in spark.read.parquet(mf_dir).collect())
         assert rows == [(b, 0, 0, None) for b in range(4)]
+
+
+def test_wave_commits_in_one_write(spark, corpus_df, tmp_path, spark_jobs):
+    """A wave is its extraction write (two shuffle map stages and the
+    write, one job each under AQE) plus the manifest append: the
+    manifest counts ride on the write through ``observe()``, so no job
+    reads the output back or re-aggregates it."""
+    waves = 2
+    n, _ = spark_jobs(lambda: run_resumable_extract(
+        spark, corpus_df, str(tmp_path / "out"), str(tmp_path / "mf"),
+        buckets=4, wave_count=waves))
+    assert n <= 4 * waves
+    assert len(spark.read.parquet(str(tmp_path / "mf")).collect()) == 4
+
+
+def test_wave_raises_on_format_outside_histogram(spark, tmp_path,
+                                                 monkeypatch):
+    """Failure codes are counted per format in manifest.FORMATS; a
+    failed row whose format is outside that set makes the wave raise
+    before its manifest rows commit, instead of a short histogram.
+    With the full set the same wave commits."""
+    pages = spark.createDataFrame(
+        [("https://x.test/a.html", bytearray(b"<p>hi</p>")),
+         ("https://x.test/null.html", None)],   # fails as "unknown"
+        "url string, html binary",
+    ).withColumn("warc_ts", F.lit("2026-01-01").cast("timestamp"))
+    out, mf = str(tmp_path / "out"), str(tmp_path / "mf")
+    with monkeypatch.context() as m:
+        m.setattr(manifest, "FORMATS", tuple(
+            f for f in manifest.FORMATS if f != "unknown"))
+        with pytest.raises(RuntimeError, match="bucket 0: 1 failed rows"):
+            run_resumable_extract(spark, pages, out, mf,
+                                  buckets=1, wave_count=1)
+    assert completed_buckets(spark, mf, "pages-b1") == set()
+
+    run_resumable_extract(spark, pages, out, mf, buckets=1, wave_count=1)
+    rows = [(r["bucket"], r["row_count"], r["ok_count"], r["failure_codes"])
+            for r in spark.read.parquet(mf).collect()]
+    assert rows == [(0, 2, 1, {"unknown": 1})]
 
 
 def test_page_table_io_parquet_fallback(spark, corpus_df, tmp_path):

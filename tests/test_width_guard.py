@@ -19,11 +19,10 @@ ROWS = {"minhash": "minhash_lsh_pairs", "simhash": "simhash_pairs",
 
 # (guarded, unguarded) Python passes per operator: unguarded passes
 # read straight off the scan.  The decontam benchmark side is small and
-# broadcast, so its pass stays narrow; so does the span-removal rewrite
-# pass, which reads the text where the removal lists broadcast to it.
+# broadcast, so its pass stays narrow.
 @pytest.mark.parametrize("op,guarded,unguarded", [
     ("minhash", 1, 0), ("simhash", 1, 0), ("embedding", 1, 0),
-    ("remove_spans", 1, 1), ("span_stats", 2, 0), ("decontam", 1, 1),
+    ("remove_spans", 2, 0), ("span_stats", 2, 0), ("decontam", 1, 1),
 ])
 def test_first_python_pass_is_widened_on_id(spark, plan_row, op,
                                             guarded, unguarded):
