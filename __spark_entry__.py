@@ -333,7 +333,7 @@ def _q_extract_epub(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_extract_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end over Common Crawl's native container: documents →
     a gzipped WARC/1.0 segment (HTTP headers included) → binaryFile
-    + mapInPandas record parse → full extraction pipeline. The WARC
+    + mapInArrow record parse → full extraction pipeline. The WARC
     file is cached keyed by corpus fingerprint (like the IVF index)."""
     import gzip
     import hashlib
@@ -1776,7 +1776,7 @@ def _q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstructs width/height AND a polyhash digest of the 16-bin
     histogram symbolically (n_bytes via an embedded lookup, since
     PNG/JPEG sizes depend on entropy coding) — a full
-    rows+schema+hash gate over the mapInPandas decode path."""
+    rows+schema+hash gate over the mapInArrow decode path."""
     from pdf_to_text_extraction_service_spark.functions.multimodal import (
         image_features,
     )

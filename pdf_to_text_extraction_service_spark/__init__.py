@@ -9,7 +9,7 @@ Layout:
     kernel/     pure-Python extraction kernels (zero Spark imports) — the
                 byte-identical reimplementation of the reference's
                 per-format extractors, quality scorer and normalizers.
-    functions/  vectorized pandas/Arrow UDF wrappers around the kernels.
+    functions/  Arrow row passes (mapInArrow) around the kernels.
     operators/  Spark relational operators induced by the pipeline:
                 url dedup, salting, manifest/lineage + resume, near-dup
                 (minhash/simhash/jaccard), similarity search, text stats.

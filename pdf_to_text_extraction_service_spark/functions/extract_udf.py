@@ -1,12 +1,12 @@
 """Vectorized extraction UDF: the Spark-side wrapper of the kernel
 router.
 
-One ``mapInPandas`` stage = the reference's whole request path
-(download → sniff → resolve → kernel → backfill, router.go:27-93)
-applied to an Arrow batch of rows. mapInPandas (not a scalar
-pandas_udf) because the output is a wide struct-per-row and because
-iterator form lets Arrow stream bounded batches of multi-MiB binary
-payloads (SURVEY.md §2.9).
+One ``mapInArrow`` stage (functions/textrows.map_rows) = the
+reference's whole request path (download → sniff → resolve → kernel
+→ backfill, router.go:27-93) applied to an Arrow batch of rows. A map
+over batches (not a scalar UDF) because the output is a wide
+struct-per-row and because iterator form lets Arrow stream bounded
+batches of multi-MiB binary payloads (SURVEY.md §2.9).
 
 A document is atomic — the kernel loop is per-document inside the
 batch — but batching amortizes JVM↔Python Arrow transfer, which is the
@@ -26,7 +26,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 from functools import partial
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -40,8 +39,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-if TYPE_CHECKING:
-    import pandas as pd
+from .textrows import map_rows
 
 PAGE_SCHEMA = StructType([
     StructField("page_number", IntegerType()),
@@ -84,40 +82,31 @@ def _envelope(doc_fn, keep_pages: bool):
     Result into an ``EXTRACTED_SCHEMA`` row (``pages`` forced NULL
     unless ``keep_pages``)."""
 
-    def _extract_batches(batches: Iterator["pd.DataFrame"]) \
-            -> Iterator["pd.DataFrame"]:
+    def _extract_batches(batches: Iterator[dict]) -> Iterator[dict]:
         # Imports inside the worker process.
-        import pandas as pd
-
         from pdf_to_text_extraction_service_spark.kernel.router import (
             Result,
         )
 
         for batch in batches:
-            urls = batch["url"].tolist()
-            payloads = batch["html"].tolist()
-            ts, langs, cerrs = (
-                batch[c].tolist() if c in batch else [None] * len(urls)
-                for c in ("warc_ts", "lang", "coding_error"))
-
-            out: dict[str, list] = {k: [] for k in EXTRACTED_SCHEMA.names}
-            for i, url in enumerate(urls):
-                payload = payloads[i]
-                if payload is not None and not isinstance(payload, bytes):
-                    payload = bytes(payload)
-                if cerrs[i]:
+            urls = batch["url"]
+            none = [None] * len(urls)
+            out: dict[str, list] = {k: [] for k in _RESULT_FIELDS}
+            out.update(url=urls, format=[], pages=[],
+                       warc_ts=batch.get("warc_ts", none),
+                       lang=batch.get("lang", none))
+            for url, payload, cerr in zip(
+                    urls, batch["html"], batch.get("coding_error", none)):
+                if cerr:
                     # undecodable HTTP content coding (WARC reader
                     # boundary, sources/warc.py): a br/zstd/compress
                     # body must not reach extension-first routing as
                     # raw compressed bytes — failure-coded envelope,
                     # mirroring the reference's success=false philosophy
-                    res, fmt = Result(
-                        success=False, error=str(cerrs[i])), "unknown"
+                    res, fmt = Result(success=False, error=str(cerr)), \
+                        "unknown"
                 else:
                     res, fmt = doc_fn(url, payload)
-                out["url"].append(url)
-                out["warc_ts"].append(ts[i])
-                out["lang"].append(langs[i])
                 out["format"].append(fmt)
                 out["pages"].append(
                     None if res.pages is None or not keep_pages else [
@@ -128,7 +117,7 @@ def _envelope(doc_fn, keep_pages: bool):
                 )
                 for k in _RESULT_FIELDS:
                     out[k].append(getattr(res, k))
-            yield pd.DataFrame(out)
+            yield out
 
     return _extract_batches
 
@@ -147,9 +136,8 @@ def preview(pages_df: DataFrame,
                      max_pages=max_pages)
     cols = [c for c in ("url", "warc_ts", "html", "lang")
             if c in pages_df.columns]
-    return pages_df.select(*cols).mapInPandas(
-        _envelope(doc_fn, keep_pages=False), schema=EXTRACTED_SCHEMA
-    )
+    return map_rows(pages_df.select(*cols), EXTRACTED_SCHEMA,
+                    _envelope(doc_fn, keep_pages=False))
 
 
 def extract(pages_df: DataFrame) -> DataFrame:
@@ -166,7 +154,5 @@ def extract(pages_df: DataFrame) -> DataFrame:
     cols = [c for c in ("url", "warc_ts", "html", "lang",
                         "coding_error")
             if c in pages_df.columns]
-    return pages_df.select(*cols).mapInPandas(
-        _envelope(router.extract_document, keep_pages=True),
-        schema=EXTRACTED_SCHEMA
-    )
+    return map_rows(pages_df.select(*cols), EXTRACTED_SCHEMA,
+                    _envelope(router.extract_document, keep_pages=True))

@@ -1,29 +1,30 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Prompt mandate: image/audio/video as ``binary`` columns with typed
-metadata; decode / feature-extract / resize / frame-sample as Pandas
-UDFs over mapInPandas. Image decode is REAL for PNG and baseline JPEG
-via the from-spec pure-numpy codecs in kernel/imgcodec.py (no image
-libraries exist in this container), matching the reference's
-real-image ingestion path (internal/extractors/image/image.go:39-82);
-the deterministic FAKE container (``FAKEIMG``/``FAKEVID``, see
-make_fake_image) remains as the closed-form oracle-able payload kind.
+metadata; decode / feature-extract / resize / frame-sample as Arrow
+row passes (functions/textrows.map_rows). Image decode is REAL for
+PNG and baseline JPEG via the from-spec pure-numpy codecs in
+kernel/imgcodec.py (no image libraries exist in this container),
+matching the reference's real-image ingestion path
+(internal/extractors/image/image.go:39-82); the deterministic FAKE
+container (``FAKEIMG``/``FAKEVID``, see make_fake_image) remains as
+the closed-form oracle-able payload kind.
 Unsupported/malformed formats surface as ``error`` rows — never a
 task crash — exactly like the extraction router's failure envelopes.
 
 Every one-row-per-payload operator here (and
 operators/pagestats.pdf_image_ocr_stats) is a per-format kernel call
-behind ONE Python-boundary pass, :func:`map_payloads`: it owns the
-batch loop, NULL → ``b""``, the output columns and the error row, so
-the boundary format is decided in one place.  Only the one-to-many
-:func:`sample_frames` keeps its own ``mapInPandas``.
+behind ONE Python-boundary pass, :func:`map_payloads`: it owns
+NULL → ``b""``, the output columns and the error row, and passes the
+key column through as it came.  The one-to-many
+:func:`sample_frames` has its own body over the same
+``textrows.map_rows`` boundary.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Callable, Iterator
-from typing import TYPE_CHECKING
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -38,8 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-if TYPE_CHECKING:
-    import pandas as pd
+from .textrows import map_rows
 
 FAKE_IMG_MAGIC = b"FAKEIMG1"
 FAKE_VID_MAGIC = b"FAKEVID1"
@@ -49,7 +49,8 @@ def map_payloads(df: DataFrame, key_col: str, payload_col: str,
                  schema: StructType,
                  row_fn: Callable[[bytes], dict]) -> DataFrame:
     """The per-payload row pass: ``select(key, payload)`` then one
-    Arrow-batched ``mapInPandas`` hop, one output row per input row.
+    :func:`~..functions.textrows.map_rows` hop, one output row per
+    input row.
 
     ``row_fn(payload)`` gets the payload as bytes (``b""`` for NULL)
     and returns a dict; the output row is the key (under ``schema``'s
@@ -59,23 +60,18 @@ def map_payloads(df: DataFrame, key_col: str, payload_col: str,
     on failure catches its own exception inside ``row_fn``."""
     key, fields = schema.names[0], schema.names[1:]
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def _payload_rows(batch: dict) -> dict:
+        rows = []
+        for p in batch[payload_col]:
+            try:
+                rows.append(row_fn(p if p is not None else b""))
+            except Exception as exc:
+                rows.append({"error": str(exc)})
+        return {key: batch[key_col],
+                **{f: [r.get(f) for r in rows] for f in fields}}
 
-        for batch in batches:
-            out: dict[str, list] = {f: [] for f in schema.names}
-            for k, p in zip(batch[key_col].tolist(),
-                            batch[payload_col].tolist()):
-                try:
-                    row = row_fn(bytes(p) if p is not None else b"")
-                except Exception as exc:
-                    row = {"error": str(exc)}
-                out[key].append(k)
-                for f in fields:
-                    out[f].append(row.get(f))
-            yield pd.DataFrame(out)
-
-    return df.select(key_col, payload_col).mapInPandas(_run, schema=schema)
+    return map_rows(df.select(key_col, payload_col), schema,
+                    lambda batches: map(_payload_rows, batches))
 
 
 def sniff_media(p: bytes) -> str | None:
@@ -905,31 +901,24 @@ def media_features(df: DataFrame, id_col: str = "media_id",
 def sample_frames(df: DataFrame, every_n: int = 2,
                   id_col: str = "media_id",
                   payload_col: str = "payload") -> DataFrame:
-    """Frame-sample fake-video payloads: 1-to-many mapInPandas (the
+    """Frame-sample fake-video payloads: a 1-to-many row pass (the
     cardinality-changing shape a real ffmpeg sampler would have)."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def _frames(batch: dict) -> dict:
+        rows = {"media_id": [], "frame_index": [], "frame": []}
+        for mid, payload in zip(batch[id_col], batch[payload_col]):
+            if payload is None or not payload.startswith(FAKE_VID_MAGIC):
+                continue
+            frames, w, h = struct.unpack(">III", payload[8:20])
+            for fi in range(0, frames, every_n):
+                rows["media_id"].append(mid)
+                rows["frame_index"].append(fi)
+                rows["frame"].append(
+                    {"width": w, "height": h, "data_len": w * h})
+        return rows
 
-        for batch in batches:
-            rows = {"media_id": [], "frame_index": [], "frame": []}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                if not payload.startswith(FAKE_VID_MAGIC):
-                    continue
-                frames, w, h = struct.unpack(">III", payload[8:20])
-                frame_len = w * h
-                for fi in range(0, frames, every_n):
-                    rows["media_id"].append(mid)
-                    rows["frame_index"].append(fi)
-                    rows["frame"].append(
-                        {"width": w, "height": h, "data_len": frame_len}
-                    )
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=FRAME_SCHEMA
-    )
+    return map_rows(df.select(id_col, payload_col), FRAME_SCHEMA,
+                    lambda batches: map(_frames, batches))
 
 
 EXIF_SCHEMA = StructType([

@@ -15,9 +15,6 @@ that stage over Arrow batches with the byte-parity kernel
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BooleanType,
@@ -28,8 +25,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-if TYPE_CHECKING:
-    import pandas as pd
+from .textrows import map_rows
 
 OCR_RESULT_SCHEMA = StructType([
     StructField("media_id", LongType()),
@@ -42,6 +38,19 @@ OCR_RESULT_SCHEMA = StructType([
 ])
 
 
+def _result_rows(ids: list, texts: list, errors: list,
+                 method: str) -> dict:
+    """``OCR_RESULT_SCHEMA`` columns: success iff no error, counts per
+    runes.BuildCounts."""
+    from pdf_to_text_extraction_service_spark.kernel import runes
+
+    counts = [runes.build_counts(t) for t in texts]
+    return {"media_id": ids, "success": [e is None for e in errors],
+            "text": texts, "method": [method] * len(ids),
+            "word_count": [wc for wc, _ in counts],
+            "char_count": [cc for _, cc in counts], "error": errors}
+
+
 def ocr_clean_results(df: DataFrame, id_col: str = "media_id",
                       pages_col: str = "ocr_pages") -> DataFrame:
     """processOCROnly over a sidecar column of OCR page markdown
@@ -49,34 +58,16 @@ def ocr_clean_results(df: DataFrame, id_col: str = "media_id",
     garbage OCR fails explicitly rather than passing through, with
     the reference's exact error strings."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def _ocr_rows(batch: dict) -> dict:
+        from pdf_to_text_extraction_service_spark.kernel import ocrclean
 
-        from pdf_to_text_extraction_service_spark.kernel import (
-            ocrclean,
-            runes,
-        )
+        res = [ocrclean.ocr_text_from_pages(pages or [])
+               for pages in batch[pages_col]]
+        return _result_rows(batch[id_col], [t for t, _ in res],
+                            [e for _, e in res], "ocr")
 
-        for batch in batches:
-            out = {k: [] for k in ("media_id", "success", "text",
-                                   "method", "word_count", "char_count",
-                                   "error")}
-            for mid, pages in zip(batch[id_col], batch[pages_col]):
-                pages = list(pages) if pages is not None else []
-                text, err = ocrclean.ocr_text_from_pages(pages)
-                wc, cc = runes.build_counts(text)
-                out["media_id"].append(mid)
-                out["success"].append(err is None)
-                out["text"].append(text)
-                out["method"].append("ocr")
-                out["word_count"].append(wc)
-                out["char_count"].append(cc)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, pages_col).mapInPandas(
-        _run, schema=OCR_RESULT_SCHEMA
-    )
+    return map_rows(df.select(id_col, pages_col), OCR_RESULT_SCHEMA,
+                    lambda batches: map(_ocr_rows, batches))
 
 
 def transcript_results(df: DataFrame, id_col: str = "media_id",
@@ -90,42 +81,23 @@ def transcript_results(df: DataFrame, id_col: str = "media_id",
     ("groq transcription returned empty transcript",
     transcribe.go:84-87); counts are BuildCounts."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def _transcript_rows(batch: dict) -> dict:
+        from pdf_to_text_extraction_service_spark.kernel import ocrclean
 
-        from pdf_to_text_extraction_service_spark.kernel import (
-            ocrclean,
-            runes,
-        )
+        texts = []
+        for segs in batch[segments_col]:
+            segs = segs or []
+            if timestamps and segs:
+                texts.append(ocrclean.format_timestamped_transcript(
+                    [(s["start"], s["text"]) for s in segs]))
+            else:
+                texts.append(ocrclean._trim_space(
+                    " ".join(s["text"] for s in segs
+                             if s["text"] is not None)))
+        errors = [None if t else
+                  "groq transcription returned empty transcript"
+                  for t in texts]
+        return _result_rows(batch[id_col], texts, errors, "groq")
 
-        for batch in batches:
-            out = {k: [] for k in ("media_id", "success", "text",
-                                   "method", "word_count", "char_count",
-                                   "error")}
-            for mid, segs in zip(batch[id_col], batch[segments_col]):
-                segs = list(segs) if segs is not None else []
-                if timestamps and segs:
-                    text = ocrclean.format_timestamped_transcript(
-                        [(s["start"], s["text"]) for s in segs]
-                    )
-                else:
-                    text = ocrclean._trim_space(
-                        " ".join(s["text"] for s in segs
-                                 if s["text"] is not None)
-                    )
-                err = None
-                if text == "":
-                    err = "groq transcription returned empty transcript"
-                wc, cc = runes.build_counts(text)
-                out["media_id"].append(mid)
-                out["success"].append(err is None)
-                out["text"].append(text)
-                out["method"].append("groq")
-                out["word_count"].append(wc)
-                out["char_count"].append(cc)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, segments_col).mapInPandas(
-        _run, schema=OCR_RESULT_SCHEMA
-    )
+    return map_rows(df.select(id_col, segments_col), OCR_RESULT_SCHEMA,
+                    lambda batches: map(_transcript_rows, batches))

@@ -18,7 +18,7 @@ Decode-bomb posture mirrors the image kernels: total decoded cells
 are capped by audiocodec.MAX_SAMPLES, per-frame block sizes by the
 format's own 65535 ceiling, and every malformed input raises
 ValueError (the public entry is wrapped `_never_raises`-style by the
-mapInPandas operators that call it).
+mapInArrow operators that call it).
 
 The encoder half exists for fixtures/tests only: it emits CONSTANT /
 VERBATIM / FIXED-order subframes with correct Rice residuals and all

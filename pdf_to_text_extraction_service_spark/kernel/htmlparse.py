@@ -11,7 +11,7 @@ decoding. Output tree shape is equivalent for the purposes of
 ``html_strip`` (same pruning set, same document-order text nodes).
 
 Performance note: this parser runs per document inside the extraction
-pandas UDF — it is regex-tokenized and allocation-light on purpose.
+Arrow pass — it is regex-tokenized and allocation-light on purpose.
 """
 
 from __future__ import annotations

@@ -3,7 +3,7 @@ backfill.
 
 Kernel-side port of reference internal/extract/router.go:27-93. One
 call = one input row; the Spark layer batches calls inside a
-mapInPandas UDF (functions/extract_udf.py). Kernels must never raise
+mapInArrow pass (functions/extract_udf.py). Kernels must never raise
 on malformed documents — exceptions become ``success=false`` rows,
 mirroring the reference's withRecovery guard (cmd/server/main.go:539-549).
 

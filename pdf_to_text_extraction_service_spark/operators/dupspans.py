@@ -26,11 +26,11 @@ collision (≈1e-38 per pair) would fail the gate rather than hide.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
-from ..functions.textrows import map_text_rows
+from ..functions.textrows import map_rows, map_text_rows
 from .decontam import NGRAM_KEY_SCHEMA, NGRAM_SCHEMA, ngram_rows
 from .floodcap import _checkpoint_release
 from .salt import widen_for_python
@@ -172,22 +172,23 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 13,
     # the same fold (fixed width n over ascending positions merges
     # exactly where p <= prev + n), token coverage via a diff array —
     # output row-identical (tests/test_dupspans_opt.py)
-    out = (
+    rewrite = _rewrite_rows_fn(n)
+    out = map_rows(
         _texts(docs, id_col, text_col).join(removals, "_id", "left")
-        .select("_id", "_t", "rm_pos")
-        .mapInPandas(
-            _rewrite_rows_fn(n),
-            "_id long, text_out string, n_tokens int, n_removed int")
-        .withColumnRenamed("_id", id_col)
-    )
+        .select("_id", "_t", "rm_pos"),
+        DataType.fromDDL(
+            "_id long, text_out string, n_tokens int, n_removed int"),
+        lambda batches: map(rewrite, batches),
+    ).withColumnRenamed("_id", id_col)
     # occurrences has a single consumer (the grouped pass), so no
     # persist is needed; the checkpoint bounds the result
     return _checkpoint_release(out)
 
 
 def _rewrite_rows_fn(n: int):
-    """mapInPandas body for remove_duplicated_spans' rewrite phase:
-    (id, text, rm_pos) -> (id, text_out, n_tokens, n_removed).
+    """Row body for remove_duplicated_spans' rewrite phase (one
+    functions/textrows.map_rows pass): (id, text, rm_pos) -> (id,
+    text_out, n_tokens, n_removed).
 
     Replicates the old SQL exactly: merge [p, p+n) intervals over the
     ascending rm_pos (with fixed width and sorted starts the fold's
@@ -195,45 +196,40 @@ def _rewrite_rows_fn(n: int):
     ``p > prev + n``), drop covered tokens, join with single spaces;
     rm_pos NULL -> text unchanged, n_removed 0; NULL text -> NULL
     text_out/n_tokens (size(NULL)), n_removed 0."""
-    def fn(it):
-        for pdf in it:
-            out_t, out_nt, out_nr = [], [], []
-            for t, rm in zip(pdf["_t"], pdf["rm_pos"]):
-                if t is None:
-                    out_t.append(None)
-                    out_nt.append(None)
-                    out_nr.append(0)
-                    continue
-                toks = t.split(" ")
-                if rm is None:
-                    out_t.append(t)
-                    out_nt.append(len(toks))
-                    out_nr.append(0)
-                    continue
-                if len(rm) == 0:     # non-null empty: old path still
-                    out_t.append(" ".join(toks))   # rejoined tokens
-                    out_nt.append(len(toks))
-                    out_nr.append(0)
-                    continue
-                p = np.asarray(rm, dtype=np.int64)
-                brk = np.nonzero(p[1:] > p[:-1] + n)[0] + 1
-                gs = np.concatenate(([0], brk))
-                ge = np.concatenate((brk, [len(p)])) - 1
-                starts = p[gs]
-                ends = p[ge] + n
-                cov = np.zeros(len(toks) + 1, dtype=np.int32)
-                np.add.at(cov, starts, 1)
-                np.add.at(cov, ends, -1)
-                mask = np.cumsum(cov[:-1]) > 0
-                out_t.append(" ".join(
-                    tok for tok, m in zip(toks, mask) if not m))
+    def fn(batch: dict) -> dict:
+        out_t, out_nt, out_nr = [], [], []
+        for t, rm in zip(batch["_t"], batch["rm_pos"]):
+            if t is None:
+                out_t.append(None)
+                out_nt.append(None)
+                out_nr.append(0)
+                continue
+            toks = t.split(" ")
+            if rm is None:
+                out_t.append(t)
                 out_nt.append(len(toks))
-                out_nr.append(int((ends - starts).sum()))
-            yield pd.DataFrame({
-                "_id": pdf["_id"],
-                "text_out": out_t,
-                "n_tokens": pd.array(out_nt, dtype="Int32"),
-                "n_removed": pd.array(out_nr, dtype="Int32"),
-            })
+                out_nr.append(0)
+                continue
+            if len(rm) == 0:     # non-null empty: old path still
+                out_t.append(" ".join(toks))   # rejoined tokens
+                out_nt.append(len(toks))
+                out_nr.append(0)
+                continue
+            p = np.asarray(rm, dtype=np.int64)
+            brk = np.nonzero(p[1:] > p[:-1] + n)[0] + 1
+            gs = np.concatenate(([0], brk))
+            ge = np.concatenate((brk, [len(p)])) - 1
+            starts = p[gs]
+            ends = p[ge] + n
+            cov = np.zeros(len(toks) + 1, dtype=np.int32)
+            np.add.at(cov, starts, 1)
+            np.add.at(cov, ends, -1)
+            mask = np.cumsum(cov[:-1]) > 0
+            out_t.append(" ".join(
+                tok for tok, m in zip(toks, mask) if not m))
+            out_nt.append(len(toks))
+            out_nr.append(int((ends - starts).sum()))
+        return {"_id": batch["_id"], "text_out": out_t,
+                "n_tokens": out_nt, "n_removed": out_nr}
 
     return fn

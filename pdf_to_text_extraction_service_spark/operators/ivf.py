@@ -25,7 +25,6 @@ DuckDB/numpy oracle mirror the index exactly
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -57,31 +56,25 @@ def _argmin_dist2(mat, cents):
 
 def assign_clusters_pd(df: DataFrame, centroids: list[list[float]],
                        vec_col: str = "embedding") -> DataFrame:
-    """Vectorized nearest-centroid assignment (Arrow pandas_udf): one
+    """Vectorized nearest-centroid assignment (scalar ``arrow_udf``): one
     numpy pass per batch, bit-identical to the JVM struct-argmin
     ``assign_clusters`` in tests/reference/ivf.py (same left-fold
     squared distance per `_argmin_dist2`, ties to the lowest
     cluster, Spark's NaN ordering) on every non-NULL vector.  A NULL
     vector gets cluster NULL (the JVM expression gives it 0)."""
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     cents = np.asarray(centroids, dtype=np.float64)
 
-    @pandas_udf("int")
-    def _assign(vs: pd.Series) -> pd.Series:
-        vals = vs.to_numpy()
-        mask = np.array([v is not None for v in vals])
-        if not mask.any():
-            return pd.Series([None] * len(vals))
-        mat = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in vals[mask]],
-            dtype=np.float64)
-        assign = _argmin_dist2(mat, cents)
-        if mask.all():
-            return pd.Series(assign.astype(np.int32))
-        out = np.full(len(vals), None, dtype=object)
-        out[mask] = [int(a) for a in assign]
-        return pd.Series(out)
+    @arrow_udf("int")
+    def _assign(vs: pa.Array) -> pa.Array:
+        out = vs.to_pylist()
+        rows = [i for i, v in enumerate(out) if v is not None]
+        if rows:
+            mat = np.asarray([out[i] for i in rows], dtype=np.float64)
+            for i, a in zip(rows, _argmin_dist2(mat, cents).tolist()):
+                out[i] = a
+        return pa.array(out, type=pa.int32())
 
     return df.withColumn("cluster", _assign(F.col(vec_col)))
 
@@ -128,7 +121,7 @@ def train_kmeans(df: DataFrame, k: int = 16, iters: int = 5,
     - per-cluster block-sum folds (blk ascending) run in
       applyInArrow, k rows come back to the driver per iteration.
       Both passes are Arrow in and out, so a NaN component stays NaN
-      (a pandas boundary would turn it into NULL).
+      (as in every Python pass of the package).
 
     NULL vectors take no part in training.  Ids are assumed unique
     (the callers' contract: vec_id keys / xxhash64-deduped doc ids);
@@ -150,7 +143,7 @@ def train_kmeans(df: DataFrame, k: int = 16, iters: int = 5,
     # members by vid — unique — so every block row carries its
     # members in fold order).  A physical repartition by _blk is NOT
     # a co-location contract: AQE can rewrite the shuffle read to
-    # local mode under MapInPandas (observed on the SimHash bucket
+    # local mode under a Python map node (observed on the SimHash bucket
     # pass — see floodcap.block_verify_pairs), which would
     # split id-blocks across tasks and break the bit-deterministic
     # fold.  The aggregation makes each block row self-contained.

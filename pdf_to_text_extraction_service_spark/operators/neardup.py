@@ -26,7 +26,7 @@ Scale notes per operator:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
@@ -381,8 +381,8 @@ SIM_MIX = (
 
 
 def simhash64_text_udf():
-    """Whole-signature SimHash from the raw TEXT column in one Arrow
-    pandas_udf — bit-identical to the JVM ``simhash64`` expression in
+    """Whole-signature SimHash from the raw TEXT column in one scalar
+    ``arrow_udf`` — bit-identical to the JVM ``simhash64`` expression in
     tests/reference/neardup.py (pinned by
     tests/test_training_ops.py::test_simhash_udf_matches_jvm_signatures)
     except on NULL text, with the per-character rolling hashes
@@ -405,7 +405,7 @@ def simhash64_text_udf():
     - NULL text -> -1 (every bit set), where the JVM expression
       gives NULL.
     """
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     bases = np.array([m[0] for m in SIM_MIX], dtype=np.int64)[:, None]
     mults = np.array([m[1] for m in SIM_MIX], dtype=np.int64)[:, None]
@@ -415,11 +415,11 @@ def simhash64_text_udf():
     sh = bits % 31
     weights = (np.uint64(1) << bits.astype(np.uint64))
 
-    @pandas_udf("bigint")
-    def _sig(texts: pd.Series) -> pd.Series:
+    @arrow_udf("bigint")
+    def _sig(texts: pa.Array) -> pa.Array:
         out = np.empty(len(texts), dtype=np.int64)
         cps, tok_lens, row_ntok = [], [], []
-        for r, t in enumerate(texts):
+        for r, t in enumerate(texts.to_pylist()):
             if t is None:
                 row_ntok.append(-1)   # sentinel: null text
                 continue
@@ -471,7 +471,7 @@ def simhash64_text_udf():
             ri += 1
             sig = (weights[c >= 0]).sum(dtype=np.uint64)
             out[r] = np.int64(sig.astype(np.int64))
-        return pd.Series(out)
+        return pa.array(out)
 
     return _sig
 

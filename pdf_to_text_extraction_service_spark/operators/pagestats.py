@@ -62,7 +62,7 @@ def pdf_image_ocr_stats(pages_df: DataFrame,
 
     Scale shape: one per-payload row pass
     (functions/multimodal.map_payloads, the same Arrow-batched
-    ``mapInPandas`` budget as extract()); only the two input columns
+    ``mapInArrow`` budget as extract()); only the two input columns
     reach the Python worker and only eight scalar columns come back —
     map-only, no shuffle.  A document that fails to parse is a zero
     row, never an error."""

@@ -14,7 +14,7 @@ Both are pure JVM expressions:
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -94,15 +94,16 @@ def normalize_nfc(df: DataFrame, text_col: str = "text",
     """Unicode NFC normalization — the standard pre-dedup cleaning
     stage (combining sequences → composed forms, so 'cafe'+U+0301 and
     'café' hash identically downstream). Spark has no built-in
-    normalizer, so this is an Arrow-batched pandas UDF over
+    normalizer, so this is a scalar ``arrow_udf`` over
     unicodedata.normalize; DuckDB's nfc_normalize mirrors it (both
     implement UAX #15)."""
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    @pandas_udf("string")
-    def _nfc(s: pd.Series) -> pd.Series:
+    @arrow_udf("string")
+    def _nfc(s: pa.Array) -> pa.Array:
         import unicodedata
-        return s.map(lambda t: unicodedata.normalize("NFC", t)
-                     if t is not None else None)
+        return pa.array([unicodedata.normalize("NFC", t)
+                         if t is not None else None
+                         for t in s.to_pylist()], type=pa.string())
 
     return df.withColumn(out_col, _nfc(F.col(text_col)))

@@ -24,7 +24,7 @@ bit-identical results, pinned by tests/test_semdedup_opt.py parity):
 - a flooded cluster (boilerplate embeddings all at one point) is
   capped by the partial-agg flood sampler (operators/floodcap.py),
   never a rank window; clusters at or under the cap are EXACT;
-- the within-cluster prune is ONE applyInPandas group per cluster
+- the within-cluster prune is ONE applyInArrow group per cluster
   instead of a cluster self-join exploding ~m^2/2 candidate rows
   through interpreted per-pair lambdas: a float32 GEMM prefilter
   with a proven error margin nominates candidate pairs, and only
@@ -40,9 +40,10 @@ the lowest-id qualifying cluster-mate (deterministic witness).
 
 Rows whose cosine evaluates NaN (zero-norm embeddings) follow
 Spark/DuckDB NaN ordering (NaN >= threshold is TRUE) and are emitted
-with a NULL cosine (NaN crosses the Arrow boundary as pandas NA); the
-previous ANSI-mode SQL division simply errored on such rows, so this
-is strictly more tolerant.
+with a NaN cosine, as operators/similarity.embedding_neardup_pairs
+emits them (both passes are Arrow in and out); the previous
+ANSI-mode SQL division simply errored on such rows, so this is
+strictly more tolerant.
 """
 
 from __future__ import annotations
@@ -69,41 +70,35 @@ def _spark_round6(x: float) -> float:
 
 
 def _cluster_prune_fn(threshold: float, id_col: str):
-    """applyInPandas body: per-cluster pairwise cosine prune.
+    """applyInArrow body: per-cluster pairwise cosine prune.
 
     Output bit-identical to the previous SQL self-join: the pairs are
     similarity.cosine_verify's (float32 GEMM prefilter, exact float64
     fold; NaN qualifies); witness = lowest qualifying lower id; round
     replicates Spark HALF_UP."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     verify = cosine_verify(threshold)
+    schema = pa.schema([(id_col, pa.int64()), ("kept_id", pa.int64()),
+                        ("cosine", pa.float64())])
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({id_col: pd.array([], dtype="int64"),
-                              "kept_id": pd.array([], dtype="int64"),
-                              "cosine": pd.array([], dtype="float64")})
-        if len(pdf) < 2:
-            return empty
-        ids_raw = pdf["_id"].to_numpy(np.int64)
-        order = np.argsort(ids_raw, kind="stable")
-        ids = ids_raw[order]
-        mat = np.asarray(
-            [np.asarray(v, dtype=np.float64)
-             for v in pdf["_v"].to_numpy()[order]], dtype=np.float64)
+    def fn(table: pa.Table) -> pa.Table:
+        if table.num_rows < 2:
+            return schema.empty_table()
+        ids = table.column("_id").to_numpy()
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        mat = np.asarray(table.column("_v").to_pylist(),
+                         dtype=np.float64)[order]
         ii, jj, cc = verify({"_v": mat})
-        if len(ii) == 0:
-            return empty
         srt = np.lexsort((ii, jj))
         ii, jj, cc = ii[srt], jj[srt], cc[srt]
         ju, first = np.unique(jj, return_index=True)
         cosv = np.fromiter(
             (_spark_round6(float(c)) for c in cc[first]),
             dtype=np.float64, count=len(first))
-        return pd.DataFrame({id_col: ids[ju],
-                             "kept_id": ids[ii[first]],
-                             "cosine": cosv})
+        return pa.table([ids[ju], ids[ii[first]], cosv], schema=schema)
 
     return fn
 
@@ -133,7 +128,7 @@ def semantic_dedup(df: DataFrame, k: int = 8, iters: int = 3,
 
     capped = cap_flooded_buckets(assigned, ["cluster"], "_id",
                                  max_cluster)
-    out = capped.groupBy("cluster").applyInPandas(
+    out = capped.groupBy("cluster").applyInArrow(
         _cluster_prune_fn(threshold, id_col),
         f"{id_col} long, kept_id long, cosine double",
     )

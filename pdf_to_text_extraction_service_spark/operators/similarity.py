@@ -19,7 +19,7 @@ iterative state, so it is the round-1 scale path.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -116,18 +116,17 @@ def hyperplane_buckets_pd(all_planes: list[list[list[float]]]):
     double (a NaN dot sets the bit), so every bucket bit matches the
     interpreted JVM expression (pinned by
     tests/test_similarity_opt.py)."""
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     mats = [np.asarray(p, dtype=np.float64) for p in all_planes]
 
-    @pandas_udf("array<int>")
-    def _bkts(vs: pd.Series) -> pd.Series:
-        vals = vs.to_numpy()
-        mask = np.array([v is not None for v in vals])
-        if not mask.any():
-            return pd.Series([None] * len(vals))
-        mat = np.asarray([np.asarray(v, dtype=np.float64)
-                          for v in vals[mask]], dtype=np.float64)
+    @arrow_udf("array<int>")
+    def _bkts(vs: pa.Array) -> pa.Array:
+        out = vs.to_pylist()
+        rows = [i for i, v in enumerate(out) if v is not None]
+        if not rows:
+            return pa.array(out, type=pa.list_(pa.int32()))
+        mat = np.asarray([out[i] for i in rows], dtype=np.float64)
         per_table = []
         for planes in mats:
             bits_val = np.zeros(mat.shape[0], dtype=np.int32)
@@ -141,11 +140,9 @@ def hyperplane_buckets_pd(all_planes: list[list[list[float]]]):
                                      np.int32(1 << i), np.int32(0))
             per_table.append(bits_val)
         stacked = np.stack(per_table, axis=1)   # (rows, tables)
-        if mask.all():
-            return pd.Series(list(stacked))
-        out = np.full(len(vals), None, dtype=object)
-        out[mask] = list(stacked)
-        return pd.Series(out)
+        for i, b in zip(rows, stacked.tolist()):
+            out[i] = b
+        return pa.array(out, type=pa.list_(pa.int32()))
 
     return _bkts
 

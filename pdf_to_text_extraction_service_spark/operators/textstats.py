@@ -11,8 +11,8 @@ a SQL oracle).
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING
-
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -25,11 +25,6 @@ from pyspark.sql.types import (
 )
 
 from ..functions.textrows import map_text_rows
-
-if TYPE_CHECKING:
-    import pandas as pd
-else:  # runtime: pandas_udf type-hint resolution needs pd in
-    import pandas as pd  # module globals (PEP 563 annotations)
 
 # Tiny per-language stopword anchors for the n-gram/stopword heuristic.
 STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -63,7 +58,7 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     bit-identical to ``lang_id_jvm`` in tests/reference/textstats.py
     (integer counts, same first-language tie rule, NULL text ->
     'und'); parity pinned by tests/test_textstats_opt.py."""
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     langs = sorted(STOPWORDS)
     lookup: dict[str, list[int]] = {}
@@ -71,11 +66,11 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
         for w in STOPWORDS[lg]:
             lookup.setdefault(w, []).append(i)
 
-    @pandas_udf("string")
-    def _guess(texts: pd.Series) -> pd.Series:
+    @arrow_udf("string")
+    def _guess(texts: pa.Array) -> pa.Array:
         out = []
         nl = len(langs)
-        for t in texts:
+        for t in texts.to_pylist():
             if t is None:
                 out.append("und")
                 continue
@@ -87,7 +82,7 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
                         counts[i] += 1
             m = max(counts)
             out.append(langs[counts.index(m)] if m > 0 else "und")
-        return pd.Series(out)
+        return pa.array(out, type=pa.string())
 
     return df.withColumn("lang_guess", _guess(F.col(text_col)))
 
@@ -111,7 +106,7 @@ def polyhash(expr: str):
 
 
 def fingerprint_udf(n: int = 4):
-    """Vectorized fingerprint: one Arrow-batched pandas_udf, numpy
+    """Vectorized fingerprint: one scalar ``arrow_udf``, numpy
     column-wise prefix-hash fold (same pattern as
     neardup.simhash64_text_udf). Bit-identical to the JVM HOF fold
     ``doc_fingerprint_jvm`` in tests/reference/textstats.py:
@@ -127,17 +122,15 @@ def fingerprint_udf(n: int = 4):
       numpy steps per batch instead of rows x chars interpreted ops;
     - products stay under 2^63: both factors < p ~ 1e9.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    @pandas_udf("bigint")
-    def _fp(texts: pd.Series) -> pd.Series:
+    @arrow_udf("bigint")
+    def _fp(texts: pa.Array) -> pa.Array:
         rows = [
             None if s is None else
             np.frombuffer(s.encode("utf-32-le"), np.uint32)
             .astype(np.int64)
-            for s in texts
+            for s in texts.to_pylist()
         ]
         lens = [0 if r is None else len(r) for r in rows]
         maxlen = max(lens, default=0)
@@ -175,7 +168,7 @@ def fingerprint_udf(n: int = 4):
             ge = ends[np.minimum(np.arange(g) + n - 1, k - 1)]
             vals = (h[i, ge] - h[i, gs] * pow31[ge - gs]) % FP_MOD
             out.append(int(vals.min()))
-        return pd.Series(out, dtype="object")
+        return pa.array(out, type=pa.int64())
 
     return _fp
 

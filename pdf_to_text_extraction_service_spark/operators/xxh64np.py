@@ -7,7 +7,7 @@ sets are built on them), but computing them row-by-row through the
 interpreted ``transform(...)`` lambda — after building every shingle
 string with ``array_join(slice(...))`` — was the dominant cost of
 ``dedup_minhash_lsh``.  This module implements XXH64 as a handful of
-masked numpy passes over a padded byte matrix so a pandas UDF can
+masked numpy passes over a padded byte matrix so an Arrow pass can
 hash an entire Arrow batch of shingles at once (guide §4.2).
 
 The algorithm follows the public xxHash specification (XXH64, Yann

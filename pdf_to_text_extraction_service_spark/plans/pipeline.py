@@ -1,7 +1,7 @@
 """End-to-end extraction plan assembly.
 
 The Spark transliteration of the reference's request path (SURVEY.md
-§3.1): scan → salt repartition → mapInPandas(extract kernel) → url
+§3.1): scan → salt repartition → mapInArrow(extract kernel) → url
 dedup → sink. Ordering is deliberate:
 
 1. salt/repartition FIRST, while rows still carry html — this is the

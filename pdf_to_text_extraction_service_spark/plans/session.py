@@ -68,7 +68,7 @@ def tune_arrow_batch(spark: SparkSession, pages, target_mb: int = 4,
 
     The 4 MB default is deliberate: paired scaling runs showed 32 MB
     batches cost ~8% scaling efficiency at 4x parallelism (8 workers
-    x large concurrent Arrow/pandas footprints contend on memory
+    x large concurrent Arrow batch footprints contend on memory
     bandwidth that 2 workers do not), while 4 MB keeps the per-batch
     Python overhead amortized for thin pages without that pressure."""
     from pyspark.sql import functions as F

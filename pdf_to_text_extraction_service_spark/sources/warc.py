@@ -15,9 +15,9 @@ capped at the router's 500 MiB payload gate.  Brotli bodies stay
 raw (no brotli codec in this environment — documented boundary).
 
 Spark integration: ``read_warc_pages`` loads whole files via the
-binaryFile source and parses records inside ``mapInPandas`` — one
-file = one row in, N pages out (cardinality-changing, like the frame
-sampler). At 100 TB, CC segment files are ~1 GiB each and the
+binaryFile source and parses records inside one Arrow row pass
+(functions/textrows.map_rows) — one file = one row in, N pages out
+(cardinality-changing, like the frame sampler). At 100 TB, CC segment files are ~1 GiB each and the
 per-file atomicity matches how Common Crawl distributes them; the
 post-parse repartition/salt stage (plans/pipeline.py) decouples
 extraction parallelism from file count.
@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import datetime
 from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -38,8 +37,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-if TYPE_CHECKING:
-    import pandas as pd
+from ..functions.textrows import map_rows
 
 _CRLF = b"\r\n"
 
@@ -283,45 +281,32 @@ def _parse_ts(ts: str) -> datetime.datetime | None:
         return None
 
 
-def _warc_records_fn():
-    """mapInPandas record parser shared by the batch and streaming
-    WARC readers (one file in, N page rows out)."""
+def _warc_records(batch: dict) -> dict:
+    """Record parser shared by the batch and streaming WARC readers:
+    one ``(path, content)`` file row in, N page rows out."""
+    import gzip
+    import zlib
 
-    def _records(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import gzip
-        import zlib
-
-        import pandas as pd
-
-        for batch in batches:
-            rows: dict[str, list] = {"url": [], "warc_ts": [],
-                                     "html": [], "coding_error": []}
-            for path, content in zip(batch["path"], batch["content"]):
-                data = bytes(content)
-                if str(path).endswith(".gz") or data[:2] == b"\x1f\x8b":
-                    # CC ships .warc.gz with one gzip MEMBER per
-                    # record; gzip.decompress handles the
-                    # concatenated-members stream.
-                    try:
-                        data = gzip.decompress(data)
-                    except (OSError, EOFError, zlib.error):
-                        # truncated upload raises EOFError, corrupt
-                        # deflate zlib.error — neither is an OSError;
-                        # either way skip the segment, never poison
-                        # the stream checkpoint with a crashing file
-                        continue
-                for url, ts, payload, cerr in parse_warc_records(data):
-                    rows["url"].append(url)
-                    rows["warc_ts"].append(_parse_ts(ts))
-                    rows["html"].append(payload)
-                    rows["coding_error"].append(cerr)
-            if rows["url"]:
-                # never yield an empty frame: pandas types empty
-                # columns float64 and Arrow cannot cast that to
-                # timestamp (all-corrupt batches hit this)
-                yield pd.DataFrame(rows)
-
-    return _records
+    rows: dict[str, list] = {"url": [], "warc_ts": [], "html": [],
+                             "coding_error": []}
+    for path, data in zip(batch["path"], batch["content"]):
+        if path.endswith(".gz") or data[:2] == b"\x1f\x8b":
+            # CC ships .warc.gz with one gzip MEMBER per record;
+            # gzip.decompress handles the concatenated-members stream.
+            try:
+                data = gzip.decompress(data)
+            except (OSError, EOFError, zlib.error):
+                # truncated upload raises EOFError, corrupt deflate
+                # zlib.error — neither is an OSError; either way skip
+                # the segment, never poison the stream checkpoint with
+                # a crashing file
+                continue
+        for url, ts, payload, cerr in parse_warc_records(data):
+            rows["url"].append(url)
+            rows["warc_ts"].append(_parse_ts(ts))
+            rows["html"].append(payload)
+            rows["coding_error"].append(cerr)
+    return rows
 
 
 def read_warc_pages(spark: SparkSession, path_glob: str) -> DataFrame:
@@ -331,8 +316,8 @@ def read_warc_pages(spark: SparkSession, path_glob: str) -> DataFrame:
 
 
 def _parse_files(files: DataFrame) -> DataFrame:
-    return files.select("path", "content").mapInPandas(
-        _warc_records_fn(), schema=PAGES_SCHEMA)
+    return map_rows(files.select("path", "content"), PAGES_SCHEMA,
+                    lambda batches: map(_warc_records, batches))
 
 
 def read_warc_pages_stream(spark: SparkSession, path: str) -> DataFrame:

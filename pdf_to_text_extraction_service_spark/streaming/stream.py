@@ -1,6 +1,6 @@
 """Structured Streaming variant of the extraction pipeline.
 
-``readStream`` over a pages directory → the SAME mapInPandas
+``readStream`` over a pages directory → the SAME mapInArrow
 extraction stage as the batch plan (the kernel UDF is
 engine-agnostic) → watermarked url dedup → parquet sink with
 checkpointing.

@@ -109,8 +109,9 @@ def test_text_chunks_close_at_row_and_char_bounds():
     """The rebatch loop closes a chunk at the first batch that brings
     it to CHUNK_ROWS rows (short texts) or CHUNK_CHARS characters
     (long texts; NULL counts zero), keeps the tail, and hands on every
-    row exactly once, in order."""
-    import pandas as pd
+    row exactly once, in order.  It reads Arrow batches as map_rows
+    hands them on: one column dict per ``RecordBatch``."""
+    import pyarrow as pa
 
     from pdf_to_text_extraction_service_spark.functions.textrows import (
         CHUNK_CHARS,
@@ -121,8 +122,9 @@ def test_text_chunks_close_at_row_and_char_bounds():
     def batches(texts, size):
         for s in range(0, len(texts), size):
             part = texts[s:s + size]
-            yield pd.DataFrame({"_id": range(s, s + len(part)),
-                                "_t": part})
+            yield pa.RecordBatch.from_pydict(
+                {"_id": pa.array(range(s, s + len(part)), pa.int64()),
+                 "_t": pa.array(part, pa.string())}).to_pydict()
 
     big = "x" * (CHUNK_CHARS // 4 + 1)
     for texts, size, sizes in [

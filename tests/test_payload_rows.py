@@ -203,3 +203,28 @@ def test_truncated_fakeimg_is_error_row(spark):
                 if k not in ("media_id", "error") and v is not None}
         assert kept == ({"n_bytes": len(short)}
                         if op is mm.image_features else {}), op.__name__
+
+
+def test_int64_fields_exact_beside_error_rows(spark):
+    """A 64-bit hash keeps every bit when error rows (NULL hash) share
+    its Arrow batch: the boundary never routes an int64 column
+    through float64."""
+    import __spark_entry__ as entry
+
+    payloads = [entry._multimodal_payload(i) for i in range(12)]
+    want = {}
+    for i, p in enumerate(payloads):
+        try:
+            h = imgcodec.dhash64(mm._decode_gray(p)[2])
+        except ValueError:
+            continue
+        want[i] = h - (1 << 64) if h >= 1 << 63 else h
+    assert any(h % 1024 for h in want.values())   # not float-exact
+    df = spark.createDataFrame(
+        [(i, bytearray(p)) for i, p in enumerate(payloads)]
+        + [(99, bytearray(GARBAGE))],
+        "media_id long, payload binary").coalesce(1)
+    got = {r["media_id"]: r["dhash"] for r in mm.image_dhash(df).collect()}
+    assert got[99] is None
+    assert {i: got[i] for i in want} == want
+

@@ -15,7 +15,8 @@ plan and the row pins:
   its string/binary fields in braces); a ``*`` marks one that carries
   the row's ``seed`` leaf column or a value the JVM derived from it.
 - ``python``: every Python node, counted, as ``"<node>(<inputs>) <-
-  <partitioning of its input>"``.
+  <partitioning of its input>"``; a scalar UDF node carries its
+  PythonEvalType, ``ArrowEvalPython[250]`` for an ``arrow_udf``.
 - ``requires`` / ``forbids``: fragments that must / must not appear in
   the plan text (expression ids stripped).
 
@@ -173,7 +174,10 @@ def plan_facts(plan, seed: str = "text") -> dict:
             if name.endswith("EvalPythonExec"):
                 inputs = sorted({a.name() for u in _seq(node.udfs())
                                  for a in _seq(u.references().toSeq())})
-            python[f"{name[:-len('Exec')]}({', '.join(inputs)}) <- "
+            node_name = name[:-len('Exec')]
+            if name == "ArrowEvalPythonExec":
+                node_name += f"[{node.evalType()}]"
+            python[f"{node_name}({', '.join(inputs)}) <- "
                    f"{_partitioning(kids[0])}"] += 1
         elif name == "ProjectExec":
             ids.update(e.exprId().id() for e in _seq(node.projectList())
@@ -208,15 +212,22 @@ class Row:
     seed: str = "text"
 
 
-def check_row(spark, name: str, tmp, facts: dict) -> dict:
-    """Assert ``ROWS[name]`` against its operator's plan and return the
-    plan's facts, read once into ``facts`` (keyed by row name)."""
-    row = ROWS[name]
+def row_facts(spark, name: str, tmp, facts: dict) -> dict:
+    """The facts of ``ROWS[name]``'s plan, read once into ``facts``
+    (keyed by row name)."""
     if name not in facts:
+        row = ROWS[name]
         df = row.build(spark, tmp)
         facts[name] = plan_facts(
             df._jdf.queryExecution().executedPlan(), row.seed)
-    got = facts[name]
+    return facts[name]
+
+
+def check_row(spark, name: str, tmp, facts: dict) -> dict:
+    """Assert ``ROWS[name]`` against its operator's plan and return the
+    plan's facts (:func:`row_facts`)."""
+    row = ROWS[name]
+    got = row_facts(spark, name, tmp, facts)
     assert {"exchanges": got["exchanges"], "python": got["python"]} == \
         {"exchanges": row.exchanges, "python": row.python}, name
     missing = [s for s in row.requires if s not in got["text"]]
@@ -282,7 +293,7 @@ def _media_row(op, key="media_id", payload="payload"):
             [(None, bytearray(b"x"), "x")],
             f"{key} string, {payload} binary, extra string"))
 
-    return Row(build, {}, {f"MapInPandas({key}, {payload}) <- "
+    return Row(build, {}, {f"MapInArrow({key}, {payload}) <- "
                            "UnknownPartitioning(0)": 1}, seed=payload)
 
 
@@ -306,7 +317,7 @@ _GUARD = "hashpartitioning(_id, 4)"     # salt.widen_for_python
 _MAX_BY = ("hashpartitioning(url, 4) [url, valueWithExtremumOrdering"
            "{lang, format, text, method, file_type, mime_type, error}, "
            "extremumOrdering]")
-_EXTRACT = "MapInPandas(url, warc_ts, html, lang) <- "
+_EXTRACT = "MapInArrow(url, warc_ts, html, lang) <- "
 
 ROWS: dict[str, Row] = {
     # ---- per-payload media passes
@@ -326,7 +337,7 @@ ROWS: dict[str, Row] = {
          "broadcast(_band, _key) []": 3,
          "hashpartitioning(id_a, id_b, 4) []": 1,
          "broadcast(id_a) [_h_a]": 1, "broadcast(id_b) [_h_b]": 1},
-        {f"MapInPandas(_id, _t) <- {_GUARD}": 1},
+        {f"MapInArrow(_id, _t) <- {_GUARD}": 1},
         requires=("partial_count",), forbids=_NO_WINDOW),
     "simhash_pairs": Row(
         lambda s, t: neardup.simhash_pairs(_docs(s)),
@@ -335,7 +346,7 @@ ROWS: dict[str, Row] = {
          "hashpartitioning(_band, _key, 4) []": 1,
          "broadcast(_band, _key) []": 1,
          "hashpartitioning(_band, _key, 4) [buf]": 1},
-        {f"ArrowEvalPython(_t) <- {_GUARD}": 1,
+        {f"ArrowEvalPython[250](_t) <- {_GUARD}": 1,
          "MapInArrow(_band, _members) <- UnknownPartitioning(4)": 1},
         **_PAIR_ENGINE),
     "ngram_jaccard_pairs": Row(
@@ -348,7 +359,7 @@ ROWS: dict[str, Row] = {
          "hashpartitioning(_band, _key, 4) []": 1,
          "broadcast(_band, _key) []": 1,
          "hashpartitioning(_band, _key, 4) [*buf]": 1},
-        {f"ArrowEvalPython(_v) <- {_GUARD}": 1,
+        {f"ArrowEvalPython[250](_v) <- {_GUARD}": 1,
          "MapInArrow(_band, _members) <- UnknownPartitioning(4)": 1},
         seed="embedding", **_PAIR_ENGINE),
     "dedup_image_dhash": Row(
@@ -356,13 +367,13 @@ ROWS: dict[str, Row] = {
         {"hashpartitioning(_id, 4) [_keys]": 1, f"{_GUARD} []": 1,
          "hashpartitioning(_band, _key, 4) []": 2,
          "hashpartitioning(_band, _key, 4) [buf]": 1},
-        {"MapInPandas(media_id, payload) <- UnknownPartitioning(0)": 1,
+        {"MapInArrow(media_id, payload) <- UnknownPartitioning(0)": 1,
          "MapInArrow(_band, _members) <- UnknownPartitioning(4)": 1},
         seed="payload", **_PAIR_ENGINE),
     "dedup_video_signature": Row(
         lambda s, t: mm.dedup_video_signature(_media(s)),
         {"hashpartitioning(sig, 4) []": 1},
-        {"MapInPandas(media_id, payload) <- UnknownPartitioning(0)": 1},
+        {"MapInArrow(media_id, payload) <- UnknownPartitioning(0)": 1},
         requires=("partial_min", "partial_count"), seed="payload"),
     # vectors cross one Exchange, the per-cluster grouping
     "semantic_dedup": Row(
@@ -370,8 +381,8 @@ ROWS: dict[str, Row] = {
         {"hashpartitioning(cluster, 4) [*_v]": 1,
          "hashpartitioning(cluster, 4) []": 1,
          "broadcast(cluster) []": 1},
-        {"ArrowEvalPython(embedding) <- UnknownPartitioning(0)": 1,
-         "FlatMapGroupsInPandas(cluster, cluster, _id, _v) <- "
+        {"ArrowEvalPython[250](embedding) <- UnknownPartitioning(0)": 1,
+         "FlatMapGroupsInArrow(cluster, cluster, _id, _v) <- "
          "hashpartitioning(cluster, 4)": 1},
         requires=("partial_count",), forbids=_NO_WINDOW, seed="embedding"),
     # at or under DRIVER_EDGES the labels come back as a local table
@@ -413,7 +424,7 @@ ROWS: dict[str, Row] = {
         {f"{_GUARD} [*_t]": 2, "hashpartitioning(h1, h2, 4) []": 1,
          "broadcast(h1, h2) []": 1, "hashpartitioning(doc_id, 4) []": 1,
          "broadcast(doc_id) []": 1},
-        {f"MapInPandas(_id, _t) <- {_GUARD}": 2},
+        {f"MapInArrow(_id, _t) <- {_GUARD}": 2},
         requires=("partial_count",)),
     # the n-gram pass and the rewrite pass both read the text behind
     # the width guard: two identical guard Exchanges before the run,
@@ -424,8 +435,8 @@ ROWS: dict[str, Row] = {
         {f"{_GUARD} [*_t]": 2, "hashpartitioning(h1, h2, 4) [buf]": 1,
          "hashpartitioning(doc_id, 4) [buf]": 1,
          "broadcast(_id) [rm_pos]": 1},
-        {f"MapInPandas(_id, _t) <- {_GUARD}": 1,
-         f"MapInPandas(_id, _t, rm_pos) <- {_GUARD}": 1}),
+        {f"MapInArrow(_id, _t) <- {_GUARD}": 1,
+         f"MapInArrow(_id, _t, rm_pos) <- {_GUARD}": 1}),
     # the benchmark's n-grams broadcast; its own pass stays narrow
     "benchmark_overlap": Row(
         lambda s, t: decontam.benchmark_overlap(
@@ -434,8 +445,8 @@ ROWS: dict[str, Row] = {
         {f"{_GUARD} [*_t]": 1, f"{_GUARD} []": 1,
          "hashpartitioning(h1, h2, 4) []": 1, "broadcast(h1, h2) []": 1,
          "broadcast(doc_id) []": 1},
-        {f"MapInPandas(_id, _t) <- {_GUARD}": 1,
-         "MapInPandas(_id, _t) <- UnknownPartitioning(0)": 1},
+        {f"MapInArrow(_id, _t) <- {_GUARD}": 1,
+         "MapInArrow(_id, _t) <- UnknownPartitioning(0)": 1},
         requires=("partial_count",), forbids=("CartesianProduct",)),
     "remove_boilerplate_lines": Row(
         lambda s, t: boilerplate.remove_boilerplate_lines(_docs(s)),
@@ -480,20 +491,20 @@ ROWS: dict[str, Row] = {
         requires=("partial_count",)),
     "quality_scores": Row(
         lambda s, t: textstats.quality_scores(_docs(s)), {},
-        {"MapInPandas(_id, _t) <- UnknownPartitioning(0)": 1}),
+        {"MapInArrow(_id, _t) <- UnknownPartitioning(0)": 1}),
     "repetition_stats": Row(
         lambda s, t: textstats.repetition_stats(_docs(s)), {}),
     "lang_id": Row(
         lambda s, t: textstats.lang_id(_docs(s)), {},
-        {"ArrowEvalPython(text) <- UnknownPartitioning(0)": 1}),
+        {"ArrowEvalPython[250](text) <- UnknownPartitioning(0)": 1}),
     "token_count": Row(lambda s, t: textstats.token_count(_docs(s)), {}),
     "doc_fingerprint": Row(
         lambda s, t: textstats.doc_fingerprint(_docs(s)), {},
-        {"ArrowEvalPython(text) <- UnknownPartitioning(0)": 1}),
+        {"ArrowEvalPython[250](text) <- UnknownPartitioning(0)": 1}),
     "scrub_pii": Row(lambda s, t: scrub.scrub_pii(_docs(s)), {}),
     "normalize_nfc": Row(
         lambda s, t: scrub.normalize_nfc(_docs(s)), {},
-        {"ArrowEvalPython(text) <- UnknownPartitioning(0)": 1}),
+        {"ArrowEvalPython[250](text) <- UnknownPartitioning(0)": 1}),
     "pdf_page_stats": Row(
         lambda s, t: pagestats.pdf_page_stats(
             extract_udf.extract(_pages(s))), {},
@@ -551,6 +562,22 @@ def test_plan_contract(plan_row, name):
     plan_row(name)
 
 
+#: a Python node that hands its batches to pandas: a map, grouped or
+#: co-grouped pandas node, or a scalar pandas UDF (PythonEvalType 200,
+#: 204 in iterator form)
+_PANDAS_NODE = re.compile(r"InPandas|ArrowEvalPython\[20[04]\]")
+
+
+def test_no_row_has_a_pandas_node(spark, lazy_plans, tmp_path,
+                                  plan_facts_by_row):
+    """Every Python node of the table is Arrow in and Arrow out."""
+    pandas = {(name, node) for name in sorted(ROWS)
+              for node in row_facts(spark, name, tmp_path,
+                                    plan_facts_by_row)["python"]
+              if _PANDAS_NODE.search(node)}
+    assert not pandas, sorted(pandas)
+
+
 def _carrying(facts) -> int:
     return sum(n for k, n in facts["exchanges"].items() if "*" in k)
 
@@ -586,7 +613,7 @@ def test_walker_traces_text(spark):
                 docs.select(F.col("doc_id").alias("_id"),
                             F.col("text").alias("_t")),
                 ngram_rows(2, distinct=False), NGRAM_SCHEMA),
-            docs.mapInPandas(lambda batches: batches, docs.schema),
+            docs.mapInArrow(lambda batches: batches, docs.schema),
         ]
         for df, want in [(d, 1) for d in carried] + \
                 [(d, 0) for d in scalars]:
@@ -598,7 +625,7 @@ def test_walker_traces_text(spark):
     finally:
         toks.unpersist()
 
-    passed = plan_facts(docs.mapInPandas(lambda b: b, docs.schema)
+    passed = plan_facts(docs.mapInArrow(lambda b: b, docs.schema)
                         .repartition(3)._jdf.queryExecution()
                         .executedPlan())
     assert passed["exchanges"] == {"RoundRobinPartitioning(3) [text]": 1}

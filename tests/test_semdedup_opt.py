@@ -137,7 +137,7 @@ def test_cluster_prune_equals_old_sql_join(spark):
         capped = cap_flooded_buckets(assigned, ["cluster"], "_id", 4096)
         old = sorted(map(tuple,
                          _old_pair_phase(capped, 0.95).collect()))
-        new = sorted(map(tuple, capped.groupBy("cluster").applyInPandas(
+        new = sorted(map(tuple, capped.groupBy("cluster").applyInArrow(
             _cluster_prune_fn(0.95, "vec_id"),
             "vec_id long, kept_id long, cosine double").collect()))
         assert len(old) > 0 and old == new
@@ -149,9 +149,10 @@ def test_semantic_dedup_zero_norm_rows_follow_nan_ordering(spark):
     """Zero-norm embeddings produce NaN cosine; Spark/DuckDB NaN
     ordering treats NaN >= threshold as TRUE — a zero vector's cosine
     against ANY cluster-mate is 0/0 = NaN, so it is removed with the
-    lowest cluster-mate id as witness and a NaN cosine (the pre-r8
-    SQL path errored under ANSI on these rows — the tolerant behavior
-    is the documented one)."""
+    lowest cluster-mate id as witness and a NaN cosine, as
+    embedding_neardup_pairs emits it (the pre-r8 SQL path errored
+    under ANSI on these rows — the tolerant behavior is the documented
+    one)."""
     from pdf_to_text_extraction_service_spark.operators.semdedup import (
         semantic_dedup,
     )
@@ -165,6 +166,6 @@ def test_semantic_dedup_zero_norm_rows_follow_nan_ordering(spark):
            semantic_dedup(df, k=3, iters=2, threshold=0.999).collect()}
     assert 101 in out and 100 in out
     assert out[101]["kept_id"] < 101
-    # NaN crosses the Arrow boundary as NULL (pandas NA convention)
-    assert out[101]["cosine"] is None
-    assert out[100]["cosine"] is None
+    # NaN crosses the Arrow boundary as NaN, not NULL
+    assert math.isnan(out[101]["cosine"])
+    assert math.isnan(out[100]["cosine"])

@@ -113,12 +113,17 @@ def test_image_features_real_and_error_rows(spark):
 
 
 def test_video_frame_sampling(spark):
+    """A batch that yields no frames (no video in it) is an empty
+    typed batch, not a task failure."""
     df = spark.createDataFrame(
-        [(7, make_fake_video(6, 4, 3))], "media_id long, payload binary"
+        [(7, make_fake_video(6, 4, 3)), (8, b"not a video"), (9, None)],
+        "media_id long, payload binary"
     )
     frames = sample_frames(df, every_n=2).collect()
     assert [f["frame_index"] for f in frames] == [0, 2, 4]
     assert all(f["frame"]["width"] == 4 for f in frames)
+    assert sample_frames(df.filter("media_id > 7").coalesce(1)) \
+        .collect() == []
 
 
 def test_resize_and_dhash_operators(spark):

@@ -150,6 +150,10 @@ def test_truncated_gzip_segment_skipped(spark, tmp_path):
     (tmp_path / "bad.warc.gz").write_bytes(bad)
     rows = read_warc_pages(spark, str(tmp_path / "*.warc.gz")).collect()
     assert [r["url"] for r in rows] == ["https://g.test/1"]
+    # an input of only the corrupt segment: a batch with no page rows
+    # is an empty, still typed, batch
+    assert read_warc_pages(spark, str(tmp_path / "bad.warc.gz")) \
+        .collect() == []
 
 
 def test_negative_content_length_terminates():

@@ -239,7 +239,7 @@ same job runs at two parallelism levels on the same input
 - {args.docs:,} synthetic Common-Crawl-style HTML pages
   (~8.5 KB each, {args.words} words), generated deterministically by
   JVM expressions (`tools/scaling_bench.py`), 256 parquet files.
-- Timed job: the map-only extraction plan (scan → mapInPandas kernel
+- Timed job: the map-only extraction plan (scan → mapInArrow kernel
   → count), salt/dedup off — extraction dominates 100 TB wall-clock;
   the dedup/rollup shuffles touch only extracted text columns.
 - Python-worker pool warmed before timing at each level.
