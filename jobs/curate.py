@@ -6,7 +6,8 @@ filtered, deduplicated, decontaminated, packed training corpus.
         --input  /data/extracted 'bucket=*/*.parquet' style dir \
         --output /data/curated \
         --langs en,de --min-words 20 --seq-len 1024 \
-        [--benchmark /data/benchmarks.parquet] [--no-span-removal]
+        [--benchmark /data/benchmarks.parquet] [--no-span-removal] \
+        [--blocklist /data/domains.parquet] [--embeddings /data/emb.parquet]
 
 Chains the engine's training-pipeline operators end-to-end, the way a
 100 TB curation run composes them:
@@ -24,16 +25,21 @@ Chains the engine's training-pipeline operators end-to-end, the way a
 8. decontam — drop docs sharing any 13-gram with --benchmark
 9. pack     — concat-and-chunk into --seq-len sequences
 
-Every stage is declarative DataFrame work over the same operators the
-driver queries gate (operators/neardup, paradedup, dupspans,
-decontam, packing, textstats) — text crosses one Exchange per
-rewrite-stage join, scalar keys do everything else. Stage row counts
-print as one JSON line.  The default stats path costs ZERO extra
-actions: each stage carries a CollectMetrics observation
-(df.observe), and the single materializing checkpoint at the end
-resolves every count — this is the 100-TB stats mode (VERDICT r6
-next #7).  --exact-stats restores the legacy one-count()-per-stage
-mode (pytest pins the two modes equal); --no-stats skips stats.
+Every stage filters or rewrites one ``(doc_id, url, text)`` relation
+in the row: language and quality are scalar Arrow UDF columns
+filtered where they are computed, and paragraph and span dedup
+rewrite ``text`` while the row's other columns ride along.  Only the
+exact, semantic and decontamination keep-lists and the packing
+offsets still join on ``doc_id``, and their side of the join holds
+ids and integers only.  Each stage the chain reads twice is persisted
+lazily, so no Spark job runs until one eager ``localCheckpoint`` at
+the end materializes the result (one job per query stage of that
+action: each shuffle, broadcast and stage cache), after which the
+caches are released.
+
+Stage row counts print as one JSON line.  They come from a
+CollectMetrics observation (``df.observe``) on each stage, resolved
+by that same checkpoint, so they cost no action of their own.
 """
 
 from __future__ import annotations
@@ -47,6 +53,7 @@ _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from pdf_to_text_extraction_service_spark.operators.dupspans import (
@@ -63,7 +70,7 @@ from pdf_to_text_extraction_service_spark.operators.paradedup import (
 )
 from pdf_to_text_extraction_service_spark.operators.textstats import (
     lang_id,
-    quality_scores,
+    quality_udf,
 )
 from pdf_to_text_extraction_service_spark.plans.session import (
     build_session,
@@ -75,65 +82,27 @@ def curate(spark, docs, *, langs=None, min_words=20, min_quality=0.0,
            blocklist=None, embeddings=None, sem_threshold=0.95,
            sem_k=64, stats=True):
     """Run the curation chain over ``docs(url, text, ...)``; returns
-    (packed DataFrame, stage-stats dict).
+    (packed DataFrame, stage-stats dict), the DataFrame checkpointed.
 
-    ``stats``:
-      True (default) — observation mode: every stage count comes from
-        a CollectMetrics node resolved by the ONE materializing action
-        (the eager localCheckpoint below), so stats cost nothing extra
-        at any scale.  Caveat (ADVICE r7): observation accumulators
-        count PARTITION EXECUTIONS — under cache eviction or
-        speculative re-execution a recomputed partition is counted
-        again, inflating stage stats.  When memory pressure makes
-        eviction plausible, validate against --exact-stats on a
-        sample (the pytest equality pin covers the no-eviction case);
-      "exact" — legacy mode: one count() action per stage (kept for
-        the equality pytest and for debugging a single stage);
-      False — no stats.
-    """
-    from pyspark.sql import Observation
-
+    With ``stats`` each stage carries an observation whose row count
+    the final checkpoint resolves; without, the dict is empty.  The
+    counts equal one ``count()`` per stage (tests/reference/curate.py)
+    as long as every partition runs once.  Observation accumulators
+    count PARTITION EXECUTIONS, so a partition recomputed after cache
+    eviction or by speculative execution is counted again."""
     st: dict[str, int] = {}
-    _persisted = []
-    _obs: dict[str, Observation] = {}
-    observe_mode = stats is True or stats == "observe"
+    obs: dict[str, Observation] = {}
+    cached = []
 
-    def note(name, df):
-        if observe_mode:
-            # zero-action stats: a CollectMetrics node above the
-            # stage, resolved when the final checkpoint materializes
-            # the chain exactly once (each stage is persisted, so its
-            # subtree — and its observation — fires once even though
-            # dedup stages consume their own input on both join sides)
-            ob = Observation(f"curate_{name}")
-            df = df.observe(ob, F.count(F.lit(1)).alias("n"))
-            _obs[name] = ob
+    def stage(name, df, persist=True):
+        if stats:
+            obs[name] = Observation(f"curate_{name}")
+            df = df.observe(obs[name], F.count(F.lit(1)).alias("n"))
+        if persist:
+            # read by two branches below (a keep-list and the join it
+            # filters, or a rewrite's two passes): compute it once
             df = df.persist()
-            _persisted.append(df)
-        elif stats:
-            # persist before counting so each stage count (and the
-            # final write) reuses the computed prefix instead of
-            # re-running the whole upstream chain per action; once
-            # THIS stage is materialized its cache covers the prefix,
-            # so the previous stage's cache is released immediately
-            # instead of accumulating for the session lifetime
-            df = df.persist()
-            st[name] = df.count()
-            while _persisted:
-                _persisted.pop().unpersist()
-            _persisted.append(df)
-        else:
-            # stats off still needs the plan BROKEN per stage: each
-            # dedup stage joins a keep-list derived from its own
-            # input, so an unpersisted chain re-evaluates the entire
-            # upstream tree on BOTH join sides — 2^k duplication
-            # (plan audit: 192 source scans / 452 Exchanges for the
-            # 6-stage chain; AQE does not dedup them).  A lazy
-            # persist makes every stage compute exactly once during
-            # the final action; caches are released after the result
-            # materializes below.
-            df = df.persist()
-            _persisted.append(df)
+            cached.append(df)
         return df
 
     has_lang = "lang" in docs.columns
@@ -154,29 +123,25 @@ def curate(spark, docs, *, langs=None, min_words=20, min_quality=0.0,
     # --no-dedup, or unions of runs) and from 64-bit id collisions;
     # a collision conflates two docs (~2^-64/pair) rather than
     # exploding the join
-    base = note("gated", base)
+    base = stage("gated", base, persist=False)
 
     if langs:
         # prefer upstream metadata (crawl header / source label);
         # fall back to the engine's stopword detector per row
-        guessed = lang_id(base)
         lang_col = F.coalesce(
             F.col("_lang_meta") if has_lang else F.lit(None),
             F.col("lang_guess"))
-        base = note("language", guessed.filter(
-            lang_col.isin(*langs)).drop("lang_guess"))
-    if has_lang:
-        base = base.drop("_lang_meta")
+        base = stage("language", lang_id(base).filter(
+            lang_col.isin(*langs)), persist=False)
 
-    q = quality_scores(base, min_words=min_words)
-    keep_q = q.filter(
-        (~F.col("needs_ocr")) & (F.col("quality") >= min_quality)
-        & (F.col("word_count") >= min_words)
-    ).select("doc_id")
-    base = note("quality", base.join(keep_q, "doc_id"))
+    q = quality_udf(min_words)(F.col("text"))
+    base = stage("quality", base.withColumn("_q", q).filter(
+        (~F.col("_q.needs_ocr")) & (F.col("_q.quality") >= min_quality)
+        & (F.col("_q.word_count") >= min_words)
+    ).select("doc_id", "url", "text"))
 
     keep_e = exact_dedup(base).select("doc_id")
-    base = note("exact_dedup", base.join(keep_e, "doc_id"))
+    base = stage("exact_dedup", base.join(keep_e, "doc_id"))
 
     if embeddings is not None:
         # SemDeDup-style semantic dedup (operators/semdedup.py):
@@ -195,21 +160,17 @@ def curate(spark, docs, *, langs=None, min_words=20, min_quality=0.0,
             emb, k=sem_k, threshold=sem_threshold,
             id_col="doc_id", vec_col="embedding",
         ).select("doc_id")
-        base = note("semantic_dedup",
-                    base.join(removed, "doc_id", "left_anti"))
+        base = stage("semantic_dedup",
+                     base.join(removed, "doc_id", "left_anti"))
 
-    paras = paragraph_dedup(base)
-    base = note("paragraph_dedup", base.drop("text").join(
-        paras.filter(F.col("text_out") != "")
-        .select("doc_id", F.col("text_out").alias("text")),
-        "doc_id"))
+    def rewritten(df):
+        return df.filter(F.col("text_out") != "").select(
+            "doc_id", "url", F.col("text_out").alias("text"))
 
+    base = stage("paragraph_dedup", rewritten(paragraph_dedup(base)))
     if span_removal:
-        spans = remove_duplicated_spans(base)
-        base = note("span_removal", base.drop("text").join(
-            spans.filter(F.col("text_out") != "")
-            .select("doc_id", F.col("text_out").alias("text")),
-            "doc_id"))
+        base = stage("span_removal",
+                     rewritten(remove_duplicated_spans(base)))
 
     if benchmark is not None:
         from pdf_to_text_extraction_service_spark.operators.decontam \
@@ -217,7 +178,7 @@ def curate(spark, docs, *, langs=None, min_words=20, min_quality=0.0,
 
         flags = benchmark_overlap(base, benchmark)
         clean = flags.filter(~F.col("contaminated")).select("doc_id")
-        base = note("decontam", base.join(clean, "doc_id"))
+        base = stage("decontam", base.join(clean, "doc_id"))
 
     packed = pack_sequences(base, budget=seq_len)
     out = (
@@ -226,41 +187,24 @@ def curate(spark, docs, *, langs=None, min_words=20, min_quality=0.0,
         .select("seq_id", "seq_offset", "url", "doc_id",
                 "n_tokens", "text")
     )
-    if observe_mode:
-        # ONE action total: the eager checkpoint materializes every
-        # stage (each exactly once via its persist), fires every
-        # observation, and truncates lineage so the stage caches can
-        # be released immediately.  `sequences` = max(seq_id)+1, the
-        # number of packed sequences produced (a doc longer than
-        # seq_len fills sequences no row starts in, so a distinct
-        # count of starts would undercount; max+1 is the physical
-        # chunk count and is observation-expressible).
+    if stats:
+        # `sequences` = max(seq_id)+1, the number of packed sequences
+        # produced (a doc longer than seq_len fills sequences no row
+        # starts in, so a distinct count of starts would undercount;
+        # max+1 is the physical chunk count and is
+        # observation-expressible)
         ob_out = Observation("curate_out")
-        out = out.observe(ob_out, F.count(F.lit(1)).alias("n"),
-                          F.max("seq_id").alias("max_seq"))
-        out = out.localCheckpoint(eager=True)
-        for name, ob in _obs.items():
-            st[name] = ob.get["n"]
+        out = out.observe(ob_out, F.max("seq_id").alias("max_seq"))
+    # the one action: it materializes every stage (each exactly once
+    # via its persist), fires every observation, and truncates lineage
+    # so the stage caches can be released now
+    out = out.localCheckpoint(eager=True)
+    for df in cached:
+        df.unpersist()
+    if stats:
+        st = {name: ob.get["n"] for name, ob in obs.items()}
         mx = ob_out.get["max_seq"]
         st["sequences"] = 0 if mx is None else int(mx) + 1
-        while _persisted:
-            _persisted.pop().unpersist()
-    elif stats:
-        # `out` stays persisted for the caller's write (caller may
-        # unpersist after consuming); every intermediate stage cache
-        # is released here
-        out = out.persist()
-        mx = out.agg(F.max("seq_id")).collect()[0][0]
-        st["sequences"] = 0 if mx is None else int(mx) + 1
-        while _persisted:
-            _persisted.pop().unpersist()
-    else:
-        # materialize the (packed, bounded) result and truncate its
-        # lineage so the per-stage caches can be released now rather
-        # than leaking for the session lifetime
-        out = out.localCheckpoint(eager=True)
-        while _persisted:
-            _persisted.pop().unpersist()
     return out, st
 
 
@@ -287,10 +231,6 @@ def main() -> None:
                          "registered domain matches are dropped at "
                          "the gate (broadcast anti-join)")
     ap.add_argument("--no-span-removal", action="store_true")
-    ap.add_argument("--no-stats", action="store_true")
-    ap.add_argument("--exact-stats", action="store_true",
-                    help="legacy one-count()-per-stage stats instead "
-                         "of the default zero-action observations")
     args = ap.parse_args()
 
     spark = build_session(app_name="curate-job")
@@ -309,8 +249,6 @@ def main() -> None:
                     if args.embeddings else None),
         sem_threshold=args.sem_threshold, sem_k=args.sem_k,
         span_removal=not args.no_span_removal,
-        stats=(False if args.no_stats
-               else "exact" if args.exact_stats else True),
     )
     out.repartition("seq_id").sortWithinPartitions(
         "seq_id", "seq_offset").write.mode("overwrite") \

@@ -79,25 +79,29 @@ def transcript_results(df: DataFrame, id_col: str = "media_id",
     becomes "[MM:SS] text" ([HH:MM:SS] past the hour) joined by blank
     lines; an empty transcript is the reference's exact failure
     ("groq transcription returned empty transcript",
-    transcribe.go:84-87); counts are BuildCounts."""
+    transcribe.go:84-87); counts are BuildCounts.  A segment list the
+    formatter rejects (a NULL ``start`` under timestamps) is an error
+    row with the formatter's message, not a failed task."""
 
-    def _transcript_rows(batch: dict) -> dict:
+    def _transcript(segs: list) -> tuple[str, str | None]:
         from pdf_to_text_extraction_service_spark.kernel import ocrclean
 
-        texts = []
-        for segs in batch[segments_col]:
-            segs = segs or []
-            if timestamps and segs:
-                texts.append(ocrclean.format_timestamped_transcript(
-                    [(s["start"], s["text"]) for s in segs]))
-            else:
-                texts.append(ocrclean._trim_space(
-                    " ".join(s["text"] for s in segs
-                             if s["text"] is not None)))
-        errors = [None if t else
-                  "groq transcription returned empty transcript"
-                  for t in texts]
-        return _result_rows(batch[id_col], texts, errors, "groq")
+        if timestamps and segs:
+            try:
+                t = ocrclean.format_timestamped_transcript(
+                    [(s["start"], s["text"]) for s in segs])
+            except ValueError as exc:
+                return "", str(exc)
+        else:
+            t = ocrclean._trim_space(
+                " ".join(s["text"] for s in segs if s["text"] is not None))
+        return t, (None if t else
+                   "groq transcription returned empty transcript")
+
+    def _transcript_rows(batch: dict) -> dict:
+        res = [_transcript(segs or []) for segs in batch[segments_col]]
+        return _result_rows(batch[id_col], [t for t, _ in res],
+                            [e for _, e in res], "groq")
 
     return map_rows(df.select(id_col, segments_col), OCR_RESULT_SCHEMA,
                     lambda batches: map(_transcript_rows, batches))

@@ -7,8 +7,8 @@ columns leave as one typed ``RecordBatch`` of the declared schema, so
 NULL stays NULL and NaN stays NaN in both directions.  The extract
 and preview envelope (functions/extract_udf), the per-payload and
 frame-sampling passes (functions/multimodal), the OCR and transcript
-passes (functions/ocr), the WARC record parser (sources/warc) and the
-span rewrite (operators/dupspans) all run through it.
+passes (functions/ocr) and the WARC record parser (sources/warc) all
+run through it.
 
 Spark sizes the Arrow batches for KB-to-MB binary payloads
 (plans/session.py), and each numpy text kernel has fixed costs per
@@ -16,9 +16,8 @@ call, so :func:`map_text_rows` gathers the batches into chunks of up
 to :data:`CHUNK_ROWS` rows before calling the kernel.  A chunk also
 closes at :data:`CHUNK_CHARS` characters of text, so a worker never
 holds thousands of long documents (nor the n-gram strings built from
-them) at once.  MinHash prep, the n-gram hash passes of
-decontamination and the duplicated-span operators, and quality
-scoring all run through it.
+them) at once.  MinHash prep and the n-gram hash passes of
+decontamination and the duplicated-span operators run through it.
 """
 
 from __future__ import annotations

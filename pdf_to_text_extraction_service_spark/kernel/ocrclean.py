@@ -111,7 +111,10 @@ def combine_ocr_pages(pages: list[str]) -> str:
 
 def format_timecode(seconds: float) -> str:
     """[MM:SS] / [HH:MM:SS] timecode body (transcribe.go:114-126):
-    clamp negatives to 0, round-half-up to whole seconds."""
+    clamp negatives to 0, round-half-up to whole seconds.  A missing
+    start (NULL in a sidecar column) raises ValueError."""
+    if seconds is None:
+        raise ValueError("transcript segment has no start time")
     if seconds < 0:
         seconds = 0.0
     total = int(seconds + 0.5)

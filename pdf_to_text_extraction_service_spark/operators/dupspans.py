@@ -26,31 +26,37 @@ collision (≈1e-38 per pair) would fail the gate rather than hide.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType
 
-from ..functions.textrows import map_rows, map_text_rows
+from ..functions.textrows import map_text_rows
 from .decontam import NGRAM_KEY_SCHEMA, NGRAM_SCHEMA, ngram_rows
-from .floodcap import _checkpoint_release
 from .salt import widen_for_python
 
 
-def _texts(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """``(_id, _t)`` behind the width guard: the only relation whose
-    Exchange carries the text."""
+def _texts(docs: DataFrame, id_col: str, text_col: str,
+           keep: list = ()) -> DataFrame:
+    """``(_id, _t, *keep)`` behind the width guard: the only relation
+    whose Exchange carries the text."""
     return widen_for_python(docs.select(F.col(id_col).alias("_id"),
-                                        F.col(text_col).alias("_t")))
+                                        F.col(text_col).alias("_t"),
+                                        *keep))
 
 
 def _windows(docs: DataFrame, n: int, id_col: str, text_col: str,
-             distinct: bool, with_pos: bool) -> DataFrame:
+             distinct: bool, with_pos: bool,
+             keep: list = ()) -> DataFrame:
     """``(id, [pos,] h1, h2)`` for every window occurrence, or for each
     document's distinct windows when ``distinct`` — one rebatched
     n-gram pass (decontam.ngram_rows through
-    functions/textrows.map_text_rows) behind the width guard."""
+    functions/textrows.map_text_rows) behind the width guard.  The
+    pass reads the ``keep`` columns of the guarded relation too, and
+    ignores them: that keeps the relation whole, so a consumer of its
+    other columns shares its Exchange instead of the optimizer
+    pruning this side's copy to ``(_id, _t)``."""
     return (
-        map_text_rows(_texts(docs, id_col, text_col),
+        map_text_rows(_texts(docs, id_col, text_col, keep),
                       ngram_rows(n, distinct),
                       NGRAM_SCHEMA if with_pos else NGRAM_KEY_SCHEMA)
         .withColumnRenamed("_id", id_col)
@@ -118,8 +124,10 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 13,
     """The REMOVAL half of ExactSubstr dedup: rewrite each document
     dropping every token covered by a duplicated window occurrence
     that is not the window's corpus-wide FIRST occurrence (canonical
-    = min (doc_id, pos)). Returns
-    ``(id_col, text_out, n_tokens, n_removed)``.
+    = min (doc_id, pos)). Returns ``(id_col, *the input's other
+    columns, text_out, n_tokens, n_removed)``, one row per input row,
+    so a caller rewrites the text in place instead of joining
+    ``text_out`` back to its documents.
 
     Exact rule (mirrored by the oracle): token t of doc d is removed
     iff some occurrence (d, pos) of a window with corpus count >=
@@ -132,14 +140,20 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 13,
     Scale shape: as duplicated_span_stats, the text crosses the width
     guard and only (doc_id, pos, h1, h2) scalars shuffle after it;
     removal positions roll up per doc as a sorted int array and join
-    back to the guarded ``(_id, _t)`` relation for one Arrow rewrite
-    pass, so that pass runs at full width too.  The removal arrays
-    broadcast to it, or (as a shuffle join) arrive already hashed on
-    the id, so the text crosses the guard Exchange once, reused by
-    both passes (the remove_duplicated_spans row of
-    tests/test_plan_contracts.py)."""
+    back to the guarded ``(_id, _t, *other columns)`` relation, where
+    one scalar Arrow UDF over ``(_t, rm_pos)`` rewrites the text, so
+    that pass runs at full width too and the other columns never
+    enter Python.  The removal arrays broadcast to it, or (as a
+    shuffle join) arrive already hashed on the id, so the text crosses
+    the guard Exchange once, reused by both passes (the
+    remove_duplicated_spans row of tests/test_plan_contracts.py).  The
+    other columns cross that Exchange with the text, and the n-gram
+    pass reads them (see :func:`_windows`); the row lists them on
+    both.  The result stays lazy: the caller's action runs it, with
+    the rest of its plan."""
+    keep = [c for c in docs.columns if c not in (id_col, text_col)]
     occurrences = _windows(docs, n, id_col, text_col, distinct=False,
-                           with_pos=True)
+                           with_pos=True, keep=keep)
     # ONE declared aggregation per window key computes the corpus
     # count and the canonical occurrence (min (doc, pos)) together
     # and emits every NON-canonical occurrence of qualifying windows
@@ -172,23 +186,19 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 13,
     # the same fold (fixed width n over ascending positions merges
     # exactly where p <= prev + n), token coverage via a diff array —
     # output row-identical (tests/test_dupspans_opt.py)
-    rewrite = _rewrite_rows_fn(n)
-    out = map_rows(
-        _texts(docs, id_col, text_col).join(removals, "_id", "left")
-        .select("_id", "_t", "rm_pos"),
-        DataType.fromDDL(
-            "_id long, text_out string, n_tokens int, n_removed int"),
-        lambda batches: map(rewrite, batches),
-    ).withColumnRenamed("_id", id_col)
-    # occurrences has a single consumer (the grouped pass), so no
-    # persist is needed; the checkpoint bounds the result
-    return _checkpoint_release(out)
+    return (
+        _texts(docs, id_col, text_col, keep)
+        .join(removals, "_id", "left")
+        .withColumn("_r", _rewrite_udf(n)("_t", "rm_pos"))
+        .select(F.col("_id").alias(id_col), *keep,
+                "_r.text_out", "_r.n_tokens", "_r.n_removed")
+    )
 
 
-def _rewrite_rows_fn(n: int):
-    """Row body for remove_duplicated_spans' rewrite phase (one
-    functions/textrows.map_rows pass): (id, text, rm_pos) -> (id,
-    text_out, n_tokens, n_removed).
+def _rewrite_udf(n: int):
+    """remove_duplicated_spans' rewrite phase as one scalar
+    ``arrow_udf``: (text, rm_pos) -> struct(text_out, n_tokens,
+    n_removed).
 
     Replicates the old SQL exactly: merge [p, p+n) intervals over the
     ascending rm_pos (with fixed width and sorted starts the fold's
@@ -196,9 +206,12 @@ def _rewrite_rows_fn(n: int):
     ``p > prev + n``), drop covered tokens, join with single spaces;
     rm_pos NULL -> text unchanged, n_removed 0; NULL text -> NULL
     text_out/n_tokens (size(NULL)), n_removed 0."""
-    def fn(batch: dict) -> dict:
+    from pyspark.sql.functions import arrow_udf
+
+    @arrow_udf("text_out string, n_tokens int, n_removed int")
+    def _rewrite(texts: pa.Array, rms: pa.Array) -> pa.Array:
         out_t, out_nt, out_nr = [], [], []
-        for t, rm in zip(batch["_t"], batch["rm_pos"]):
+        for t, rm in zip(texts.to_pylist(), rms.to_pylist()):
             if t is None:
                 out_t.append(None)
                 out_nt.append(None)
@@ -229,7 +242,9 @@ def _rewrite_rows_fn(n: int):
                 tok for tok, m in zip(toks, mask) if not m))
             out_nt.append(len(toks))
             out_nr.append(int((ends - starts).sum()))
-        return {"_id": batch["_id"], "text_out": out_t,
-                "n_tokens": out_nt, "n_removed": out_nr}
+        return pa.StructArray.from_arrays(
+            [pa.array(out_t, pa.string()), pa.array(out_nt, pa.int32()),
+             pa.array(out_nr, pa.int32())],
+            names=["text_out", "n_tokens", "n_removed"])
 
-    return fn
+    return _rewrite

@@ -45,9 +45,13 @@ def paragraph_dedup(docs: DataFrame, text_col: str = "text",
                     id_col: str = "doc_id",
                     sep: str = PARA_SEP) -> DataFrame:
     """Corpus-wide paragraph dedup, first occurrence (by ``(doc_id,
-    pos)``) wins. Returns one row per input doc:
-    ``(id_col, text_out, n_paras, n_kept)`` — empty docs keep an
-    empty string."""
+    pos)``) wins. Returns one row per input doc: ``(id_col, *the
+    input's other columns, text_out, n_paras, n_kept)`` — empty docs
+    keep an empty string.  The other columns ride along on the
+    reassembly join's document side, so a caller rewrites the text in
+    place instead of joining ``text_out`` back to its documents; the
+    contract row is unchanged, because that side crosses no Exchange
+    while the kept positions broadcast."""
     # \Q…\E so the separator is a LITERAL: F.split takes a Java
     # regex, and a sep like '. ' would otherwise fragment on any char
     sep_re = "\\Q" + sep + "\\E"
@@ -86,10 +90,11 @@ def paragraph_dedup(docs: DataFrame, text_col: str = "text",
         ),
         sep,
     )
+    keep = [c for c in docs.columns if c not in (id_col, text_col)]
     return (
         docs.join(keepers, id_col, "left")
         .select(
-            F.col(id_col),
+            F.col(id_col), *keep,
             F.when(F.col("keep_pos").isNull(), F.lit(""))
             .otherwise(reassembled).alias("text_out"),
             F.size(arr).alias("n_paras"),

@@ -4,9 +4,9 @@ scoring, document fingerprinting (prompt mandate).
 Every formula is one the DuckDB oracle can evaluate identically;
 lang_id and the fingerprint run it as one Arrow pass each, pinned to
 the JVM expressions in tests/reference/textstats.py.  The quality
-scorer reuses the byte-parity kernel (kernel/quality.py) through the
-rebatched text-row pass (it is pinned by its own parity fixtures, not
-a SQL oracle).
+scorer reuses the byte-parity kernel (kernel/quality.py) as one scalar
+Arrow UDF (it is pinned by its own parity fixtures, not a SQL
+oracle).
 """
 
 from __future__ import annotations
@@ -19,12 +19,10 @@ from pyspark.sql.types import (
     BooleanType,
     DoubleType,
     IntegerType,
-    LongType,
     StructField,
     StructType,
 )
 
-from ..functions.textrows import map_text_rows
 
 # Tiny per-language stopword anchors for the n-gram/stopword heuristic.
 STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -186,8 +184,8 @@ def doc_fingerprint(df: DataFrame, text_col: str = "text",
 
 # ------------------------------------------------------ quality scoring
 
-QUALITY_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
+#: the scorer's in-row result, one struct per document
+QUALITY_TYPE = StructType([
     StructField("quality", DoubleType()),
     StructField("needs_ocr", BooleanType()),
     StructField("maybe_ocr", BooleanType()),
@@ -195,29 +193,45 @@ QUALITY_SCHEMA = StructType([
 ])
 
 
+def quality_udf(min_words: int = 20):
+    """Kernel quality scorer (quality.go parity) as one scalar
+    ``arrow_udf``: text -> :data:`QUALITY_TYPE` struct, kernel loop per
+    document; NULL text scores as "".  The row's other columns stay in
+    the JVM, so a caller filters on the struct's fields in place
+    (jobs/curate.py) instead of joining scores back."""
+    from pyspark.sql.functions import arrow_udf
+
+    @arrow_udf(QUALITY_TYPE)
+    def _quality(texts: pa.Array) -> pa.Array:
+        from pdf_to_text_extraction_service_spark.kernel import quality
+
+        ds = [quality.score(t if t is not None else "", min_words)
+              for t in texts.to_pylist()]
+        return pa.StructArray.from_arrays(
+            [pa.array([d.quality for d in ds], pa.float64()),
+             pa.array([d.needs_ocr for d in ds], pa.bool_()),
+             pa.array([d.maybe_ocr for d in ds], pa.bool_()),
+             pa.array([d.word_count for d in ds], pa.int32())],
+            names=QUALITY_TYPE.fieldNames())
+
+    return _quality
+
+
 def quality_scores(df: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text",
                    min_words: int = 20) -> DataFrame:
-    """Kernel quality scorer (quality.go parity) over a table — the
-    graft's "text-density/quality classification over batched byte
-    streams": one rebatched text-row pass
-    (functions/textrows.map_text_rows), kernel loop per doc; NULL
-    text scores as ""."""
-
-    def _chunk(ids: list, texts: list) -> dict:
-        from pdf_to_text_extraction_service_spark.kernel import quality
-
-        scores = [quality.score(t if t is not None else "", min_words)
-                  for t in texts]
-        return {"doc_id": ids,
-                "quality": [d.quality for d in scores],
-                "needs_ocr": [d.needs_ocr for d in scores],
-                "maybe_ocr": [d.maybe_ocr for d in scores],
-                "word_count": [d.word_count for d in scores]}
-
-    return map_text_rows(
-        df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t")),
-        _chunk, QUALITY_SCHEMA)
+    """``(doc_id, quality, needs_ocr, maybe_ocr, word_count)`` per row —
+    the graft's "text-density/quality classification over batched byte
+    streams" as a projection of :func:`quality_udf`, so the package
+    has one quality scorer.  Its plan row (tests/test_plan_contracts.py)
+    is that UDF's ``ArrowEvalPython`` node over the text, not a
+    rebatched ``MapInArrow(_id, _t)`` pass: the kernel scores one
+    document at a time, so gathering batches into chunks bought
+    nothing."""
+    return df.select(
+        F.col(id_col).alias("doc_id"),
+        quality_udf(min_words)(F.col(text_col)).alias("_q"),
+    ).select("doc_id", "_q.*")
 
 
 # ------------------------------------------------- repetition signals

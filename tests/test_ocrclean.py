@@ -133,6 +133,7 @@ def test_spark_transcript_results(spark):
         [
             (1, [(0.0, "Hello team"), (3.2, "This is a test")]),
             (2, [(5.0, "  ")]),
+            (3, [(None, "nostart")]),
         ],
         "media_id long, segments array<struct<start double, text string>>",
     )
@@ -141,3 +142,6 @@ def test_spark_transcript_results(spark):
     assert rows[1]["success"] and rows[1]["method"] == "groq"
     assert not rows[2]["success"]
     assert rows[2]["error"] == "groq transcription returned empty transcript"
+    # a NULL start fails its own row, not the task
+    assert not rows[3]["success"] and rows[3]["text"] == ""
+    assert rows[3]["error"] == "transcript segment has no start time"

@@ -1,7 +1,9 @@
-"""Pair emitters and the components labelling over their pairs must
-not depend on the physical plan: the same input gives the same rows
-under every shuffle-partition count, with AQE on or off, and with
-runtime broadcast joins on or off.  Disabling the broadcast threshold
+"""Pair emitters, the components labelling over their pairs and the
+two text-rewrite operators of the curation chain (span removal and
+paragraph dedup) must not depend on the physical plan: the same input
+gives the same rows under every shuffle-partition count, with AQE on
+or off, and with runtime broadcast joins on or off.  Disabling the
+broadcast threshold
 is the knob that flips AQE between a sort-merge join and a
 runtime-broadcast conversion with a local shuffle read — the path on
 which a physically co-located (not declared) bucket grouping once
@@ -56,7 +58,8 @@ def _assert_identical(results: dict) -> list:
 
 @pytest.mark.parametrize("name", ["dedup_simhash", "dedup_embedding_cosine",
                                   "dedup_image_dhash", "dedup_minhash_lsh",
-                                  "neardup_components"])
+                                  "neardup_components", "dedup_remove_spans",
+                                  "paragraph_dedup"])
 def test_pairs_identical_across_shuffle_configs(spark, name):
     _assert_identical(_rows_per_config(spark, name))
 

@@ -426,17 +426,19 @@ ROWS: dict[str, Row] = {
          "broadcast(doc_id) []": 1},
         {f"MapInArrow(_id, _t) <- {_GUARD}": 2},
         requires=("partial_count",)),
-    # the n-gram pass and the rewrite pass both read the text behind
-    # the width guard: two identical guard Exchanges before the run,
-    # one and a ReusedExchange after it
-    # (test_span_removal_text_crosses_guard_once)
+    # the n-gram pass and the rewrite pass both read the text, and the
+    # documents' other columns, behind the width guard: two identical
+    # guard Exchanges before the run, one and a ReusedExchange after it
+    # (test_span_removal_text_crosses_guard_once); the rewrite is a
+    # scalar UDF, so the other columns stay in the JVM there
     "remove_duplicated_spans": Row(
         lambda s, t: dupspans.remove_duplicated_spans(_docs(s)),
-        {f"{_GUARD} [*_t]": 2, "hashpartitioning(h1, h2, 4) [buf]": 1,
+        {f"{_GUARD} [*_t, lang, source]": 2,
+         "hashpartitioning(h1, h2, 4) [buf]": 1,
          "hashpartitioning(doc_id, 4) [buf]": 1,
          "broadcast(_id) [rm_pos]": 1},
-        {f"MapInArrow(_id, _t) <- {_GUARD}": 1,
-         f"MapInArrow(_id, _t, rm_pos) <- {_GUARD}": 1}),
+        {f"MapInArrow(_id, _t, lang, source, n_chars) <- {_GUARD}": 1,
+         f"ArrowEvalPython[250](_t, rm_pos) <- {_GUARD}": 1}),
     # the benchmark's n-grams broadcast; its own pass stays narrow
     "benchmark_overlap": Row(
         lambda s, t: decontam.benchmark_overlap(
@@ -491,7 +493,7 @@ ROWS: dict[str, Row] = {
         requires=("partial_count",)),
     "quality_scores": Row(
         lambda s, t: textstats.quality_scores(_docs(s)), {},
-        {"MapInArrow(_id, _t) <- UnknownPartitioning(0)": 1}),
+        {"ArrowEvalPython[250](text) <- UnknownPartitioning(0)": 1}),
     "repetition_stats": Row(
         lambda s, t: textstats.repetition_stats(_docs(s)), {}),
     "lang_id": Row(
@@ -649,11 +651,12 @@ def test_walker_traces_text(spark):
 def test_span_removal_text_crosses_guard_once(spark, lazy_plans):
     """Once span removal has run, its text crosses one width-guard
     Exchange, read by both Python passes; the second guard Exchange of
-    the pre-run plan is a ReusedExchange."""
+    the pre-run plan is a ReusedExchange.  The documents' other
+    columns cross it with the text."""
     out = dupspans.remove_duplicated_spans(_docs(spark))
     out.collect()
     plan = out._jdf.queryExecution().executedPlan()
     assert "ReusedExchange" in plan.toString()
     carrying = {k: n for k, n in plan_facts(plan)["exchanges"].items()
                 if "*" in k}
-    assert carrying == {f"{_GUARD} [*_t]": 1}
+    assert carrying == {f"{_GUARD} [*_t, lang, source]": 1}

@@ -451,17 +451,9 @@ def test_curate_semantic_dedup_stage(spark):
     assert "https://s.test/c" in urls and len(urls) == 2
 
 
-def test_curate_observe_stats_equal_exact(spark):
-    """The default zero-action observation stats (one materializing
-    checkpoint resolves every CollectMetrics node) must equal the
-    legacy one-count()-per-stage mode on the sf0.001 corpus — same
-    keys, same values, including the packed-sequences count."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    from jobs.curate import curate
+def _curate_corpus(spark):
+    """The sf0.001 documents as crawled pages, and the one-line
+    benchmark of test_curate_pipeline_stages."""
     from pdf_to_text_extraction_service_spark.sources.corpus import (
         load_documents,
     )
@@ -474,14 +466,55 @@ def test_curate_observe_stats_equal_exact(spark):
     )
     bench = spark.createDataFrame(
         [(" ".join(f"b{i}" for i in range(13)),)], "text string")
-    out_obs, st_obs = curate(spark, docs, langs=["en", "de"],
-                             min_words=5, seq_len=256,
-                             benchmark=bench, stats=True)
-    out_ex, st_ex = curate(spark, docs, langs=["en", "de"],
-                           min_words=5, seq_len=256,
-                           benchmark=bench, stats="exact")
-    assert st_obs == st_ex
-    assert st_obs["sequences"] >= 1
-    assert sorted(map(tuple, out_obs.collect())) == \
-        sorted(map(tuple, out_ex.collect()))
-    out_ex.unpersist()
+    return docs, bench
+
+
+def test_curate_observe_stats_equal_exact(spark):
+    """curate() equals the stage-by-stage chain of
+    tests/reference/curate.py, which filters every stage through a
+    join back to its documents and counts each with its own action:
+    same stage counts (the observations resolved by the one
+    checkpoint), including the packed-sequences count, and the same
+    rows, in the language + benchmark configuration and in bench.py's
+    shape."""
+    from jobs.curate import curate
+    from tests.reference.curate import curate as curate_reference
+
+    docs, bench = _curate_corpus(spark)
+    for kw in (dict(langs=["en", "de"], min_words=5, seq_len=256,
+                    benchmark=bench),
+               dict(seq_len=1024)):
+        out, st = curate(spark, docs, stats=True, **kw)
+        out_ref, st_ref = curate_reference(spark, docs, stats="exact",
+                                           **kw)
+        assert st == st_ref, kw
+        assert st["sequences"] >= 1
+        assert sorted(map(tuple, out.collect())) == \
+            sorted(map(tuple, out_ref.collect())), kw
+        out_ref.unpersist()
+
+
+def test_curate_runs_one_action(spark, spark_jobs, monkeypatch):
+    """No Spark job runs before curate()'s final checkpoint, which is
+    its only one (no operator checkpoints on its own), and the whole
+    call stays within 30 jobs: each of them is a query stage of that
+    one action (shuffle map stages, broadcasts, the stage caches)."""
+    from jobs.curate import curate
+
+    docs, _ = _curate_corpus(spark)
+    tracker = spark.sparkContext.statusTracker()
+    jobs_at_checkpoint = []
+    checkpoint = type(docs).localCheckpoint
+
+    def counted(df, *args, **kwargs):
+        jobs_at_checkpoint.append(
+            len(tracker.getJobIdsForGroup("counted-jobs")))
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(type(docs), "localCheckpoint", counted)
+    before = len(tracker.getJobIdsForGroup("counted-jobs"))
+    n, (out, st) = spark_jobs(
+        lambda: curate(spark, docs, seq_len=1024, stats=True))
+    assert jobs_at_checkpoint == [before]
+    assert n <= 30
+    assert st["span_removal"] == out.count()
