@@ -519,7 +519,8 @@ def _q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         pack_sequences,
     )
 
-    return pack_sequences(load_documents(spark, sf_dir), budget=256)
+    return pack_sequences(load_documents(spark, sf_dir), budget=256) \
+        .select("doc_id", "n_tokens", "seq_id", "seq_offset")
 
 
 def _q_unigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:

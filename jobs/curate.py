@@ -28,14 +28,14 @@ Chains the engine's training-pipeline operators end-to-end, the way a
 Every stage filters or rewrites one ``(doc_id, url, text)`` relation
 in the row: language and quality are scalar Arrow UDF columns
 filtered where they are computed, and paragraph and span dedup
-rewrite ``text`` while the row's other columns ride along.  Only the
-exact, semantic and decontamination keep-lists and the packing
-offsets still join on ``doc_id``, and their side of the join holds
-ids and integers only.  Each stage the chain reads twice is persisted
-lazily, so no Spark job runs until one eager ``localCheckpoint`` at
-the end materializes the result (one job per query stage of that
-action: each shuffle, broadcast and stage cache), after which the
-caches are released.
+rewrite ``text`` while the row's other columns ride along, and
+packing adds its columns to the row.  Only the exact, semantic and
+decontamination keep-lists still join on ``doc_id``, and their side
+of the join holds ids only.  Each stage the chain reads twice is
+persisted lazily, so no Spark job runs until one eager
+``localCheckpoint`` at the end materializes the result (one job per
+query stage of that action: each shuffle, broadcast and stage cache),
+after which the caches are released.
 
 Stage row counts print as one JSON line.  They come from a
 CollectMetrics observation (``df.observe``) on each stage, resolved
@@ -89,7 +89,10 @@ def curate(spark, docs, *, langs=None, min_words=20, min_quality=0.0,
     counts equal one ``count()`` per stage (tests/reference/curate.py)
     as long as every partition runs once.  Observation accumulators
     count PARTITION EXECUTIONS, so a partition recomputed after cache
-    eviction or by speculative execution is counted again."""
+    eviction or by speculative execution is counted again.  With
+    ``embeddings``, k-means training and ``semantic_dedup``'s
+    checkpoint run jobs before the final checkpoint, so the earlier
+    stages' observations resolve in those jobs."""
     st: dict[str, int] = {}
     obs: dict[str, Observation] = {}
     cached = []
@@ -180,13 +183,8 @@ def curate(spark, docs, *, langs=None, min_words=20, min_quality=0.0,
         clean = flags.filter(~F.col("contaminated")).select("doc_id")
         base = stage("decontam", base.join(clean, "doc_id"))
 
-    packed = pack_sequences(base, budget=seq_len)
-    out = (
-        base.join(packed.select("doc_id", "n_tokens", "seq_id",
-                                "seq_offset"), "doc_id")
-        .select("seq_id", "seq_offset", "url", "doc_id",
-                "n_tokens", "text")
-    )
+    out = pack_sequences(base, budget=seq_len).select(
+        "seq_id", "seq_offset", "url", "doc_id", "n_tokens", "text")
     if stats:
         # `sequences` = max(seq_id)+1, the number of packed sequences
         # produced (a doc longer than seq_len fills sequences no row

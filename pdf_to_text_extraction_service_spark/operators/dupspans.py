@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.textrows import map_text_rows
@@ -154,26 +154,21 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 13,
     keep = [c for c in docs.columns if c not in (id_col, text_col)]
     occurrences = _windows(docs, n, id_col, text_col, distinct=False,
                            with_pos=True, keep=keep)
-    # ONE declared aggregation per window key computes the corpus
-    # count and the canonical occurrence (min (doc, pos)) together
-    # and emits every NON-canonical occurrence of qualifying windows
-    # — replacing the previous groupBy-aggregate shuffle PLUS the
-    # sort-merge join back onto the occurrences (r8; row-identical,
-    # pinned by tests/test_dupspans_opt.py).  Occurrence lists are
-    # tiny (the corpus count of one 13-gram); grouping is semantic —
-    # a physical repartition is NOT a grouping contract under AQE
-    # (see floodcap.block_verify_pairs).
-    removal_rows = (
-        occurrences.groupBy("h1", "h2")
-        .agg(F.collect_list(F.struct(
-            F.col(id_col).alias("d"), F.col("pos").alias("p")))
-            .alias("_occ"))
-        .filter(F.size("_occ") >= min_count)
-        .withColumn("_canon", F.array_min("_occ"))
-        .select(F.explode(F.expr(
-            "filter(_occ, s -> s != _canon)")).alias("_e"))
-        .select(F.col("_e.d").alias(id_col), F.col("_e.p").alias("pos"))
-    )
+    # one Spark window per n-gram key (h1, h2) sets the key's corpus
+    # count and canonical occurrence (min (doc, pos)) beside each
+    # occurrence; the NON-canonical ones of qualifying keys are
+    # removed.  One shuffle, and the window's per-key buffer spills
+    # where a collected occurrence list would have to fit in memory,
+    # so a 13-gram shared by every document stays bounded (the flood
+    # input of tests/test_dupspans_opt.py).  Grouping is semantic — a
+    # physical repartition is NOT a grouping contract under AQE (see
+    # floodcap.block_verify_pairs).
+    occ = F.struct(F.col(id_col).alias("d"), F.col("pos").alias("p"))
+    per_key = Window.partitionBy("h1", "h2")
+    removal_rows = occurrences.withColumn(
+        "_rm", (F.count(F.lit(1)).over(per_key) >= min_count)
+        & (occ != F.min(occ).over(per_key))
+    ).filter("_rm").select(id_col, "pos")
     removals = (
         removal_rows
         .groupBy(F.col(id_col).alias("_id"))

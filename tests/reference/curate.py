@@ -4,8 +4,9 @@ joins the survivors back to ``base`` on ``doc_id``, and each stage is
 persisted.  ``stats="exact"`` counts every stage with its own
 ``count()`` action, so the counts do not depend on observation
 metrics; the span operator's result is materialized by the caller's
-action.  The package's ``curate`` is pinned to this chain, rows and
-stage counts (tests/test_spark_pipeline.py)."""
+action; packing is the three-level tree of tests/reference/packing.py,
+joined back on ``doc_id``.  The package's ``curate`` is pinned to this
+chain, rows and stage counts (tests/test_spark_pipeline.py)."""
 
 from __future__ import annotations
 
@@ -17,9 +18,6 @@ from pdf_to_text_extraction_service_spark.operators.dupspans import (
 from pdf_to_text_extraction_service_spark.operators.neardup import (
     exact_dedup,
 )
-from pdf_to_text_extraction_service_spark.operators.packing import (
-    pack_sequences,
-)
 from pdf_to_text_extraction_service_spark.operators.paradedup import (
     paragraph_dedup,
 )
@@ -27,6 +25,7 @@ from pdf_to_text_extraction_service_spark.operators.textstats import (
     lang_id,
     quality_scores,
 )
+from tests.reference.packing import pack_sequences
 
 
 def curate(spark, docs, *, langs=None, min_words=20, min_quality=0.0,

@@ -203,25 +203,30 @@ def _old_remove_duplicated_spans(docs, n=13, min_count=2,
 
 
 def test_remove_duplicated_spans_matches_old_sql(spark):
+    """Two inputs: a shared header, and the flood — one
+    13-gram prefixed to every document, so one window key holds an
+    occurrence per document."""
     from pdf_to_text_extraction_service_spark.operators.dupspans import (
         remove_duplicated_spans,
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
         .select("doc_id", "text")
-    hdr = "shared boilerplate header repeated across many documents " \
-          "again and again and again and yet again for all"
-    built = docs.select(
-        "doc_id",
-        F.concat(F.lit(hdr + " "), F.col("text")).alias("text"))
-    edge = spark.createDataFrame(
-        [(4000, None), (4001, "short"),
-         (4002, hdr), (4003, hdr + " " + hdr)],
-        "doc_id long, text string")
-    built = built.unionByName(edge)
-    want = sorted(map(tuple,
-                      _old_remove_duplicated_spans(built).collect()))
-    got = sorted(map(tuple,
-                     remove_duplicated_spans(built).collect()))
-    assert got == want and len(got) > 500
-    assert any(r[3] > 0 for r in got)    # removal actually happened
+    for hdr in ("shared boilerplate header repeated across many "
+                "documents again and again and again and yet again for "
+                "all",
+                " ".join(f"flood{i}" for i in range(13))):
+        built = docs.select(
+            "doc_id",
+            F.concat(F.lit(hdr + " "), F.col("text")).alias("text"))
+        edge = spark.createDataFrame(
+            [(4000, None), (4001, "short"),
+             (4002, hdr), (4003, hdr + " " + hdr)],
+            "doc_id long, text string")
+        built = built.unionByName(edge)
+        want = sorted(map(tuple,
+                          _old_remove_duplicated_spans(built).collect()))
+        got = sorted(map(tuple,
+                         remove_duplicated_spans(built).collect()))
+        assert got == want and len(got) > 500, hdr
+        assert any(r[3] > 0 for r in got)    # removal actually happened

@@ -1,6 +1,7 @@
-"""Pair emitters, the components labelling over their pairs and the
+"""Pair emitters, the components labelling over their pairs, the
 two text-rewrite operators of the curation chain (span removal and
-paragraph dedup) must not depend on the physical plan: the same input
+paragraph dedup), sequence packing and semantic dedup must not depend
+on the physical plan: the same input
 gives the same rows under every shuffle-partition count, with AQE on
 or off, and with runtime broadcast joins on or off.  Disabling the
 broadcast threshold
@@ -59,7 +60,8 @@ def _assert_identical(results: dict) -> list:
 @pytest.mark.parametrize("name", ["dedup_simhash", "dedup_embedding_cosine",
                                   "dedup_image_dhash", "dedup_minhash_lsh",
                                   "neardup_components", "dedup_remove_spans",
-                                  "paragraph_dedup"])
+                                  "paragraph_dedup", "pack_sequences",
+                                  "semantic_dedup_embeddings"])
 def test_pairs_identical_across_shuffle_configs(spark, name):
     _assert_identical(_rows_per_config(spark, name))
 

@@ -49,17 +49,79 @@ def test_pack_sequences_matches_serial_cumsum(spark):
         pack_sequences,
     )
 
-    rows = [(i, "w " * ((i * 7) % 90 + 1)) for i in range(500)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
     budget = 128
-    got = {r["doc_id"]: (r["seq_id"], r["seq_offset"], r["n_tokens"])
-           for r in pack_sequences(docs, budget=budget,
-                                   block=32).collect()}
-    cum = 0
-    for i, text in rows:
-        n = len(text.split(" "))
-        assert got[i] == (cum // budget, cum % budget, n), i
-        cum += n
+    for rows in ([(i, "w " * ((i * 7) % 90 + 1)) for i in range(500)],
+                 []):
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        out = pack_sequences(docs, budget=budget)
+        assert out.columns == ["doc_id", "text", "n_tokens", "seq_id",
+                               "seq_offset"]
+        got = {r["doc_id"]: (r["seq_id"], r["seq_offset"], r["n_tokens"],
+                             r["text"])
+               for r in out.collect()}
+        assert len(got) == len(rows)
+        cum = 0
+        for i, text in rows:
+            n = len(text.split(" "))
+            assert got[i] == (cum // budget, cum % budget, n, text), i
+            cum += n
+
+
+def _global_window_rows(df) -> list:
+    """Rows read by each partition-less window of ``df``'s executed
+    plan (``df`` has run), from its input Exchange's metrics."""
+    def seq(xs):
+        return [xs.apply(i) for i in range(xs.size())]
+
+    reads = []
+
+    def visit(node):
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            return visit(node.executedPlan())
+        if kind.endswith("QueryStageExec"):
+            return visit(node.plan())
+        if kind == "WindowExec" and node.partitionSpec().isEmpty():
+            below = node.child()
+            while not below.getClass().getSimpleName() \
+                    .endswith("QueryStageExec"):
+                below = below.child()
+            reads.append(below.plan().metrics().apply("recordsRead")
+                         .value())
+        for child in seq(node.children()):
+            visit(child)
+
+    visit(df._jdf.queryExecution().executedPlan())
+    return reads
+
+
+def test_pack_sequences_hashed_ids_over_the_long_range(spark):
+    """2^17 xxhash64 ids, as curate packs them, spread over the whole
+    long range: rows equal a serial cumsum in id order, and the one
+    partition-less window reads one row per id block, at most
+    2^16 + 1 of them, where one row per id would be 2^17."""
+    import numpy as np
+
+    from pdf_to_text_extraction_service_spark.operators.packing import (
+        BLOCKS,
+        pack_sequences,
+    )
+
+    budget = 1000
+    docs = spark.range(1 << 17).select(
+        F.xxhash64("id").alias("doc_id"),
+        ((F.col("id") * 7) % 900 + 1).alias("n"))
+    out = pack_sequences(docs, budget=budget, tokens_col="n")
+    got = np.array(sorted(map(tuple, out.collect())), dtype=np.int64)
+    ids, n = got[:, 0], got[:, 1]
+    assert len(np.unique(ids)) == 1 << 17
+    assert ids[0] < -(1 << 62) and ids[-1] > 1 << 62
+    before = np.cumsum(n) - n
+    assert (got[:, 2] == n).all()
+    assert (got[:, 3] == before // budget).all()
+    assert (got[:, 4] == before % budget).all()
+    reads = _global_window_rows(out)
+    assert len(reads) == 1 and 0 < reads[0] <= BLOCKS + 1, reads
 
 
 def test_pack_sequences_partitioning_invariant(spark):
@@ -72,11 +134,9 @@ def test_pack_sequences_partitioning_invariant(spark):
         "doc_id long, text string",
     )
     a = sorted(tuple(r) for r in
-               pack_sequences(docs.repartition(1), budget=64,
-                              block=16).collect())
+               pack_sequences(docs.repartition(1), budget=64).collect())
     b = sorted(tuple(r) for r in
-               pack_sequences(docs.repartition(32), budget=64,
-                              block=16).collect())
+               pack_sequences(docs.repartition(32), budget=64).collect())
     assert a == b  # integer prefix sums — bit-exact at any parallelism
 
 

@@ -430,15 +430,19 @@ ROWS: dict[str, Row] = {
     # documents' other columns, behind the width guard: two identical
     # guard Exchanges before the run, one and a ReusedExchange after it
     # (test_span_removal_text_crosses_guard_once); the rewrite is a
-    # scalar UDF, so the other columns stay in the JVM there
+    # scalar UDF, so the other columns stay in the JVM there.  Each
+    # occurrence crosses the (h1, h2) window's Exchange as its
+    # (doc, pos) struct ``_w0``; no per-key occurrence list is built
     "remove_duplicated_spans": Row(
         lambda s, t: dupspans.remove_duplicated_spans(_docs(s)),
         {f"{_GUARD} [*_t, lang, source]": 2,
-         "hashpartitioning(h1, h2, 4) [buf]": 1,
+         "hashpartitioning(h1, h2, 4) [_w0]": 1,
          "hashpartitioning(doc_id, 4) [buf]": 1,
          "broadcast(_id) [rm_pos]": 1},
         {f"MapInArrow(_id, _t, lang, source, n_chars) <- {_GUARD}": 1,
-         f"ArrowEvalPython[250](_t, rm_pos) <- {_GUARD}": 1}),
+         f"ArrowEvalPython[250](_t, rm_pos) <- {_GUARD}": 1},
+        requires=("windowspecdefinition(h1, h2,",),
+        forbids=("collect_list",)),
     # the benchmark's n-grams broadcast; its own pass stays narrow
     "benchmark_overlap": Row(
         lambda s, t: decontam.benchmark_overlap(
@@ -474,17 +478,19 @@ ROWS: dict[str, Row] = {
          "broadcast(_bldom) [_bldom]": 1},
         requires=("BroadcastHashJoin", "LeftAnti")),
     "drop_noindex": Row(lambda s, t: robots.drop_noindex(_pages(s)), {}),
-    # per-row cumsums are windows partitioned by block; the one
-    # partition-less window runs over superblock totals
+    # one min/max aggregate's width broadcasts to both reads of the
+    # input (counted twice before the run); per-row cumsums are a
+    # window partitioned by block, which moves the whole row; the one
+    # partition-less window orders the per-block totals
     "pack_sequences": Row(
         lambda s, t: packing.pack_sequences(_docs(s)),
-        {"hashpartitioning(_blk, 4) []": 1,
-         "hashpartitioning(_sblk, _blk, 4) []": 2,
-         "hashpartitioning(_sblk, 4) []": 2, "SinglePartition []": 1,
-         "broadcast(_blk) []": 1, "broadcast(_sblk) []": 1},
-        requires=("windowspecdefinition(_blk, doc_id ASC",
-                  "windowspecdefinition(_sblk ASC"),
-        forbids=("windowspecdefinition(doc_id",)),
+        {"SinglePartition []": 3, "broadcast() []": 2,
+         "hashpartitioning(_blk, 4) [*text, lang, source]": 1,
+         "hashpartitioning(_blk, 4) []": 1, "broadcast(_blk) []": 1},
+        requires=("partial_max(doc_id)", "partial_min(doc_id)",
+                  "windowspecdefinition(_blk, doc_id ASC",
+                  "windowspecdefinition(_blk ASC"),
+        forbids=("windowspecdefinition(doc_id", "_sblk")),
     "unigram_quality": Row(
         lambda s, t: lmproxy.unigram_quality(_docs(s)),
         {"hashpartitioning(tok, 4) [*tok]": 2, "broadcast(tok) [*tok]": 1,

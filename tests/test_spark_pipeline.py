@@ -469,26 +469,44 @@ def _curate_corpus(spark):
     return docs, bench
 
 
+def _curate_embeddings(spark, docs):
+    """The sf0.001 embeddings keyed to each document's url
+    (``vec_id`` = ``doc_id``), except that every seventh document takes
+    its successor's vector: a semantic copy for the stage to remove."""
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    doc_id = F.regexp_extract("url", r"/doc(\d+)$", 1).cast("long")
+    return docs.select(
+        "url", F.when(doc_id % 7 == 0, doc_id + 1).otherwise(doc_id)
+        .alias("vec_id"),
+    ).join(emb, "vec_id").select("url", "embedding")
+
+
 def test_curate_observe_stats_equal_exact(spark):
     """curate() equals the stage-by-stage chain of
     tests/reference/curate.py, which filters every stage through a
     join back to its documents and counts each with its own action:
     same stage counts (the observations resolved by the one
     checkpoint), including the packed-sequences count, and the same
-    rows, in the language + benchmark configuration and in bench.py's
-    shape."""
+    rows, in the language + benchmark configuration, in bench.py's
+    shape and with embeddings.  The reference packs with the
+    three-level tree of tests/reference/packing.py, so the rows pin
+    the package's packing on curate's hashed ids."""
     from jobs.curate import curate
     from tests.reference.curate import curate as curate_reference
 
     docs, bench = _curate_corpus(spark)
     for kw in (dict(langs=["en", "de"], min_words=5, seq_len=256,
                     benchmark=bench),
-               dict(seq_len=1024)):
+               dict(seq_len=1024),
+               dict(min_words=5, seq_len=512,
+                    embeddings=_curate_embeddings(spark, docs))):
         out, st = curate(spark, docs, stats=True, **kw)
         out_ref, st_ref = curate_reference(spark, docs, stats="exact",
                                            **kw)
         assert st == st_ref, kw
         assert st["sequences"] >= 1
+        if "embeddings" in kw:
+            assert st["semantic_dedup"] < st["exact_dedup"]
         assert sorted(map(tuple, out.collect())) == \
             sorted(map(tuple, out_ref.collect())), kw
         out_ref.unpersist()
@@ -497,7 +515,7 @@ def test_curate_observe_stats_equal_exact(spark):
 def test_curate_runs_one_action(spark, spark_jobs, monkeypatch):
     """No Spark job runs before curate()'s final checkpoint, which is
     its only one (no operator checkpoints on its own), and the whole
-    call stays within 30 jobs: each of them is a query stage of that
+    call stays within 29 jobs: each of them is a query stage of that
     one action (shuffle map stages, broadcasts, the stage caches)."""
     from jobs.curate import curate
 
@@ -516,5 +534,5 @@ def test_curate_runs_one_action(spark, spark_jobs, monkeypatch):
     n, (out, st) = spark_jobs(
         lambda: curate(spark, docs, seq_len=1024, stats=True))
     assert jobs_at_checkpoint == [before]
-    assert n <= 30
+    assert n <= 29
     assert st["span_removal"] == out.count()
