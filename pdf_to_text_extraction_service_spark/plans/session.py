@@ -13,6 +13,21 @@ Tunings map to the reference's hand-rolled cost controls (SURVEY.md §4):
   fails with "Cannot reserve additional contiguous bytes" under
   concurrent shuffle memory pressure (observed on a 1M-page run of
   jobs/extract.py); 512 rows bounds each column batch to a few MiB.
+- Python workers run ``pyspark_graft_worker`` (the module beside the
+  package, and at the root of ``engine.zip``). On every task
+  ``pyspark/worker_util.setup_spark_files`` calls
+  ``importlib.invalidate_caches()``; on CPython 3.11 that makes every
+  ``zipimporter`` on the worker's path re-read its archive's central
+  directory (``pyspark.zip``, the py4j zip, the spark-core jar). On a
+  4-core box, ``local[4]``, that put 0.18-0.24 s between a task's launch
+  and its function, and a trivial 4-task ``mapInArrow`` stage spanned
+  0.30 s with the stock worker against 0.10 s with this one
+  (tools/py_stage_cost.py). The module makes that re-read a no-op, on the
+  assumption that no archive already on the worker's path changes while
+  the worker lives. The directory (or zip) that holds it is prepended to
+  the workers' ``PYTHONPATH``, ahead of any path the launcher set with
+  ``spark.executorEnv.PYTHONPATH``, because the daemon imports it before
+  any task puts ``--py-files`` on the path.
 """
 
 from __future__ import annotations
@@ -22,6 +37,10 @@ import os
 from pyspark.sql import SparkSession
 
 ARROW_MAX_RECORDS_PER_BATCH = 256
+WORKER_MODULE = "pyspark_graft_worker"
+# The directory beside the package, or the zip that holds it.
+_WORKER_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 
 def build_session(app_name: str = "webextract",
@@ -48,8 +67,18 @@ def build_session(app_name: str = "webextract",
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.worker.module", WORKER_MODULE)
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # Every Python function ships ``sc.environment`` (filled from
+    # ``spark.executorEnv.*``) to its workers; prepending keeps any
+    # worker path the launcher set. A running context already has it, and
+    # a changed environment would start a second worker daemon.
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _WORKER_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_WORKER_ROOT, *paths])
+    return spark
 
 
 def tune_arrow_batch(spark: SparkSession, pages, target_mb: int = 4,

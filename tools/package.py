@@ -1,4 +1,6 @@
-"""Build engine.zip for spark-submit --py-files.
+"""Build engine.zip for spark-submit --py-files: the package plus the
+Python worker module its sessions run (pyspark_graft_worker.py, at the
+zip's root).
 
     python tools/package.py [--out engine.zip]
     spark-submit --py-files engine.zip jobs/extract.py ...
@@ -11,6 +13,7 @@ import os
 import zipfile
 
 PKG = "pdf_to_text_extraction_service_spark"
+WORKER = "pyspark_graft_worker.py"
 
 
 def main() -> None:
@@ -26,6 +29,7 @@ def main() -> None:
                     continue
                 full = os.path.join(dirpath, name)
                 zf.write(full, os.path.relpath(full, root))
+        zf.write(os.path.join(root, WORKER), WORKER)
     print(f"wrote {args.out}")
 
 
