@@ -12,16 +12,21 @@ same bucket, per-bucket dedup equals global dedup — so buckets are
 independently processable, committable and retryable.
 
 Buckets are processed in WAVES, each one extraction write plus one
-manifest append:
+manifest file committed from the driver:
   filter pages to its buckets → extract_pipeline → write
-  output/bucket=K dirs (idempotent dynamic overwrite) → append one
+  output/bucket=K dirs (idempotent dynamic overwrite) → commit one
   manifest row per bucket of the wave, with row/ok counts + failure-
   code histogram.
 The manifest rows are built on the driver from counts observed on
 the wave's own write (``DataFrame.observe``): nothing reads the
 output back, and a bucket the wave wrote no rows for gets its
-(0, 0, NULL) row from the same counts.  The rows reach the manifest
-as an Arrow table, which starts no Python worker.
+(0, 0, NULL) row from the same counts.  The driver serializes the
+rows with ``pyarrow.parquet`` and writes them through the session's
+Hadoop ``FileSystem`` under a hidden ``_tmp-part-<uuid>.parquet``
+name, then renames the file to ``part-<uuid>.parquet``
+(``commit_manifest``).  Spark's file listing skips ``_``-prefixed
+names, so a reader never sees a torn file, and a commit runs no Spark
+job.
 Resume = left-anti of bucket ids against manifest rows for the same
 source snapshot.
 
@@ -37,8 +42,10 @@ on url independently of the bucket hash (operators/salt.py).
 from __future__ import annotations
 
 import datetime
+import uuid
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -60,10 +67,23 @@ def bucket_col(buckets: int, key: str = "url"):
     return F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)).cast("int")
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """``path`` as a Hadoop ``Path``, with the session's ``FileSystem``
+    for it."""
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(sc._jsc.hadoopConfiguration()), p
+
+
 def completed_buckets(spark: SparkSession, manifest_path: str,
                       source_snapshot: str) -> set[int]:
     from pyspark.errors import AnalysisException
 
+    fs, path = _hadoop_path(spark, manifest_path)
+    if not fs.exists(path):
+        # a fresh run: nothing committed, and no Spark read (whose
+        # PATH_NOT_FOUND error carries a whole Java stack over py4j)
+        return set()
     try:
         mf = spark.read.parquet(manifest_path)
         rows = (
@@ -71,13 +91,33 @@ def completed_buckets(spark: SparkSession, manifest_path: str,
             .select("bucket").distinct().collect()
         )
     except AnalysisException:
-        # missing path or a foreign parquet schema at the path: treat
-        # as "nothing committed" and let the run repopulate. Transient
-        # IO failures raise other exception types and PROPAGATE — a
-        # throttled read must not silently reset resume state and
-        # re-extract the whole corpus.
+        # a foreign parquet schema at the path, or no committed file:
+        # treat as "nothing committed" and let the run repopulate.
+        # Transient IO failures raise other exception types and
+        # PROPAGATE — a throttled read must not silently reset resume
+        # state and re-extract the whole corpus.
         return set()
     return {r["bucket"] for r in rows}
+
+
+def commit_manifest(spark: SparkSession, manifest_path: str,
+                    table: pa.Table) -> None:
+    """Add ``table`` to the manifest as one parquet file, from the
+    driver: written whole under a hidden ``_tmp-`` name, then renamed
+    into view, so a killed run leaves no partial file a reader lists."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    fs, root = _hadoop_path(spark, manifest_path)
+    jvm = spark.sparkContext._jvm
+    name = f"part-{uuid.uuid4()}.parquet"
+    tmp = jvm.org.apache.hadoop.fs.Path(root, f"_tmp-{name}")
+    out = fs.create(tmp, False)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, jvm.org.apache.hadoop.fs.Path(root, name)):
+        raise OSError(f"manifest commit: cannot rename {tmp} to {name}")
 
 
 def run_resumable_extract(
@@ -113,28 +153,35 @@ def run_resumable_extract(
 
     for wave_idx, wave in enumerate(waves):
         started = datetime.datetime.now(datetime.timezone.utc)
-        wave_pages = pages_b.filter(F.col("_bucket").isin(wave))
-        seen = Observation()
-        (
-            extract_pipeline(
-                wave_pages.drop("_bucket"), dedup=dedup,
-                keep_pages_col=False)
-            .withColumn("bucket", bucket_col(buckets))
-            .observe(seen, *_wave_metrics(wave))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(output_path)
-        )
-        spark.createDataFrame(
-            _manifest_table(seen.get, wave, source_snapshot, started),
-            MANIFEST_SCHEMA,
-        ).write.mode("append").parquet(manifest_path)
+        counts = write_wave(pages_b, wave, buckets, output_path, dedup)
+        commit_manifest(spark, manifest_path, _manifest_table(
+            counts, wave, source_snapshot, started))
 
         if fail_after_waves is not None and wave_idx + 1 >= fail_after_waves:
             raise RuntimeError(
                 f"simulated failure after wave {wave_idx + 1}"
             )
+
+
+def write_wave(pages_b: DataFrame, wave: list[int], buckets: int,
+               output_path: str, dedup: bool = True) -> dict:
+    """Extract the pages of ``wave``'s buckets (``pages_b`` carries
+    ``_bucket``) into ``output_path/bucket=K``, overwriting those
+    buckets, in one write. Returns the counts observed on the write
+    (``_wave_metrics``)."""
+    seen = Observation()
+    (
+        extract_pipeline(
+            pages_b.filter(F.col("_bucket").isin(wave)).drop("_bucket"),
+            dedup=dedup, keep_pages_col=False)
+        .withColumn("bucket", bucket_col(buckets))
+        .observe(seen, *_wave_metrics(wave))
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(output_path)
+    )
+    return seen.get
 
 
 def _wave_metrics(wave: list[int]) -> list:

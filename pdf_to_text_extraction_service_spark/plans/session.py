@@ -95,20 +95,26 @@ def tune_arrow_batch(spark: SparkSession, pages, target_mb: int = 4,
     to [lo, hi]. Returns the chosen row count. Call per input table
     before an extraction job (jobs/extract.py does).
 
+    The sample is one Spark job: the first ``sample_rows`` lengths
+    come back to the driver as Arrow (a limit at the plan's root is a
+    collect-limit, one job), and pyarrow averages the non-NULL ones, as
+    SQL ``avg`` does. A limit feeding a SQL aggregate ran two jobs.
+
     The 4 MB default is deliberate: paired scaling runs showed 32 MB
     batches cost ~8% scaling efficiency at 4x parallelism (8 workers
     x large concurrent Arrow batch footprints contend on memory
     bandwidth that 2 workers do not), while 4 MB keeps the per-batch
     Python overhead amortized for thin pages without that pressure."""
+    import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
-    row = (
+    lengths = (
         pages.select(F.length("html").alias("n"))
         .limit(sample_rows)
-        .agg(F.avg("n").alias("avg"))
-        .first()
+        .toArrow()
+        .column("n")
     )
-    avg = float(row["avg"]) if row and row["avg"] is not None else None
+    avg = pc.mean(lengths).as_py()
     if not avg or avg <= 0:
         rows = ARROW_MAX_RECORDS_PER_BATCH
     else:

@@ -263,15 +263,98 @@ def test_all_filtered_input_commits_zero_rows(spark, corpus_df, tmp_path):
 
 def test_wave_commits_in_one_write(spark, corpus_df, tmp_path, spark_jobs):
     """A wave is its extraction write (two shuffle map stages and the
-    write, one job each under AQE) plus the manifest append: the
-    manifest counts ride on the write through ``observe()``, so no job
-    reads the output back or re-aggregates it."""
+    write, one job each under AQE) plus a manifest file committed from
+    the driver, which runs no job: the manifest counts ride on the
+    write through ``observe()``, so no job reads the output back or
+    re-aggregates it."""
     waves = 2
     n, _ = spark_jobs(lambda: run_resumable_extract(
         spark, corpus_df, str(tmp_path / "out"), str(tmp_path / "mf"),
         buckets=4, wave_count=waves))
-    assert n <= 4 * waves
+    assert n <= 3 * waves
     assert len(spark.read.parquet(str(tmp_path / "mf")).collect()) == 4
+
+
+def _tiny_pages(spark):
+    return spark.createDataFrame(
+        [(f"https://x.test/{i}.html", bytearray(b"<p>page %d</p>" % i))
+         for i in range(6)] + [("https://x.test/null.html", None)],
+        "url string, html binary",
+    ).withColumn("warc_ts", F.lit("2026-01-01").cast("timestamp"))
+
+
+def test_fresh_manifest_path_runs_no_job(spark, tmp_path, spark_jobs):
+    """A manifest path that does not exist yet is answered by the
+    Hadoop FileSystem: no Spark read, no job, no Java exception."""
+    n, done = spark_jobs(lambda: completed_buckets(
+        spark, str(tmp_path / "no-manifest"), "pages-b4"))
+    assert (n, done) == (0, set())
+
+
+def test_manifest_reads_spark_and_driver_commits(spark, tmp_path):
+    """A manifest holding a row written by a Spark job and rows
+    committed from the driver reads back with MANIFEST_SCHEMA's types,
+    file by file and as a whole, and a resume skips the buckets of
+    both."""
+    import datetime
+    import os
+
+    out, mf = str(tmp_path / "out"), str(tmp_path / "mf")
+    t0 = datetime.datetime(2026, 1, 1, 12, 0, 0)
+    spark.createDataFrame(
+        [("pages-b2", 0, 3, 2, {"html": 1}, t0, t0)], manifest.MANIFEST_SCHEMA,
+    ).coalesce(1).write.parquet(mf)
+    pages = _tiny_pages(spark)
+
+    def written():
+        return sorted(d for d in os.listdir(out) if d.startswith("bucket="))
+
+    run_resumable_extract(spark, pages, out, mf, buckets=2, wave_count=1)
+    assert written() == ["bucket=1"]
+
+    want = [(f.name, f.dataType.simpleString()) for f in
+            spark.createDataFrame([], manifest.MANIFEST_SCHEMA).schema]
+    parts = sorted(f for f in os.listdir(mf) if f.startswith("part-"))
+    assert len(parts) == 2
+    for path in [mf] + [os.path.join(mf, f) for f in parts]:
+        got = spark.read.parquet(path).schema
+        assert [(f.name, f.dataType.simpleString()) for f in got] == want
+
+    rows = {r["bucket"]: r for r in spark.read.parquet(mf).collect()}
+    assert sorted(rows) == [0, 1]
+    assert (rows[0]["row_count"], rows[0]["failure_codes"],
+            rows[0]["started_at"]) == (3, {"html": 1}, t0)
+    in_b1 = pages.filter(bucket_col(2) == 1).count()
+    assert rows[1]["row_count"] == in_b1
+    assert rows[1]["started_at"] <= rows[1]["finished_at"]
+    assert completed_buckets(spark, mf, "pages-b2") == {0, 1}
+
+    run_resumable_extract(spark, pages, out, mf, buckets=2, wave_count=1)
+    assert len(spark.read.parquet(mf).collect()) == 2
+    assert written() == ["bucket=1"]
+
+
+def test_torn_manifest_commit_is_ignored(spark, tmp_path):
+    """A ``_tmp-`` file left by a commit killed before its rename is
+    invisible: alone it reads as nothing committed, beside committed
+    files it changes nothing, and the resume finishes every bucket."""
+    import os
+
+    out, mf = str(tmp_path / "out"), str(tmp_path / "mf")
+    os.makedirs(mf)
+    with open(os.path.join(mf, "_tmp-part-torn.parquet"), "wb") as f:
+        f.write(b"PAR1 not a parquet file")
+    assert completed_buckets(spark, mf, "pages-b2") == set()
+
+    pages = _tiny_pages(spark)
+    run_resumable_extract(spark, pages, out, mf, buckets=2, wave_count=2)
+    assert completed_buckets(spark, mf, "pages-b2") == {0, 1}
+    rows = spark.read.parquet(mf).collect()
+    assert sorted(r["bucket"] for r in rows) == [0, 1]
+    assert sum(r["row_count"] for r in rows) == pages.count()
+
+    run_resumable_extract(spark, pages, out, mf, buckets=2, wave_count=2)
+    assert len(spark.read.parquet(mf).collect()) == 2
 
 
 def test_wave_raises_on_format_outside_histogram(spark, tmp_path,
@@ -345,9 +428,11 @@ def test_iceberg_roundtrip_when_jar_present(spark, corpus_df, tmp_path):
     assert io.read("cc.db.pages_roundtrip").count() == corpus_df.count()
 
 
-def test_tune_arrow_batch_sizing(spark, tmp_path):
+def test_tune_arrow_batch_sizing(spark, tmp_path, spark_jobs):
     """Payload-aware Arrow batching: thin pages get big batches, fat
-    payloads clamp low; empty/missing sampling falls back safely."""
+    payloads clamp low; empty/missing sampling falls back safely.
+    NULL payloads do not count toward the mean length. Each call is
+    one Spark job."""
     from pyspark.sql import functions as F
 
     from pdf_to_text_extraction_service_spark.plans.session import (
@@ -355,19 +440,34 @@ def test_tune_arrow_batch_sizing(spark, tmp_path):
         tune_arrow_batch,
     )
 
+    def tune(pages, **kw):
+        n, rows = spark_jobs(lambda: tune_arrow_batch(spark, pages, **kw))
+        assert n == 1
+        return rows
+
     thin = spark.range(500).select(
         F.encode(F.lit("x" * 1024), "UTF-8").alias("html"))
-    rows = tune_arrow_batch(spark, thin, target_mb=8)
+    rows = tune(thin, target_mb=8)
     assert rows == 8192 or 4000 <= rows <= 8192  # 8MB/1KB clamped hi
 
     fat = spark.range(8).select(
         F.encode(F.repeat(F.lit("y"), 4 * 1024 * 1024), "UTF-8")
         .alias("html"))
-    rows = tune_arrow_batch(spark, fat, target_mb=8)
+    rows = tune(fat, target_mb=8)
     assert rows == 64  # 8MB target / 4MB rows = 2 -> clamped to lo
 
+    # half the rows NULL: the mean is over the 1 KB rows (4MB / 1KB),
+    # where counting NULL as 0 would halve it and clamp to hi
+    holey = spark.range(500).select(
+        F.when(F.col("id") % 2 == 0, F.encode(F.lit("x" * 1024), "UTF-8"))
+        .alias("html"))
+    assert tune(holey, target_mb=4) == 4096
+
+    all_null = spark.range(10).select(F.lit(None).cast("binary").alias("html"))
+    assert tune(all_null) == ARROW_MAX_RECORDS_PER_BATCH
+
     empty = spark.range(0).select(F.lit(b"").alias("html"))
-    rows = tune_arrow_batch(spark, empty)
+    rows = tune(empty)
     assert rows == ARROW_MAX_RECORDS_PER_BATCH
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
 
