@@ -12,6 +12,9 @@ lineage + metrics"). Verified at 1M pages: killed mid-run with 2/16
 buckets committed, the rerun completed exactly the missing 14 and the
 output held 1M distinct urls.
 
+Arrow batches into the extraction kernel are sized by the session
+(plans/session.py): at most 8,192 rows or 4 MiB each.
+
 NOTE --driver-memory must be passed on the spark-submit command line
 (local mode: driver == executor heap; the session builder cannot
 raise it after JVM launch). With the default 1g heap, concurrent
@@ -35,10 +38,7 @@ if _REPO_ROOT not in sys.path:
 from pdf_to_text_extraction_service_spark.operators.manifest import (
     run_resumable_extract,
 )
-from pdf_to_text_extraction_service_spark.plans.session import (
-    build_session,
-    tune_arrow_batch,
-)
+from pdf_to_text_extraction_service_spark.plans.session import build_session
 
 
 def _warc_fingerprint(spark, path_glob: str) -> str:
@@ -112,7 +112,6 @@ def main() -> None:
     ap.add_argument("--manifest", required=True)
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--no-dedup", action="store_true")
-    ap.add_argument("--arrow-target-mb", type=int, default=4)
     ap.add_argument("--input-format", choices=("parquet", "warc"),
                     default="parquet",
                     help="'warc' reads raw (gzipped) WARC segment "
@@ -152,9 +151,6 @@ def main() -> None:
         snapshot += "-noindex"
     if args.blocklist:
         snapshot += f"-bl{os.path.basename(args.blocklist.rstrip('/'))}"
-    rows = tune_arrow_batch(spark, pages, target_mb=args.arrow_target_mb)
-    print(f"[extract] arrow batch tuned to {rows} rows "
-          f"(~{args.arrow_target_mb} MB/batch)")
     run_resumable_extract(
         spark, pages,
         output_path=args.output,

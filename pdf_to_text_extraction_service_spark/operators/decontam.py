@@ -103,7 +103,7 @@ def benchmark_overlap(docs: DataFrame, bench: DataFrame, n: int = 13,
     any-hit flag. The benchmark side is broadcast (see module
     docstring), so the contamination join never shuffles the corpus.
 
-    Each side is one rebatched n-gram pass (:func:`ngram_rows` in
+    Each side is one n-gram text-row pass (:func:`ngram_rows` in
     distinct mode through functions/textrows.map_text_rows); results
     are pinned to the JVM expression shape by
     tests/test_decontam_opt.py.  The broadcast LEFT join against the

@@ -48,8 +48,8 @@ def _windows(docs: DataFrame, n: int, id_col: str, text_col: str,
              distinct: bool, with_pos: bool,
              keep: list = ()) -> DataFrame:
     """``(id, [pos,] h1, h2)`` for every window occurrence, or for each
-    document's distinct windows when ``distinct`` — one rebatched
-    n-gram pass (decontam.ngram_rows through
+    document's distinct windows when ``distinct`` — one n-gram
+    text-row pass (decontam.ngram_rows through
     functions/textrows.map_text_rows) behind the width guard.  The
     pass reads the ``keep`` columns of the guarded relation too, and
     ignores them: that keeps the relation whole, so a consumer of its

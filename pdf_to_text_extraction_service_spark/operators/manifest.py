@@ -77,26 +77,18 @@ def _hadoop_path(spark: SparkSession, path: str):
 
 def completed_buckets(spark: SparkSession, manifest_path: str,
                       source_snapshot: str) -> set[int]:
-    from pyspark.errors import AnalysisException
-
     fs, path = _hadoop_path(spark, manifest_path)
     if not fs.exists(path):
         # a fresh run: nothing committed, and no Spark read (whose
         # PATH_NOT_FOUND error carries a whole Java stack over py4j)
         return set()
-    try:
-        mf = spark.read.parquet(manifest_path)
-        rows = (
-            mf.filter(F.col("source_snapshot") == source_snapshot)
-            .select("bucket").distinct().collect()
-        )
-    except AnalysisException:
-        # a foreign parquet schema at the path, or no committed file:
-        # treat as "nothing committed" and let the run repopulate.
-        # Transient IO failures raise other exception types and
-        # PROPAGATE — a throttled read must not silently reset resume
-        # state and re-extract the whole corpus.
-        return set()
+    # one job: the known schema skips parquet schema inference, and the
+    # few bucket ids are de-duplicated here rather than by a shuffle
+    rows = (
+        spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
+        .filter(F.col("source_snapshot") == source_snapshot)
+        .select("bucket").collect()
+    )
     return {r["bucket"] for r in rows}
 
 

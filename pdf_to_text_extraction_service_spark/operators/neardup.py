@@ -3,7 +3,7 @@
 Beyond the reference's url-keyed dedup, the operations a 100 TB
 training-data pipeline needs (prompt mandate): exact content dedup,
 MinHash+LSH near-dup, SimHash, and n-gram Jaccard. Shingling,
-hashing and signatures run as one rebatched Arrow pass per operator
+hashing and signatures run as one Arrow text-row pass per operator
 (numpy kernels, bit-identical to the JVM expression chains in
 tests/reference/neardup.py that pin them); the only shuffles are the
 width guard (operators/salt.widen_for_python) and the grouping/join
@@ -296,7 +296,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     # shingle text (set-identical Jaccard up to xxhash collisions at
     # ~2^-31 per differing-shingle pair — and the threshold filter is
     # the verified property anyway).  Shingling + hashing + the
-    # MinHash signature run in ONE rebatched text-row pass
+    # MinHash signature run in ONE text-row pass
     # (minhash_prep, pinned to the JVM chain in
     # tests/reference/neardup.py) behind the width guard; every text,
     # even NULL, yields at least one shingle id, exactly as the JVM
@@ -395,8 +395,8 @@ def simhash64_text_udf():
       (consecutive spaces yield empty tokens; trailing empties kept);
     - per token, per (base, mult, add) in SIM_MIX:
       ``(fold(acc*base + ord(c)) % P * mult + add) % P`` — integer
-      modular arithmetic is associativity-exact, so the padded
-      column-wise fold gives identical values;
+      modular arithmetic is associativity-exact, so the position-wise
+      fold over all tokens of a batch at once gives identical values;
     - bit b of the signature reads bit (b % 31) of hash (b // 31);
       token contributions sum (+1/-1); count >= 0 sets the bit
       (integer sums — summation order free);
@@ -404,73 +404,52 @@ def simhash64_text_udf():
       ``split('', ' ')``;
     - NULL text -> -1 (every bit set), where the JVM expression
       gives NULL.
+
+    The batch's texts are joined by single spaces, so the tokens of
+    the joined text are every row's tokens in order, and the fold runs
+    over its code points with the tokens sorted longest first: at
+    position ``pos`` only the tokens longer than ``pos``, a prefix of
+    that order, take a step.  Memory is O(characters in the batch),
+    whatever the longest token.
     """
     from pyspark.sql.functions import arrow_udf
 
     bases = np.array([m[0] for m in SIM_MIX], dtype=np.int64)[:, None]
     mults = np.array([m[1] for m in SIM_MIX], dtype=np.int64)[:, None]
     adds = np.array([m[2] for m in SIM_MIX], dtype=np.int64)[:, None]
-    bits = np.arange(64)
-    idx = bits // 31
-    sh = bits % 31
-    weights = (np.uint64(1) << bits.astype(np.uint64))
 
     @arrow_udf("bigint")
     def _sig(texts: pa.Array) -> pa.Array:
-        out = np.empty(len(texts), dtype=np.int64)
-        cps, tok_lens, row_ntok = [], [], []
-        for r, t in enumerate(texts.to_pylist()):
-            if t is None:
-                row_ntok.append(-1)   # sentinel: null text
-                continue
-            cp = np.frombuffer(t.encode("utf-32-le"),
-                               dtype=np.uint32).astype(np.int64)
-            cuts = np.nonzero(cp == 32)[0]
-            starts = np.concatenate(([0], cuts + 1))
-            ends = np.concatenate((cuts, [len(cp)]))
-            cps.append(cp)
-            tok_lens.append(ends - starts)
-            row_ntok.append(len(starts))
-        if cps:
-            # flatten all tokens of the batch minus the spaces
-            flat = np.concatenate(
-                [cp[cp != 32] for cp in cps]) if cps else \
-                np.empty(0, np.int64)
-            lens = np.concatenate(tok_lens)
-            ntok = len(lens)
-            lmax = int(lens.max()) if ntok else 0
-            padded = np.full((ntok, lmax), -1, dtype=np.int64)
-            if ntok and lmax:
-                row_i = np.repeat(np.arange(ntok), lens)
-                col_i = (np.arange(len(flat))
-                         - np.repeat(np.cumsum(lens) - lens, lens))
-                padded[row_i, col_i] = flat
-            # column-wise modular fold == per-char left fold
-            acc = np.zeros((3, ntok), dtype=np.int64)
-            for pos in range(lmax):
-                col = padded[:, pos]
-                valid = col >= 0
-                if not valid.any():
-                    continue
-                acc[:, valid] = (acc[:, valid] * bases
-                                 + col[valid]) % SIM_PRIME
-            h = (acc * mults + adds) % SIM_PRIME       # (3, ntok)
-            b = (h[idx, :] >> sh[:, None]) & 1          # (64, ntok)
-            contrib = 2 * b - 1
-            # per-row integer sums over the row's token segment
-            seg = np.concatenate(
-                ([0], np.cumsum([n for n in row_ntok if n >= 0])))[:-1]
-            counts = np.add.reduceat(contrib, seg, axis=1) \
-                if ntok else np.empty((64, 0), np.int64)
-        ri = 0
-        for r, n in enumerate(row_ntok):
-            if n < 0:
-                out[r] = -1           # null text: every bit set
-                continue
-            c = counts[:, ri]
-            ri += 1
-            sig = (weights[c >= 0]).sum(dtype=np.uint64)
-            out[r] = np.int64(sig.astype(np.int64))
+        strs = texts.to_pylist()
+        out = np.full(len(strs), -1, dtype=np.int64)  # NULL: every bit
+        rows = [r for r, t in enumerate(strs) if t is not None]
+        if not rows:
+            return pa.array(out)
+        valid = [strs[r] for r in rows]
+        cp = np.frombuffer(" ".join(valid).encode("utf-32-le"),
+                           dtype=np.uint32).astype(np.int64)
+        cuts = np.flatnonzero(cp == 32)
+        starts = np.concatenate(([0], cuts + 1))
+        lens = np.concatenate((cuts, [len(cp)])) - starts
+        order = np.argsort(-lens, kind="stable")
+        first = starts[order]
+        # live[pos]: the tokens longer than pos, a prefix of ``order``
+        live = np.searchsorted(-lens[order], -np.arange(lens.max()))
+        acc = np.zeros((3, len(lens)), dtype=np.int64)
+        for pos, k in enumerate(live):
+            acc[:, :k] = (acc[:, :k] * bases
+                          + cp[first[:k] + pos]) % SIM_PRIME
+        h = np.empty_like(acc)
+        h[:, order] = (acc * mults + adds) % SIM_PRIME
+        # per row: its token segment, and the set bits counted in it
+        ntok = np.fromiter((t.count(" ") + 1 for t in valid),
+                           dtype=np.int64, count=len(valid))
+        seg = np.cumsum(ntok) - ntok
+        sig = np.zeros(len(valid), dtype=np.uint64)
+        for bit in range(64):
+            ones = np.add.reduceat((h[bit // 31] >> (bit % 31)) & 1, seg)
+            sig[2 * ones >= ntok] |= np.uint64(1 << bit)
+        out[rows] = sig.view(np.int64)
         return pa.array(out)
 
     return _sig

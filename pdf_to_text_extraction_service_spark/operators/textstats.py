@@ -115,56 +115,59 @@ def fingerprint_udf(n: int = 4):
       gram hash is recoverable from per-character PREFIX hashes:
       H(s..e) = (h[e] - h[s] * 31^(e-s)) mod p — exact integer math,
       same value as the JVM left fold (which never goes negative);
-    - prefix hashes for the whole batch fold column-wise over a
-      padded (rows x maxlen) codepoint matrix — ~maxlen vectorized
-      numpy steps per batch instead of rows x chars interpreted ops;
+    - prefix hashes for the whole batch fold position-wise over the
+      batch's code points laid end to end, the rows sorted longest
+      first: at position j only the rows longer than j, a prefix of
+      that order, take a step — ~maxlen vectorized numpy steps per
+      batch instead of rows x chars interpreted ops, in memory
+      O(characters in the batch) whatever the longest row;
     - products stay under 2^63: both factors < p ~ 1e9.
     """
     from pyspark.sql.functions import arrow_udf
 
     @arrow_udf("bigint")
     def _fp(texts: pa.Array) -> pa.Array:
-        rows = [
-            None if s is None else
-            np.frombuffer(s.encode("utf-32-le"), np.uint32)
-            .astype(np.int64)
-            for s in texts.to_pylist()
-        ]
-        lens = [0 if r is None else len(r) for r in rows]
-        maxlen = max(lens, default=0)
-        nrows = len(rows)
-        mat = np.full((nrows, maxlen), -1, np.int64)
-        for i, r in enumerate(rows):
-            if r is not None and len(r):
-                mat[i, :len(r)] = r
-        # column-wise fold -> full prefix-hash matrix
-        h = np.zeros((nrows, maxlen + 1), np.int64)
-        acc = np.zeros(nrows, np.int64)
-        for j in range(maxlen):
-            col = mat[:, j]
-            acc = np.where(col >= 0, (acc * FP_BASE + col) % FP_MOD,
-                           acc)
-            h[:, j + 1] = acc
+        strs = texts.to_pylist()
+        valid = [s for s in strs if s is not None]
+        lens = np.fromiter(map(len, valid), dtype=np.int64,
+                           count=len(valid))
+        starts = np.cumsum(lens) - lens
+        cp = np.frombuffer("".join(valid).encode("utf-32-le"),
+                           np.uint32).astype(np.int64)
+        maxlen = int(lens.max(initial=0))
+        order = np.argsort(-lens, kind="stable")
+        first = starts[order]
+        # live[j]: the rows longer than j, a prefix of ``order``
+        live = np.searchsorted(-lens[order], -np.arange(maxlen))
+        # pre[i]: the hash of i's row up to and including i (a row's
+        # first code point is its own hash: every code point < p)
+        pre = cp.copy()
+        for j in range(1, maxlen):
+            at = first[:live[j]] + j
+            pre[at] = (pre[at - 1] * FP_BASE + cp[at]) % FP_MOD
         pow31 = np.empty(maxlen + 1, np.int64)
         pow31[0] = 1
         for d in range(maxlen):
             pow31[d + 1] = (pow31[d] * FP_BASE) % FP_MOD
         out = []
         space = ord(" ")
-        for i, r in enumerate(rows):
-            if r is None:
+        rows = zip(starts.tolist(), lens.tolist())
+        for s in strs:
+            if s is None:
                 out.append(None)
                 continue
+            st, size = next(rows)
+            r = cp[st:st + size]
+            h = np.concatenate(([0], pre[st:st + size]))
             # token boundaries; gram g spans tokens [g, g+n-1]
-            starts = np.concatenate(
-                ([0], np.flatnonzero(r == space) + 1))
-            ends = np.concatenate(
-                (np.flatnonzero(r == space), [len(r)]))
-            k = len(starts)
+            cuts = np.flatnonzero(r == space)
+            starts_r = np.concatenate(([0], cuts + 1))
+            ends = np.concatenate((cuts, [size]))
+            k = len(starts_r)
             g = max(k - n, 0) + 1
-            gs = starts[:g]
+            gs = starts_r[:g]
             ge = ends[np.minimum(np.arange(g) + n - 1, k - 1)]
-            vals = (h[i, ge] - h[i, gs] * pow31[ge - gs]) % FP_MOD
+            vals = (h[ge] - h[gs] * pow31[ge - gs]) % FP_MOD
             out.append(int(vals.min()))
         return pa.array(out, type=pa.int64())
 
@@ -225,9 +228,8 @@ def quality_scores(df: DataFrame, id_col: str = "doc_id",
     streams" as a projection of :func:`quality_udf`, so the package
     has one quality scorer.  Its plan row (tests/test_plan_contracts.py)
     is that UDF's ``ArrowEvalPython`` node over the text, not a
-    rebatched ``MapInArrow(_id, _t)`` pass: the kernel scores one
-    document at a time, so gathering batches into chunks bought
-    nothing."""
+    ``MapInArrow(_id, _t)`` text-row pass: the kernel scores one
+    document at a time."""
     return df.select(
         F.col(id_col).alias("doc_id"),
         quality_udf(min_words)(F.col(text_col)).alias("_q"),

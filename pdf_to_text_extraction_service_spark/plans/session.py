@@ -4,10 +4,20 @@ Tunings map to the reference's hand-rolled cost controls (SURVEY.md §4):
 - AQE + skew-join handle the url-dedup / lineage-join shuffles at
   100 TB (the reference's bounded-parallelism tiers are executor
   sizing, not job code).
-- Arrow batch size is capped LOW (256 rows) because page payloads are
-  multi-MiB binary cells — the 10k default would OOM the Python worker
-  (SURVEY.md §7 hard-part 4; the analog of the reference's
-  io.LimitedReader streaming caps, download.go:70-79).
+- Arrow batches are sized here, once, for every Python boundary of
+  the package: a batch closes at ``ARROW_MAX_RECORDS_PER_BATCH`` rows
+  or ``ARROW_MAX_BYTES_PER_BATCH`` bytes, whichever comes first. The
+  row cap amortizes each numpy kernel's fixed cost over thin pages and
+  short texts; the byte cap keeps multi-MiB office/PDF payloads from
+  piling up in one batch in the Python worker (SURVEY.md §7 hard-part
+  4; the analog of the reference's io.LimitedReader streaming caps,
+  download.go:70-79). 4 MiB rather than larger: paired scaling runs
+  with 32 MB batches lost ~8% scaling efficiency at 4x parallelism, as
+  concurrent workers' batch footprints contend for memory bandwidth.
+  Spark closes a batch after the row that crosses the byte cap, so a
+  batch holds at most the cap plus one row; that holds for the
+  ``mapInArrow`` passes and the scalar ``arrow_udf`` ones alike
+  (tests/test_dupspans_opt.py pins both).
 - The parquet VECTORIZED READER batch is capped for the same reason:
   the default 4096-row columnar batch over KB-to-MB binary cells
   fails with "Cannot reserve additional contiguous bytes" under
@@ -36,7 +46,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-ARROW_MAX_RECORDS_PER_BATCH = 256
+#: rows in one Arrow batch at most (thin pages, short texts)
+ARROW_MAX_RECORDS_PER_BATCH = 8192
+#: bytes in one Arrow batch at most (multi-MiB payloads)
+ARROW_MAX_BYTES_PER_BATCH = 4 << 20
+_ARROW_CAPS = {
+    "spark.sql.execution.arrow.maxRecordsPerBatch":
+        str(ARROW_MAX_RECORDS_PER_BATCH),
+    "spark.sql.execution.arrow.maxBytesPerBatch":
+        str(ARROW_MAX_BYTES_PER_BATCH),
+}
 WORKER_MODULE = "pyspark_graft_worker"
 # The directory beside the package, or the zip that holds it.
 _WORKER_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
@@ -59,8 +78,7 @@ def build_session(app_name: str = "webextract",
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(ARROW_MAX_RECORDS_PER_BATCH))
+        .config(map=_ARROW_CAPS)
         .config("spark.sql.parquet.columnarReaderBatchSize", "512")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.session.timeZone", "UTC")
@@ -81,44 +99,17 @@ def build_session(app_name: str = "webextract",
     return spark
 
 
-def tune_arrow_batch(spark: SparkSession, pages, target_mb: int = 4,
-                     lo: int = 64, hi: int = 8192,
-                     sample_rows: int = 2000) -> int:
-    """Size Arrow batches by PAYLOAD BYTES, not rows.
+def tune_arrow_batch(spark: SparkSession, pages) -> int:
+    """Put both Arrow batch caps back on ``spark``; returns the row cap.
 
-    The conservative 256-row default protects multi-MiB office/PDF
-    payloads from OOM, but starves thin HTML crawl pages (256 rows of
-    ~1 KB = 0.25 MB batches → Python-side per-batch overhead dominates;
-    measured 26% extraction slowdown vs right-sized batches at sf0.1).
-    Sample the average `html` length from a bounded scan and set
-    maxRecordsPerBatch to target ~``target_mb`` MB per batch, clamped
-    to [lo, hi]. Returns the chosen row count. Call per input table
-    before an extraction job (jobs/extract.py does).
-
-    The sample is one Spark job: the first ``sample_rows`` lengths
-    come back to the driver as Arrow (a limit at the plan's root is a
-    collect-limit, one job), and pyarrow averages the non-NULL ones, as
-    SQL ``avg`` does. A limit feeding a SQL aggregate ran two jobs.
-
-    The 4 MB default is deliberate: paired scaling runs showed 32 MB
-    batches cost ~8% scaling efficiency at 4x parallelism (8 workers
-    x large concurrent Arrow batch footprints contend on memory
-    bandwidth that 2 workers do not), while 4 MB keeps the per-batch
-    Python overhead amortized for thin pages without that pressure."""
-    import pyarrow.compute as pc
-    from pyspark.sql import functions as F
-
-    lengths = (
-        pages.select(F.length("html").alias("n"))
-        .limit(sample_rows)
-        .toArrow()
-        .column("n")
-    )
-    avg = pc.mean(lengths).as_py()
-    if not avg or avg <= 0:
-        rows = ARROW_MAX_RECORDS_PER_BATCH
-    else:
-        rows = int(max(lo, min(hi, (target_mb * 1024 * 1024) / avg)))
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(rows))
-    return rows
+    Runs no Spark job; ``pages`` is unused. Its callers are the
+    benchmarks, ``bench.py`` and ``perfbench/extract_crawl.py``:
+    ``bench.py`` sets ``maxRecordsPerBatch`` to 256 once its extraction
+    is done, and this puts the session's caps back at the start of its
+    next suite rep; the text queries it times in between (curation,
+    MinHash, decontamination) run on 256-row batches. A later change
+    to the benchmark can drop the reset and the call, and then this
+    function."""
+    for key, value in _ARROW_CAPS.items():
+        spark.conf.set(key, value)
+    return ARROW_MAX_RECORDS_PER_BATCH

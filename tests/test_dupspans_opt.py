@@ -4,6 +4,7 @@ must be row-identical to the pre-r8 interpreted per-window expression
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -55,24 +56,27 @@ def test_window_occurrences_match_old_expression(spark):
 
 
 def test_ngram_pass_crosses_chunk_boundaries(spark):
-    """More than two text-row chunks in ONE task (a single partition)
-    through map_text_rows with the n-gram kernel, in both modes, equal
-    the JVM expressions row for row and in multiplicity — a dropped
-    tail chunk or a chunk emitted twice changes the multiset.  Short
-    texts, with NULL, empty and fewer-than-n-token rows mixed in."""
+    """More than two Arrow batches of the session's row cap in ONE
+    task (a single partition) through map_text_rows with the n-gram
+    kernel, in both modes, equal the JVM expressions row for row and
+    in multiplicity — a dropped tail batch or a batch emitted twice
+    changes the multiset.  Short texts, with NULL, empty and
+    fewer-than-n-token rows mixed in."""
     from pdf_to_text_extraction_service_spark.functions.textrows import (
-        CHUNK_ROWS,
         map_text_rows,
     )
     from pdf_to_text_extraction_service_spark.operators.decontam import (
         NGRAM_SCHEMA,
         ngram_rows,
     )
+    from pdf_to_text_extraction_service_spark.plans.session import (
+        ARROW_MAX_RECORDS_PER_BATCH as CAP,
+    )
     from tests.reference.decontam import gram_struct
 
     n = 3
     rows = []
-    for i in range(2 * CHUNK_ROWS + 3001):
+    for i in range(2 * CAP + 3001):
         if i % 11 == 0:
             rows.append((i, None))
         elif i % 13 == 0:
@@ -90,7 +94,7 @@ def test_ngram_pass_crosses_chunk_boundaries(spark):
     want_occ = sorted(map(tuple, occ.collect()))
     got_occ = sorted(map(tuple, map_text_rows(
         frame, ngram_rows(n, distinct=False), NGRAM_SCHEMA).collect()))
-    assert got_occ == want_occ and len(got_occ) > 2 * CHUNK_ROWS
+    assert got_occ == want_occ and len(got_occ) > 2 * CAP
 
     # distinct mode: the gram_struct set, each at its first position
     first = occ.groupBy("doc_id", "h1", "h2").agg(F.min("pos")) \
@@ -105,38 +109,65 @@ def test_ngram_pass_crosses_chunk_boundaries(spark):
     assert got_dist == want_dist and len(got_dist) < len(got_occ)
 
 
-def test_text_chunks_close_at_row_and_char_bounds():
-    """The rebatch loop closes a chunk at the first batch that brings
-    it to CHUNK_ROWS rows (short texts) or CHUNK_CHARS characters
-    (long texts; NULL counts zero), keeps the tail, and hands on every
-    row exactly once, in order.  It reads Arrow batches as map_rows
-    hands them on: one column dict per ``RecordBatch``."""
-    import pyarrow as pa
+def test_arrow_batches_close_at_session_caps(spark):
+    """Every Python pass sees the session's Arrow batches: 64 payloads
+    of 1 MiB close at the 4 MiB byte cap (Spark closes a batch after
+    the row that crosses it, so at most the cap plus one row), and
+    4,000 rows of 1 KB, under both caps, come as one batch."""
+    from pyspark.sql.types import LongType, StructField, StructType
 
     from pdf_to_text_extraction_service_spark.functions.textrows import (
-        CHUNK_CHARS,
-        CHUNK_ROWS,
-        text_chunks,
+        map_rows,
+    )
+    from pdf_to_text_extraction_service_spark.plans.session import (
+        ARROW_MAX_BYTES_PER_BATCH,
+        ARROW_MAX_RECORDS_PER_BATCH,
     )
 
-    def batches(texts, size):
-        for s in range(0, len(texts), size):
-            part = texts[s:s + size]
-            yield pa.RecordBatch.from_pydict(
-                {"_id": pa.array(range(s, s + len(part)), pa.int64()),
-                 "_t": pa.array(part, pa.string())}).to_pydict()
+    schema = StructType([StructField("rows", LongType()),
+                         StructField("bytes", LongType())])
 
-    big = "x" * (CHUNK_CHARS // 4 + 1)
-    for texts, size, sizes in [
-        # 9 batches of 1000 reach CHUNK_ROWS; 3000 rows are left over
-        (["a b", None, ""] * 7000, 1000, [9000, 9000, 3000]),
-        # 4 big texts pass CHUNK_CHARS, far below CHUNK_ROWS
-        ([big, None] * 10, 2, [8, 8, 4]),
-    ]:
-        got = list(text_chunks(batches(texts, size)))
-        assert [len(ids) for ids, _ in got] == sizes
-        assert [i for ids, _ in got for i in ids] == list(range(len(texts)))
-        assert [t for _, ts in got for t in ts] == texts
+    def sizes(batches):
+        for b in batches:
+            yield {"rows": [len(b["p"])], "bytes": [sum(map(len, b["p"]))]}
+
+    def batches(n, size):
+        pages = spark.range(n).coalesce(1).select(
+            F.expr(f"repeat('x', {size})").cast("binary").alias("p"))
+        return [tuple(r) for r in map_rows(pages, schema, sizes).collect()]
+
+    mib = 1 << 20
+    big = batches(64, mib)
+    assert sum(r for r, _ in big) == 64 and len(big) > 1
+    assert max(b for _, b in big) <= ARROW_MAX_BYTES_PER_BATCH + mib
+
+    assert 4000 < ARROW_MAX_RECORDS_PER_BATCH
+    assert batches(4000, 1024) == [(4000, 4000 * 1024)]
+
+
+def test_scalar_arrow_udf_batches_close_at_session_caps(spark):
+    """The scalar ``arrow_udf`` passes (fingerprint, SimHash, quality,
+    scrub, the span rewrite) get the same caps as ``map_rows``: 64
+    texts of 1 MiB never reach one call beyond the byte cap plus one
+    row, and 4,000 texts of 1 KB reach one call together."""
+    from pyspark.sql.functions import arrow_udf
+
+    from pdf_to_text_extraction_service_spark.plans.session import (
+        ARROW_MAX_BYTES_PER_BATCH,
+    )
+
+    @arrow_udf("long")
+    def batch_rows(t: pa.Array) -> pa.Array:
+        return pa.array([len(t)] * len(t), pa.int64())
+
+    def batches(n, size):
+        texts = spark.range(n).coalesce(1).select(
+            F.expr(f"repeat('x', {size})").alias("t"))
+        return {r[0] for r in texts.select(batch_rows("t")).collect()}
+
+    mib = 1 << 20
+    assert max(batches(64, mib)) <= ARROW_MAX_BYTES_PER_BATCH // mib + 1
+    assert batches(4000, 1024) == {4000}
 
 
 def _old_remove_duplicated_spans(docs, n=13, min_count=2,

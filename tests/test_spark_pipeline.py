@@ -291,11 +291,12 @@ def test_fresh_manifest_path_runs_no_job(spark, tmp_path, spark_jobs):
     assert (n, done) == (0, set())
 
 
-def test_manifest_reads_spark_and_driver_commits(spark, tmp_path):
+def test_manifest_reads_spark_and_driver_commits(spark, tmp_path,
+                                                 spark_jobs):
     """A manifest holding a row written by a Spark job and rows
     committed from the driver reads back with MANIFEST_SCHEMA's types,
     file by file and as a whole, and a resume skips the buckets of
-    both."""
+    both.  The resume check reads them in one Spark job."""
     import datetime
     import os
 
@@ -327,11 +328,25 @@ def test_manifest_reads_spark_and_driver_commits(spark, tmp_path):
     in_b1 = pages.filter(bucket_col(2) == 1).count()
     assert rows[1]["row_count"] == in_b1
     assert rows[1]["started_at"] <= rows[1]["finished_at"]
-    assert completed_buckets(spark, mf, "pages-b2") == {0, 1}
+    n, done = spark_jobs(lambda: completed_buckets(spark, mf, "pages-b2"))
+    assert (n, done) == (1, {0, 1})
+    assert completed_buckets(spark, mf, "pages-b3") == set()
 
     run_resumable_extract(spark, pages, out, mf, buckets=2, wave_count=1)
     assert len(spark.read.parquet(mf).collect()) == 2
     assert written() == ["bucket=1"]
+
+
+def test_foreign_parquet_at_manifest_path_reads_as_nothing(spark, tmp_path):
+    """A parquet file at the manifest path with none of
+    MANIFEST_SCHEMA's columns reads as nothing committed: read with
+    that schema, its columns are NULL, so no row matches the
+    snapshot."""
+    mf = str(tmp_path / "mf")
+    spark.range(3).selectExpr(
+        "cast(id as string) as url", "binary(cast(id as string)) as html",
+    ).write.parquet(mf)
+    assert completed_buckets(spark, mf, "pages-b2") == set()
 
 
 def test_torn_manifest_commit_is_ignored(spark, tmp_path):
@@ -428,48 +443,25 @@ def test_iceberg_roundtrip_when_jar_present(spark, corpus_df, tmp_path):
     assert io.read("cc.db.pages_roundtrip").count() == corpus_df.count()
 
 
-def test_tune_arrow_batch_sizing(spark, tmp_path, spark_jobs):
-    """Payload-aware Arrow batching: thin pages get big batches, fat
-    payloads clamp low; empty/missing sampling falls back safely.
-    NULL payloads do not count toward the mean length. Each call is
-    one Spark job."""
-    from pyspark.sql import functions as F
-
+def test_tune_arrow_batch_restores_session_caps(spark, spark_jobs):
+    """tune_arrow_batch runs no Spark job and puts both of the
+    session's Arrow caps back after a caller reset the row cap to
+    256, as bench.py does; it returns the row cap."""
     from pdf_to_text_extraction_service_spark.plans.session import (
+        ARROW_MAX_BYTES_PER_BATCH,
         ARROW_MAX_RECORDS_PER_BATCH,
         tune_arrow_batch,
     )
 
-    def tune(pages, **kw):
-        n, rows = spark_jobs(lambda: tune_arrow_batch(spark, pages, **kw))
-        assert n == 1
-        return rows
-
-    thin = spark.range(500).select(
-        F.encode(F.lit("x" * 1024), "UTF-8").alias("html"))
-    rows = tune(thin, target_mb=8)
-    assert rows == 8192 or 4000 <= rows <= 8192  # 8MB/1KB clamped hi
-
-    fat = spark.range(8).select(
-        F.encode(F.repeat(F.lit("y"), 4 * 1024 * 1024), "UTF-8")
-        .alias("html"))
-    rows = tune(fat, target_mb=8)
-    assert rows == 64  # 8MB target / 4MB rows = 2 -> clamped to lo
-
-    # half the rows NULL: the mean is over the 1 KB rows (4MB / 1KB),
-    # where counting NULL as 0 would halve it and clamp to hi
-    holey = spark.range(500).select(
-        F.when(F.col("id") % 2 == 0, F.encode(F.lit("x" * 1024), "UTF-8"))
-        .alias("html"))
-    assert tune(holey, target_mb=4) == 4096
-
-    all_null = spark.range(10).select(F.lit(None).cast("binary").alias("html"))
-    assert tune(all_null) == ARROW_MAX_RECORDS_PER_BATCH
-
-    empty = spark.range(0).select(F.lit(b"").alias("html"))
-    rows = tune(empty)
-    assert rows == ARROW_MAX_RECORDS_PER_BATCH
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
+    key = "spark.sql.execution.arrow.max{}PerBatch"
+    pages = spark.range(8).select(F.lit(b"x").alias("html"))
+    spark.conf.set(key.format("Records"), "256")
+    spark.conf.set(key.format("Bytes"), str(64 << 20))
+    n, rows = spark_jobs(lambda: tune_arrow_batch(spark, pages))
+    assert (n, rows) == (0, ARROW_MAX_RECORDS_PER_BATCH)
+    assert spark.conf.get(key.format("Records")) == str(rows)
+    assert spark.conf.get(key.format("Bytes")) == \
+        str(ARROW_MAX_BYTES_PER_BATCH)
 
 
 def test_curate_pipeline_stages(spark, tmp_path):

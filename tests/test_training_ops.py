@@ -222,8 +222,9 @@ def test_embedding_neardup_pairs_planted(spark):
 def test_simhash_udf_matches_jvm_signatures(spark):
     """simhash64_text_udf must be bit-identical to the pure-JVM
     simhash64 expression (tests/reference/neardup.py) on the corpus
-    and on empty, all-space, space-run and astral-plane text; on
-    NULL text the JVM gives NULL and the UDF gives -1."""
+    and on empty, all-space, space-run and astral-plane text, one
+    20,000-char token and a 5,000-token document; on NULL text the
+    JVM gives NULL and the UDF gives -1."""
     from pdf_to_text_extraction_service_spark.operators.neardup import (
         simhash64_text_udf,
     )
@@ -235,7 +236,9 @@ def test_simhash_udf_matches_jvm_signatures(spark):
     docs = load_documents(spark, "/root/testdata/sf0.001")
     edge = spark.createDataFrame(
         [(9000, ""), (9001, " "), (9002, "a  b   c"),
-         (9003, "emoji 🙂 rocket 🚀 𝔘𝔫𝔦𝔠𝔬𝔡𝔢 end"), (9004, None)],
+         (9003, "emoji 🙂 rocket 🚀 𝔘𝔫𝔦𝔠𝔬𝔡𝔢 end"), (9004, None),
+         (9005, "short " + "y" * 20000 + " tail"),
+         (9006, " ".join(f"t{i % 97}" for i in range(5000)))],
         "doc_id long, text string")
     rows = docs.select("doc_id", "text").unionByName(edge).select(
         "doc_id",
@@ -245,7 +248,49 @@ def test_simhash_udf_matches_jvm_signatures(spark):
     got = {r["doc_id"]: r["np"] for r in rows}
     want = {r["doc_id"]: r["jvm"] for r in rows}
     assert want.pop(9004) is None and got.pop(9004) == -1
-    assert got == want and len(got) == 504
+    assert got == want and len(got) == 506
+
+
+def _peak_mb(udf, texts: list) -> float:
+    """Peak traced allocation, in MB, of one call of an Arrow UDF's
+    body on ``texts``."""
+    import tracemalloc
+
+    import pyarrow as pa
+
+    arr = pa.array(texts, pa.string())
+    tracemalloc.start()
+    try:
+        udf.func(arr)
+        return tracemalloc.get_traced_memory()[1] / 2**20
+    finally:
+        tracemalloc.stop()
+
+
+def test_simhash_udf_memory_follows_characters(spark):
+    """The SimHash fold holds O(characters) whatever the longest
+    token: 20 documents of 200 tokens and one 20,000-char token stay
+    a few MB (a fold over a tokens x longest-token matrix peaks at
+    hundreds of MB on them)."""
+    from pdf_to_text_extraction_service_spark.operators.neardup import (
+        simhash64_text_udf,
+    )
+
+    docs = [" ".join(f"w{i}x{j}" for j in range(200)) for i in range(20)]
+    assert _peak_mb(simhash64_text_udf(), docs + ["y" * 20000]) < 32
+
+
+def test_fingerprint_udf_memory_follows_characters(spark):
+    """The fingerprint prefix-hash fold holds O(characters) whatever
+    the longest document: 100 documents of 100 tokens and one of
+    100,000 chars stay a few MB (two rows x longest-document matrices
+    peak at over 150 MB on them)."""
+    from pdf_to_text_extraction_service_spark.operators.textstats import (
+        fingerprint_udf,
+    )
+
+    docs = [" ".join(f"w{i}x{j}" for j in range(100)) for i in range(100)]
+    assert _peak_mb(fingerprint_udf(), docs + ["z" * 100000]) < 32
 
 
 def test_remove_boilerplate_lines(spark):
@@ -373,8 +418,9 @@ def test_normalize_nfc(spark):
 def test_fingerprint_udf_bit_identical_to_jvm(spark):
     """The vectorized prefix-hash fingerprint must equal the retained
     JVM HOF expression bit-for-bit — including empty strings, space
-    runs (empty tokens), nulls, and astral codepoints (Java regex
-    split('') is codepoint-aware, as is the UTF-32 numpy path)."""
+    runs (empty tokens), nulls, astral codepoints (Java regex
+    split('') is codepoint-aware, as is the UTF-32 numpy path), a
+    100,000-char token and a 20,000-token document."""
     from pdf_to_text_extraction_service_spark.operators.textstats import (
         doc_fingerprint,
     )
@@ -383,7 +429,9 @@ def test_fingerprint_udf_bit_identical_to_jvm(spark):
     rows = [(0, ""), (1, "single"), (2, "a  b   c"),
             (3, " lead and trail "), (4, None),
             (5, "中文 文本 многоязычный тест emoji 🙂 end"),
-            (6, "🙂"), (7, "a 🙂 b 🚀 c"), (8, "x" * 500 + " y z w v")]
+            (6, "🙂"), (7, "a 🙂 b 🚀 c"), (8, "x" * 500 + " y z w v"),
+            (9, "z" * 100000 + " a b c d"),
+            (10, " ".join(f"t{i % 97}" for i in range(20000)))]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     a = {r["doc_id"]: r["fingerprint"]
          for r in doc_fingerprint(df).collect()}

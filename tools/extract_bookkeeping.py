@@ -1,6 +1,6 @@
 """What the bookkeeping around a resumable extract wave costs, beside the
-wave's own write: the Arrow batch sizing, the resume check and the
-manifest commit of ``jobs/extract.py``, each with the Spark jobs it runs.
+wave's own write: the resume check and the manifest commit of
+``jobs/extract.py``, each with the Spark jobs it runs.
 
     python tools/extract_bookkeeping.py
 
@@ -12,7 +12,6 @@ times, the pieces interleaved. It prints one JSON line with, per piece,
 the median seconds of a call (``<piece>_s``) and the Spark jobs one call
 runs (``<piece>_jobs``, the most over the reps):
 
-- ``tune_arrow_batch``: ``plans/session.tune_arrow_batch`` on the pages;
 - ``completed_buckets_missing``: ``operators/manifest.completed_buckets``
   on a manifest path that does not exist yet;
 - ``completed_buckets_present``: the same on a manifest holding one
@@ -50,7 +49,6 @@ def main() -> None:
     from pdf_to_text_extraction_service_spark.operators import manifest
     from pdf_to_text_extraction_service_spark.plans.session import (
         build_session,
-        tune_arrow_batch,
     )
     from pdf_to_text_extraction_service_spark.sources.corpus import (
         write_corpus,
@@ -73,7 +71,6 @@ def main() -> None:
 
         manifest.commit_manifest(spark, f"{work}/manifest", table())
         pieces = {
-            "tune_arrow_batch": lambda rep: tune_arrow_batch(spark, pages),
             "completed_buckets_missing": lambda rep: (
                 manifest.completed_buckets(
                     spark, f"{work}/none-{rep}", snapshot)),

@@ -78,7 +78,6 @@ def _run_once(cpus: int, path: str) -> tuple[float, int]:
     )
     from pdf_to_text_extraction_service_spark.plans.session import (
         build_session,
-        tune_arrow_batch,
     )
 
     spark = build_session(app_name=f"scale-{cpus}",
@@ -87,8 +86,6 @@ def _run_once(cpus: int, path: str) -> tuple[float, int]:
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(16 << 20))
     try:
         pages = spark.read.parquet(path)
-        # payload-aware Arrow batching, as the production job does
-        tune_arrow_batch(spark, pages)
         # warm up JVM JIT + the Python worker pool across all cores
         extract_pipeline(
             pages.sample(0.05, seed=1), salt=False, dedup=False,
